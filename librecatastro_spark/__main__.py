@@ -30,6 +30,16 @@ def _parse_filters(pairs: list[str]) -> dict[str, str]:
     return out
 
 
+def _parse_synonyms(spec: str | None) -> dict[str, str] | None:
+    out = {}
+    for seg in filter(None, (spec or "").split(",")):
+        src, eq, dst = seg.partition("=")
+        if not (src and eq and dst):
+            raise SystemExit(f"--synonyms expects SRC=DST[,...], got {seg!r}")
+        out[src] = dst
+    return out or None
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(prog="librecatastro_spark")
     ap.add_argument("--cores", type=int, default=None,
@@ -257,10 +267,7 @@ def main(argv: list[str] | None = None) -> int:
             stopwords=frozenset(
                 w for w in (args.stopwords or "").split(",") if w
             ) or None,
-            synonyms=dict(
-                p.split("=", 1) for p in (args.synonyms or "").split(",")
-                if "=" in p
-            ) or None,
+            synonyms=_parse_synonyms(args.synonyms),
         )
         print(json.dumps({"n_docs": meta.n_docs, "avgdl": meta.avgdl,
                           "n_shards": meta.n_shards, "out": args.out}))

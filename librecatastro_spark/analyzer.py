@@ -43,6 +43,22 @@ def tokenize_expr(col: Column | str) -> Column:
     return F.filter(F.split(F.lower(c), TOKEN_SPLIT_RE), lambda x: x != F.lit(""))
 
 
+def check_synonyms(synonyms: dict[str, str] | None) -> None:
+    """Reject a replace-form synonym map in which a target is itself a
+    source mapping elsewhere — a chain (a→b, b→c) or a cycle (a→b,
+    b→a). Query analysis maps each token once, but the Arrow build
+    path rewrites pair by pair, so such a map would index a surface form
+    under a different term than query analysis gives it. Raises
+    ValueError naming the offending pair."""
+    for src, dst in sorted((synonyms or {}).items()):
+        if synonyms.get(dst, dst) != dst:
+            raise ValueError(
+                f"synonym {src!r} => {dst!r} chains into {dst!r} => "
+                f"{synonyms[dst]!r}; map each surface form straight to "
+                "its canonical term"
+            )
+
+
 class Analyzer:
     """A parameterized tokenization spec — the per-field analyzer hook ES
     mappings give (``analyzer: …`` per field). Shape is FROZEN to the
@@ -83,6 +99,7 @@ class Analyzer:
         self.split_re = split_re or TOKEN_SPLIT_RE
         self._rx = re.compile(self.split_re)
         self.stopwords = frozenset(stopwords) if stopwords else frozenset()
+        check_synonyms(synonyms)
         self.synonyms = dict(synonyms) if synonyms else {}
 
     def analyze(self, text: str) -> list[str]:

@@ -649,19 +649,20 @@ class ExactBM25:
         self,
         k: int = 10,
         boost: float = 1.0,
-        **filter_kwargs,
+        *,
+        filters: dict[str, str] | None = None,
+        prefix: tuple[str, str] | None = None,
+        ranges: dict[str, tuple] | None = None,
+        exists_cols: list[str] | None = None,
+        ids: list[int] | None = None,
+        geo: tuple | None = None,
     ) -> DataFrame:
         """ES constant_score analog: every doc matching the filter
         clauses scores ``boost`` — no BM25 at all (filters never
         contribute score in ES either; this makes the wrapper explicit).
-        Deterministic doc_id ASC order."""
-        doc_set = self._doc_filter(
-            filter_kwargs.get("filters"),
-            filter_kwargs.get("prefix"),
-            filter_kwargs.get("ranges"),
-            filter_kwargs.get("exists_cols"),
-            filter_kwargs.get("ids"),
-        )
+        Deterministic doc_id ASC order. The clauses are ``search``'s
+        (``geo`` included); an unknown clause name raises TypeError."""
+        doc_set = self._doc_filter(filters, prefix, ranges, exists_cols, ids, geo)
         if doc_set is None:
             doc_set = self.attrs.select("doc_id")
         return (

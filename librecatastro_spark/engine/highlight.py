@@ -58,6 +58,12 @@ def highlight_snippets(
     matches the index's own — ES highlights on the analyzed field with
     the field's analyzer (stopwords absent from fragments, like an
     ES-analyzed stopworded field).
+
+    ``synonyms`` (meta.synonyms) maps each fragment token to its
+    CANONICAL form before matching, and the snippet is built from those
+    analyzed tokens — so a document that wrote a surface form shows the
+    canonical term in its snippet, where ES highlights the surface form
+    the document used (documented divergence).
     """
     if not terms:
         raise ValueError("highlight needs at least one term")

@@ -30,12 +30,7 @@ import pandas as pd
 from ..bm25 import ROUND_DECIMALS
 from .fscore import combine_np, field_factor_np
 from .positions import _decode_term
-
-
-def _empty() -> pd.DataFrame:
-    return pd.DataFrame(
-        {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-    )
+from .wand import _empty, _impact
 
 
 def _or_match_sums(
@@ -45,8 +40,6 @@ def _or_match_sums(
     block frame. Accumulation is term-major over sorted distinct terms
     (the canonical order every scoring path uses); the caller's final
     transform + single rounding follow (module docstring)."""
-    from .wand import _impact
-
     uids = None
     per_term = []
     for t in sorted(set(terms)):

@@ -80,10 +80,112 @@ def _prefix_successor(p: str) -> str | None:
     return None
 
 
-def _empty() -> pd.DataFrame:
-    return pd.DataFrame(
-        {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-    )
+_PD_DTYPES = {"long": "int64", "double": "float64", "string": "object"}
+
+
+def _empty(schema: str = _RESULT_SCHEMA) -> pd.DataFrame:
+    """Zero-row pandas frame typed like the DDL ``schema`` (long, double
+    and string columns) — what a per-shard kernel emits with no rows."""
+    cols = (c.split() for c in schema.split(","))
+    return pd.DataFrame({n: pd.Series(dtype=_PD_DTYPES[t]) for n, t in cols})
+
+
+def _filter_cond(
+    filters: dict[str, str] | None = None,
+    prefix: tuple[str, str] | None = None,
+    ranges: dict[str, tuple] | None = None,
+    exists_cols: list[str] | None = None,
+    ids: list[int] | None = None,
+    geo: tuple | None = None,
+):
+    """The constant-score filter clauses as ONE Catalyst condition over
+    the attrs table (None when no clause is given) — equality / ``terms``
+    In, StartsWith, inclusive ranges, IsNotNull and the doc-id In all
+    reach the attrs Parquet scan as PushedFilters; ``geo`` compiles
+    through ops.geo.geo_clause_cond (see ``CompressedIndex.search``)."""
+    if not (filters or prefix or ranges or exists_cols) and ids is None and geo is None:
+        return None
+    cond = F.lit(True)
+    for col, val in (filters or {}).items():
+        # list/tuple/set value = ES `terms` query: col IN (…) — pushed to
+        # the attrs scan as an In filter
+        if isinstance(val, (list, tuple, set)):
+            cond = cond & F.col(col).isin(*sorted(val))
+        else:
+            cond = cond & (F.col(col) == F.lit(val))
+    if prefix is not None:
+        cond = cond & F.col(prefix[0]).startswith(prefix[1])
+    for col, (lo, hi) in (ranges or {}).items():
+        if lo is not None:
+            cond = cond & (F.col(col) >= F.lit(lo))
+        if hi is not None:
+            cond = cond & (F.col(col) <= F.lit(hi))
+    for col in exists_cols or []:
+        cond = cond & F.col(col).isNotNull()
+    if ids is not None:
+        cond = cond & F.col("doc_id").isin([int(i) for i in ids])
+    if geo is not None:
+        from ..ops.geo import geo_clause_cond
+
+        cond = cond & geo_clause_cond(geo)
+    return cond
+
+
+def _ranked(
+    partial: DataFrame, k: int, offset: int = 0, after: tuple | None = None
+) -> DataFrame:
+    """The global merge every scored distributed path ends with: round
+    the per-shard partial scores to ROUND_DECIMALS, keep only rows
+    strictly after the ``after`` (score, doc_id) keyset cursor when one
+    is given, rank (score DESC, doc_id ASC) and cut the page [offset,
+    offset + k) — a TakeOrderedAndProject over O(shards × (k+offset))
+    rows."""
+    ranked = partial.withColumn("score", F.round("score", ROUND_DECIMALS))
+    if after is not None:
+        # the shards already filtered; restating the predicate in
+        # Catalyst keeps the plan self-describing and the merge exact
+        # even if a custom fn variant ever skips the cursor
+        s0, d0 = after
+        ranked = ranked.where(
+            (F.col("score") < F.lit(s0))
+            | ((F.col("score") == F.lit(s0)) & (F.col("doc_id") > F.lit(d0)))
+        )
+    ranked = ranked.orderBy(F.desc("score"), F.asc("doc_id"))
+    if offset:
+        ranked = ranked.offset(offset)
+    return ranked.limit(k)
+
+
+def _ranked_local(out: pd.DataFrame, k: int, offset: int = 0) -> pd.DataFrame:
+    """Coordinator twin of ``_ranked`` over a pandas partial: the same
+    rounding, the same (score DESC, doc_id ASC) order (stable sort) and
+    the same [offset, offset + k) page."""
+    out["score"] = out["score"].round(ROUND_DECIMALS)
+    out = out.sort_values(
+        ["score", "doc_id"], ascending=[False, True], kind="mergesort"
+    ).iloc[offset : offset + k]
+    return out.reset_index(drop=True)
+
+
+def _key_counts(keys: pd.Series, after: str | None = None) -> pd.DataFrame:
+    """(facet_key, cnt) per distinct value of ``keys`` — the terms-agg
+    combine; with ``after``, only keys strictly above the composite
+    cursor."""
+    if after is not None:
+        keys = keys[keys > after]
+    vc = keys.value_counts()
+    return pd.DataFrame({"facet_key": vc.index.astype(str), "cnt": vc.to_numpy()})
+
+
+def _wildcard_regex(pattern: str) -> str:
+    """ES wildcard pattern → anchored regex: ``*`` = any sequence, ``?``
+    = one character, everything else escaped — lowercased like the
+    analyzer, and evaluated identically by Java regex (rlike) and
+    CPython sre."""
+    return "^" + "".join(
+        ".*" if c == "*" else "." if c == "?" else re.escape(c)
+        for c in pattern.lower()
+    ) + "$"
 
 
 def _lev_within(a: str, b: str, max_edits: int) -> bool:
@@ -520,18 +622,21 @@ class CompressedIndex:
         if self._df_local is None:
             self.term_stats = self.term_stats.cache()
 
+    def _dfs(self, terms: list[str]) -> dict[str, int]:
+        """Document frequency of each indexed term among ``terms``, from
+        the resident dictionary when the index holds one, else one
+        vocab-bounded term_stats collect."""
+        if self._df_local is not None:
+            return {t: self._df_local[t] for t in terms if t in self._df_local}
+        rows = self.term_stats.where(F.col("term").isin(terms)).collect()
+        return {r["term"]: r["df"] for r in rows}
+
     def _idfs(self, terms: list[str]) -> dict[str, float]:
         n = float(self.meta.n_docs)
-
-        def idf(df: int) -> float:
-            return math.log1p((n - df + 0.5) / (df + 0.5))
-
-        if self._df_local is not None:
-            return {
-                t: idf(self._df_local[t]) for t in terms if t in self._df_local
-            }
-        rows = self.term_stats.where(F.col("term").isin(terms)).collect()
-        return {r["term"]: idf(r["df"]) for r in rows}
+        return {
+            t: math.log1p((n - df + 0.5) / (df + 0.5))
+            for t, df in self._dfs(terms).items()
+        }
 
     def search(
         self,
@@ -608,46 +713,20 @@ class CompressedIndex:
         wanted = terms + should_terms + must_not_terms
         blocks = self.postings.where(F.col("term").isin(wanted))
         local_k = k + offset  # each shard must surface the whole window
-        has_filter = bool(
-            filters or prefix or ranges or exists_cols or ids is not None
-            or geo is not None
-        )
+        cond = _filter_cond(filters, prefix, ranges, exists_cols, ids, geo)
         fn = _shard_topk_fn(
             terms, idfs, self.meta.avgdl, local_k,
-            has_filter,
+            cond is not None,
             must_not_terms, require_all, should_terms,
             dense_hint=int(self.meta.n_docs), cursor=search_after,
             min_match=min_match,
         )
-        if has_filter:
+        if cond is not None:
             # filter clauses stay in Catalyst: the predicate reaches the
             # attrs Parquet scan (PushedFilters — equality and StartsWith
             # both push down), so the cogroup ships only the SURVIVING
             # (shard, doc_id) pairs into the scorer — O(selectivity ×
             # corpus), not O(corpus), per shard
-            cond = F.lit(True)
-            for col, val in (filters or {}).items():
-                # list/tuple/set value = ES `terms` query: col IN (…) —
-                # pushed to the attrs scan as an In filter
-                if isinstance(val, (list, tuple, set)):
-                    cond = cond & F.col(col).isin(*sorted(val))
-                else:
-                    cond = cond & (F.col(col) == F.lit(val))
-            if prefix is not None:
-                cond = cond & F.col(prefix[0]).startswith(prefix[1])
-            for col, (lo, hi) in (ranges or {}).items():
-                if lo is not None:
-                    cond = cond & (F.col(col) >= F.lit(lo))
-                if hi is not None:
-                    cond = cond & (F.col(col) <= F.lit(hi))
-            for col in exists_cols or []:
-                cond = cond & F.col(col).isNotNull()
-            if ids is not None:
-                cond = cond & F.col("doc_id").isin([int(i) for i in ids])
-            if geo is not None:
-                from ..ops.geo import geo_clause_cond
-
-                cond = cond & geo_clause_cond(geo)
             allowed = self.attrs.where(cond).select("shard", "doc_id")
             partial = (
                 blocks.groupBy("shard")
@@ -659,22 +738,7 @@ class CompressedIndex:
             partial = blocks.groupBy("shard").applyInPandas(
                 lambda key, bl: fn(bl), schema=_RESULT_SCHEMA
             )
-        ranked = partial.withColumn(
-            "score", F.round("score", ROUND_DECIMALS)
-        )
-        if search_after is not None:
-            # the shards already filtered; restating the predicate in
-            # Catalyst keeps the plan self-describing and the merge exact
-            # even if a custom fn variant ever skips the cursor
-            s0, d0 = search_after
-            ranked = ranked.where(
-                (F.col("score") < F.lit(s0))
-                | ((F.col("score") == F.lit(s0)) & (F.col("doc_id") > F.lit(d0)))
-            )
-        ranked = ranked.orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ranked = ranked.offset(offset)
-        return ranked.limit(k)
+        return _ranked(partial, k, offset, after=search_after)
 
     def match_phrase(
         self,
@@ -737,47 +801,76 @@ class CompressedIndex:
             )
         from ..analyzer import phrase_match_udf
 
-        terms = sorted(set(seq))
-        idfs = self._idfs(terms)
-        if len(idfs) < len(terms):
-            # a phrase term absent from the corpus -> no document can match
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        blocks = self.postings.where(F.col("term").isin(terms))
-        # doc-id window where every phrase term has postings (block
-        # metadata only — no decode; vocab-bounded collect)
-        spans = blocks.groupBy("term").agg(
+        return self._verify_first(
+            sorted(set(seq)), source, source_id_col, source_text_col,
+            lambda: phrase_match_udf(
+                seq, slop,
+                split_re=getattr(self.meta, "analyzer_re", None),
+                synonyms=getattr(self.meta, "synonyms", None),
+            ),
+            k, offset,
+        )
+
+    def _doc_window(self, terms: list[str]) -> tuple[int, int] | None:
+        """Doc-id window [lo, hi] where EVERY term has postings — [max
+        over terms of min(first_doc_id), min over terms of
+        max(last_doc_id)] — read from posting-block METADATA with one
+        vocab-bounded collect (no decode); None when a term has no
+        postings or the ranges do not overlap (no doc can hold them
+        all)."""
+        spans = self.postings.where(F.col("term").isin(terms)).groupBy("term").agg(
             F.min("first_doc_id").alias("lo"), F.max("last_doc_id").alias("hi")
         ).collect()
         if len(spans) < len(terms):
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
+            return None
         lo = max(int(r["lo"]) for r in spans)
         hi = min(int(r["hi"]) for r in spans)
-        if lo > hi:
+        return (lo, hi) if lo <= hi else None
+
+    def _verify_first(
+        self,
+        terms: list[str],
+        source: DataFrame,
+        source_id_col: str,
+        source_text_col: str,
+        make_verify,
+        k: int,
+        offset: int,
+    ) -> DataFrame:
+        """Shared plan of the verify-first phrase paths (match_phrase,
+        match_phrase_prefix): the scored ``terms`` must all be indexed;
+        their ``_doc_window`` prunes both the source verify scan and the
+        postings scan; ``make_verify()`` builds the Arrow CPython-regex
+        predicate that decides true membership on the source text; the
+        verified ids join attrs (the authoritative doc->shard map) and
+        feed the FILTERED require_all shard scorer with the top-k cut
+        enabled; ``_ranked`` merges."""
+        idfs = self._idfs(terms)
+        # a phrase term absent from the corpus -> no document can match
+        win = self._doc_window(terms) if len(idfs) == len(terms) else None
+        if win is None:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
+        in_win = F.col("doc_id").between(*win)
         # the window also prunes the postings scan itself: blocks wholly
         # outside [lo, hi] can hold no phrase doc (min/max columns are in
         # the Parquet footer stats, so this prunes row groups too)
-        blocks = blocks.where(
-            (F.col("last_doc_id") >= lo) & (F.col("first_doc_id") <= hi)
+        blocks = self.postings.where(
+            F.col("term").isin(terms)
+            & (F.col("last_doc_id") >= win[0])
+            & (F.col("first_doc_id") <= win[1])
         )
         verified = (
             source.select(
                 F.col(source_id_col).alias("doc_id"),
                 F.col(source_text_col).alias("_text"),
             )
-            .where(F.col("doc_id").between(lo, hi))
-            .where(
-                phrase_match_udf(
-                    seq, slop,
-                    split_re=getattr(self.meta, "analyzer_re", None),
-                    synonyms=getattr(self.meta, "synonyms", None),
-                )(F.col("_text"))
-            )
+            .where(in_win)
+            .where(make_verify()(F.col("_text")))
             .select("doc_id")
         )
-        allowed = self.attrs.select("shard", "doc_id").where(
-            F.col("doc_id").between(lo, hi)
-        ).join(verified, "doc_id")
+        allowed = self.attrs.select("shard", "doc_id").where(in_win).join(
+            verified, "doc_id"
+        )
         fn = _shard_topk_fn(
             terms, idfs, self.meta.avgdl, k + offset, filtered=True,
             must_not_terms=[], require_all=True,
@@ -788,12 +881,7 @@ class CompressedIndex:
             .cogroup(allowed.groupBy("shard"))
             .applyInPandas(lambda bl, at: fn(bl, at), schema=_RESULT_SCHEMA)
         )
-        ranked = partial.withColumn(
-            "score", F.round("score", ROUND_DECIMALS)
-        ).orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ranked = ranked.offset(offset)
-        return ranked.limit(k)
+        return _ranked(partial, k, offset)
 
     def match_phrase_prefix(
         self,
@@ -849,56 +937,14 @@ class CompressedIndex:
         complete, pfx = seq[:-1], seq[-1]
         if not complete:
             return self.term_prefix_search(pfx, k=k, offset=offset)
-        terms = sorted(set(complete))
-        idfs = self._idfs(terms)
-        if len(idfs) < len(terms):
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        blocks = self.postings.where(F.col("term").isin(terms))
-        spans = blocks.groupBy("term").agg(
-            F.min("first_doc_id").alias("lo"), F.max("last_doc_id").alias("hi")
-        ).collect()
-        if len(spans) < len(terms):
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        lo = max(int(r["lo"]) for r in spans)
-        hi = min(int(r["hi"]) for r in spans)
-        if lo > hi:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        blocks = blocks.where(
-            (F.col("last_doc_id") >= lo) & (F.col("first_doc_id") <= hi)
+        return self._verify_first(
+            sorted(set(complete)), source, source_id_col, source_text_col,
+            lambda: phrase_prefix_match_udf(
+                complete, pfx,
+                split_re=getattr(self.meta, "analyzer_re", None),
+            ),
+            k, offset,
         )
-        verified = (
-            source.select(
-                F.col(source_id_col).alias("doc_id"),
-                F.col(source_text_col).alias("_text"),
-            )
-            .where(F.col("doc_id").between(lo, hi))
-            .where(
-                phrase_prefix_match_udf(
-                    complete, pfx,
-                    split_re=getattr(self.meta, "analyzer_re", None),
-                )(F.col("_text"))
-            )
-            .select("doc_id")
-        )
-        allowed = self.attrs.select("shard", "doc_id").where(
-            F.col("doc_id").between(lo, hi)
-        ).join(verified, "doc_id")
-        fn = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, k + offset, filtered=True,
-            must_not_terms=[], require_all=True,
-            dense_hint=int(self.meta.n_docs),
-        )
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(lambda bl, at: fn(bl, at), schema=_RESULT_SCHEMA)
-        )
-        ranked = partial.withColumn(
-            "score", F.round("score", ROUND_DECIMALS)
-        ).orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ranked = ranked.offset(offset)
-        return ranked.limit(k)
 
     def match_phrase_positional(
         self,
@@ -936,20 +982,13 @@ class CompressedIndex:
             raise ValueError("phrase analyzes to zero terms")
         terms = sorted(set(seq))
         idfs = self._idfs(terms)
-        if len(idfs) < len(terms):
+        win = self._doc_window(terms) if len(idfs) == len(terms) else None
+        if win is None:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        blocks = self.postings.where(F.col("term").isin(terms))
-        spans = blocks.groupBy("term").agg(
-            F.min("first_doc_id").alias("lo"), F.max("last_doc_id").alias("hi")
-        ).collect()
-        if len(spans) < len(terms):
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        lo = max(int(r["lo"]) for r in spans)
-        hi = min(int(r["hi"]) for r in spans)
-        if lo > hi:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        blocks = blocks.where(
-            (F.col("last_doc_id") >= lo) & (F.col("first_doc_id") <= hi)
+        blocks = self.postings.where(
+            F.col("term").isin(terms)
+            & (F.col("last_doc_id") >= win[0])
+            & (F.col("first_doc_id") <= win[1])
         )
         from .positions import phrase_topk_fn
 
@@ -957,12 +996,7 @@ class CompressedIndex:
         partial = blocks.groupBy("shard").applyInPandas(
             lambda key, bl: fn(bl), schema=_RESULT_SCHEMA
         )
-        ranked = partial.withColumn(
-            "score", F.round("score", ROUND_DECIMALS)
-        ).orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ranked = ranked.offset(offset)
-        return ranked.limit(k)
+        return _ranked(partial, k, offset)
 
     def match_phrase_prefix_positional(
         self,
@@ -1009,17 +1043,8 @@ class CompressedIndex:
             return self.term_prefix_search(pfx, k=k, offset=offset)
         terms = sorted(set(complete))
         idfs = self._idfs(terms)
-        if len(idfs) < len(terms):
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        cblocks = self.postings.where(F.col("term").isin(terms))
-        spans = cblocks.groupBy("term").agg(
-            F.min("first_doc_id").alias("lo"), F.max("last_doc_id").alias("hi")
-        ).collect()
-        if len(spans) < len(terms):
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        lo = max(int(r["lo"]) for r in spans)
-        hi = min(int(r["hi"]) for r in spans)
-        if lo > hi:
+        win = self._doc_window(terms) if len(idfs) == len(terms) else None
+        if win is None:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
         pfx_hi = _prefix_successor(pfx)
         exp_cond = F.col("term") >= pfx
@@ -1027,8 +1052,8 @@ class CompressedIndex:
             exp_cond = exp_cond & (F.col("term") < pfx_hi)
         blocks = self.postings.where(
             (F.col("term").isin(terms) | exp_cond)
-            & (F.col("last_doc_id") >= lo)
-            & (F.col("first_doc_id") <= hi)
+            & (F.col("last_doc_id") >= win[0])
+            & (F.col("first_doc_id") <= win[1])
         )
         from .positions import phrase_prefix_topk_fn
 
@@ -1038,12 +1063,7 @@ class CompressedIndex:
         partial = blocks.groupBy("shard").applyInPandas(
             lambda key, bl: fn(bl), schema=_RESULT_SCHEMA
         )
-        ranked = partial.withColumn(
-            "score", F.round("score", ROUND_DECIMALS)
-        ).orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ranked = ranked.offset(offset)
-        return ranked.limit(k)
+        return _ranked(partial, k, offset)
 
     #: routing threshold for the coordinator phrase twins: above this
     #: estimated POSITIONS-DECODE volume the single-core driver kernel
@@ -1131,12 +1151,7 @@ class CompressedIndex:
         from .positions import phrase_topk_fn
 
         fn = phrase_topk_fn(seq, idfs, self.meta.avgdl, k + offset, slop)
-        out = fn(blocks)
-        out["score"] = out["score"].round(ROUND_DECIMALS)
-        out = out.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        ).iloc[offset : offset + k]
-        return out.reset_index(drop=True)
+        return _ranked_local(fn(blocks), k, offset)
 
     def match_phrase_prefix_local(
         self,
@@ -1193,12 +1208,7 @@ class CompressedIndex:
         fn = phrase_prefix_topk_fn(
             complete, pfx, idfs, self.meta.avgdl, k + offset
         )
-        out = fn(blocks)
-        out["score"] = out["score"].round(ROUND_DECIMALS)
-        out = out.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        ).iloc[offset : offset + k]
-        return out.reset_index(drop=True)
+        return _ranked_local(fn(blocks), k, offset)
 
     _SEEK_COLS = (
         "term", "n_docs", "docs_enc", "tfs_enc", "dls_enc",
@@ -1331,6 +1341,17 @@ class CompressedIndex:
         if not tabs:
             return pd.DataFrame(columns=["shard", *cols])
         return pa.concat_tables(tabs).to_pandas()
+
+    def _attrs_dataset(self):
+        """The attrs pyarrow dataset for coordinator reads — discovery
+        (file listing + schema) runs once per index open."""
+        if self._pads_attrs is None:
+            import pyarrow.dataset as pads
+
+            self._pads_attrs = pads.dataset(
+                os.path.join(self.out_dir, "attrs"), partitioning="hive"
+            )
+        return self._pads_attrs
 
     def _make_decoder(self, blocks: pd.DataFrame):
         """Decoded-postings cache + row-aligned gather. Returns
@@ -1471,7 +1492,6 @@ class CompressedIndex:
         node, exactly the reference's single-ES-box deployment
         (docker-compose.yml:7)."""
         import pyarrow.compute as pc
-        import pyarrow.dataset as pads
 
         terms = sorted(set(self._analyze(text)))
         if not terms:
@@ -1488,11 +1508,6 @@ class CompressedIndex:
         if not terms or (min_match or 1) > len(terms):
             return _empty()
         wanted = terms + should_terms + must_not_terms
-        if getattr(self, "_pads_attrs", None) is None:
-            # dataset discovery (file listing + schema) once per index open
-            self._pads_attrs = pads.dataset(
-                os.path.join(self.out_dir, "attrs"), partitioning="hive"
-            )
         blocks = self._seek_blocks(wanted)
         attrs = None
         has_filter = bool(
@@ -1569,7 +1584,7 @@ class CompressedIndex:
                 cols.append(prefix[0])
             if geo is not None:
                 cols += [c for c in (g_lon, g_lat) if c not in cols]
-            tbl = self._pads_attrs.to_table(columns=cols, filter=expr)
+            tbl = self._attrs_dataset().to_table(columns=cols, filter=expr)
             if prefix is not None:
                 tbl = tbl.filter(
                     pc.starts_with(pc.field(prefix[0]), prefix[1])
@@ -1628,12 +1643,7 @@ class CompressedIndex:
                 parts = list(self._executor().map(run_one, groups))
             else:
                 parts = [run_one(groups[0])]
-        out = pd.concat(parts, ignore_index=True)
-        out["score"] = out["score"].round(ROUND_DECIMALS)
-        out = out.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        ).iloc[offset : offset + k]
-        return out.reset_index(drop=True)
+        return _ranked_local(pd.concat(parts, ignore_index=True), k, offset)
 
     def more_like_this(
         self,
@@ -1665,14 +1675,7 @@ class CompressedIndex:
         if not row:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
         toks = self._analyze(row[0][0])
-        want = sorted(set(toks))
-        if self._df_local is not None:
-            dfs = {t: self._df_local[t] for t in want if t in self._df_local}
-        else:
-            dfs = {
-                r["term"]: r["df"]
-                for r in self.term_stats.where(F.col("term").isin(want)).collect()
-            }
+        dfs = self._dfs(sorted(set(toks)))
         from .exact import mlt_select_terms
 
         sel = mlt_select_terms(
@@ -1700,7 +1703,10 @@ class CompressedIndex:
         """ES highlight analog on the production path: block-max top-k,
         then snippets for ONLY the k hit rows of the source table (the
         broadcast semi-join restricts the tokenize to O(k) docs). Frozen
-        fragment semantics in engine/highlight.py."""
+        fragment semantics in engine/highlight.py. On a synonym index the
+        snippets show each token's CANONICAL form (the analyzed token the
+        postings hold), where ES shows the surface form the document
+        used — documented divergence (see highlight_snippets)."""
         from .highlight import highlight_snippets
 
         hits = self.search(text, k=k, **kwargs)
@@ -1754,6 +1760,8 @@ class CompressedIndex:
         return ranked.limit(k)
 
     _COLLAPSE_SCHEMA = "doc_id long, score double, collapse_key string"
+    _FACET_SCHEMA = "facet_key string, cnt long"
+    _BUCKET_SCHEMA = "bucket string, cnt long"
 
     def collapse_search(self, text: str, collapse_col: str, k: int = 10) -> DataFrame:
         """ES field collapsing: the top-k distinct values of
@@ -1777,47 +1785,21 @@ class CompressedIndex:
         the SHUFFLE) and joins the shard's attrs slice for the key column
         — the same cogroup shape as a filtered query.
         """
-        terms = sorted(set(self._analyze(text)))
-        if not terms:
-            raise ValueError("query analyzes to zero terms")
+        terms, idfs = self._match_terms(text)
         if collapse_col not in self.attrs.columns:
             raise ValueError(f"index attrs lack column {collapse_col!r}")
-        idfs = self._idfs(terms)
-        terms = [t for t in terms if t in idfs]
         if not terms:
             return self.spark.createDataFrame([], self._COLLAPSE_SCHEMA)
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
 
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype="int64"),
-                     "score": pd.Series(dtype="float64"),
-                     "collapse_key": pd.Series(dtype="object")}
-                )
-            m = r.merge(
-                at.rename(columns={collapse_col: "collapse_key"})[
-                    ["doc_id", "collapse_key"]
-                ],
-                on="doc_id",
-            )
-            m = m.sort_values(
+        def best(m: pd.DataFrame) -> pd.DataFrame:
+            m = m.rename(columns={collapse_col: "collapse_key"}).sort_values(
                 ["score", "doc_id"], ascending=[False, True], kind="mergesort"
             )
             best = m.drop_duplicates("collapse_key", keep="first")
             return best.head(k)[["doc_id", "score", "collapse_key"]]
 
-        allowed = self.attrs.select("shard", "doc_id", collapse_col)
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(fn, schema=self._COLLAPSE_SCHEMA)
+        partial = self._match_set_stage(
+            terms, idfs, [collapse_col], best, self._COLLAPSE_SCHEMA
         )
         from pyspark.sql import Window
 
@@ -1876,11 +1858,7 @@ class CompressedIndex:
         _check(modifier, boost_mode)
         if field not in self.attrs.columns:
             raise ValueError(f"index attrs lack column {field!r}")
-        terms = sorted(set(self._analyze(text)))
-        if not terms:
-            raise ValueError("query analyzes to zero terms")
-        idfs = self._idfs(terms)
-        terms = [t for t in terms if t in idfs]
+        terms, idfs = self._match_terms(text)
         if not terms:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
         blocks = self.postings.where(F.col("term").isin(terms))
@@ -1895,11 +1873,7 @@ class CompressedIndex:
             .cogroup(allowed.groupBy("shard"))
             .applyInPandas(lambda bl, at: fn(bl, at), schema=_RESULT_SCHEMA)
         )
-        return (
-            partial.withColumn("score", F.round("score", ROUND_DECIMALS))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _ranked(partial, k)
 
     def dis_max(
         self, texts: list[str], k: int = 10, tie_breaker: float = 0.0
@@ -1932,11 +1906,7 @@ class CompressedIndex:
         partial = blocks.groupBy("shard").applyInPandas(
             lambda key, bl: fn(bl), schema=_RESULT_SCHEMA
         )
-        return (
-            partial.withColumn("score", F.round("score", ROUND_DECIMALS))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _ranked(partial, k)
 
     def boosting(
         self,
@@ -1971,41 +1941,30 @@ class CompressedIndex:
         partial = blocks.groupBy("shard").applyInPandas(
             lambda key, bl: fn(bl), schema=_RESULT_SCHEMA
         )
-        return (
-            partial.withColumn("score", F.round("score", ROUND_DECIMALS))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return _ranked(partial, k)
 
     def constant_score(
-        self, k: int = 10, boost: float = 1.0, **filter_kwargs
+        self,
+        k: int = 10,
+        boost: float = 1.0,
+        *,
+        filters: dict[str, str] | None = None,
+        prefix: tuple[str, str] | None = None,
+        ranges: dict[str, tuple] | None = None,
+        exists_cols: list[str] | None = None,
+        ids: list[int] | None = None,
+        geo: tuple | None = None,
     ) -> DataFrame:
         """ES constant_score: every doc passing the filter clauses scores
         ``boost`` — pure Catalyst over the attrs table (filters/prefix/
         ranges/exists/ids pushed to the Parquet scan), postings never
         touched. doc_id ASC, the constant-score contract every
-        filter-only path uses."""
-        cond = F.lit(True)
-        for col, val in (filter_kwargs.get("filters") or {}).items():
-            if isinstance(val, (list, tuple, set)):
-                cond = cond & F.col(col).isin(*sorted(val))
-            else:
-                cond = cond & (F.col(col) == F.lit(val))
-        prefix = filter_kwargs.get("prefix")
-        if prefix is not None:
-            cond = cond & F.col(prefix[0]).startswith(prefix[1])
-        for col, (lo, hi) in (filter_kwargs.get("ranges") or {}).items():
-            if lo is not None:
-                cond = cond & (F.col(col) >= F.lit(lo))
-            if hi is not None:
-                cond = cond & (F.col(col) <= F.lit(hi))
-        for col in filter_kwargs.get("exists_cols") or []:
-            cond = cond & F.col(col).isNotNull()
-        ids = filter_kwargs.get("ids")
-        if ids is not None:
-            cond = cond & F.col("doc_id").isin([int(i) for i in ids])
+        filter-only path uses. The clauses are ``search``'s, compiled by
+        the same code (``geo`` included); an unknown clause name raises
+        TypeError instead of silently matching every doc."""
+        cond = _filter_cond(filters, prefix, ranges, exists_cols, ids, geo)
         return (
-            self.attrs.where(cond)
+            (self.attrs if cond is None else self.attrs.where(cond))
             .select("doc_id", F.lit(float(boost)).alias("score"))
             .orderBy(F.asc("doc_id"))
             .limit(k)
@@ -2021,40 +1980,14 @@ class CompressedIndex:
         truncation) — because emitting every shard-local (value, count)
         pair costs a bounded cardinality, not a ranking guarantee.
         """
-        terms = sorted(set(self._analyze(text)))
-        if not terms:
-            raise ValueError("query analyzes to zero terms")
+        terms, idfs = self._match_terms(text)
         if facet_col not in self.attrs.columns:
             raise ValueError(f"index attrs lack column {facet_col!r}")
-        idfs = self._idfs(terms)
-        terms = [t for t in terms if t in idfs]
         if not terms:
-            return self.spark.createDataFrame([], "facet_key string, cnt long")
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
-
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return pd.DataFrame(
-                    {"facet_key": pd.Series(dtype="object"),
-                     "cnt": pd.Series(dtype="int64")}
-                )
-            m = r.merge(at[["doc_id", facet_col]], on="doc_id")
-            vc = m[facet_col].value_counts()
-            return pd.DataFrame(
-                {"facet_key": vc.index.astype(str), "cnt": vc.to_numpy()}
-            )
-
-        allowed = self.attrs.select("shard", "doc_id", facet_col)
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(fn, schema="facet_key string, cnt long")
+            return self.spark.createDataFrame([], self._FACET_SCHEMA)
+        partial = self._match_set_stage(
+            terms, idfs, [facet_col], lambda m: _key_counts(m[facet_col]),
+            self._FACET_SCHEMA,
         )
         return (
             partial.groupBy("facet_key")
@@ -2213,12 +2146,7 @@ class CompressedIndex:
         postings read."""
         if not pattern:
             raise ValueError("wildcard_term_search needs a non-empty pattern")
-        rx = re.compile(
-            "^" + "".join(
-                ".*" if c == "*" else "." if c == "?" else re.escape(c)
-                for c in pattern.lower()
-            ) + "$"
-        )
+        rx = re.compile(_wildcard_regex(pattern))
         cands = self._expansion_local(
             lambda t: rx.match(t) is not None, max_expansions
         )
@@ -2259,37 +2187,20 @@ class CompressedIndex:
         coordinator."""
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.dataset as pads
 
-        terms = sorted(set(self._analyze(text)))
-        if not terms:
-            raise ValueError("query analyzes to zero terms")
+        terms, idfs = self._match_terms(text)
         if facet_col not in self.attrs.columns:
             raise ValueError(f"index attrs lack column {facet_col!r}")
-        empty = pd.DataFrame(
-            {"facet_key": pd.Series(dtype="object"),
-             "cnt": pd.Series(dtype="int64")}
-        )
-        idfs = self._idfs(terms)
-        terms = [t for t in terms if t in idfs]
+        empty = _empty(self._FACET_SCHEMA)
         if not terms:
             return empty
         blocks = self._seek_blocks(terms)
         if len(blocks) == 0:
             return empty
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
-        r = fd(blocks)
+        r = self._match_kernel(terms, idfs)(blocks)
         if len(r) == 0:
             return empty
-        if getattr(self, "_pads_attrs", None) is None:
-            self._pads_attrs = pads.dataset(
-                os.path.join(self.out_dir, "attrs"), partitioning="hive"
-            )
-        tbl = self._pads_attrs.to_table(columns=["doc_id", facet_col])
+        tbl = self._attrs_dataset().to_table(columns=["doc_id", facet_col])
         m = pc.is_in(
             tbl.column("doc_id"),
             value_set=pa.array(r["doc_id"].to_numpy(dtype=np.int64)),
@@ -2302,15 +2213,8 @@ class CompressedIndex:
         # silently drops — breaking the twins' bucket identity on any
         # nullable facet column.
         keys = tbl.column(facet_col).filter(m).to_pandas().astype(str)
-        if after is not None:
-            keys = keys[keys > after]
-        if len(keys) == 0:
-            return empty
-        vc = keys.value_counts().sort_index().iloc[:size]
-        return pd.DataFrame(
-            {"facet_key": vc.index.astype(str),
-             "cnt": vc.to_numpy(dtype=np.int64)}
-        )
+        out = _key_counts(keys, after).sort_values("facet_key")
+        return out.iloc[:size].reset_index(drop=True)
 
     def _cap_expansion(self, vocab: DataFrame, max_expansions: int) -> list[str]:
         """ES ``max_expansions`` contract (default 50 there and here):
@@ -2331,6 +2235,20 @@ class CompressedIndex:
             .collect()
         )
         return [r["term"] for r in rows]
+
+    def _expansion_docs(
+        self, vocab: DataFrame, max_expansions: int, k: int
+    ) -> DataFrame:
+        """Shared tail of the distributed term-expansion queries: the
+        ``_cap_expansion`` survivors push In(term) into the postings
+        scan, then ``_constant_score_docs`` (empty when no term
+        matched)."""
+        cands = self._cap_expansion(vocab, max_expansions)
+        if not cands:
+            return self.spark.createDataFrame([], _RESULT_SCHEMA)
+        return self._constant_score_docs(
+            self.postings.where(F.col("term").isin(cands)), k
+        )
 
     def fuzzy_term_search(
         self, term: str, k: int = 10, max_edits: int = 1, prefix_len: int = 0,
@@ -2367,12 +2285,7 @@ class CompressedIndex:
         vocab = vocab.where(
             F.length("term").between(len(qt) - max_edits, len(qt) + max_edits)
         ).where(F.levenshtein(F.col("term"), F.lit(qt)) <= max_edits)
-        cands = self._cap_expansion(vocab, max_expansions)
-        if not cands:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        return self._constant_score_docs(
-            self.postings.where(F.col("term").isin(cands)), k
-        )
+        return self._expansion_docs(vocab, max_expansions, k)
 
     def wildcard_term_search(
         self, pattern: str, k: int = 10, max_expansions: int = 50
@@ -2401,12 +2314,7 @@ class CompressedIndex:
             if ch in "*?":
                 break
             lit_prefix += ch
-        # translate to an anchored regex, escaping everything else —
-        # the analyzer lowercases, so match case-insensitively via lower()
-        rx = "^" + "".join(
-            ".*" if c == "*" else "." if c == "?" else re.escape(c)
-            for c in pattern.lower()
-        ) + "$"
+        rx = _wildcard_regex(pattern)
         vocab = self.term_stats.select("term", "df")
         if lit_prefix:
             hi = _prefix_successor(lit_prefix.lower())
@@ -2415,12 +2323,7 @@ class CompressedIndex:
                 cond = cond & (F.col("term") < hi)
             vocab = vocab.where(cond)
         vocab = vocab.where(F.col("term").rlike(rx))
-        cands = self._cap_expansion(vocab, max_expansions)
-        if not cands:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        return self._constant_score_docs(
-            self.postings.where(F.col("term").isin(cands)), k
-        )
+        return self._expansion_docs(vocab, max_expansions, k)
 
     def regexp_term_search(
         self, regex: str, k: int = 10, max_expansions: int = 50
@@ -2440,12 +2343,7 @@ class CompressedIndex:
         vocab = self.term_stats.select("term", "df").where(
             F.col("term").rlike(f"^(?:{regex})$")
         )
-        cands = self._cap_expansion(vocab, max_expansions)
-        if not cands:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        return self._constant_score_docs(
-            self.postings.where(F.col("term").isin(cands)), k
-        )
+        return self._expansion_docs(vocab, max_expansions, k)
 
     _STATS_SCHEMA = (
         "cnt long, min_val double, max_val double, sum_val double, avg_val double"
@@ -2463,45 +2361,17 @@ class CompressedIndex:
         terms, idfs = self._match_terms(text)
         if not terms:
             return self.spark.createDataFrame([], self._STATS_SCHEMA)
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
 
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return pd.DataFrame(
-                    {"cnt": pd.Series(dtype="int64"),
-                     "min_val": pd.Series(dtype="float64"),
-                     "max_val": pd.Series(dtype="float64"),
-                     "sum_val": pd.Series(dtype="float64")}
-                )
-            cols = ["doc_id"] if num_col == "doc_id" else ["doc_id", num_col]
-            v = r.merge(at[cols], on="doc_id")[num_col]
-            v = v.astype("float64")
-            if len(v) == 0:
-                return pd.DataFrame(
-                    {"cnt": pd.Series(dtype="int64"),
-                     "min_val": pd.Series(dtype="float64"),
-                     "max_val": pd.Series(dtype="float64"),
-                     "sum_val": pd.Series(dtype="float64")}
-                )
+        def stats(m: pd.DataFrame) -> pd.DataFrame:
+            v = m[num_col].astype("float64")
             return pd.DataFrame(
                 {"cnt": [len(v)], "min_val": [float(v.min())],
                  "max_val": [float(v.max())], "sum_val": [float(v.sum())]}
             )
 
-        sel = ["shard", "doc_id"] + ([num_col] if num_col != "doc_id" else [])
-        allowed = self.attrs.select(*sel)
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(
-                fn, schema="cnt long, min_val double, max_val double, sum_val double"
-            )
+        partial = self._match_set_stage(
+            terms, idfs, [num_col], stats,
+            "cnt long, min_val double, max_val double, sum_val double",
         )
         return partial.agg(
             F.sum("cnt").alias("cnt"),
@@ -2523,38 +2393,19 @@ class CompressedIndex:
         if interval <= 0:
             raise ValueError("interval must be positive")
         terms, idfs = self._match_terms(text)
+        schema = "bucket double, cnt long"
         if not terms:
-            return self.spark.createDataFrame([], "bucket double, cnt long")
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
+            return self.spark.createDataFrame([], schema)
 
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return pd.DataFrame(
-                    {"bucket": pd.Series(dtype="float64"),
-                     "cnt": pd.Series(dtype="int64")}
-                )
-            cols = ["doc_id"] if num_col == "doc_id" else ["doc_id", num_col]
-            v = r.merge(at[cols], on="doc_id")[num_col]
-            b = np.floor(v.to_numpy(dtype=np.float64) / interval) * interval
-            vc = pd.Series(b).value_counts()
+        def buckets(m: pd.DataFrame) -> pd.DataFrame:
+            v = m[num_col].to_numpy(dtype=np.float64)
+            vc = pd.Series(np.floor(v / interval) * interval).value_counts()
             return pd.DataFrame(
                 {"bucket": vc.index.to_numpy(dtype=np.float64),
                  "cnt": vc.to_numpy()}
             )
 
-        sel = ["shard", "doc_id"] + ([num_col] if num_col != "doc_id" else [])
-        allowed = self.attrs.select(*sel)
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(fn, schema="bucket double, cnt long")
-        )
+        partial = self._match_set_stage(terms, idfs, [num_col], buckets, schema)
         return (
             partial.groupBy("bucket")
             .agg(F.sum("cnt").alias("cnt"))
@@ -2573,27 +2424,10 @@ class CompressedIndex:
         terms, idfs = self._match_terms(text)
         if not terms:
             return self.spark.createDataFrame([], "cardinality long")
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
-
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return pd.DataFrame({"val": pd.Series(dtype="object")})
-            cols = ["doc_id"] if col == "doc_id" else ["doc_id", col]
-            m = r.merge(at[cols], on="doc_id")
-            return pd.DataFrame({"val": m[col].astype(str).unique()})
-
-        sel = ["shard", "doc_id"] + ([col] if col != "doc_id" else [])
-        allowed = self.attrs.select(*sel)
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(fn, schema="val string")
+        partial = self._match_set_stage(
+            terms, idfs, [col],
+            lambda m: pd.DataFrame({"val": m[col].astype(str).unique()}),
+            "val string",
         )
         return partial.agg(
             F.count_distinct(F.col("val")).alias("cardinality")
@@ -2609,39 +2443,20 @@ class CompressedIndex:
         match set to one partial count per bucket, so the shuffle is
         O(shards × buckets). Rows ordered bucket ASC; empty buckets
         reported with cnt 0 (ES keeps them too)."""
-        terms = sorted(set(self._analyze(text)))
-        if not terms:
-            raise ValueError("query analyzes to zero terms")
+        terms, idfs = self._match_terms(text)
         names = sorted(buckets)
         need_cols = sorted({c for b in buckets.values() for c in b})
         for c in need_cols:
             if c not in self.attrs.columns:
                 raise ValueError(f"index attrs lack column {c!r}")
-        idfs = self._idfs(terms)
-        terms = [t for t in terms if t in idfs]
-        schema = "bucket string, cnt long"
         zero = self.spark.createDataFrame(
-            [(n, 0) for n in names], schema
+            [(n, 0) for n in names], self._BUCKET_SCHEMA
         )
         if not terms:
             return zero.orderBy("bucket")
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
         spec = {n: dict(buckets[n]) for n in names}
 
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"bucket": pd.Series(dtype="object"),
-                 "cnt": pd.Series(dtype="int64")}
-            )
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return empty
-            m = r.merge(at[["doc_id"] + need_cols], on="doc_id")
+        def count(m: pd.DataFrame) -> pd.DataFrame:
             rows = []
             for n in names:
                 mask = pd.Series(True, index=m.index)
@@ -2650,11 +2465,8 @@ class CompressedIndex:
                 rows.append((n, int(mask.sum())))
             return pd.DataFrame(rows, columns=["bucket", "cnt"])
 
-        allowed = self.attrs.select("shard", "doc_id", *need_cols)
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(fn, schema=schema)
+        partial = self._match_set_stage(
+            terms, idfs, need_cols, count, self._BUCKET_SCHEMA
         )
         return (
             partial.unionByName(zero)
@@ -2674,71 +2486,12 @@ class CompressedIndex:
         doubles as a map key in the ordering expression (duplicate map
         keys throw under Spark's default mapKeyDedupPolicy=EXCEPTION)
         and the zero-frame groupBy would silently merge their counts."""
-        terms = sorted(set(self._analyze(text)))
-        if not terms:
-            raise ValueError("query analyzes to zero terms")
+        terms, idfs = self._match_terms(text)
         if num_col not in self.attrs.columns and num_col != "doc_id":
             raise ValueError(f"index attrs lack column {num_col!r}")
-        idfs = self._idfs(terms)
-        terms = [t for t in terms if t in idfs]
-        keys = [
-            f"{'*' if lo is None else lo}-{'*' if hi is None else hi}"
-            for lo, hi in bounds
-        ]
-        if len(set(keys)) != len(keys):
-            raise ValueError(f"duplicate (lo, hi) bounds in {bounds!r}")
-        schema = "bucket string, cnt long"
-        zero = self.spark.createDataFrame([(k, 0) for k in keys], schema)
-        order = {k: i for i, k in enumerate(keys)}
-        oexpr = F.element_at(
-            F.create_map(*[F.lit(x) for k in keys for x in (k, order[k])]),
-            F.col("bucket"),
-        )
-        if not terms:
-            return zero.orderBy(oexpr).select("bucket", "cnt")
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
-        bspec = list(zip(keys, bounds))
-
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"bucket": pd.Series(dtype="object"),
-                 "cnt": pd.Series(dtype="int64")}
-            )
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return empty
-            cols = ["doc_id"] + ([num_col] if num_col != "doc_id" else [])
-            m = r.merge(at[cols], on="doc_id")
-            v = m[num_col].astype("float64")
-            rows = []
-            for k, (lo, hi) in bspec:
-                mask = pd.Series(True, index=m.index)
-                if lo is not None:
-                    mask &= v >= lo
-                if hi is not None:
-                    mask &= v < hi
-                rows.append((k, int(mask.sum())))
-            return pd.DataFrame(rows, columns=["bucket", "cnt"])
-
-        acols = ["shard", "doc_id"] + (
-            [num_col] if num_col not in ("shard", "doc_id") else []
-        )
-        allowed = self.attrs.select(*acols)
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(fn, schema=schema)
-        )
-        return (
-            partial.unionByName(zero)
-            .groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
-            .orderBy(oexpr)
-            .select("bucket", "cnt")
+        return self._interval_buckets(
+            terms, idfs, bounds, [num_col],
+            lambda m: m[num_col].astype("float64").to_numpy(),
         )
 
     def geo_distance_agg(
@@ -2763,66 +2516,59 @@ class CompressedIndex:
         key doubles as an ordering-map key)."""
         from ..ops.geo import haversine_np
 
-        terms = sorted(set(self._analyze(text)))
-        if not terms:
-            raise ValueError("query analyzes to zero terms")
+        terms, idfs = self._match_terms(text)
         for c in (lon_col, lat_col):
             if c not in self.attrs.columns:
                 raise ValueError(f"index attrs lack column {c!r}")
-        idfs = self._idfs(terms)
-        terms = [t for t in terms if t in idfs]
+        return self._interval_buckets(
+            terms, idfs, bounds, [lon_col, lat_col],
+            lambda m: haversine_np(
+                m[lon_col].to_numpy(dtype=np.float64),
+                m[lat_col].to_numpy(dtype=np.float64),
+                origin_lon, origin_lat,
+            ),
+        )
+
+    def _interval_buckets(
+        self, terms, idfs, bounds: list[tuple], cols: list[str], values
+    ) -> DataFrame:
+        """Keyed half-open [lo, hi) buckets over the match set — the
+        shared body of ``range_agg`` and ``geo_distance_agg``: bucket keys
+        "lo-hi" ('*' for an open end), the duplicate-bound check, the
+        zero frame that keeps empty buckets, and the caller-order map.
+        ``values(rows)`` maps a shard's matched rows to the float array
+        the bounds apply to."""
         keys = [
             f"{'*' if lo is None else lo}-{'*' if hi is None else hi}"
             for lo, hi in bounds
         ]
         if len(set(keys)) != len(keys):
             raise ValueError(f"duplicate (lo, hi) bounds in {bounds!r}")
-        schema = "bucket string, cnt long"
-        zero = self.spark.createDataFrame([(k, 0) for k in keys], schema)
-        order = {k: i for i, k in enumerate(keys)}
+        zero = self.spark.createDataFrame(
+            [(k, 0) for k in keys], self._BUCKET_SCHEMA
+        )
         oexpr = F.element_at(
-            F.create_map(*[F.lit(x) for k in keys for x in (k, order[k])]),
+            F.create_map(*[F.lit(x) for i, k in enumerate(keys) for x in (k, i)]),
             F.col("bucket"),
         )
         if not terms:
             return zero.orderBy(oexpr).select("bucket", "cnt")
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
         bspec = list(zip(keys, bounds))
 
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"bucket": pd.Series(dtype="object"),
-                 "cnt": pd.Series(dtype="int64")}
-            )
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return empty
-            m = r.merge(at[["doc_id", lon_col, lat_col]], on="doc_id")
-            v = haversine_np(
-                m[lon_col].to_numpy(dtype=np.float64),
-                m[lat_col].to_numpy(dtype=np.float64),
-                origin_lon, origin_lat,
-            )
+        def count(m: pd.DataFrame) -> pd.DataFrame:
+            v = values(m)
             rows = []
-            for kk, (lo, hi) in bspec:
+            for key, (lo, hi) in bspec:
                 mask = np.ones(len(v), dtype=bool)
                 if lo is not None:
                     mask &= v >= lo
                 if hi is not None:
                     mask &= v < hi
-                rows.append((kk, int(mask.sum())))
+                rows.append((key, int(mask.sum())))
             return pd.DataFrame(rows, columns=["bucket", "cnt"])
 
-        allowed = self.attrs.select("shard", "doc_id", lon_col, lat_col)
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(fn, schema=schema)
+        partial = self._match_set_stage(
+            terms, idfs, cols, count, self._BUCKET_SCHEMA
         )
         return (
             partial.unionByName(zero)
@@ -2850,44 +2596,18 @@ class CompressedIndex:
         final reduce derives avg from (sum, cnt) AFTER the merge
         (parallelism cannot reorder a float accumulation).
         """
-        terms = sorted(set(self._analyze(text)))
-        if not terms:
-            raise ValueError("query analyzes to zero terms")
+        terms, idfs = self._match_terms(text)
         for c in (facet_col, num_col):
             if c not in self.attrs.columns and c != "doc_id":
                 raise ValueError(f"index attrs lack column {c!r}")
-        idfs = self._idfs(terms)
-        terms = [t for t in terms if t in idfs]
         schema = (
             "facet_key string, cnt long, sum_val double, "
             "min_val double, max_val double"
         )
         if not terms:
             return self.spark.createDataFrame([], schema)
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
 
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"facet_key": pd.Series(dtype="object"),
-                 "cnt": pd.Series(dtype="int64"),
-                 "sum_val": pd.Series(dtype="float64"),
-                 "min_val": pd.Series(dtype="float64"),
-                 "max_val": pd.Series(dtype="float64")}
-            )
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return empty
-            cols = ["doc_id", facet_col] + (
-                [num_col] if num_col not in ("doc_id", facet_col) else []
-            )
-            m = r.merge(at[cols], on="doc_id")
-            if len(m) == 0:
-                return empty
+        def metrics(m: pd.DataFrame) -> pd.DataFrame:
             v = m[num_col].astype("float64")
             g = v.groupby(m[facet_col].astype(str)).agg(
                 ["count", "sum", "min", "max"]
@@ -2900,14 +2620,8 @@ class CompressedIndex:
                  "max_val": g["max"].to_numpy(dtype="float64")}
             )
 
-        sel = ["shard", "doc_id", facet_col] + (
-            [num_col] if num_col not in ("doc_id", facet_col) else []
-        )
-        allowed = self.attrs.select(*sel)
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(fn, schema=schema)
+        partial = self._match_set_stage(
+            terms, idfs, [facet_col, num_col], metrics, schema
         )
         return (
             partial.groupBy("facet_key")
@@ -2948,27 +2662,12 @@ class CompressedIndex:
         terms, idfs = self._match_terms(text)
         if not terms:
             return self.spark.createDataFrame([], "pct double, value double")
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
-
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return pd.DataFrame({"val": pd.Series(dtype="float64")})
-            cols = ["doc_id"] if num_col == "doc_id" else ["doc_id", num_col]
-            v = r.merge(at[cols], on="doc_id")[num_col]
-            return pd.DataFrame({"val": v.astype("float64").to_numpy()})
-
-        sel = ["shard", "doc_id"] + ([num_col] if num_col != "doc_id" else [])
-        allowed = self.attrs.select(*sel)
-        vals = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(fn, schema="val double")
+        vals = self._match_set_stage(
+            terms, idfs, [num_col],
+            lambda m: pd.DataFrame(
+                {"val": m[num_col].astype("float64").to_numpy()}
+            ),
+            "val double",
         )
         qs = vals.agg(
             F.percentile(
@@ -3004,46 +2703,15 @@ class CompressedIndex:
         ``search_after`` (engine/wand.py search), applied to buckets.
         Exact counts (map-side per-shard combine), key ASC.
         """
-        terms = sorted(set(self._analyze(text)))
-        if not terms:
-            raise ValueError("query analyzes to zero terms")
+        terms, idfs = self._match_terms(text)
         if facet_col not in self.attrs.columns:
             raise ValueError(f"index attrs lack column {facet_col!r}")
-        idfs = self._idfs(terms)
-        terms = [t for t in terms if t in idfs]
         if not terms:
-            return self.spark.createDataFrame([], "facet_key string, cnt long")
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
-
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            empty = pd.DataFrame(
-                {"facet_key": pd.Series(dtype="object"),
-                 "cnt": pd.Series(dtype="int64")}
-            )
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return empty
-            m = r.merge(at[["doc_id", facet_col]], on="doc_id")
-            keys = m[facet_col].astype(str)
-            if after is not None:
-                keys = keys[keys > after]
-            if len(keys) == 0:
-                return empty
-            vc = keys.value_counts()
-            return pd.DataFrame(
-                {"facet_key": vc.index.astype(str), "cnt": vc.to_numpy()}
-            )
-
-        allowed = self.attrs.select("shard", "doc_id", facet_col)
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(fn, schema="facet_key string, cnt long")
+            return self.spark.createDataFrame([], self._FACET_SCHEMA)
+        partial = self._match_set_stage(
+            terms, idfs, [facet_col],
+            lambda m: _key_counts(m[facet_col].astype(str), after),
+            self._FACET_SCHEMA,
         )
         return (
             partial.groupBy("facet_key")
@@ -3079,37 +2747,15 @@ class CompressedIndex:
         schema = "doc_id long, score double, group_key string"
         if not terms:
             return self.spark.createDataFrame([], schema)
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return pd.DataFrame(
-                    {"doc_id": pd.Series(dtype="int64"),
-                     "score": pd.Series(dtype="float64"),
-                     "group_key": pd.Series(dtype="object")}
-                )
-            m = r.merge(
-                at.rename(columns={group_col: "group_key"})[
-                    ["doc_id", "group_key"]
-                ],
-                on="doc_id",
-            ).sort_values(
+
+        def top(m: pd.DataFrame) -> pd.DataFrame:
+            m = m.rename(columns={group_col: "group_key"}).sort_values(
                 ["score", "doc_id"], ascending=[False, True], kind="mergesort"
             )
             top = m.groupby("group_key", sort=False).head(k_per_group)
             return top[["doc_id", "score", "group_key"]]
 
-        allowed = self.attrs.select("shard", "doc_id", group_col)
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(fn, schema=schema)
-        )
+        partial = self._match_set_stage(terms, idfs, [group_col], top, schema)
         from pyspark.sql import Window
 
         in_key = Window.partitionBy("group_key").orderBy(
@@ -3145,17 +2791,9 @@ class CompressedIndex:
         terms, idfs = self._match_terms(text)
         if not terms:
             return self.spark.createDataFrame([], "doc_id long")
-        blocks = self.postings.where(F.col("term").isin(terms))
-        fd = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
-            dense_hint=int(self.meta.n_docs),
-        )
-        return (
-            blocks.groupBy("shard")
-            .applyInPandas(lambda key, bl: fd(bl), schema=_RESULT_SCHEMA)
-            .select("doc_id")
-        )
+        return self._match_set_stage(
+            terms, idfs, None, lambda m: m, _RESULT_SCHEMA
+        ).select("doc_id")
 
     def significant_terms(
         self,
@@ -3233,3 +2871,57 @@ class CompressedIndex:
             raise ValueError("query analyzes to zero terms")
         idfs = self._idfs(terms)
         return [t for t in terms if t in idfs], idfs
+
+    def _match_kernel(self, terms: list[str], idfs: dict[str, float]):
+        """The uncut OR kernel: ``fn(blocks)`` scores EVERY doc matching
+        ≥1 of ``terms`` (no top-k cut, so θ never rises and no block is
+        pruned) — the full match set with its BM25 scores."""
+        return _shard_topk_fn(
+            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
+            must_not_terms=[], require_all=False,
+            dense_hint=int(self.meta.n_docs),
+        )
+
+    def _match_set_stage(
+        self,
+        terms: list[str],
+        idfs: dict[str, float],
+        cols: list[str] | None,
+        reduce,
+        schema: str,
+    ) -> DataFrame:
+        """The full-match-set stage every aggregation shares: ONE scan of
+        the query terms' postings, scored per shard by ``_match_kernel``,
+        and ONE blocks⋈attrs cogroup on shard that joins each shard's
+        matched docs to its own attrs slice (``cols`` only — the field
+        never leaves its shard). ``reduce(rows)`` sees one shard's
+        matched (doc_id, score, *cols) rows and returns that shard's
+        map-side partial in ``schema``; a shard with no matched row
+        emits none. The shuffle is O(shards × partial rows) — O(matches)
+        only for a per-match partial (percentiles). ``cols=None`` drops
+        the attrs side: the plan is the blocks-only grouped map and
+        ``reduce`` sees the kernel's (doc_id, score) rows."""
+        blocks = self.postings.where(F.col("term").isin(terms))
+        fd = self._match_kernel(terms, idfs)
+        if cols is None:
+            return blocks.groupBy("shard").applyInPandas(
+                lambda key, bl: reduce(fd(bl)), schema=schema
+            )
+        empty = _empty(schema)
+        want = [c for c in dict.fromkeys(cols) if c != "doc_id"]
+
+        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
+            r = fd(bl)
+            if len(r) == 0 or len(at) == 0:
+                return empty
+            m = r.merge(at[["doc_id", *want]], on="doc_id")
+            return reduce(m) if len(m) else empty
+
+        allowed = self.attrs.select(
+            "shard", "doc_id", *[c for c in want if c != "shard"]
+        )
+        return (
+            blocks.groupBy("shard")
+            .cogroup(allowed.groupBy("shard"))
+            .applyInPandas(fn, schema=schema)
+        )

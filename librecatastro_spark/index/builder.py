@@ -52,7 +52,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..analyzer import TOKEN_SPLIT_RE
+from ..analyzer import TOKEN_SPLIT_RE, check_synonyms
 from ..bm25 import B, K1
 from .codec import encode_blocks_bulk
 
@@ -394,7 +394,11 @@ def build_index(
     queries answered ENTIRELY from the index — no source-table scan at
     query time (engine.wand.CompressedIndex.match_phrase_positional). The
     default ("freqs") build is byte-identical to before the option
-    existed apart from an all-null pos_enc column."""
+    existed apart from an all-null pos_enc column.
+
+    A ``synonyms`` map with a chained or cyclic pair is rejected
+    (ValueError, analyzer.check_synonyms) before anything is written."""
+    check_synonyms(synonyms)
     # the build wants AQE (coalesced shuffles) regardless of what an open
     # CompressedIndex turned off for query latency in this session — set it
     # for the build's duration and restore the caller's value after

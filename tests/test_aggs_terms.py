@@ -467,3 +467,54 @@ def test_range_agg_caller_order_and_duplicate_bounds(wand):
     assert got == ["120-*", "*-50", "50-120"]
     with pytest.raises(ValueError, match="duplicate"):
         wand.range_agg("def return", "doc_id", [(None, 50), (None, 50)])
+
+
+_ABSENT = "zzzznotaterm qqqqabsent"  # no term is in the dictionary
+
+
+@pytest.mark.parametrize("call,schema,want", [
+    (lambda w: w.collapse_search(_ABSENT, "lang"),
+     "doc_id:bigint score:double collapse_key:string", []),
+    (lambda w: w.facet_counts(_ABSENT, "lang"),
+     "facet_key:string cnt:bigint", []),
+    (lambda w: w.stats_agg(_ABSENT, "doc_id"),
+     "cnt:bigint min_val:double max_val:double sum_val:double avg_val:double",
+     []),
+    (lambda w: w.histogram_agg(_ABSENT, "doc_id", 50),
+     "bucket:double cnt:bigint", []),
+    (lambda w: w.cardinality_agg(_ABSENT, "lang"), "cardinality:bigint", []),
+    (lambda w: w.filters_agg(_ABSENT, {"py": {"lang": "py"},
+                                       "go": {"lang": "go"}}),
+     "bucket:string cnt:bigint", [("go", 0), ("py", 0)]),
+    (lambda w: w.range_agg(_ABSENT, "doc_id", [(50, None), (None, 50)]),
+     "bucket:string cnt:bigint", [("50-*", 0), ("*-50", 0)]),
+    (lambda w: w.geo_distance_agg(_ABSENT, "doc_id", "doc_id", 0.0, 0.0,
+                                  [(None, 1000.0), (1000.0, None)]),
+     "bucket:string cnt:bigint", [("*-1000.0", 0), ("1000.0-*", 0)]),
+    # the empty frame carries sum_val where a non-empty result has avg_val
+    (lambda w: w.facet_metric_agg(_ABSENT, "lang", "doc_id"),
+     "facet_key:string cnt:bigint sum_val:double min_val:double "
+     "max_val:double", []),
+    (lambda w: w.percentiles_agg(_ABSENT, "doc_id"),
+     "pct:double value:double", []),
+    (lambda w: w.composite_agg(_ABSENT, "lang", size=3),
+     "facet_key:string cnt:bigint", []),
+    (lambda w: w.top_hits_agg(_ABSENT, "lang"),
+     "doc_id:bigint score:double group_key:string", []),
+    (lambda w: w.match_doc_ids(_ABSENT), "doc_id:bigint", []),
+], ids=[
+    "collapse_search", "facet_counts", "stats_agg", "histogram_agg",
+    "cardinality_agg", "filters_agg", "range_agg", "geo_distance_agg",
+    "facet_metric_agg", "percentiles_agg", "composite_agg", "top_hits_agg",
+    "match_doc_ids",
+])
+def test_aggregations_on_empty_match_set(wand, call, schema, want):
+    """Every full-match-set aggregation on a query none of whose terms is
+    indexed: its column names and Spark types, and zero rows — or, for
+    the keyed-bucket aggregations, every bucket with cnt 0 in order."""
+    df = call(wand)
+    got_schema = " ".join(
+        f"{f.name}:{f.dataType.simpleString()}" for f in df.schema.fields
+    )
+    assert got_schema == schema
+    assert [tuple(r) for r in df.collect()] == want

@@ -454,6 +454,18 @@ def test_cli_geo_polygon_and_stopwords(cli_env, spark, tmp_path, capsys):
     assert rc == rc2 == 0 and with_stop == without and with_stop
 
 
+def test_cli_synonyms_bad_segment_exits(cli_env, tmp_path):
+    """A --synonyms segment without SRC=DST is rejected by name (like
+    --geo), instead of being dropped from the map."""
+    with pytest.raises(SystemExit, match="'scan'"):
+        main([
+            "build", "--input", cli_env["corpus"], "--out",
+            str(tmp_path / "badsyn"), "--text-col", "text",
+            "--synonyms", "join=merge,scan",
+        ])
+    assert not (tmp_path / "badsyn").exists()
+
+
 def test_cli_synonyms_build(cli_env, tmp_path, capsys):
     """r5: build --synonyms records the replace-form map; query analysis
     maps the surface form, so surface and canonical queries agree."""

@@ -21,25 +21,33 @@ from librecatastro_spark.index.builder import build_index
 def corpus(spark):
     docs = generate_corpus(spark, 400, min_tokens=20, max_tokens=150, partitions=4)
     docs = assign_doc_ids(docs)
-    # numeric field for function_score + a nullable col for exists
+    # numeric field for function_score + a nullable col for exists +
+    # a geo_point pair for the geo clause
     return docs.withColumn(
         "stars", (F.col("doc_id") % 17).cast("double")
     ).withColumn(
         "license",
         F.when(F.col("doc_id") % 3 == 0, F.lit("mit")).otherwise(F.lit(None)),
+    ).withColumn(
+        "lon", (F.col("doc_id") % 360).cast("double") - 180.0
+    ).withColumn(
+        "lat", ((F.col("doc_id") * 7) % 180).cast("double") - 90.0
     ).cache()
+
+
+ATTRS = ("repo", "lang", "stars", "license", "lon", "lat")
 
 
 @pytest.fixture(scope="module")
 def exact(corpus):
-    return ExactBM25(corpus, attr_cols=("repo", "lang", "stars", "license"), cache=True)
+    return ExactBM25(corpus, attr_cols=ATTRS, cache=True)
 
 
 @pytest.fixture(scope="module")
 def cidx(spark, corpus, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("sqidx"))
     build_index(
-        spark, corpus, out, attr_cols=("repo", "lang", "stars", "license"),
+        spark, corpus, out, attr_cols=ATTRS,
         n_shards=4, block_size=16, salt_threshold=120, n_salts=4,
     )
     return CompressedIndex(spark, out)
@@ -151,6 +159,29 @@ def test_constant_score_paths_identical(exact, cidx):
     assert e == c
     assert e
     assert all(s == 1.5 for _, s in e)
+
+
+def test_constant_score_geo_clause_and_unknown_clause(exact, cidx, corpus):
+    """constant_score takes search's clauses, geo included, on both
+    engines — and a misspelled clause name raises instead of silently
+    scoring every doc."""
+    import numpy as np
+
+    from librecatastro_spark.ops.geo import haversine_np
+
+    geo = ("lon", "lat", 20.0, 10.0, 3_000_000.0)
+    pts = corpus.select("doc_id", "lon", "lat").collect()
+    dist = haversine_np(
+        np.array([r["lon"] for r in pts]), np.array([r["lat"] for r in pts]),
+        20.0, 10.0,
+    )
+    want = sorted(r["doc_id"] for r, d in zip(pts, dist) if d <= 3_000_000.0)
+    assert 0 < len(want) < len(pts)
+    for eng in (exact, cidx):
+        got = rows(eng.constant_score(k=10_000, boost=2.0, geo=geo))
+        assert got == [(d, 2.0) for d in want]
+        with pytest.raises(TypeError):
+            eng.constant_score(k=10, filter={"lang": "py"})
 
 
 def test_exists_filter_search_paths(exact, cidx, corpus):

@@ -142,6 +142,27 @@ def test_verify_first_phrase_alternates_surface_forms(spark, tmp_path):
         ).collect()
     }
     assert out_hl and all("<em>merge</em>" in s for s in out_hl.values())
+    # documented divergence from ES: doc 0 wrote the surface form, and its
+    # snippet shows the canonical one
+    assert "join" not in out_hl[0]
+
+
+@pytest.mark.parametrize("syn", [
+    {"alpha": "beta", "beta": "gamma"},  # chain
+    {"alpha": "beta", "beta": "alpha"},  # 2-cycle
+])
+def test_chained_or_cyclic_synonyms_rejected(spark, corpus, tmp_path, syn):
+    """The Arrow build path rewrites pair by pair while query analysis
+    maps each token once, so a map whose target is itself a mapped
+    source would index a surface form under a term no query reaches:
+    Analyzer and build_index both reject it, before any write."""
+    with pytest.raises(ValueError, match="chains"):
+        Analyzer(synonyms=syn)
+    out = tmp_path / "chained"
+    with pytest.raises(ValueError, match="chains"):
+        build_index(spark, corpus, str(out), n_shards=2, synonyms=syn)
+    assert not out.exists()
+    assert Analyzer(synonyms=SYN).analyze("join scan") == ["merge", "query"]
 
 
 def test_append_honors_synonyms(spark, tmp_path):

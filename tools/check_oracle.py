@@ -5,7 +5,10 @@ in DuckDB on the same parquet, compares row count, column names, and an
 order-insensitive value multiset (columns sorted by name, floats as-is
 since both sides round explicitly).
 
-Usage: python tools/check_oracle.py [sf_dir] [name ...]
+Usage: python tools/check_oracle.py [sf_dir] [name ...] [--extra]
+
+Exits 0 when every selected check passes, 1 when one fails and 2 when a
+requested name is not a query (with --extra, extra_queries() count too).
 """
 
 from __future__ import annotations
@@ -47,6 +50,14 @@ def main() -> int:
     import __spark_entry__ as mod
     from librecatastro_spark.session import get_spark
 
+    qs, oracles = mod.queries(), mod.oracle_sql()
+    if with_extra:
+        qs = {**qs, **mod.extra_queries()}
+    unknown = sorted(only - set(qs))
+    if unknown:
+        # nothing would run for these names: fail instead of "passing"
+        print(f"unknown query names: {unknown}")
+        return 2
     spark = get_spark("check_oracle", cores=8, shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
@@ -54,9 +65,6 @@ def main() -> int:
         if os.path.exists(p):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    qs, oracles = mod.queries(), mod.oracle_sql()
-    if with_extra:
-        qs = {**qs, **mod.extra_queries()}
     failed = []
     for name, fn in qs.items():
         if only and name not in only:
