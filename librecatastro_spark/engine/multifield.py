@@ -126,6 +126,17 @@ class MultiFieldIndex:
             )
         return MultiFieldIndex(spark, out_dir, fields)
 
+    def _per_shard(self, blocks: DataFrame, combine, ests: list) -> DataFrame:
+        """The fields' unioned posting blocks through the engine's one
+        per-shard grouped map (``CompressedIndex._per_shard``), planned
+        by the Σ df of every field's live terms — the sub-indexes share
+        the one-task limit, so any one of them plans the stage."""
+        est = None if None in ests else sum(ests)
+        return self.sub[self.fields[0]]._per_shard(
+            blocks, combine, _RESULT_SCHEMA, est,
+            cols=CompressedIndex._SEEK_COLS + ("_field",),
+        )
+
     def _analyze_per_field(self, text: str) -> dict[str, list[str]]:
         """ES multi_match semantics: the query text is analyzed PER FIELD
         with that field's analyzer (each sub-index's meta.analyzer_re —
@@ -154,7 +165,7 @@ class MultiFieldIndex:
             raise ValueError(f"unsupported multi_match type: {match_type}")
         per_field = self._analyze_per_field(text)
         local_k = k + offset
-        fns, parts = {}, []
+        fns, parts, ests = {}, [], []
         for f in self.fields:
             s = self.sub[f]
             terms = per_field[f]
@@ -171,6 +182,7 @@ class MultiFieldIndex:
                 s.postings.where(F.col("term").isin(live))
                 .withColumn("_field", F.lit(f))
             )
+            ests.append(s._df_sum(live))
         if not parts:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
         blocks = parts[0]
@@ -203,9 +215,7 @@ class MultiFieldIndex:
                 uids, comb = uids[order], comb[order]
             return pd.DataFrame({"doc_id": uids, "score": comb})
 
-        partial = blocks.groupBy("shard").applyInPandas(
-            lambda key, b: combine(b), schema=_RESULT_SCHEMA
-        )
+        partial = self._per_shard(blocks, combine, ests)
         ranked = partial.orderBy(F.desc("score"), F.asc("doc_id"))
         if offset:
             ranked = ranked.offset(offset)
@@ -237,7 +247,7 @@ class MultiFieldIndex:
         per_field = self._analyze_per_field(text)
         local_k = k + offset
         fns: dict[tuple[str, str], object] = {}
-        parts = []
+        parts, ests = [], []
         for f in self.fields:
             s = self.sub[f]
             terms = per_field[f]
@@ -255,6 +265,7 @@ class MultiFieldIndex:
                 s.postings.where(F.col("term").isin(live))
                 .withColumn("_field", F.lit(f))
             )
+            ests.append(s._df_sum(live))
         if not parts:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
         blocks = parts[0]
@@ -296,9 +307,7 @@ class MultiFieldIndex:
                 uids, tot = uids[order], tot[order]
             return pd.DataFrame({"doc_id": uids, "score": tot})
 
-        partial = blocks.groupBy("shard").applyInPandas(
-            lambda key, b: combine(b), schema=_RESULT_SCHEMA
-        )
+        partial = self._per_shard(blocks, combine, ests)
         ranked = partial.orderBy(F.desc("score"), F.asc("doc_id"))
         if offset:
             ranked = ranked.offset(offset)

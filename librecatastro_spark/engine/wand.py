@@ -19,6 +19,9 @@ Scale design:
     O(matching docs + query-term postings).
   * Block bounds are rescaled by idf_now / idf_build so pruning stays
     safe after incremental appends grow N (see builder.py).
+  * A per-shard grouped map whose decode volume is small runs as one
+    stage and one task, with no Exchange ahead of the scorer
+    (``CompressedIndex._per_shard``); a larger one keeps the shuffle.
 
 The classic block-max WAND pointer walk is per-document Python — banned
 (input_hint). We use a **vectorized two-pass block-max prune** with the
@@ -543,6 +546,18 @@ class CompressedIndex:
     # Above it, lookups fall back to a cached Spark scan.
     _LOCAL_TERMSTATS_BYTES = 256 * 1024 * 1024
 
+    #: posting columns the per-shard kernels read: the BM25 scorer
+    #: (``_shard_topk_fn``, also the score_queries and multi-field
+    #: kernels) and the positional phrase kernels
+    _SEEK_COLS = (
+        "term", "n_docs", "docs_enc", "tfs_enc", "dls_enc",
+        "block_max_w", "idf_build", "first_doc_id", "last_doc_id",
+    )
+    _POS_COLS = (
+        "term", "n_docs", "docs_enc", "tfs_enc", "dls_enc",
+        "first_doc_id", "last_doc_id", "pos_enc",
+    )
+
     def __init__(self, spark: SparkSession, out_dir: str, tune_for_queries: bool = True):
         self.spark = spark
         self.out_dir = out_dir
@@ -638,6 +653,74 @@ class CompressedIndex:
             for t, df in self._dfs(terms).items()
         }
 
+    #: The largest decode volume (postings, or positions for a phrase)
+    #: a per-shard stage runs in ONE Spark task (``_per_shard``).
+    #: Measured on a 4-core VM, 60k-doc bench corpus, 16 shards, hot-term
+    #: OR ``search`` and ``facet_counts`` at Σ df 120k-1.45M, 9 interleaved
+    #: runs each: one task uses 40-60 % less engine CPU than the shuffled
+    #: plan at every size, and its wall time is within +10 % of it up to
+    #: ~480k, but +23 % at 654k and +29-40 % at 1M. The limit sits at
+    #: about half that knee, so a query the shuffle answers sooner keeps
+    #: the shuffle.
+    _ONE_TASK_MAX_POSTINGS = 250_000
+
+    def _df_sum(self, terms) -> int | None:
+        """Σ df over ``terms`` from the resident dictionary — the postings
+        a stage over them decodes, its ``_per_shard`` estimate — counted
+        only until it passes ``_ONE_TASK_MAX_POSTINGS`` (past it, the
+        exact sum does not change the plan, so a lazy ``terms`` is
+        walked no further). None when the dictionary is not resident:
+        no Spark job is spent on an estimate, and the stage keeps the
+        shuffled plan."""
+        if self._df_local is None:
+            return None
+        total, cap = 0, self._ONE_TASK_MAX_POSTINGS
+        for t in terms:
+            total += self._df_local.get(t, 0)
+            if total > cap:
+                break
+        return total
+
+    def _per_shard(
+        self,
+        blocks: DataFrame,
+        fn,
+        schema: str,
+        est: int | None,
+        cols: tuple[str, ...] = _SEEK_COLS,
+        allowed: DataFrame | None = None,
+    ) -> DataFrame:
+        """The per-shard grouped map every distributed kernel runs in:
+        ``fn(blocks)`` once per shard — ``fn(blocks, allowed)`` when the
+        stage cogroups an attrs side — over only the ``cols`` the kernel
+        reads. Grouping stays per shard (θ pruning is per shard); only
+        the Spark plan that runs the groups depends on the work: ``est``
+        is the postings the stage decodes (None: unknown), plus n_docs
+        when it cogroups attrs (the attrs scan reads the whole table).
+        At most ``_ONE_TASK_MAX_POSTINGS``, every side is coalesced to
+        one partition; SinglePartition already satisfies the grouped
+        map's clustering, so the query runs as one stage and one task,
+        with no Exchange: a Python task costs ~90 ms of CPU before any
+        scoring (worker set-up and the daemon's per-task gc, measured
+        on a 4-core VM), which a small query used to pay per shuffle
+        partition. Above it, or unknown, the plan is the plain shuffled
+        grouped map, one task per shuffle partition."""
+        blocks = blocks.select("shard", *cols)
+        if est is not None and allowed is not None:
+            est += int(self.meta.n_docs)
+        if est is not None and est <= self._ONE_TASK_MAX_POSTINGS:
+            blocks = blocks.coalesce(1)
+            allowed = None if allowed is None else allowed.coalesce(1)
+        if allowed is None:
+            return blocks.groupBy("shard").applyInPandas(
+                lambda key, bl: fn(bl), schema=schema
+            )
+        return (
+            blocks.groupBy("shard")
+            .cogroup(allowed.groupBy("shard"))
+            .applyInPandas(lambda bl, at: fn(bl, at), schema=schema)
+        )
+
     def search(
         self,
         text: str,
@@ -721,23 +804,19 @@ class CompressedIndex:
             dense_hint=int(self.meta.n_docs), cursor=search_after,
             min_match=min_match,
         )
-        if cond is not None:
-            # filter clauses stay in Catalyst: the predicate reaches the
-            # attrs Parquet scan (PushedFilters — equality and StartsWith
-            # both push down), so the cogroup ships only the SURVIVING
-            # (shard, doc_id) pairs into the scorer — O(selectivity ×
-            # corpus), not O(corpus), per shard
-            allowed = self.attrs.where(cond).select("shard", "doc_id")
-            partial = (
-                blocks.groupBy("shard")
-                .cogroup(allowed.groupBy("shard"))
-                .applyInPandas(lambda bl, at: fn(bl, at), schema=_RESULT_SCHEMA)
-            )
-        else:
-            # blocks-only fast path: shuffle is O(query-term postings)
-            partial = blocks.groupBy("shard").applyInPandas(
-                lambda key, bl: fn(bl), schema=_RESULT_SCHEMA
-            )
+        # filter clauses stay in Catalyst: the predicate reaches the attrs
+        # Parquet scan (PushedFilters — equality and StartsWith both push
+        # down), so the cogroup ships only the SURVIVING (shard, doc_id)
+        # pairs into the scorer — O(selectivity × corpus), not O(corpus),
+        # per shard. Unfiltered, the stage reads only the query-term
+        # postings.
+        allowed = (
+            None if cond is None
+            else self.attrs.where(cond).select("shard", "doc_id")
+        )
+        partial = self._per_shard(
+            blocks, fn, _RESULT_SCHEMA, self._df_sum(wanted), allowed=allowed
+        )
         return _ranked(partial, k, offset, after=search_after)
 
     def match_phrase(
@@ -767,9 +846,10 @@ class CompressedIndex:
            true phrase doc set, not a candidate superset. The scan is
            pruned to the doc-id window where all phrase terms coexist —
            [max over terms of min(first_doc_id), min over terms of
-           max(last_doc_id)], read from posting-block METADATA with one
-           vocab-bounded collect (no posting decode) — pushed as a
-           BETWEEN so Parquet/Iceberg row-group stats skip the rest.
+           max(last_doc_id)], read from posting-block METADATA by the
+           coordinator seek (``_doc_window``, no posting decode) —
+           pushed as a BETWEEN so Parquet/Iceberg row-group stats skip
+           the rest.
         2. **Score verified docs through the index**: the verified ids
            join attrs (the authoritative doc->shard map — shard ranges
            shift across appends, so no arithmetic shortcut) and feed the
@@ -814,17 +894,18 @@ class CompressedIndex:
     def _doc_window(self, terms: list[str]) -> tuple[int, int] | None:
         """Doc-id window [lo, hi] where EVERY term has postings — [max
         over terms of min(first_doc_id), min over terms of
-        max(last_doc_id)] — read from posting-block METADATA with one
-        vocab-bounded collect (no decode); None when a term has no
-        postings or the ranges do not overlap (no doc can hold them
-        all)."""
-        spans = self.postings.where(F.col("term").isin(terms)).groupBy("term").agg(
-            F.min("first_doc_id").alias("lo"), F.max("last_doc_id").alias("hi")
-        ).collect()
-        if len(spans) < len(terms):
+        max(last_doc_id)] — read from posting-block METADATA by the
+        coordinator term-dictionary seek (``_seek_blocks`` over the
+        terms' row groups, three columns, no decode, no Spark job); None
+        when a term has no postings or the ranges do not overlap (no doc
+        can hold them all)."""
+        spans = self._seek_blocks(
+            terms, cols=("term", "first_doc_id", "last_doc_id")
+        ).groupby("term")
+        if len(spans) < len(set(terms)):
             return None
-        lo = max(int(r["lo"]) for r in spans)
-        hi = min(int(r["hi"]) for r in spans)
+        lo = int(spans["first_doc_id"].min().max())
+        hi = int(spans["last_doc_id"].max().min())
         return (lo, hi) if lo <= hi else None
 
     def _verify_first(
@@ -876,11 +957,10 @@ class CompressedIndex:
             must_not_terms=[], require_all=True,
             dense_hint=int(self.meta.n_docs),
         )
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(lambda bl, at: fn(bl, at), schema=_RESULT_SCHEMA)
-        )
+        # est None: the allowed side runs the regex verify over the
+        # source text, work Σ df does not count — in one task it runs
+        # serially (measured 1.6-2.3x slower on the 60k-doc bench)
+        partial = self._per_shard(blocks, fn, _RESULT_SCHEMA, None, allowed=allowed)
         return _ranked(partial, k, offset)
 
     def match_phrase_prefix(
@@ -908,8 +988,8 @@ class CompressedIndex:
 
         Plan shape: identical to match_phrase — the doc-id window where
         all COMPLETE terms coexist prunes both the source verify scan
-        and the postings scan (block metadata only, one vocab-bounded
-        collect); the Arrow CPython-regex verify yields the TRUE match
+        and the postings scan (block metadata only, read by the
+        coordinator seek); the Arrow CPython-regex verify yields the TRUE match
         set (not a candidate superset); verified ids feed the FILTERED
         shard scorer with the top-k cut enabled — every intermediate
         O(phrase-prefix matches), merge O(shards × (k+offset)).
@@ -993,8 +1073,9 @@ class CompressedIndex:
         from .positions import phrase_topk_fn
 
         fn = phrase_topk_fn(seq, idfs, self.meta.avgdl, k + offset, slop)
-        partial = blocks.groupBy("shard").applyInPandas(
-            lambda key, bl: fn(bl), schema=_RESULT_SCHEMA
+        partial = self._per_shard(
+            blocks, fn, _RESULT_SCHEMA, self._phrase_stage_estimate(terms),
+            cols=self._POS_COLS,
         )
         return _ranked(partial, k, offset)
 
@@ -1060,8 +1141,9 @@ class CompressedIndex:
         fn = phrase_prefix_topk_fn(
             complete, pfx, idfs, self.meta.avgdl, k + offset
         )
-        partial = blocks.groupBy("shard").applyInPandas(
-            lambda key, bl: fn(bl), schema=_RESULT_SCHEMA
+        partial = self._per_shard(
+            blocks, fn, _RESULT_SCHEMA, self._phrase_stage_estimate(terms),
+            cols=self._POS_COLS,
         )
         return _ranked(partial, k, offset)
 
@@ -1105,6 +1187,15 @@ class CompressedIndex:
         n = max(int(self.meta.n_docs), 1)
         return int(min(dfs) / n * sum(cfs))
 
+    def _phrase_stage_estimate(self, terms: list[str]) -> int | None:
+        """``_phrase_decode_estimate`` as the distributed phrases'
+        ``_per_shard`` estimate — None (the shuffled plan) without a
+        resident dictionary, where the estimate itself would cost a
+        Spark job."""
+        if self._df_local is None:
+            return None
+        return self._phrase_decode_estimate(terms)
+
     def _phrase_local_cap(self) -> int:
         return int(os.environ.get(
             "LC_PHRASE_LOCAL_MAX_POSTINGS", self._PHRASE_LOCAL_MAX_POSTINGS
@@ -1145,7 +1236,7 @@ class CompressedIndex:
         idfs = self._idfs(terms)
         if len(idfs) < len(terms):
             return _empty()
-        blocks = self._seek_blocks(terms, extra_cols=("pos_enc",))
+        blocks = self._seek_blocks(terms, cols=self._POS_COLS)
         if len(blocks) == 0:
             return _empty()
         from .positions import phrase_topk_fn
@@ -1199,7 +1290,7 @@ class CompressedIndex:
         if len(idfs) < len(terms) or not expansion:
             return _empty()
         blocks = self._seek_blocks(
-            sorted(set(terms) | set(expansion)), extra_cols=("pos_enc",)
+            sorted(set(terms) | set(expansion)), cols=self._POS_COLS
         )
         if len(blocks) == 0:
             return _empty()
@@ -1209,11 +1300,6 @@ class CompressedIndex:
             complete, pfx, idfs, self.meta.avgdl, k + offset
         )
         return _ranked_local(fn(blocks), k, offset)
-
-    _SEEK_COLS = (
-        "term", "n_docs", "docs_enc", "tfs_enc", "dls_enc",
-        "block_max_w", "idf_build", "first_doc_id", "last_doc_id",
-    )
 
     def _executor(self):
         """Persistent coordinator thread pool, shared by the seek's
@@ -1237,7 +1323,7 @@ class CompressedIndex:
         return ex
 
     def _seek_blocks(
-        self, wanted: list[str], extra_cols: tuple[str, ...] = ()
+        self, wanted: list[str], cols: tuple[str, ...] = _SEEK_COLS
     ) -> pd.DataFrame:
         """Coordinator term-dictionary seek: posting files are term-sorted
         (builder sorts ("shard", "term", ...) into the partitioned write),
@@ -1246,7 +1332,8 @@ class CompressedIndex:
         [bisect_left(maxs, t), bisect_right(mins, t)). Footers and stats
         are parsed ONCE per index open (the resident Lucene term dictionary
         analog — ~1 ms/file); a query then reads only its own row groups
-        via ParquetFile.read_row_groups. Conservative by construction:
+        via ParquetFile.read_row_groups, and of them only ``cols`` (which
+        must include ``term``). Conservative by construction:
         parquet stat truncation only widens [min, max], and a file whose
         stats are missing or out of order (a legacy unsorted index) demotes
         to reading all its row groups — never a missed posting."""
@@ -1299,7 +1386,6 @@ class CompressedIndex:
                     handles.append((path, n_rgs, shard, mins, maxs))
             self._seek_handles = handles
         value_set = pa.array(sorted(set(wanted)), pa.string())
-        cols = list(self._SEEK_COLS) + list(extra_cols)
 
         def read_one(handle):
             path, n_rgs, shard, mins, maxs = handle
@@ -1320,7 +1406,7 @@ class CompressedIndex:
                 return None
             pf = pq.ParquetFile(path)
             try:
-                tbl = pf.read_row_groups(rgs, columns=cols, use_threads=False)
+                tbl = pf.read_row_groups(rgs, columns=list(cols), use_threads=False)
             finally:
                 pf.close()
             tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=value_set))
@@ -1729,7 +1815,7 @@ class CompressedIndex:
         return hits.join(hl, "doc_id", "left").select("doc_id", "score", "snippet")
 
     def _constant_score_docs(
-        self, blocks: DataFrame, k: int, offset: int = 0
+        self, blocks: DataFrame, k: int, est: int | None, offset: int = 0
     ) -> DataFrame:
         """Distinct doc_ids of the given posting blocks, constant score 1.0,
         deterministic doc_id order — the shared tail of the term-expansion
@@ -1737,7 +1823,7 @@ class CompressedIndex:
         top-(k+offset) by doc_id, so the merge shuffles O(shards ×
         (k+offset)) rows; the page cut (offset → limit) happens after the
         global doc_id sort, the same keyset-free pagination contract the
-        scored paths use."""
+        scored paths use. ``est`` is the blocks' Σ df (``_per_shard``)."""
         n = k + offset
 
         def fn(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1751,8 +1837,8 @@ class CompressedIndex:
                 {"doc_id": ids[:n].astype(np.int64), "score": 1.0}
             )
 
-        partial = blocks.groupBy("shard").applyInPandas(
-            lambda key, b: fn(b), schema=_RESULT_SCHEMA
+        partial = self._per_shard(
+            blocks, fn, _RESULT_SCHEMA, est, cols=("docs_enc",)
         )
         ranked = partial.orderBy(F.asc("doc_id"))
         if offset:
@@ -1868,10 +1954,8 @@ class CompressedIndex:
         allowed = self.attrs.select(
             "shard", "doc_id", F.col(field).try_cast("double").alias("_fv")
         )
-        partial = (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(lambda bl, at: fn(bl, at), schema=_RESULT_SCHEMA)
+        partial = self._per_shard(
+            blocks, fn, _RESULT_SCHEMA, self._df_sum(terms), allowed=allowed
         )
         return _ranked(partial, k)
 
@@ -1903,8 +1987,8 @@ class CompressedIndex:
         fn = dis_max_fn(
             clause_terms, idfs, self.meta.avgdl, k, float(tie_breaker)
         )
-        partial = blocks.groupBy("shard").applyInPandas(
-            lambda key, bl: fn(bl), schema=_RESULT_SCHEMA
+        partial = self._per_shard(
+            blocks, fn, _RESULT_SCHEMA, self._df_sum(wanted)
         )
         return _ranked(partial, k)
 
@@ -1938,8 +2022,8 @@ class CompressedIndex:
             pos_terms, neg_terms, idfs, self.meta.avgdl, k,
             float(negative_boost),
         )
-        partial = blocks.groupBy("shard").applyInPandas(
-            lambda key, bl: fn(bl), schema=_RESULT_SCHEMA
+        partial = self._per_shard(
+            blocks, fn, _RESULT_SCHEMA, self._df_sum(pos_terms + neg_terms)
         )
         return _ranked(partial, k)
 
@@ -2013,8 +2097,14 @@ class CompressedIndex:
         cond = F.col("term") >= prefix
         if hi is not None:
             cond = cond & (F.col("term") < hi)
+        # the resident dictionary is a hash map: the estimate walks it,
+        # lazily, and stops once the Σ df passes the one-task limit
+        # (a full walk of the 52k-term bench vocabulary is ~2 ms)
+        est = self._df_sum(
+            t for t in self._df_local or () if t.startswith(prefix)
+        )
         return self._constant_score_docs(
-            self.postings.where(cond), k, offset=offset
+            self.postings.where(cond), k, est, offset=offset
         )
 
     def pinned(self, ids: list[int], text: str, k: int = 10) -> DataFrame:
@@ -2247,7 +2337,8 @@ class CompressedIndex:
         if not cands:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
         return self._constant_score_docs(
-            self.postings.where(F.col("term").isin(cands)), k
+            self.postings.where(F.col("term").isin(cands)), k,
+            self._df_sum(cands),
         )
 
     def fuzzy_term_search(
@@ -2600,12 +2691,15 @@ class CompressedIndex:
         for c in (facet_col, num_col):
             if c not in self.attrs.columns and c != "doc_id":
                 raise ValueError(f"index attrs lack column {c!r}")
+        if not terms:
+            return self.spark.createDataFrame(
+                [], "facet_key string, cnt long, min_val double, "
+                "max_val double, avg_val double",
+            )
         schema = (
             "facet_key string, cnt long, sum_val double, "
             "min_val double, max_val double"
         )
-        if not terms:
-            return self.spark.createDataFrame([], schema)
 
         def metrics(m: pd.DataFrame) -> pd.DataFrame:
             v = m[num_col].astype("float64")
@@ -2903,10 +2997,9 @@ class CompressedIndex:
         ``reduce`` sees the kernel's (doc_id, score) rows."""
         blocks = self.postings.where(F.col("term").isin(terms))
         fd = self._match_kernel(terms, idfs)
+        est = self._df_sum(terms)
         if cols is None:
-            return blocks.groupBy("shard").applyInPandas(
-                lambda key, bl: reduce(fd(bl)), schema=schema
-            )
+            return self._per_shard(blocks, lambda bl: reduce(fd(bl)), schema, est)
         empty = _empty(schema)
         want = [c for c in dict.fromkeys(cols) if c != "doc_id"]
 
@@ -2920,8 +3013,4 @@ class CompressedIndex:
         allowed = self.attrs.select(
             "shard", "doc_id", *[c for c in want if c != "shard"]
         )
-        return (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(fn, schema=schema)
-        )
+        return self._per_shard(blocks, fn, schema, est, allowed=allowed)

@@ -491,10 +491,9 @@ _ABSENT = "zzzznotaterm qqqqabsent"  # no term is in the dictionary
     (lambda w: w.geo_distance_agg(_ABSENT, "doc_id", "doc_id", 0.0, 0.0,
                                   [(None, 1000.0), (1000.0, None)]),
      "bucket:string cnt:bigint", [("*-1000.0", 0), ("1000.0-*", 0)]),
-    # the empty frame carries sum_val where a non-empty result has avg_val
     (lambda w: w.facet_metric_agg(_ABSENT, "lang", "doc_id"),
-     "facet_key:string cnt:bigint sum_val:double min_val:double "
-     "max_val:double", []),
+     "facet_key:string cnt:bigint min_val:double max_val:double "
+     "avg_val:double", []),
     (lambda w: w.percentiles_agg(_ABSENT, "doc_id"),
      "pct:double value:double", []),
     (lambda w: w.composite_agg(_ABSENT, "lang", size=3),

@@ -50,6 +50,7 @@ CHECKS = {
     "grouped_map": "FlatMapGroupsInPandas",
     "cogrouped_map": "FlatMapCoGroupsInPandas",
     "single_partition": "Exchange SinglePartition",
+    "reads_pos_enc": "pos_enc:binary",  # the column in a scan's ReadSchema
 }
 
 
@@ -112,10 +113,29 @@ def main() -> int:
     s, p = audit(
         "BM25 top-k via WAND scorer (unfiltered)",
         index.search("query scan", k=10),
-        {"take_ordered": True},
+        {"take_ordered": True, "grouped_map": True, "exchange": False},
         "Per-shard grouped-map scorer then a single global "
         "TakeOrderedAndProject merge — the ES shard-fanout/coordinator "
-        "pattern; the only exchange is the query-term blocks.",
+        "pattern. The query-term postings are a small decode volume, so "
+        "the grouped map runs over one coalesced partition: NO Exchange "
+        "anywhere, one stage and one task.",
+    )
+    sections.append(s); problems += p
+
+    index._ONE_TASK_MAX_POSTINGS = 0
+    try:
+        fanned = index.search("query scan", k=10)
+    finally:
+        del index._ONE_TASK_MAX_POSTINGS
+    s, p = audit(
+        "BM25 top-k fanned out (one-task limit forced to 0)",
+        fanned,
+        {"take_ordered": True, "grouped_map": True, "exchange": True},
+        "With the one-task decode-volume limit at 0, the estimate "
+        "exceeds it and the stage keeps the shuffled plan: the blocks "
+        "hash-partition on shard into the shuffle partitions (Exchange "
+        "hashpartitioning(shard)) ahead of the same grouped map — the "
+        "shape a large query gets.",
     )
     sections.append(s); problems += p
 
@@ -164,6 +184,15 @@ def main() -> int:
         index_options="positions",
     )
     pindex = CompressedIndex(spark, pos_dir)
+    s, p = audit(
+        "BM25 top-k on a positions index (column pruning)",
+        pindex.search("query scan", k=10),
+        {"pushed_filter": True, "take_ordered": True, "reads_pos_enc": False},
+        "The scorer reads only the columns its kernel decodes: on an "
+        "index built with positions, the postings scan's ReadSchema "
+        "leaves out pos_enc, the largest column of a positional block.",
+    )
+    sections.append(s); problems += p
     s, p = audit(
         "match_phrase_positional index-only plan (r3 positional postings)",
         pindex.match_phrase_positional("the scan", k=10),
@@ -320,8 +349,9 @@ def main() -> int:
         "scan) union and group by shard ONCE — sub-indexes share the "
         "doc-id range split, so a doc's postings for every field are in "
         "the same task and the cross-field combine (max/sum of per-field "
-        "BM25) happens inside the grouped kernel: ONE shuffle keyed by "
-        "shard, exact post-combine top-k, TakeOrderedAndProject merge.",
+        "BM25) happens inside the grouped kernel: ONE grouped map keyed "
+        "by shard (one coalesced task for a small query), exact "
+        "post-combine top-k, TakeOrderedAndProject merge.",
     )
     sections.append(s); problems += p
 
