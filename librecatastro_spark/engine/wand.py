@@ -656,13 +656,15 @@ class CompressedIndex:
     #: The largest decode volume (postings, or positions for a phrase)
     #: a per-shard stage runs in ONE Spark task (``_per_shard``).
     #: Measured on a 4-core VM, 60k-doc bench corpus, 16 shards, hot-term
-    #: OR ``search`` and ``facet_counts`` at Σ df 120k-1.45M, 9 interleaved
-    #: runs each: one task uses 40-60 % less engine CPU than the shuffled
-    #: plan at every size, and its wall time is within +10 % of it up to
-    #: ~480k, but +23 % at 654k and +29-40 % at 1M. The limit sits at
-    #: about half that knee, so a query the shuffle answers sooner keeps
-    #: the shuffle.
-    _ONE_TASK_MAX_POSTINGS = 250_000
+    #: OR ``search``, 8 interleaved runs per size, with the Python worker
+    #: daemon of ``librecatastro_spark.pyworker``, whose tasks cost ~3
+    #: ms of worker CPU each, not ~95 ms: one task's wall time is
+    #: 0.94-0.96x the shuffle's at 15k-30k, +10 % at 45k, +12-14 % at 60k
+    #: and +33-44 % at 90k-480k; its engine CPU is 16-25 % lower up to
+    #: 30k and within ±12 % of the shuffle's above it. The limit sits
+    #: below that knee, so a query the shuffle answers sooner keeps the
+    #: shuffle.
+    _ONE_TASK_MAX_POSTINGS = 30_000
 
     def _df_sum(self, terms) -> int | None:
         """Σ df over ``terms`` from the resident dictionary — the postings
@@ -700,10 +702,11 @@ class CompressedIndex:
         At most ``_ONE_TASK_MAX_POSTINGS``, every side is coalesced to
         one partition; SinglePartition already satisfies the grouped
         map's clustering, so the query runs as one stage and one task,
-        with no Exchange: a Python task costs ~90 ms of CPU before any
-        scoring (worker set-up and the daemon's per-task gc, measured
-        on a 4-core VM), which a small query used to pay per shuffle
-        partition. Above it, or unknown, the plan is the plain shuffled
+        with no Exchange, so a small query pays the per-task cost once,
+        not per shuffle partition: ~3 ms of Python-worker CPU with
+        ``librecatastro_spark.pyworker`` (~95 ms with the stock daemon),
+        plus the JVM's scheduling of the stage (``tools/worker_cost.py``,
+        4-core VM). Above it, or unknown, the plan is the plain shuffled
         grouped map, one task per shuffle partition."""
         blocks = blocks.select("shard", *cols)
         if est is not None and allowed is not None:
