@@ -443,21 +443,11 @@ def _q_match_phrase_exact(spark, sf):
     return _engine(spark, sf).match_phrase("scan merge", k=10)
 
 
-def _q_wand_match_phrase(spark, sf):
-    # production path: AND candidates from the compressed index (top-k cut
-    # disabled), contiguous-sequence verify on candidate rows of the
-    # source table (doc-id range pushed into the scan) — engine/wand.py
-    # match_phrase docstring has the full plan shape
-    return _index(spark, sf).match_phrase(
-        "scan merge", _docs(spark, sf), k=10, source_text_col="text"
-    )
-
-
 def _pos_index(spark, sf_dir: str):
     """Positional twin of _index (index_options="positions"): the ES
     mapping with positions enabled. Built once per sf_dir next to the
-    freqs index; powers the index-only phrase path
-    (match_phrase_positional — no source-table scan at query time)."""
+    freqs index; powers the phrase queries (match_phrase,
+    match_phrase_prefix), which need positional postings."""
     import hashlib
 
     src = f"{sf_dir}/documents.parquet"
@@ -476,10 +466,15 @@ def _pos_index(spark, sf_dir: str):
     return CompressedIndex(spark, out)
 
 
+def _q_wand_match_phrase(spark, sf):
+    # production phrase path: position-chain intersection over positional
+    # postings, no source scan (engine/positions.py) — engine/wand.py
+    # match_phrase docstring has the full plan shape
+    return _pos_index(spark, sf).match_phrase("scan merge", k=10)
+
+
 def _q_wand_match_phrase_pos(spark, sf):
-    # index-only phrase path: position-chain intersection over positional
-    # postings, NO source scan (engine/positions.py); same oracle as the
-    # verify-first path — the regex twin is exact for both by construction
+    # the same query through the match_phrase_positional alias
     return _pos_index(spark, sf).match_phrase_positional("scan merge", k=10)
 
 
@@ -1801,17 +1796,17 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # ES completion-suggester lite: prefix -> top dictionary terms
         "suggest_terms": lambda spark, sf: _index(spark, sf)
         .suggest_terms("s", k=10),
-        # sloppy phrase (per-gap slop; both paths share one regex with
-        # the RE2 oracle twin — analyzer._phrase_body)
-        "wand_match_phrase_slop": lambda spark, sf: _index(spark, sf)
-        .match_phrase("scan merge", _docs(spark, sf), k=10,
-                      source_text_col="text", slop=2),
+        # sloppy phrase (per-gap slop: the positional kernel chains
+        # positions under the rule of the RE2 oracle twin —
+        # analyzer._phrase_body)
+        "wand_match_phrase_slop": lambda spark, sf: _pos_index(spark, sf)
+        .match_phrase("scan merge", k=10, slop=2),
         "bm25_match_phrase_slop": lambda spark, sf: _engine(spark, sf)
         .match_phrase("scan merge", k=10, slop=2),
         # positional-postings phrase path (index_options="positions"):
         # answered ENTIRELY from the index — position-chain intersection,
         # no source-table scan (engine/positions.py). Same regex oracle
-        # as the verify-first twins: position adjacency over the analyzed
+        # as wand_match_phrase: position adjacency over the analyzed
         # token stream IS the anchored-regex predicate by construction.
         "wand_match_phrase_pos": _q_wand_match_phrase_pos,
         "wand_match_phrase_pos_slop": _q_wand_match_phrase_pos_slop,
@@ -1868,9 +1863,8 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # adjacent, then a token starting with the last analyzed token;
         # scored on the complete terms only (documented divergence from
         # ES's max_expansions-dependent expansion scoring)
-        "wand_match_phrase_prefix": lambda spark, sf: _index(spark, sf)
-        .match_phrase_prefix("fast s", _docs(spark, sf), k=10,
-                             source_text_col="text"),
+        "wand_match_phrase_prefix": lambda spark, sf: _pos_index(spark, sf)
+        .match_phrase_prefix("fast s", k=10),
         "bm25_match_phrase_prefix": lambda spark, sf: _engine(spark, sf)
         .match_phrase_prefix("fast s", k=10),
         # ES minimum_should_match: >= m distinct matched terms, all three

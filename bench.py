@@ -174,11 +174,12 @@ def main() -> None:
         fp_lat_ms[max(0, int(len(fp_lat_ms) * 0.95) - 1)] if fp_lat_ms else 0.0
     )
 
-    # ---- round-3 DSL extensions (phrase / fuzzy / MLT / highlight) ------
+    # ---- round-3 DSL extensions (fuzzy / MLT / highlight) ---------------
     # Timed as their own block, NOT folded into queries/value/query_p95_ms:
     # those aggregates are compared round-over-round (BENCH_r01/r02) and
-    # changing their composition would fake a regression. Phrase/MLT/
-    # highlight are distributed-path APIs (they need the source table);
+    # changing their composition would fake a regression. Phrases are
+    # timed on the positions index below (pos_ms). MLT/highlight are
+    # distributed-path APIs (they need the source table);
     # fuzzy and composite have coordinator twins (r4), timed below into
     # fastpath_ms with rank/bucket identity asserted. BENCH_DSL=0
     # (tools/scaling.py) skips the block so scaling reps keep the
@@ -186,12 +187,6 @@ def main() -> None:
     dsl_ms: dict[str, float] = {}
     if os.environ.get("BENCH_DSL", "1") != "0":
         dsl_queries = {
-            # hot-bigram phrase (worst case: ~97% of docs contain it, so
-            # verify + scoring are inherently corpus-sized)
-            "q_phrase": lambda: index.match_phrase("def return", docs, k=10),
-            # selective phrase: the rare term's posting-block range prunes
-            # the source scan AND the postings scan to a narrow window
-            "q_phrase_sel": lambda: index.match_phrase("id0042 merge", docs, k=10),
             # 1-deletion typo of the hot term "broadcast" — dictionary
             # expansion + In(term, ...) pushed into the postings scan
             "q_fuzzy": lambda: index.fuzzy_term_search(
@@ -202,10 +197,6 @@ def main() -> None:
             # top-k + snippets for only the k hit docs
             "q_highlight": lambda: index.search_highlighted(
                 "sort merge join", docs, k=10
-            ),
-            # type-ahead phrase: complete term adjacency + prefix tail
-            "q_phrase_prefix": lambda: index.match_phrase_prefix(
-                "def re", docs, k=10
             ),
             # keyset-paged bucket export over the hot match set
             "q_composite": lambda: index.composite_agg(
@@ -321,9 +312,10 @@ def main() -> None:
     # ---- positional postings (index_options="positions") ----------------
     # A second index with positions enabled: its build overhead vs the
     # freqs build is reported (pos_build_sec), and the phrase queries run
-    # INDEX-ONLY (no source scan — the 100 TB phrase story). Rank-identity
-    # with the verify-first path is asserted before timing. Same BENCH_DSL
-    # gate: scaling reps keep the committed composition.
+    # INDEX-ONLY (no source scan — the 100 TB phrase story). The
+    # coordinator twins' rank-identity with the distributed answer is
+    # asserted. Same BENCH_DSL gate: scaling reps keep the committed
+    # composition.
     pos_ms: dict[str, float] = {}
     pos_build_sec = 0.0
     if os.environ.get("BENCH_DSL", "1") != "0":
@@ -341,16 +333,16 @@ def main() -> None:
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(128 << 20))
         pindex = CompressedIndex(spark, pos_dir)
         pos_queries = {
-            # same phrases as q_phrase / q_phrase_sel above, index-only
-            "q_phrase_pos": lambda: pindex.match_phrase_positional(
-                "def return", k=10
-            ),
-            "q_phrase_pos_sel": lambda: pindex.match_phrase_positional(
+            # hot-bigram phrase (~97% of docs contain it)
+            "q_phrase_pos": lambda: pindex.match_phrase("def return", k=10),
+            # selective phrase: the rare term's posting-block range prunes
+            # the postings scan to a narrow window
+            "q_phrase_pos_sel": lambda: pindex.match_phrase(
                 "id0042 merge", k=10
             ),
-            # type-ahead index-only (r4): same query as q_phrase_prefix,
-            # no source scan, no expansion collect
-            "q_phrase_prefix_pos": lambda: pindex.match_phrase_prefix_positional(
+            # type-ahead: complete term adjacency + prefix tail, no
+            # expansion collect
+            "q_phrase_prefix_pos": lambda: pindex.match_phrase_prefix(
                 "def re", k=10
             ),
         }
@@ -363,36 +355,18 @@ def main() -> None:
                 run_q().collect()
                 times.append(time.time() - t)
             pos_ms[name] = round(statistics.mean(times) * 1000, 2)
-        # rank-identity vs the verify-first type-ahead path (r4)
-        pp_vf = [
-            (r["doc_id"], r["score"])
-            for r in index.match_phrase_prefix("def re", docs, k=10).collect()
-        ]
-        pp_po = [
-            (r["doc_id"], r["score"])
-            for r in pindex.match_phrase_prefix_positional("def re", k=10).collect()
-        ]
-        assert pp_po == pp_vf, "positional phrase-prefix diverged"
-        # rank-identity vs the verify-first path (source-scan based)
-        for text in ("def return", "id0042 merge"):
-            vf = [
-                (r["doc_id"], r["score"])
-                for r in index.match_phrase(text, docs, k=10).collect()
-            ]
-            po = [
-                (r["doc_id"], r["score"])
-                for r in pindex.match_phrase_positional(text, k=10).collect()
-            ]
-            assert po == vf, f"positional phrase diverged: {text}"
-            lo = pindex.match_phrase_local(text, k=10)
-            assert [
-                (int(r.doc_id), float(r.score)) for r in lo.itertuples()
-            ] == vf, f"positional fast path diverged: {text}"
-        # serving fast path for phrases (driver-side, no Spark job);
-        # the type-ahead local twin is rank-identity-asserted first
-        lo = pindex.match_phrase_prefix_local("def re", k=10)
-        assert list(zip(lo["doc_id"].tolist(), lo["score"].tolist())) == pp_vf, \
-            "phrase-prefix local diverged"
+        # rank-identity: each coordinator twin vs the distributed answer
+        for text, dist, local in (
+            ("def return", pindex.match_phrase, pindex.match_phrase_local),
+            ("id0042 merge", pindex.match_phrase, pindex.match_phrase_local),
+            ("def re", pindex.match_phrase_prefix,
+             pindex.match_phrase_prefix_local),
+        ):
+            want = [(r["doc_id"], r["score"]) for r in dist(text, k=10).collect()]
+            lo = local(text, k=10)
+            assert list(zip(lo["doc_id"].tolist(), lo["score"].tolist())) == want, \
+                f"phrase fast path diverged: {text}"
+        # serving fast path for phrases (driver-side, no Spark job)
         for name, run_l in (
             ("q_phrase_pos_local",
              lambda: pindex.match_phrase_local("def return", k=10)),

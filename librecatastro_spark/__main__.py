@@ -100,22 +100,16 @@ def main(argv: list[str] | None = None) -> int:
                    help="serve from the coordinator fast path "
                         "(search_local) instead of a cluster job")
 
-    p = sub.add_parser("phrase", help="match_phrase over the index")
-    p.add_argument("--index", required=True)
-    p.add_argument("--input", default=None,
-                   help="source corpus (verify side; not needed with "
-                        "--positional)")
+    p = sub.add_parser("phrase", help="match_phrase over the index's "
+                                      "positional postings")
+    p.add_argument("--index", required=True,
+                   help="an index built with --index-options positions")
     p.add_argument("--text", required=True)
     p.add_argument("--k", type=int, default=10)
     p.add_argument("--slop", type=int, default=0)
-    p.add_argument("--id-col", default="doc_id")
-    p.add_argument("--text-col", default="text")
-    p.add_argument("--positional", action="store_true",
-                   help="answer from positional postings (index built with "
-                        "--index-options positions); no source scan")
     p.add_argument("--fast", action="store_true",
-                   help="with --positional: serve from the coordinator "
-                        "fast path (no Spark job)")
+                   help="serve from the coordinator fast path (no Spark "
+                        "job)")
     p.add_argument("--type-ahead", action="store_true",
                    help="match_phrase_prefix: the last token is an open "
                         "prefix (slop must stay 0)")
@@ -379,7 +373,11 @@ def main(argv: list[str] | None = None) -> int:
         idx = CompressedIndex(spark, args.index)
         if args.type_ahead and args.slop:
             raise SystemExit("--type-ahead does not take --slop")
-        if args.positional and args.fast:
+        if idx.meta.index_options != "positions":
+            raise SystemExit(
+                "phrase needs an index built with --index-options positions"
+            )
+        if args.fast:
             pdf = (
                 idx.match_phrase_prefix_local(args.text, k=args.k)
                 if args.type_ahead
@@ -389,28 +387,11 @@ def main(argv: list[str] | None = None) -> int:
                 print(json.dumps({"doc_id": int(r.doc_id),
                                   "score": float(r.score)}))
             return 0
-        if args.positional:
-            rows = (
-                idx.match_phrase_prefix_positional(args.text, k=args.k)
-                if args.type_ahead
-                else idx.match_phrase_positional(args.text, k=args.k,
-                                                 slop=args.slop)
-            ).collect()
-        else:
-            if not args.input:
-                raise SystemExit("phrase needs --input unless --positional")
-            docs = read_docs_table(spark, args.input)
-            rows = (
-                idx.match_phrase_prefix(
-                    args.text, docs, k=args.k,
-                    source_id_col=args.id_col, source_text_col=args.text_col,
-                )
-                if args.type_ahead
-                else idx.match_phrase(
-                    args.text, docs, k=args.k, slop=args.slop,
-                    source_id_col=args.id_col, source_text_col=args.text_col,
-                )
-            ).collect()
+        rows = (
+            idx.match_phrase_prefix(args.text, k=args.k)
+            if args.type_ahead
+            else idx.match_phrase(args.text, k=args.k, slop=args.slop)
+        ).collect()
         for r in rows:
             print(json.dumps({"doc_id": r["doc_id"], "score": r["score"]}))
         return 0

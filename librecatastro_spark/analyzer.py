@@ -26,7 +26,7 @@ import re
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, BooleanType, LongType, StringType
+from pyspark.sql.types import ArrayType, LongType, StringType
 
 # The single source of truth for token boundaries.
 TOKEN_SPLIT_RE = "[^a-z0-9_]+"
@@ -192,88 +192,26 @@ def phrase_expr(col: Column | str, terms_seq: list[str]) -> Column:
     return joined.contains(" " + " ".join(terms_seq) + " ")
 
 
-def analyzer_classes(split_re: str | None = None) -> tuple[str, str]:
-    """Derive the (gap, token) character-class patterns from an analyzer
-    split pattern of the frozen shape ``[^X]+`` (a negated class, one or
-    more) — the only shape ``Analyzer`` produces: gap = the split
-    pattern itself (a maximal non-token run), token = ``[X]+`` (a
-    maximal token run). Every phrase predicate derives its boundary
-    classes from the INDEX's own analyzer through this helper, so
-    verify-first phrase verification agrees with the index's
-    tokenization (the positional paths agree by construction — they
-    never re-tokenize the source).
-
-    Raises ValueError for a pattern outside the derivable shape: a
-    free-form analyzer regex has no complement the phrase regex could
-    use, so verify-first phrase queries on such an index must route to
-    the positional (index-only) paths instead."""
-    if split_re is None:
-        split_re = TOKEN_SPLIT_RE
-    m = re.fullmatch(r"\[\^([^\[\]]+)\]\+", split_re)
-    if m is None:
-        raise ValueError(
-            f"analyzer pattern {split_re!r} is not a negated character "
-            "class ('[^X]+') — verify-first phrase predicates cannot "
-            "derive token boundaries from it; use the positional "
-            "(index_options='positions') phrase paths instead"
-        )
-    return split_re, f"[{m.group(1)}]+"
-
-
-def _term_alternation(term: str, synonyms: dict[str, str] | None) -> str:
-    """Regex fragment matching every SURFACE form that analyzes to the
-    canonical ``term`` under the (1:1, replace-form) synonym map: the
-    preimage {s : syn.get(s, s) == term}, escaped and alternated. With
-    no synonyms this is just the escaped term. A canonical term whose
-    preimage is empty (it is itself remapped and nothing maps to it)
-    can never appear in a document — a never-matching group."""
-    if not synonyms:
-        return re.escape(term)
-    forms = sorted(
-        {s for s in synonyms if synonyms[s] == term}
-        | ({term} if synonyms.get(term, term) == term else set())
-    )
-    if not forms:
-        return r"(?!)"
-    if len(forms) == 1:
-        return re.escape(forms[0])
-    return "(?:" + "|".join(re.escape(f) for f in forms) + ")"
-
-
-def _phrase_body(
-    terms_seq: list[str], slop: int = 0, split_re: str | None = None,
-    synonyms: dict[str, str] | None = None,
-) -> str:
+def _phrase_body(terms_seq: list[str], slop: int = 0) -> str:
     """Shared regex body for the phrase predicates: terms in order, each
     inter-term gap = one non-token run plus up to ``slop`` intervening
     (token + non-token-run) pairs. slop=0 is exact adjacency of maximal
     token runs. PER-GAP slop — a deliberate, documented divergence from
     ES's total-position-edit-distance slop (which also admits
     transpositions at cost 2): per-gap keeps the predicate a single
-    regex pass that Spark, CPython sre, and DuckDB RE2 all evaluate
-    identically, so the oracle twin is exact by construction.
-
-    ``split_re`` selects the INDEX's analyzer (meta.analyzer_re): the
-    gap/token classes derive from it via ``analyzer_classes``, and terms
-    are regex-escaped (a custom token class may admit regex metachars
-    like ``.``; escaping is a no-op for default-chain terms).
-    ``synonyms`` (the index's replace-form map) turns each canonical
-    term into the alternation of its surface forms — the 1:1 map
-    preserves token positions, so surface adjacency IS canonical
-    adjacency and the verify regex stays exact."""
+    regex pass that Spark and DuckDB RE2 evaluate identically, so the
+    oracle twin is exact by construction; the positional kernels
+    (engine/positions.py) chain positions under the same rule."""
     if not terms_seq:
         raise ValueError("phrase needs at least one term")
-    gap, token = analyzer_classes(split_re)
+    gap = TOKEN_SPLIT_RE
     if slop > 0:
-        gap = gap + "(?:%s%s){0,%d}" % (token, gap, slop)
-    return gap.join(_term_alternation(t, synonyms) for t in terms_seq)
+        gap += "(?:%s%s){0,%d}" % (TOKEN_RE, TOKEN_SPLIT_RE, slop)
+    return gap.join(re.escape(t) for t in terms_seq)
 
 
 def phrase_rlike_expr(
-    col: Column | str,
-    terms_seq: list[str],
-    slop: int = 0,
-    split_re: str | None = None,
+    col: Column | str, terms_seq: list[str], slop: int = 0
 ) -> Column:
     """Single-regex-pass equivalent of ``phrase_expr`` (equality-tested in
     tests/test_phrase.py): tokens are MAXIMAL ``[a-z0-9_]+`` runs of the
@@ -290,93 +228,36 @@ def phrase_rlike_expr(
     alternative fires) but ``\\z`` keeps the proof one-line. Terms come
     from the analyzer so they are regex-safe ``[a-z0-9_]+`` literals.
 
-    Why it exists: ``phrase_expr`` builds the full token array per row
-    (split -> filter -> array_join) just to run one containment; on a
-    candidate-verify over a hot phrase that allocation dominates. One
-    codegen'd ``RLIKE`` over ``lower(col)`` does the same membership test
-    in a single scan with zero allocation.
+    Unlike ``phrase_expr`` it can express ``slop`` > 0, so it is the
+    sloppy-phrase predicate of ExactBM25.match_phrase.
     """
     c = F.col(col) if isinstance(col, str) else col
-    gap, _ = analyzer_classes(split_re)
-    body = _phrase_body(terms_seq, slop, split_re)
-    return F.lower(c).rlike(r"(\A|" + gap[:-1] + r")" + body
-                            + r"(" + gap[:-1] + r"|\z)")
+    body = _phrase_body(terms_seq, slop)
+    return F.lower(c).rlike(r"(\A|[^a-z0-9_])" + body + r"([^a-z0-9_]|\z)")
 
 
-def phrase_match_udf(
-    terms_seq: list[str], slop: int = 0, split_re: str | None = None,
-    synonyms: dict[str, str] | None = None,
-):
-    """Arrow-vectorized twin of ``phrase_rlike_expr`` — the PRODUCTION
-    phrase verify. Same regex (Python spells end-of-input ``\\Z`` where
-    Java spells ``\\z``), but evaluated by CPython's sre over Arrow
-    batches: measured 0.78 s vs 4.7 s for the JVM RLIKE (and 62 s for
-    the split/array_join Catalyst form) on a 60 k-doc / 0.37 GB corpus —
-    the same ~6-30x JVM-regex gap already measured and documented for
-    ``token_count_udf`` above. Equality with the Catalyst forms is
-    pinned in tests/test_phrase.py. ``split_re`` = the index's analyzer
-    pattern (meta.analyzer_re) — boundary classes derive from it, so the
-    verify agrees with the index's own tokenization; ``synonyms`` =
-    the index's replace-form map (surface-form alternation)."""
-    gap, _ = analyzer_classes(split_re)
-    body = _phrase_body(terms_seq, slop, split_re, synonyms)
-    bcls = gap[:-1]  # the single-char boundary class (strip the '+')
-    pat = re.compile(r"(?:\A|" + bcls + r")" + body + r"(?:" + bcls + r"|\Z)")
-
-    @F.pandas_udf(BooleanType())
-    def _matches(s: pd.Series) -> pd.Series:
-        return s.fillna("").str.lower().str.contains(pat, regex=True)
-
-    return _matches
-
-
-def _phrase_prefix_body(
-    terms_seq: list[str], prefix: str, split_re: str | None = None
-) -> str:
+def _phrase_prefix_body(terms_seq: list[str], prefix: str) -> str:
     """Regex body for match_phrase_prefix: the COMPLETE terms adjacent in
     order, then a gap, then a token that STARTS WITH ``prefix`` — no
     right anchor, so any completion of the prefix token matches. With no
     complete terms the body is just the prefix at a token start (the
-    caller normally routes that case to the term-prefix query instead).
-    Boundary classes derive from ``split_re`` (the index's analyzer)
-    like ``_phrase_body``; prefix and terms are regex-escaped."""
+    caller normally routes that case to the term-prefix query instead)."""
     if not prefix:
         raise ValueError("phrase prefix needs a non-empty last term")
     if not terms_seq:
         return re.escape(prefix)
-    gap, _ = analyzer_classes(split_re)
-    return _phrase_body(terms_seq, 0, split_re) + gap + re.escape(prefix)
+    return _phrase_body(terms_seq) + TOKEN_SPLIT_RE + re.escape(prefix)
 
 
 def phrase_prefix_rlike_expr(
-    col: Column | str,
-    terms_seq: list[str],
-    prefix: str,
-    split_re: str | None = None,
+    col: Column | str, terms_seq: list[str], prefix: str
 ) -> Column:
     """Catalyst form of the phrase-prefix predicate (see
     ``_phrase_prefix_body``): left-anchored at a token start, open on the
     right."""
     c = F.col(col) if isinstance(col, str) else col
-    gap, _ = analyzer_classes(split_re)
-    body = _phrase_prefix_body(terms_seq, prefix, split_re)
-    return F.lower(c).rlike(r"(\A|" + gap[:-1] + r")" + body)
-
-
-def phrase_prefix_match_udf(
-    terms_seq: list[str], prefix: str, split_re: str | None = None
-):
-    """Arrow-vectorized twin of ``phrase_prefix_rlike_expr`` — same
-    CPython-sre production role as ``phrase_match_udf``."""
-    gap, _ = analyzer_classes(split_re)
-    body = _phrase_prefix_body(terms_seq, prefix, split_re)
-    pat = re.compile(r"(?:\A|" + gap[:-1] + r")" + body)
-
-    @F.pandas_udf(BooleanType())
-    def _matches(s: pd.Series) -> pd.Series:
-        return s.fillna("").str.lower().str.contains(pat, regex=True)
-
-    return _matches
+    body = _phrase_prefix_body(terms_seq, prefix)
+    return F.lower(c).rlike(r"(\A|[^a-z0-9_])" + body)
 
 
 def duckdb_phrase_prefix_sql(col: str, terms_seq: list[str], prefix: str) -> str:

@@ -346,12 +346,10 @@ class MultiFieldIndex:
             blocks = s._seek_blocks(live)
             if not len(blocks):
                 continue
-            decoder = None
-            if int(os.environ.get("LC_POSTING_CACHE_MB", "512")) > 0:
-                decoder = s._make_decoder(blocks)
             fd = _shard_topk_fn(
                 live, idfs, s.meta.avgdl, 1 << 60, filtered=False,
-                must_not_terms=[], require_all=False, decoder=decoder,
+                must_not_terms=[], require_all=False,
+                decoder=s._make_decoder(blocks),
                 dense_hint=int(s.meta.n_docs),
             )
             r = fd(blocks)  # one whole-index pass per field (see wand.py

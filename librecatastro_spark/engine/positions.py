@@ -3,13 +3,13 @@
 The index-only phrase path (Lucene ``.prx`` analog): an index built with
 ``index_options="positions"`` stores every occurrence's token position
 next to its posting block (builder.py / codec.encode_positions_bulk), so
-``match_phrase`` semantics can be answered ENTIRELY from the postings —
-no scan of the source table at query time. At 100 TB the source scan is
-the dominant cost of the verify-first path (engine/wand.py match_phrase);
-this path reads only the phrase terms' posting+position blocks, the same
-O(query-term postings) bill every other index query pays.
+``match_phrase`` semantics are answered ENTIRELY from the postings — no
+scan of the source table at query time. The phrase engine
+(engine/wand.py ``match_phrase`` / ``match_phrase_prefix`` and their
+``_local`` twins) reads only the phrase terms' posting+position blocks,
+the same O(query-term postings) bill every other index query pays.
 
-Semantics are EXACTLY the verify-first path's (rank-identity-tested):
+Semantics are EXACTLY ExactBM25.match_phrase's (rank-identity-tested):
 terms adjacent in analyzed-token order, ``slop`` = max intervening tokens
 PER GAP (analyzer._phrase_body documents the per-gap divergence from ES's
 edit-distance slop). Position adjacency over the analyzer's token stream
@@ -154,7 +154,7 @@ def phrase_topk_fn(
     not the hot terms' full posting lists. Scoring is BM25 require_all
     over the distinct terms, accumulated in sorted-term order with the
     same _impact factoring as every other path — bit-identical floats to
-    the verify-first match_phrase (rank-identity-tested)."""
+    ExactBM25.match_phrase (rank-identity-tested)."""
     distinct = sorted(set(seq))
 
     def fn(blocks: pd.DataFrame, attrs=None) -> pd.DataFrame:
@@ -206,8 +206,8 @@ def _score_verified(
 ) -> pd.DataFrame:
     """BM25 require_all over ``distinct`` terms for the ``verified`` doc
     set, term-major accumulation in sorted-term order — the same _impact
-    factoring as every other path, so floats are bit-identical to the
-    verify-first phrase scorers (rank-identity-tested). Shared by the
+    factoring as every other path, so floats are bit-identical to
+    ExactBM25's phrase scores (rank-identity-tested). Shared by the
     phrase and phrase-prefix positional kernels."""
     from .wand import _impact
 
@@ -253,7 +253,7 @@ def phrase_prefix_topk_fn(
     are range-pruned against those candidates BEFORE decode, then their
     occurrence streams concatenate into the chain's zero-slop tail —
     never collected, never scored, so there is no max_expansions
-    dependence (the verify-first semantics, preserved exactly)."""
+    dependence (ExactBM25.match_phrase_prefix's semantics exactly)."""
     distinct = sorted(set(seq))
 
     def fn(blocks: pd.DataFrame, attrs=None) -> pd.DataFrame:

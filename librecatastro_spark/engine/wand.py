@@ -584,12 +584,7 @@ class CompressedIndex:
         # query analysis uses the INDEX's analyzer (meta.analyzer_re, the
         # ES per-field analyzer hook) — ES match semantics: the query text
         # is analyzed with the field's analyzer, so a custom-analyzer
-        # index can never silently mismatch its own postings. The
-        # verify-first phrase paths derive their source-verify regex's
-        # token boundaries from the SAME pattern (analyzer_classes), so
-        # they agree with the index's tokenization too; an analyzer
-        # outside the derivable '[^X]+' shape makes them raise with a
-        # pointer to the positional (index-only) paths.
+        # index can never silently mismatch its own postings.
         self._analyze = Analyzer(
             getattr(self.meta, "analyzer_re", None),
             stopwords=frozenset(getattr(self.meta, "stopwords", None) or ()),
@@ -822,244 +817,53 @@ class CompressedIndex:
         )
         return _ranked(partial, k, offset, after=search_after)
 
+    def _needs_positions(self, method: str) -> None:
+        """Phrase queries are answered from positional postings only —
+        the ES contract ("field was indexed without position data;
+        cannot run PhraseQuery"): an index built without them refuses
+        instead of scanning the source text."""
+        if self.meta.index_options != "positions":
+            raise ValueError(
+                f"{method} needs an index built with "
+                f"index_options='positions' (index has "
+                f"{self.meta.index_options!r})"
+            )
+
     def match_phrase(
         self,
         text: str,
-        source: DataFrame,
         k: int = 10,
         offset: int = 0,
-        source_id_col: str = "doc_id",
-        source_text_col: str = "content",
         slop: int = 0,
     ) -> DataFrame:
-        """ES match_phrase analog (B6 extension) over the compressed
-        index — verify-first, no positional postings. ``slop`` admits up
-        to that many intervening tokens PER GAP between consecutive
-        phrase terms, in order (analyzer._phrase_body documents the
-        deliberate divergence from ES's total-edit-distance slop); the
-        verify regex, the exact engine, and the DuckDB twin all share
-        the one pattern, so the semantics are identical on every path.
-
-        1. **Verify on source**: the contiguous-sequence predicate
-           (analyzer.phrase_match_udf — one Arrow-batched CPython-regex
-           pass; ~6x the JVM RLIKE, ~80x the split/array_join Catalyst
-           form on this pattern, measured) IS the exact phrase
-           membership test,
-           so it runs directly against the source table and yields the
-           true phrase doc set, not a candidate superset. The scan is
-           pruned to the doc-id window where all phrase terms coexist —
-           [max over terms of min(first_doc_id), min over terms of
-           max(last_doc_id)], read from posting-block METADATA by the
-           coordinator seek (``_doc_window``, no posting decode) —
-           pushed as a BETWEEN so Parquet/Iceberg row-group stats skip
-           the rest.
-        2. **Score verified docs through the index**: the verified ids
-           join attrs (the authoritative doc->shard map — shard ranges
-           shift across appends, so no arithmetic shortcut) and feed the
-           FILTERED shard scorer exactly like a keyword-filtered query,
-           with the top-k cut ENABLED — shuffle O(shards x (k+offset)).
-
-        An earlier shape scored the full AND match set uncut and joined
-        it to the verified rows; on a stop-word phrase that materialized
-        (and cached) a corpus-sized intermediate just to throw away all
-        but k rows. Verify-first keeps every intermediate O(phrase
-        matches) and the merge O(k) — measured 5.5 s -> sub-second on
-        the hot-bigram bench query at 60 k docs.
+        """ES match_phrase analog (B6 extension), answered ENTIRELY from
+        the index — requires an index built with
+        ``index_options="positions"`` (ValueError otherwise). ``slop``
+        admits up to that many intervening tokens PER GAP between
+        consecutive phrase terms, in order (analyzer._phrase_body
+        documents the deliberate divergence from ES's total-edit-distance
+        slop; the exact engine and the DuckDB twin share that one
+        pattern). Phrase membership is decided by position-chain
+        intersection over the terms' position streams
+        (engine/positions.py), so the query's data volume is O(phrase
+        terms' postings) regardless of corpus size: it reads exactly what
+        a keyword AND reads plus the position bytes, and the source table
+        is never touched. Intersection-aware decode prunes hot terms'
+        blocks against the rarest term's candidates before any varbyte
+        work.
 
         Scoring = BM25 sum over the phrase's distinct terms (the
         require_all score), rank (score DESC, doc_id ASC) — identical to
         ExactBM25.match_phrase (rank-identity-tested) and twinned in the
         DuckDB oracle. ES's phrase-frequency scoring is intentionally not
         reproduced (documented divergence).
-        """
-        seq = self._analyze(text)
-        if not seq:
-            raise ValueError("phrase analyzes to zero terms")
-        if getattr(self.meta, "stopwords", None):
-            raise ValueError(
-                "match_phrase on a stopword-analyzer index needs the "
-                "positional path (match_phrase_positional / _local) — a "
-                "source regex cannot express adjacency after stopword "
-                "removal"
-            )
-        from ..analyzer import phrase_match_udf
-
-        return self._verify_first(
-            sorted(set(seq)), source, source_id_col, source_text_col,
-            lambda: phrase_match_udf(
-                seq, slop,
-                split_re=getattr(self.meta, "analyzer_re", None),
-                synonyms=getattr(self.meta, "synonyms", None),
-            ),
-            k, offset,
-        )
-
-    def _doc_window(self, terms: list[str]) -> tuple[int, int] | None:
-        """Doc-id window [lo, hi] where EVERY term has postings — [max
-        over terms of min(first_doc_id), min over terms of
-        max(last_doc_id)] — read from posting-block METADATA by the
-        coordinator term-dictionary seek (``_seek_blocks`` over the
-        terms' row groups, three columns, no decode, no Spark job); None
-        when a term has no postings or the ranges do not overlap (no doc
-        can hold them all)."""
-        spans = self._seek_blocks(
-            terms, cols=("term", "first_doc_id", "last_doc_id")
-        ).groupby("term")
-        if len(spans) < len(set(terms)):
-            return None
-        lo = int(spans["first_doc_id"].min().max())
-        hi = int(spans["last_doc_id"].max().min())
-        return (lo, hi) if lo <= hi else None
-
-    def _verify_first(
-        self,
-        terms: list[str],
-        source: DataFrame,
-        source_id_col: str,
-        source_text_col: str,
-        make_verify,
-        k: int,
-        offset: int,
-    ) -> DataFrame:
-        """Shared plan of the verify-first phrase paths (match_phrase,
-        match_phrase_prefix): the scored ``terms`` must all be indexed;
-        their ``_doc_window`` prunes both the source verify scan and the
-        postings scan; ``make_verify()`` builds the Arrow CPython-regex
-        predicate that decides true membership on the source text; the
-        verified ids join attrs (the authoritative doc->shard map) and
-        feed the FILTERED require_all shard scorer with the top-k cut
-        enabled; ``_ranked`` merges."""
-        idfs = self._idfs(terms)
-        # a phrase term absent from the corpus -> no document can match
-        win = self._doc_window(terms) if len(idfs) == len(terms) else None
-        if win is None:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        in_win = F.col("doc_id").between(*win)
-        # the window also prunes the postings scan itself: blocks wholly
-        # outside [lo, hi] can hold no phrase doc (min/max columns are in
-        # the Parquet footer stats, so this prunes row groups too)
-        blocks = self.postings.where(
-            F.col("term").isin(terms)
-            & (F.col("last_doc_id") >= win[0])
-            & (F.col("first_doc_id") <= win[1])
-        )
-        verified = (
-            source.select(
-                F.col(source_id_col).alias("doc_id"),
-                F.col(source_text_col).alias("_text"),
-            )
-            .where(in_win)
-            .where(make_verify()(F.col("_text")))
-            .select("doc_id")
-        )
-        allowed = self.attrs.select("shard", "doc_id").where(in_win).join(
-            verified, "doc_id"
-        )
-        fn = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, k + offset, filtered=True,
-            must_not_terms=[], require_all=True,
-            dense_hint=int(self.meta.n_docs),
-        )
-        # est None: the allowed side runs the regex verify over the
-        # source text, work Σ df does not count — in one task it runs
-        # serially (measured 1.6-2.3x slower on the 60k-doc bench)
-        partial = self._per_shard(blocks, fn, _RESULT_SCHEMA, None, allowed=allowed)
-        return _ranked(partial, k, offset)
-
-    def match_phrase_prefix(
-        self,
-        text: str,
-        source: DataFrame,
-        k: int = 10,
-        offset: int = 0,
-        source_id_col: str = "doc_id",
-        source_text_col: str = "content",
-    ) -> DataFrame:
-        """ES match_phrase_prefix analog ("type-ahead phrase") over the
-        compressed index — verify-first like ``match_phrase``: the
-        complete terms must appear adjacent in order, immediately
-        followed by a token STARTING WITH the last analyzed token.
-
-        Scoring contract matches ExactBM25.match_phrase_prefix: BM25
-        require_all over the COMPLETE terms only (the prefix gates
-        membership, not score — documented divergence from ES's
-        max_expansions-dependent expansion scoring), rank (score DESC,
-        doc_id ASC). A single-token query has no complete terms to score
-        and routes to ``term_prefix_search`` (constant score 1.0,
-        doc_id ASC — the same contract, and the vocab-range scan is the
-        cheaper plan for pure type-ahead).
-
-        Plan shape: identical to match_phrase — the doc-id window where
-        all COMPLETE terms coexist prunes both the source verify scan
-        and the postings scan (block metadata only, read by the
-        coordinator seek); the Arrow CPython-regex verify yields the TRUE match
-        set (not a candidate superset); verified ids feed the FILTERED
-        shard scorer with the top-k cut enabled — every intermediate
-        O(phrase-prefix matches), merge O(shards × (k+offset)).
-        """
-        seq = self._analyze(text)
-        if not seq:
-            raise ValueError("phrase analyzes to zero terms")
-        if getattr(self.meta, "stopwords", None):
-            raise ValueError(
-                "match_phrase_prefix on a stopword-analyzer index needs "
-                "the positional path (match_phrase_prefix_positional / "
-                "_local) — a source regex cannot express adjacency after "
-                "stopword removal"
-            )
-        if getattr(self.meta, "synonyms", None):
-            raise ValueError(
-                "match_phrase_prefix on a synonym-analyzer index needs "
-                "the positional path (match_phrase_prefix_positional / "
-                "_local) — the prefix expands over CANONICAL dictionary "
-                "terms, whose surface preimages a source regex cannot "
-                "enumerate"
-            )
-        from ..analyzer import phrase_prefix_match_udf
-
-        complete, pfx = seq[:-1], seq[-1]
-        if not complete:
-            return self.term_prefix_search(pfx, k=k, offset=offset)
-        return self._verify_first(
-            sorted(set(complete)), source, source_id_col, source_text_col,
-            lambda: phrase_prefix_match_udf(
-                complete, pfx,
-                split_re=getattr(self.meta, "analyzer_re", None),
-            ),
-            k, offset,
-        )
-
-    def match_phrase_positional(
-        self,
-        text: str,
-        k: int = 10,
-        offset: int = 0,
-        slop: int = 0,
-    ) -> DataFrame:
-        """ES match_phrase answered ENTIRELY from the index — requires an
-        index built with ``index_options="positions"``. Identical
-        semantics, scoring contract and rank to ``match_phrase`` (the
-        verify-first path; rank-identity-tested), but the source table is
-        never touched: phrase membership is decided by position-chain
-        intersection over the terms' position streams
-        (engine/positions.py), so the query's data volume is O(phrase
-        terms' postings) regardless of corpus size — at 100 TB the
-        verify-first path's pruned source scan is still corpus-shaped for
-        hot phrases, while this path reads exactly what a keyword AND
-        reads plus the position bytes. Intersection-aware decode prunes
-        hot terms' blocks against the rarest term's candidates before
-        any varbyte work.
 
         Plan: postings scan pruned to the phrase terms (In filter +
-        doc-window BETWEEN from block metadata, as match_phrase) →
+        doc-window BETWEEN from block metadata, ``_doc_window``) →
         per-shard grouped map (verify + BM25 require_all top-k in one
         decode pass) → global rounded (score DESC, doc_id ASC) merge.
         """
-        if self.meta.index_options != "positions":
-            raise ValueError(
-                "match_phrase_positional needs index_options='positions' "
-                f"(index has {self.meta.index_options!r}); use match_phrase"
-            )
+        self._needs_positions("match_phrase")
         seq = self._analyze(text)
         if not seq:
             raise ValueError("phrase analyzes to zero terms")
@@ -1082,19 +886,43 @@ class CompressedIndex:
         )
         return _ranked(partial, k, offset)
 
-    def match_phrase_prefix_positional(
+    def _doc_window(self, terms: list[str]) -> tuple[int, int] | None:
+        """Doc-id window [lo, hi] where EVERY term has postings — [max
+        over terms of min(first_doc_id), min over terms of
+        max(last_doc_id)] — read from posting-block METADATA by the
+        coordinator term-dictionary seek (``_seek_blocks`` over the
+        terms' row groups, three columns, no decode, no Spark job); None
+        when a term has no postings or the ranges do not overlap (no doc
+        can hold them all)."""
+        spans = self._seek_blocks(
+            terms, cols=("term", "first_doc_id", "last_doc_id")
+        ).groupby("term")
+        if len(spans) < len(set(terms)):
+            return None
+        lo = int(spans["first_doc_id"].min().max())
+        hi = int(spans["last_doc_id"].max().min())
+        return (lo, hi) if lo <= hi else None
+
+    def match_phrase_prefix(
         self,
         text: str,
         k: int = 10,
         offset: int = 0,
     ) -> DataFrame:
-        """ES match_phrase_prefix answered ENTIRELY from the index —
-        requires ``index_options="positions"``. Identical semantics,
-        scoring contract and rank to ``match_phrase_prefix`` (the
-        verify-first path; rank-identity-tested): the complete terms must
-        appear adjacent in order with a token starting with the last
-        analyzed token at the NEXT position; BM25 require_all over the
-        COMPLETE terms only.
+        """ES match_phrase_prefix analog ("type-ahead phrase"), answered
+        ENTIRELY from the index — requires ``index_options="positions"``
+        (ValueError otherwise): the complete terms must appear adjacent
+        in order with a token STARTING WITH the last analyzed token at
+        the NEXT position.
+
+        Scoring contract matches ExactBM25.match_phrase_prefix: BM25
+        require_all over the COMPLETE terms only (the prefix gates
+        membership, not score — documented divergence from ES's
+        max_expansions-dependent expansion scoring), rank (score DESC,
+        doc_id ASC). A single-token query has no complete terms to score
+        and routes to ``term_prefix_search`` (constant score 1.0,
+        doc_id ASC — the same contract, and the vocab-range scan is the
+        cheaper plan for pure type-ahead).
 
         Plan: ONE postings scan covering both roles — In(complete terms)
         OR the [pfx, successor) vocab range (both predicates push to the
@@ -1104,21 +932,10 @@ class CompressedIndex:
         (positions.phrase_prefix_topk_fn: chain the complete positions,
         then a zero-slop step into the concatenated expansion streams) →
         global rounded merge. Data volume is O(complete-term postings +
-        window-pruned expansion postings) at any corpus size — the
-        source-table verify scan the type-ahead shape previously paid is
-        gone. The expansion is never collected and never scored, so
-        there is no max_expansions dependence (verify-first semantics
-        preserved exactly). Single-token queries route to
-        ``term_prefix_search`` (index-only already, and the cheaper
-        plan). Falls back conceptually to ``match_phrase_prefix`` when
-        the index lacks positions — callers keep that path for
-        position-less indexes."""
-        if self.meta.index_options != "positions":
-            raise ValueError(
-                "match_phrase_prefix_positional needs index_options="
-                f"'positions' (index has {self.meta.index_options!r}); "
-                "use match_phrase_prefix"
-            )
+        window-pruned expansion postings) at any corpus size. The
+        expansion is never collected and never scored, so there is no
+        max_expansions dependence."""
+        self._needs_positions("match_phrase_prefix")
         seq = self._analyze(text)
         if not seq:
             raise ValueError("phrase analyzes to zero terms")
@@ -1150,6 +967,11 @@ class CompressedIndex:
         )
         return _ranked(partial, k, offset)
 
+    #: aliases for callers that name the phrase queries this way
+    #: (perfbench/run.py, the oracle's wand_match_phrase_pos entries)
+    match_phrase_positional = match_phrase
+    match_phrase_prefix_positional = match_phrase_prefix
+
     #: routing threshold for the coordinator phrase twins: above this
     #: estimated POSITIONS-DECODE volume the single-core driver kernel
     #: loses to the distributed path, so the twin transparently routes
@@ -1165,8 +987,8 @@ class CompressedIndex:
     #: positions decoded) separates the regimes; the product does, by
     #: ~170× on the bench shapes (hot-hot ≈ 4.7M, hot+rare ≈ 27k at the
     #: 20k-doc calibration corpus; measured 1.53 s vs 64 ms local).
-    #: Env-overridable (LC_PHRASE_LOCAL_MAX_POSTINGS); results are
-    #: identical either way (rank-identity tested), only latency moves.
+    #: Results are identical on either route (rank-identity tested),
+    #: only latency moves.
     _PHRASE_LOCAL_MAX_POSTINGS = 1_000_000
 
     def _phrase_decode_estimate(self, terms: list[str]) -> int:
@@ -1199,11 +1021,6 @@ class CompressedIndex:
             return None
         return self._phrase_decode_estimate(terms)
 
-    def _phrase_local_cap(self) -> int:
-        return int(os.environ.get(
-            "LC_PHRASE_LOCAL_MAX_POSTINGS", self._PHRASE_LOCAL_MAX_POSTINGS
-        ))
-
     def match_phrase_local(
         self,
         text: str,
@@ -1211,10 +1028,10 @@ class CompressedIndex:
         offset: int = 0,
         slop: int = 0,
     ) -> pd.DataFrame:
-        """Coordinator fast path for ``match_phrase_positional`` — the
-        same kernel (engine/positions.py) over a term-dictionary-seek
-        pyarrow read of the phrase terms' posting+position blocks, run
-        once whole-index on the driver (the phrase scorer has no θ
+        """Coordinator fast path for ``match_phrase`` — the same kernel
+        (engine/positions.py) over a term-dictionary-seek pyarrow read of
+        the phrase terms' posting+position blocks, run once whole-index
+        on the driver (the phrase scorer has no θ
         pruning, so the shard split cannot change results;
         rank-identity with the distributed path is tested). This is the
         serving-latency story for phrase queries: ms-latency off the
@@ -1224,16 +1041,13 @@ class CompressedIndex:
         occurrences, read from the resident term-stats snapshot before
         any data I/O): above ``_PHRASE_LOCAL_MAX_POSTINGS`` it runs the
         distributed kernel instead, which wins there."""
-        if self.meta.index_options != "positions":
-            raise ValueError(
-                "match_phrase_local needs index_options='positions'"
-            )
+        self._needs_positions("match_phrase_local")
         seq = self._analyze(text)
         if not seq:
             raise ValueError("phrase analyzes to zero terms")
         terms = sorted(set(seq))
-        if self._phrase_decode_estimate(terms) > self._phrase_local_cap():
-            return self.match_phrase_positional(
+        if self._phrase_decode_estimate(terms) > self._PHRASE_LOCAL_MAX_POSTINGS:
+            return self.match_phrase(
                 text, k=k, offset=offset, slop=slop
             ).toPandas()
         idfs = self._idfs(terms)
@@ -1253,8 +1067,8 @@ class CompressedIndex:
         k: int = 10,
         offset: int = 0,
     ) -> pd.DataFrame:
-        """Coordinator fast path for ``match_phrase_prefix_positional`` —
-        the same kernel (positions.phrase_prefix_topk_fn) over a
+        """Coordinator fast path for ``match_phrase_prefix`` — the
+        same kernel (positions.phrase_prefix_topk_fn) over a
         term-dictionary-seek pyarrow read of the complete terms' AND the
         [pfx, …) expansion terms' posting+position blocks, run once
         whole-index on the driver (no θ pruning in the phrase kernel, so
@@ -1264,10 +1078,7 @@ class CompressedIndex:
         single-token queries fall back to the constant-score local tail.
         This is the type-ahead serving story: ms-latency per keystroke,
         no Spark job, no source scan."""
-        if self.meta.index_options != "positions":
-            raise ValueError(
-                "match_phrase_prefix_local needs index_options='positions'"
-            )
+        self._needs_positions("match_phrase_prefix_local")
         seq = self._analyze(text)
         if not seq:
             raise ValueError("phrase analyzes to zero terms")
@@ -1275,7 +1086,7 @@ class CompressedIndex:
         if self._df_local is None:
             raise ValueError(
                 "match_phrase_prefix_local needs the resident term "
-                "dictionary; use match_phrase_prefix_positional"
+                "dictionary; use match_phrase_prefix"
             )
         expansion = [t for t in self._df_local if t.startswith(pfx)]
         if not complete:
@@ -1285,8 +1096,8 @@ class CompressedIndex:
         # expansion streams are pruned against the COMPLETE terms'
         # windows, so the rarest complete term's window share bounds
         # the kernel's work
-        if self._phrase_decode_estimate(terms) > self._phrase_local_cap():
-            return self.match_phrase_prefix_positional(
+        if self._phrase_decode_estimate(terms) > self._PHRASE_LOCAL_MAX_POSTINGS:
+            return self.match_phrase_prefix(
                 text, k=k, offset=offset
             ).toPandas()
         idfs = self._idfs(terms)
@@ -1305,9 +1116,9 @@ class CompressedIndex:
         return _ranked_local(fn(blocks), k, offset)
 
     def _executor(self):
-        """Persistent coordinator thread pool, shared by the seek's
-        per-file reads and the per-shard scorers. Thread SPAWN on this VM
-        costs ~35 ms (the round-2 host memory-wall), so a per-query
+        """Persistent coordinator thread pool for the seek's per-file
+        reads. Thread SPAWN on a 4-core VM cost ~35 ms (the round-2 host
+        memory-wall), so a per-query
         ThreadPoolExecutor added ~0.2 s of pure thread creation to every
         fast-path call; one long-lived pool per open index amortizes it
         to zero. Pool size is read from LC_FASTPATH_THREADS at first use;
@@ -1458,10 +1269,10 @@ class CompressedIndex:
         small requests decode inline and cache nothing. Blocks are
         located by first_doc_id (unique per (shard, term): salt
         sub-ranges are disjoint and block doc ranges are sorted). LRU by
-        bytes, budget LC_POSTING_CACHE_MB (default 512; 0 disables);
-        entries touched by the current query are pinned against its own
-        eviction, and an entry that alone exceeds the budget is served
-        inline rather than cached."""
+        bytes, budget LC_POSTING_CACHE_MB (default 512; 0 caches
+        nothing); entries touched by the current query are pinned
+        against its own eviction, and an entry that alone exceeds the
+        budget is served for this query but not cached."""
         from collections import OrderedDict
 
         if self._dec_cache is None:
@@ -1690,21 +1501,18 @@ class CompressedIndex:
 
                 tbl = tbl.filter(pa.array(mask))
             attrs = tbl.select(["shard", "doc_id"]).to_pandas()
-        local_k = k + offset
-        decoder = None
-        if len(blocks) and int(os.environ.get("LC_POSTING_CACHE_MB", "512")) > 0:
-            decoder = self._make_decoder(blocks)
         if search_after is not None and offset:
             raise ValueError("offset and search_after are mutually exclusive")
+        if not len(blocks):
+            return _empty()
         fn = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, local_k,
+            terms, idfs, self.meta.avgdl, k + offset,
             has_filter,
-            must_not_terms, require_all, should_terms, decoder=decoder,
+            must_not_terms, require_all, should_terms,
+            decoder=self._make_decoder(blocks),
             dense_hint=int(self.meta.n_docs), cursor=search_after,
             min_match=min_match,
         )
-        if not len(blocks):
-            return _empty()
         # one whole-index numpy pass instead of 16 per-shard passes: shards
         # partition the doc-id space, so a doc's postings all live in one
         # shard, and the scorer accumulates every doc's sum in canonical
@@ -1715,24 +1523,8 @@ class CompressedIndex:
         # keeps the per-shard split (that is what parallelizes it across
         # executors); rank-identity between the two is asserted in
         # bench.py and tests/test_fastpath.py.
-        if decoder is not None:
-            parts = [fn(blocks, attrs) if has_filter else fn(blocks)]
-        else:
-            # cache disabled: per-shard scoring on the pool (inline decode
-            # is the dominant cost and releases the GIL in bulk ufuncs)
-            groups = list(blocks.groupby("shard", sort=False))
-
-            def run_one(item):
-                shard, bl = item
-                if has_filter:
-                    return fn(bl, attrs[attrs["shard"] == shard])
-                return fn(bl)
-
-            if len(groups) > 1:
-                parts = list(self._executor().map(run_one, groups))
-            else:
-                parts = [run_one(groups[0])]
-        return _ranked_local(pd.concat(parts, ignore_index=True), k, offset)
+        out = fn(blocks, attrs) if has_filter else fn(blocks)
+        return _ranked_local(out, k, offset)
 
     def more_like_this(
         self,
@@ -2906,8 +2698,8 @@ class CompressedIndex:
         to the whole index (background). Like ES, the stored source text
         of the matching docs supplies the foreground counts (``source``
         is the corpus table, the engine's _source analog — the same
-        contract as ``match_phrase``); the background df comes from the
-        index's term dictionary, never a corpus rescan.
+        contract as ``search_highlighted``); the background df comes
+        from the index's term dictionary, never a corpus rescan.
 
         Score is the JLH heuristic ES defaults to, on exact counts:
         ``(fg_rate − bg_rate) · (fg_rate / bg_rate)`` with

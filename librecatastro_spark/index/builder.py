@@ -390,11 +390,11 @@ def build_index(
 
     ``index_options="positions"`` (the ES/Lucene mapping option) stores
     per-occurrence token positions next to every posting block (delta +
-    varbyte, aligned with the block's doc/tf streams), enabling phrase
-    queries answered ENTIRELY from the index — no source-table scan at
-    query time (engine.wand.CompressedIndex.match_phrase_positional). The
-    default ("freqs") build is byte-identical to before the option
-    existed apart from an all-null pos_enc column.
+    varbyte, aligned with the block's doc/tf streams); phrase queries
+    (engine.wand.CompressedIndex.match_phrase / match_phrase_prefix) need
+    them and are answered ENTIRELY from the index. The default ("freqs")
+    build is byte-identical to before the option existed apart from an
+    all-null pos_enc column, and refuses phrase queries.
 
     A ``synonyms`` map with a chained or cyclic pair is rejected
     (ValueError, analyzer.check_synonyms) before anything is written."""

@@ -140,15 +140,14 @@ def test_cli_round3_query_surface(cli_env, spark, capsys):
     each subcommand runs end-to-end and agrees with the library call."""
     idx, corpus = cli_env["index"], cli_env["corpus"]
 
-    rc = main(["phrase", "--index", idx, "--input", corpus,
-               "--text", "data model", "--k", "5", "--text-col", "text"])
-    phrase_rows = _json_lines(capsys)
-    assert rc == 0
+    # a freqs index has no positions: phrase exits naming the build flag
+    with pytest.raises(SystemExit, match="--index-options positions"):
+        main(["phrase", "--index", idx, "--text", "data model", "--k", "5"])
 
     rc = main(["fuzzy", "--index", idx, "--term", "modell", "--k", "5"])
     assert rc == 0 and _json_lines(capsys) is not None
 
-    some_doc = phrase_rows[0]["doc_id"] if phrase_rows else 0
+    some_doc = spark.read.parquet(corpus).first()["doc_id"]
     rc = main(["mlt", "--index", idx, "--input", corpus,
                "--doc-id", str(some_doc), "--k", "5", "--text-col", "text"])
     assert rc == 0
@@ -275,8 +274,8 @@ def test_cli_compound_score_queries(cli_env, spark, capsys):
 
 
 def test_cli_positional_phrase(cli_env, spark, tmp_path, capsys):
-    """build --index-options positions, then phrase --positional (+--fast)
-    equals the verify-first phrase path."""
+    """build --index-options positions, then phrase (+--fast) equals the
+    library's match_phrase; --type-ahead likewise."""
     pidx = str(tmp_path / "posidx")
     rc = main([
         "build", "--input", cli_env["corpus"], "--out", pidx,
@@ -285,49 +284,46 @@ def test_cli_positional_phrase(cli_env, spark, tmp_path, capsys):
     ])
     assert rc == 0
     _json_lines(capsys)  # drain
+    from librecatastro_spark.engine.wand import CompressedIndex
+
+    lib = CompressedIndex(spark, pidx)
     rc = main([
-        "phrase", "--index", pidx, "--input", cli_env["corpus"],
-        "--text", "data model", "--k", "10",
-    ])
-    vf = [(r["doc_id"], r["score"]) for r in _json_lines(capsys)]
-    rc2 = main([
-        "phrase", "--index", pidx, "--text", "data model", "--k", "10",
-        "--positional",
+        "phrase", "--index", pidx, "--text", "key order", "--k", "10",
     ])
     po = [(r["doc_id"], r["score"]) for r in _json_lines(capsys)]
-    rc3 = main([
-        "phrase", "--index", pidx, "--text", "data model", "--k", "10",
-        "--positional", "--fast",
+    rc2 = main([
+        "phrase", "--index", pidx, "--text", "key order", "--k", "10",
+        "--fast",
     ])
     fp = [(r["doc_id"], r["score"]) for r in _json_lines(capsys)]
-    assert rc == rc2 == rc3 == 0
-    assert po == vf and fp == vf
-    # non-positional phrase without --input is a usage error
-    with pytest.raises(SystemExit):
-        main(["phrase", "--index", pidx, "--text", "data model"])
-    # r4 type-ahead: --type-ahead on all three routes agrees
+    want = [
+        (r["doc_id"], r["score"])
+        for r in lib.match_phrase("key order", k=10).collect()
+    ]
+    assert rc == rc2 == 0
+    assert po == want and fp == want and want
+    # r4 type-ahead: --type-ahead on both routes agrees
     # ("key ord": complete term "key" + prefix of "order", a hot bigram
     # in this corpus slice — non-empty asserted below)
     rc = main([
-        "phrase", "--index", pidx, "--input", cli_env["corpus"],
-        "--text", "key ord", "--k", "10", "--type-ahead",
-    ])
-    ta_vf = [(r["doc_id"], r["score"]) for r in _json_lines(capsys)]
-    rc2 = main([
         "phrase", "--index", pidx, "--text", "key ord", "--k", "10",
-        "--positional", "--type-ahead",
+        "--type-ahead",
     ])
     ta_po = [(r["doc_id"], r["score"]) for r in _json_lines(capsys)]
-    rc3 = main([
+    rc2 = main([
         "phrase", "--index", pidx, "--text", "key ord", "--k", "10",
-        "--positional", "--type-ahead", "--fast",
+        "--type-ahead", "--fast",
     ])
     ta_fp = [(r["doc_id"], r["score"]) for r in _json_lines(capsys)]
-    assert rc == rc2 == rc3 == 0
-    assert ta_po == ta_vf and ta_fp == ta_vf and ta_vf
+    ta_want = [
+        (r["doc_id"], r["score"])
+        for r in lib.match_phrase_prefix("key ord", k=10).collect()
+    ]
+    assert rc == rc2 == 0
+    assert ta_po == ta_want and ta_fp == ta_want and ta_want
     with pytest.raises(SystemExit):
         main(["phrase", "--index", pidx, "--text", "key ord",
-              "--positional", "--type-ahead", "--slop", "1"])
+              "--type-ahead", "--slop", "1"])
 
 
 def test_cli_fuzzy_fast_and_geo_search(cli_env, spark, tmp_path, capsys):

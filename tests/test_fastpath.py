@@ -136,8 +136,8 @@ def test_fastpath_threading_invariant(index, monkeypatch):
 
 
 def test_fastpath_cache_invariant(index, monkeypatch):
-    """The decoded-postings cache must never change results: cache
-    disabled (LC_POSTING_CACHE_MB=0 — per-shard inline-decode path),
+    """The decoded-postings cache must never change results: budget 0
+    (LC_POSTING_CACHE_MB=0 — every fill is served uncached),
     tiny (every fill exceeds the budget, so entries are served uncached
     and evicted across queries), and default all agree on every golden
     shape. The AND/filtered golden queries additionally exercise the

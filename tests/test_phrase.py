@@ -4,9 +4,10 @@ Semantics frozen by analyzer.phrase_expr: a document matches iff its
 ANALYZED token sequence contains the query's analyzed sequence
 contiguously (order + duplicates matter); score = BM25 sum over the
 phrase's distinct terms (the require_all score). Both engine paths
-(ExactBM25.match_phrase and CompressedIndex.match_phrase) must be
-rank-identical, and both must agree with a driver-side Python replica of
-the predicate.
+(ExactBM25.match_phrase and CompressedIndex.match_phrase, which answers
+from the positional postings of an index built with
+index_options="positions") must be rank-identical, and both must agree
+with a driver-side Python replica of the predicate.
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ def wand(spark, corpus, tmp_path_factory):
     build_index(
         spark, corpus, out, attr_cols=("repo", "path", "lang"),
         n_shards=4, block_size=16, salt_threshold=120, n_salts=4,
+        index_options="positions",
     )
     return CompressedIndex(spark, out)
 
@@ -82,9 +84,9 @@ PHRASES = ["def return", "spark session builder", "return return", "import def"]
 
 
 @pytest.mark.parametrize("phrase", PHRASES)
-def test_phrase_paths_rank_identical(exact, wand, corpus, phrase):
+def test_phrase_paths_rank_identical(exact, wand, phrase):
     e = rows(exact.match_phrase(phrase, k=10))
-    w = rows(wand.match_phrase(phrase, corpus, k=10, source_text_col="content"))
+    w = rows(wand.match_phrase(phrase, k=10))
     assert e == w
 
 
@@ -95,14 +97,14 @@ def test_phrase_match_set_is_exact_subsequence(exact, corpus, live_phrase):
     assert got == want
 
 
-def test_phrase_subset_of_and_match(exact, wand, corpus):
+def test_phrase_subset_of_and_match(exact, wand):
     """Every phrase hit must be in the AND (require_all) match set, and a
     phrase can only shrink the set, never grow it."""
     phrase = "def return"
     and_docs = {r["doc_id"] for r in exact.search(phrase, k=10_000, require_all=True).collect()}
     ph_docs = {
         r["doc_id"]
-        for r in wand.match_phrase(phrase, corpus, k=10_000, source_text_col="content").collect()
+        for r in wand.match_phrase(phrase, k=10_000).collect()
     }
     assert ph_docs <= and_docs
 
@@ -133,11 +135,7 @@ def _py_sloppy_docs(corpus, phrase: str, slop: int) -> set[int]:
 def test_sloppy_phrase_paths_and_semantics(exact, wand, corpus, slop):
     phrase = "def return"
     e = rows(exact.match_phrase(phrase, k=10_000, slop=slop))
-    w = rows(
-        wand.match_phrase(
-            phrase, corpus, k=10_000, source_text_col="content", slop=slop
-        )
-    )
+    w = rows(wand.match_phrase(phrase, k=10_000, slop=slop))
     assert e == w
     assert {d for d, _ in e} == _py_sloppy_docs(corpus, phrase, slop)
 
@@ -196,14 +194,13 @@ def test_phrase_boundaries_not_substring(spark):
 
 
 def test_phrase_rlike_equals_array_form(spark):
-    """phrase_match_udf (Arrow CPython-regex verify — the production
-    predicate in CompressedIndex.match_phrase) and phrase_rlike_expr
-    (the Catalyst RLIKE form) must both agree with phrase_expr
-    (token-array form, the ExactBM25 predicate) on every boundary case:
-    string start/end, trailing newline (the `$`-vs-`\\z`/`\\Z` trap),
+    """phrase_rlike_expr (the Catalyst RLIKE form, ExactBM25's sloppy
+    predicate and the DuckDB twin's pattern) must agree with phrase_expr
+    (token-array form, the ExactBM25 slop-0 predicate) on every boundary
+    case: string start/end, trailing newline (the `$`-vs-`\\z` trap),
     unicode and punctuation separators, substring-vs-token, duplicate
     terms, case."""
-    from librecatastro_spark.analyzer import phrase_match_udf, phrase_rlike_expr
+    from librecatastro_spark.analyzer import phrase_rlike_expr
 
     texts = [
         "def return",                      # exact, whole string
@@ -225,20 +222,19 @@ def test_phrase_rlike_equals_array_form(spark):
     for seq in seqs:
         a = {r["i"] for r in df.where(phrase_expr("t", seq)).collect()}
         b = {r["i"] for r in df.where(phrase_rlike_expr("t", seq)).collect()}
-        c = {r["i"] for r in df.where(phrase_match_udf(seq)(F.col("t"))).collect()}
-        assert a == b == c, (seq, a ^ b, a ^ c)
+        assert a == b, (seq, a ^ b)
 
 
-def test_phrase_absent_term_returns_empty(exact, wand, corpus):
+def test_phrase_absent_term_returns_empty(exact, wand):
     assert rows(exact.match_phrase("def zzznotindexed")) == []
-    assert rows(wand.match_phrase("def zzznotindexed", corpus, source_text_col="content")) == []
+    assert rows(wand.match_phrase("def zzznotindexed")) == []
 
 
-def test_phrase_zero_terms_raises(exact, wand, corpus):
+def test_phrase_zero_terms_raises(exact, wand):
     with pytest.raises(ValueError):
         exact.match_phrase("!!!")
     with pytest.raises(ValueError):
-        wand.match_phrase("!!!", corpus, source_text_col="content")
+        wand.match_phrase("!!!")
 
 
 # ---------------------------------------------------------------- fuzzy --
@@ -405,9 +401,7 @@ def _py_phrase_prefix_docs(corpus, phrase: str) -> set[int]:
 def test_phrase_prefix_paths_and_semantics(exact, wand, corpus):
     phrase = "def re"  # 'def return', 'def result', ... in the generator vocab
     e = rows(exact.match_phrase_prefix(phrase, k=10_000))
-    w = rows(
-        wand.match_phrase_prefix(phrase, corpus, k=10_000, source_text_col="content")
-    )
+    w = rows(wand.match_phrase_prefix(phrase, k=10_000))
     assert e == w
     assert {d for d, _ in e} == _py_phrase_prefix_docs(corpus, phrase)
     assert e, "phrase prefix must match on this corpus"
@@ -420,11 +414,11 @@ def test_phrase_prefix_superset_of_full_phrase(exact):
     assert full <= pre and full < pre or full == pre
 
 
-def test_phrase_prefix_single_token_constant_score(exact, wand, corpus):
+def test_phrase_prefix_single_token_constant_score(exact, wand):
     """One analyzed token -> pure type-ahead: constant score, doc_id ASC,
     identical across engines."""
     e = exact.match_phrase_prefix("re", k=20).collect()
-    w = wand.match_phrase_prefix("re", corpus, k=20, source_text_col="content").collect()
+    w = wand.match_phrase_prefix("re", k=20).collect()
     assert [(r["doc_id"], r["score"]) for r in e] == [
         (r["doc_id"], r["score"]) for r in w
     ]

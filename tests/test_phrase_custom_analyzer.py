@@ -1,24 +1,20 @@
 """Custom-analyzer phrase correctness (r5, the round-4 verdict's weak
-mark): the verify-first phrase paths must verify the SOURCE with the
-INDEX's token boundaries (meta.analyzer_re), not the default chain's.
+mark): on an index whose analyzer differs from the default chain (e.g.
+``[^a-z0-9_.]+``, dots kept inside tokens), phrase queries must follow
+the INDEX's token boundaries (meta.analyzer_re).
 
-Pre-fix, the verify regex hard-coded ``[^a-z0-9_]`` while query
-analysis used the index analyzer, producing silent wrong answers on a
-custom-analyzer index (e.g. ``[^a-z0-9_.]+``, dots kept inside tokens):
+The phrase engine answers from positional postings, which the build
+tokenized with that analyzer, so the traps a source-text regex falls
+into cannot arise; these cases pin them anyway:
 
-  * a dotted INTERVENING token under slop>=1 made the default-boundary
-    regex falsely REJECT a real phrase match (the slop gap's token
-    class lacked '.') — the doc silently vanished from verify-first
-    results while the positional paths returned it;
-  * an UNESCAPED dotted prefix made match_phrase_prefix's '.' a regex
-    wildcard — a doc with no matching token was falsely ACCEPTED, and
-    because the prefix gates membership (only complete terms are
-    scored) the wrong doc survived into the answer.
+  * a dotted INTERVENING token under slop>=1 is one token, so a real
+    slop-1 phrase match must be found;
+  * a dotted prefix must match a literal dot only — a doc whose token
+    merely matches '.' as a wildcard must not be accepted, since the
+    prefix gates membership (only complete terms are scored);
+  * an analyzer outside the '[^X]+' shape still answers phrases.
 
-Now every verify regex derives its boundary classes from
-meta.analyzer_re (analyzer.analyzer_classes) and escapes terms, so all
-phrase paths agree; an analyzer outside the derivable '[^X]+' shape
-makes verify-first raise with a pointer to the positional paths.
+The distributed queries and their coordinator twins must agree.
 """
 
 from __future__ import annotations
@@ -63,45 +59,38 @@ def lrows(pdf):
     return list(zip(pdf["doc_id"].tolist(), pdf["score"].tolist()))
 
 
-def test_slop_gap_uses_index_token_class(cidx, docs):
+def test_slop_gap_uses_index_token_class(cidx):
     """Doc 1 ("alpha x.y beta"): one intervening token under the DOT
-    analyzer, so "alpha beta" slop=1 matches — the positional paths say
-    so, and verify-first must agree (pre-fix its slop gap's token class
-    lacked '.', silently dropping the doc)."""
-    po = rows(cidx.match_phrase_positional("alpha beta", k=100, slop=1))
-    vf = rows(cidx.match_phrase("alpha beta", docs, k=100, slop=1))
+    analyzer, so "alpha beta" slop=1 matches on both routes."""
+    po = rows(cidx.match_phrase("alpha beta", k=100, slop=1))
     lo = lrows(cidx.match_phrase_local("alpha beta", k=100, slop=1))
-    assert vf == po and lo == po
+    assert lo == po
     assert 1 in {d for d, _ in po}
-    # slop=0: doc 1 is NOT a match on any path (the gap is a real token)
-    po0 = rows(cidx.match_phrase_positional("alpha beta", k=100))
-    vf0 = rows(cidx.match_phrase("alpha beta", docs, k=100))
-    assert vf0 == po0 and 1 not in {d for d, _ in po0}
+    # slop=0: doc 1 is NOT a match (the gap is a real token)
+    po0 = rows(cidx.match_phrase("alpha beta", k=100))
+    assert lrows(cidx.match_phrase_local("alpha beta", k=100)) == po0
     assert {d for d, _ in po0} == {0, 4}
 
 
-def test_dotted_phrase_terms_are_escaped(cidx, docs):
+def test_dotted_phrase_terms_are_escaped(cidx):
     """Query "load pkg.mod": one doc (4) has the dotted token adjacent.
-    All three phrase paths agree, and the dot matches only a literal
-    dot (pre-fix it was a regex wildcard in the verify body)."""
-    po = rows(cidx.match_phrase_positional("load pkg.mod", k=100))
-    vf = rows(cidx.match_phrase("load pkg.mod", docs, k=100))
+    Both routes agree, and the dot matches only a literal dot."""
+    po = rows(cidx.match_phrase("load pkg.mod", k=100))
     lo = lrows(cidx.match_phrase_local("load pkg.mod", k=100))
-    assert vf == po and lo == po
+    assert lo == po
     assert {d for d, _ in po} == {4}
 
 
-def test_dotted_prefix_no_wildcard_false_accept(cidx, docs):
+def test_dotted_prefix_no_wildcard_false_accept(cidx):
     """Query "load x.p": complete=["load"], prefix "x.p". Doc 2 has
-    token "x.put" after "load" -> true match. Doc 3 ("load xqp") is the
-    pre-fix false accept: '.' acted as a wildcard in the verify regex,
-    and since only complete terms are scored (which doc 3 HAS), the
-    wrong doc survived into the answer. All type-ahead paths agree."""
-    vf = rows(cidx.match_phrase_prefix("load x.p", docs, k=100))
-    po = rows(cidx.match_phrase_prefix_positional("load x.p", k=100))
+    token "x.put" after "load" -> true match. Doc 3 ("load xqp") would
+    be a false accept if '.' acted as a wildcard: only complete terms
+    are scored (which doc 3 HAS), so the wrong doc would survive into
+    the answer. Both type-ahead routes agree."""
+    po = rows(cidx.match_phrase_prefix("load x.p", k=100))
     lo = lrows(cidx.match_phrase_prefix_local("load x.p", k=100))
-    assert vf == po and lo == po
-    assert {d for d, _ in vf} == {2}
+    assert lo == po
+    assert {d for d, _ in po} == {2}
 
 
 def test_highlight_tokenizes_with_index_analyzer(cidx, docs):
@@ -117,11 +106,13 @@ def test_highlight_tokenizes_with_index_analyzer(cidx, docs):
     assert out and all("<em>pkg.mod</em>" in s for s in out.values())
 
 
-def test_nonderivable_analyzer_raises_on_verify_first(spark, docs, tmp_path):
-    """An analyzer outside the '[^X]+' shape cannot parameterize the
-    verify regex: verify-first phrase paths raise (pointing at the
-    positional paths) instead of silently verifying with wrong
-    boundaries. Term/match queries on the same index still work."""
+def test_nonderivable_analyzer_phrases_answer_from_positions(
+    spark, docs, tmp_path
+):
+    """An analyzer outside the '[^X]+' shape (here whitespace split) has
+    no complement a source-text regex could use; the phrase engine never
+    re-tokenizes the source, so phrases answer on it like any index.
+    Term/match queries on the same index work too."""
     out = str(tmp_path / "weird")
     build_index(
         spark, docs, out, n_shards=2, block_size=16, salt_threshold=100,
@@ -129,9 +120,9 @@ def test_nonderivable_analyzer_raises_on_verify_first(spark, docs, tmp_path):
     )
     idx = CompressedIndex(spark, out)
     assert rows(idx.search("alpha", k=10))  # plain match unaffected
-    with pytest.raises(ValueError, match="positional"):
-        idx.match_phrase("alpha beta", docs, k=10)
-    with pytest.raises(ValueError, match="positional"):
-        idx.match_phrase_prefix("alpha be", docs, k=10)
-    # the positional paths ARE the custom-analyzer answer
-    assert rows(idx.match_phrase_positional("alpha beta", k=10))
+    po = rows(idx.match_phrase("alpha beta", k=10))
+    assert {d for d, _ in po} == {0, 4}
+    assert lrows(idx.match_phrase_local("alpha beta", k=10)) == po
+    pp = rows(idx.match_phrase_prefix("alpha be", k=10))
+    assert {d for d, _ in pp} == {0, 4}
+    assert lrows(idx.match_phrase_prefix_local("alpha be", k=10)) == pp

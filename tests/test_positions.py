@@ -1,12 +1,12 @@
 """Positional postings (index_options="positions") — exactness gates.
 
-The positional phrase path (CompressedIndex.match_phrase_positional /
-match_phrase_local, engine/positions.py) must be RANK-IDENTICAL to the
-verify-first match_phrase over the same index parameters, for every
-phrase shape: hot bigrams, selective phrases, repeated terms, slop > 0,
-absent terms. The position codec must round-trip arbitrary ascending
-streams, and a default ("freqs") index must refuse positional queries
-rather than silently mis-answer.
+The phrase engine (CompressedIndex.match_phrase / match_phrase_prefix and
+their coordinator twins, engine/positions.py) must be RANK-IDENTICAL to
+ExactBM25's phrase queries over the same corpus, for every phrase shape:
+hot bigrams, selective phrases, repeated terms, slop > 0, absent terms.
+The position codec must round-trip arbitrary ascending streams, and a
+default ("freqs") index must refuse phrase queries rather than silently
+mis-answer.
 """
 
 from __future__ import annotations
@@ -16,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from librecatastro_spark.corpus import assign_doc_ids, generate_corpus
+from librecatastro_spark.engine import ExactBM25
 from librecatastro_spark.engine.wand import CompressedIndex
 from librecatastro_spark.index.builder import build_index
 from librecatastro_spark.index.codec import (
@@ -31,12 +32,28 @@ def corpus(spark):
 
 
 @pytest.fixture(scope="module")
+def exact(corpus):
+    return ExactBM25(corpus, attr_cols=("repo", "path", "lang"), cache=True)
+
+
+@pytest.fixture(scope="module")
 def pidx(spark, corpus, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("posidx"))
     build_index(
         spark, corpus, out, attr_cols=("repo", "path", "lang"),
         n_shards=4, block_size=16, salt_threshold=120, n_salts=4,
         index_options="positions",
+    )
+    return CompressedIndex(spark, out)
+
+
+@pytest.fixture(scope="module")
+def fidx(spark, corpus, tmp_path_factory):
+    """The same corpus built without positions (the default "freqs")."""
+    out = str(tmp_path_factory.mktemp("fidx"))
+    build_index(
+        spark, corpus, out, attr_cols=("repo",),
+        n_shards=2, block_size=16, salt_threshold=120, n_salts=4,
     )
     return CompressedIndex(spark, out)
 
@@ -102,29 +119,25 @@ PHRASES = [
 
 
 @pytest.mark.parametrize("phrase,slop", PHRASES)
-def test_positional_matches_verify_first(pidx, corpus, phrase, slop):
-    vf = rows(
-        pidx.match_phrase(
-            phrase, corpus, k=10_000, source_text_col="content", slop=slop
-        )
-    )
-    po = rows(pidx.match_phrase_positional(phrase, k=10_000, slop=slop))
-    assert po == vf
+def test_positional_matches_verify_first(pidx, exact, phrase, slop):
+    ex = rows(exact.match_phrase(phrase, k=10_000, slop=slop))
+    po = rows(pidx.match_phrase(phrase, k=10_000, slop=slop))
+    assert po == ex
     lo = lrows(pidx.match_phrase_local(phrase, k=10_000, slop=slop))
-    assert lo == vf
+    assert lo == ex
 
 
-def test_positional_topk_and_offset(pidx, corpus):
+def test_positional_topk_and_offset(pidx, exact):
     phrase = "def return"
-    full = rows(pidx.match_phrase(phrase, corpus, k=20, source_text_col="content"))
-    assert rows(pidx.match_phrase_positional(phrase, k=20)) == full
-    assert rows(pidx.match_phrase_positional(phrase, k=5, offset=5)) == full[5:10]
+    full = rows(exact.match_phrase(phrase, k=20))
+    assert rows(pidx.match_phrase(phrase, k=20)) == full
+    assert rows(pidx.match_phrase(phrase, k=5, offset=5)) == full[5:10]
     assert lrows(pidx.match_phrase_local(phrase, k=5, offset=5)) == full[5:10]
 
 
 def test_positional_single_term_equals_term_match(pidx):
     """A one-term 'phrase' is just the term match (require_all on one
-    term) — same contract as the verify-first path."""
+    term) — the contract ExactBM25.match_phrase has too."""
     po = rows(pidx.match_phrase_positional("def", k=50))
     se = [
         (r["doc_id"], r["score"])
@@ -143,19 +156,13 @@ def test_positional_rejects_empty_phrase(pidx):
         pidx.match_phrase_positional("!!!")
 
 
-def test_freqs_index_refuses_positional(spark, corpus, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("fidx"))
-    build_index(
-        spark, corpus, out, attr_cols=("repo",),
-        n_shards=2, block_size=16, salt_threshold=120, n_salts=4,
-    )
-    idx = CompressedIndex(spark, out)
-    assert idx.meta.index_options == "freqs"
+def test_freqs_index_refuses_positional(fidx):
+    assert fidx.meta.index_options == "freqs"
     with pytest.raises(ValueError):
-        idx.match_phrase_positional("def return")
+        fidx.match_phrase_positional("def return")
     # and the pos_enc column of a freqs build is all-null (no dead bytes)
     nn = (
-        idx.postings.where(F.col("pos_enc").isNotNull()).limit(1).count()
+        fidx.postings.where(F.col("pos_enc").isNotNull()).limit(1).count()
     )
     assert nn == 0
 
@@ -206,18 +213,16 @@ PREFIX_QUERIES = [
 
 
 @pytest.mark.parametrize("q", PREFIX_QUERIES)
-def test_phrase_prefix_positional_matches_verify_first(pidx, corpus, q):
-    """The index-only type-ahead path must be RANK-IDENTICAL to the
-    verify-first match_phrase_prefix (scores included — both score BM25
+def test_phrase_prefix_positional_matches_verify_first(pidx, exact, q):
+    """The index-only type-ahead path must be RANK-IDENTICAL to
+    ExactBM25.match_phrase_prefix (scores included — both score BM25
     require_all over the complete terms only); the coordinator twin
     (match_phrase_prefix_local) likewise."""
-    vf = rows(
-        pidx.match_phrase_prefix(q, corpus, k=10_000, source_text_col="content")
-    )
-    po = rows(pidx.match_phrase_prefix_positional(q, k=10_000))
-    assert po == vf and vf
+    ex = rows(exact.match_phrase_prefix(q, k=10_000))
+    po = rows(pidx.match_phrase_prefix(q, k=10_000))
+    assert po == ex and ex
     lo = lrows(pidx.match_phrase_prefix_local(q, k=10_000))
-    assert lo == vf
+    assert lo == ex
 
 
 def test_phrase_prefix_local_single_token_and_offset(pidx):
@@ -228,12 +233,8 @@ def test_phrase_prefix_local_single_token_and_offset(pidx):
     assert lrows(pidx.match_phrase_prefix_local("def re", k=5, offset=5)) == full[5:10]
 
 
-def test_phrase_prefix_positional_topk_offset_and_edges(pidx, corpus):
-    full = rows(
-        pidx.match_phrase_prefix(
-            "def re", corpus, k=20, source_text_col="content"
-        )
-    )
+def test_phrase_prefix_positional_topk_offset_and_edges(pidx, exact):
+    full = rows(exact.match_phrase_prefix("def re", k=20))
     assert rows(pidx.match_phrase_prefix_positional("def re", k=20)) == full
     assert (
         rows(pidx.match_phrase_prefix_positional("def re", k=5, offset=5))
@@ -250,15 +251,36 @@ def test_phrase_prefix_positional_topk_offset_and_edges(pidx, corpus):
         pidx.match_phrase_prefix_positional("!!!")
 
 
-def test_freqs_index_refuses_phrase_prefix_positional(spark, corpus, tmp_path_factory):
-    out = str(tmp_path_factory.mktemp("fidx2"))
-    build_index(
-        spark, corpus, out, attr_cols=("repo",),
-        n_shards=2, block_size=16, salt_threshold=120, n_salts=4,
-    )
-    idx = CompressedIndex(spark, out)
+def test_freqs_index_refuses_phrase_prefix_positional(fidx):
     with pytest.raises(ValueError):
-        idx.match_phrase_prefix_positional("def re")
+        fidx.match_phrase_prefix_positional("def re")
+
+
+def test_phrase_queries_take_no_source_and_need_positions(pidx, fidx, exact):
+    """``match_phrase`` / ``match_phrase_prefix`` answer from the index
+    alone: on a positions index they equal ExactBM25 with no source
+    table argument; on a freqs index every phrase entry point refuses
+    with a ValueError naming index_options='positions' (the ES
+    contract: no PhraseQuery on a field indexed without positions)."""
+    for q in ("def return", "spark session builder"):
+        assert rows(pidx.match_phrase(q, k=10)) == rows(
+            exact.match_phrase(q, k=10)
+        )
+    ex = rows(exact.match_phrase_prefix("def re", k=10))
+    assert rows(pidx.match_phrase_prefix("def re", k=10)) == ex and ex
+    assert CompressedIndex.match_phrase_positional is CompressedIndex.match_phrase
+    assert (
+        CompressedIndex.match_phrase_prefix_positional
+        is CompressedIndex.match_phrase_prefix
+    )
+    for call in (
+        lambda: fidx.match_phrase("def return", k=10),
+        lambda: fidx.match_phrase_prefix("def re", k=10),
+        lambda: fidx.match_phrase_local("def return", k=10),
+        lambda: fidx.match_phrase_prefix_local("def re", k=10),
+    ):
+        with pytest.raises(ValueError, match="index_options='positions'"):
+            call()
 
 
 def test_positional_build_is_rank_identical_on_keyword_queries(pidx, spark):
@@ -271,11 +293,11 @@ def test_positional_build_is_rank_identical_on_keyword_queries(pidx, spark):
     assert a == b
 
 
-def test_single_token_type_ahead_offset_pages(pidx, corpus):
-    """r5 regression: the single-token routes of all four type-ahead
-    paths must THREAD their offset (they silently dropped it, so page 2
+def test_single_token_type_ahead_offset_pages(pidx, exact):
+    """r5 regression: the single-token routes of the type-ahead paths
+    must THREAD their offset (they silently dropped it, so page 2
     repeated page 1). All pages tile against the un-paged prefix
-    contract (constant score 1.0, doc_id ASC)."""
+    contract (constant score 1.0, doc_id ASC), ExactBM25's included."""
     full = rows(pidx.term_prefix_search("re", k=20))
     assert len(full) > 10
     want = full[5:10]
@@ -284,27 +306,23 @@ def test_single_token_type_ahead_offset_pages(pidx, corpus):
         pidx.match_phrase_prefix_positional("re", k=5, offset=5)
     ) == want
     assert lrows(pidx.match_phrase_prefix_local("re", k=5, offset=5)) == want
-    assert rows(
-        pidx.match_phrase_prefix(
-            "re", corpus, k=5, offset=5, source_text_col="content"
-        )
-    ) == want
+    assert rows(exact.match_phrase_prefix("re", k=5, offset=5)) == want
 
 
 def test_phrase_local_volume_routing(pidx, monkeypatch):
     """Cost-based routing (r5): the coordinator phrase twins route to
-    the distributed kernel when the estimated decode volume (Σ df)
-    exceeds the cap — results identical on BOTH routes at every
-    threshold, so only latency ever changes."""
+    the distributed kernel when the estimated decode volume exceeds
+    ``_PHRASE_LOCAL_MAX_POSTINGS`` — results identical on BOTH routes at
+    every threshold, so only latency ever changes."""
     want = lrows(pidx.match_phrase_local("def return", k=25))
     want_pp = lrows(pidx.match_phrase_prefix_local("def re", k=25))
-    for cap in ("0", "1000000000"):
-        monkeypatch.setenv("LC_PHRASE_LOCAL_MAX_POSTINGS", cap)
+    for cap in (0, 1_000_000_000):
+        monkeypatch.setattr(CompressedIndex, "_PHRASE_LOCAL_MAX_POSTINGS", cap)
         assert lrows(pidx.match_phrase_local("def return", k=25)) == want
         assert lrows(
             pidx.match_phrase_prefix_local("def re", k=25)
         ) == want_pp
-    monkeypatch.delenv("LC_PHRASE_LOCAL_MAX_POSTINGS")
+    monkeypatch.undo()
     # the estimator is window-share × total occurrences
     # ((min df / N) × Σ cf): a hot-hot phrase estimates far above a
     # hot+rare one (the rare window skips the hot blocks), and an

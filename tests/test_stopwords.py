@@ -121,15 +121,6 @@ def test_phrase_skips_stopword_gap(spark, tmp_path):
     )
 
 
-def test_verify_first_raises_on_stopword_index(sidx, corpus):
-    with pytest.raises(ValueError, match="positional"):
-        sidx.match_phrase("import class", corpus, k=10,
-                          source_text_col="content")
-    with pytest.raises(ValueError, match="positional"):
-        sidx.match_phrase_prefix("import cla", corpus, k=10,
-                                 source_text_col="content")
-
-
 def test_all_stopword_query_raises(sidx):
     with pytest.raises(ValueError, match="zero terms"):
         sidx.search("the of a", k=10)

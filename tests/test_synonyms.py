@@ -1,8 +1,7 @@
 """Synonym analyzer option (r5): the ES synonym token filter in replace
 form (``src => dst``, 1:1 token mapping) — recorded in meta like
 ``analyzer_re``/``stopwords`` and honored by build, append, query
-analysis, the positional kernels, verify-first phrase (surface-form
-alternation), and highlight.
+analysis, the positional phrase kernels and highlight.
 
 Frozen chain order: lowercase → split → drop empties → synonyms →
 stopwords. The 1:1 map preserves token count and position, so a synonym
@@ -113,9 +112,9 @@ def test_surface_and_canonical_queries_identical(yidx):
 
 
 def test_verify_first_phrase_alternates_surface_forms(spark, tmp_path):
-    """Verify-first match_phrase on a synonym index matches BOTH surface
-    forms via regex alternation — identical to the positional answer,
-    including a doc that uses the mapped surface form."""
+    """match_phrase on a synonym index matches BOTH surface forms (both
+    analyze to the canonical term the positions were indexed under), on
+    both routes, including a doc that uses the mapped surface form."""
     docs = spark.createDataFrame(
         [(0, "fast join path alpha"), (1, "fast merge path beta"),
          (2, "merge fast path gamma"), (3, "fast query path delta")],
@@ -126,14 +125,10 @@ def test_verify_first_phrase_alternates_surface_forms(spark, tmp_path):
                 salt_threshold=100, n_salts=2,
                 index_options="positions", synonyms={"join": "merge"})
     idx = CompressedIndex(spark, out)
-    po = rows(idx.match_phrase_positional("fast join", k=100))
-    vf = rows(idx.match_phrase("fast join", docs, k=100))
+    po = rows(idx.match_phrase("fast join", k=100))
     lo = lrows(idx.match_phrase_local("fast join", k=100))
-    assert vf == po and lo == po
+    assert lo == po
     assert {d for d, _ in po} == {0, 1}  # both surface forms, not doc 2/3
-    # prefix expansion over canonical terms can't be regex-enumerated
-    with pytest.raises(ValueError, match="positional"):
-        idx.match_phrase_prefix("fast jo", docs, k=10)
     # highlight maps surface forms to canonical in the fragment
     out_hl = {
         r["doc_id"]: r["snippet"]

@@ -159,23 +159,6 @@ def main() -> int:
     )
     sections.append(s); problems += p
 
-    s, p = audit(
-        "match_phrase verify-first plan (r3)",
-        index.match_phrase("the scan", docs, k=10, source_text_col="text"),
-        {
-            "pushed_filter": True, "take_ordered": True, "cartesian": False,
-        },
-        "Verify-first: the Arrow CPython-regex phrase predicate "
-        "(ArrowEvalPython) runs on the source scan pruned by the "
-        "phrase terms' posting-range window (BETWEEN pushed as "
-        "PushedFilters); the verified ids join attrs (doc->shard) and "
-        "feed the FILTERED cogroup scorer with the top-k cut enabled — "
-        "every intermediate O(phrase matches), merge via "
-        "TakeOrderedAndProject. The window also prunes the postings "
-        "scan (first/last_doc_id footer stats). No cartesian.",
-    )
-    sections.append(s); problems += p
-
     pos_dir = os.path.join(work, "posindex")
     build_index(
         spark, docs, pos_dir, id_col="doc_id", text_col="text",
@@ -194,8 +177,8 @@ def main() -> int:
     )
     sections.append(s); problems += p
     s, p = audit(
-        "match_phrase_positional index-only plan (r3 positional postings)",
-        pindex.match_phrase_positional("the scan", k=10),
+        "match_phrase index-only plan (r3 positional postings)",
+        pindex.match_phrase("the scan", k=10),
         {
             "pushed_filter": True, "take_ordered": True, "cartesian": False,
             "arrow_eval": False, "grouped_map": True,
@@ -207,14 +190,13 @@ def main() -> int:
         "per-shard grouped map (FlatMapGroupsInPandas) over decoded "
         "position streams, and the merge is TakeOrderedAndProject. The "
         "query's data volume is O(phrase terms' postings) at any corpus "
-        "size — the property the verify-first path cannot give on hot "
-        "phrases.",
+        "size.",
     )
     sections.append(s); problems += p
 
     s, p = audit(
-        "match_phrase_prefix positional index-only plan (r4)",
-        pindex.match_phrase_prefix_positional("the sc", k=10),
+        "match_phrase_prefix index-only plan (r4)",
+        pindex.match_phrase_prefix("the sc", k=10),
         {
             "pushed_filter": True, "take_ordered": True, "cartesian": False,
             "arrow_eval": False, "grouped_map": True,
@@ -223,8 +205,7 @@ def main() -> int:
         "In(complete terms) OR the [pfx, successor) range, both pushed "
         "to the term-sorted Parquet files, doc-window BETWEEN from the "
         "complete terms' block metadata. NO ArrowEvalPython (the source "
-        "table is never scanned — the cost verify-first pays on every "
-        "type-ahead keystroke); the expansion streams chain inside the "
+        "table is never scanned); the expansion streams chain inside the "
         "per-shard grouped map with a zero-slop step and are never "
         "collected. Merge is TakeOrderedAndProject.",
     )
@@ -419,18 +400,6 @@ def main() -> int:
         "fingerprint); near-dup candidates come from the LSH band "
         "equi-join (no cartesian); the final drop-set anti-join is an "
         "explicit broadcast.",
-    )
-    sections.append(s); problems += p
-
-    s, p = audit(
-        "match_phrase_prefix verify-first plan (r3)",
-        index.match_phrase_prefix("the sc", docs, k=10, source_text_col="text"),
-        {"pushed_filter": True, "take_ordered": True, "cartesian": False},
-        "Type-ahead phrase shares match_phrase's shape: source verify "
-        "scan pruned to the COMPLETE terms' posting-range window "
-        "(BETWEEN pushed), Arrow CPython-regex predicate with the open "
-        "prefix tail, verified ids feed the filtered scorer, "
-        "TakeOrderedAndProject merge. No cartesian.",
     )
     sections.append(s); problems += p
 
