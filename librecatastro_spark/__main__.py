@@ -30,6 +30,18 @@ def _parse_filters(pairs: list[str]) -> dict[str, str]:
     return out
 
 
+def _print_hits(out, snippet: bool = False) -> int:
+    """One JSON line per hit of a pandas frame (a coordinator fast path)
+    or a Spark DataFrame, in result order; exit status 0."""
+    rows = out.collect() if hasattr(out, "collect") else out.to_dict("records")
+    for r in rows:
+        hit = {"doc_id": int(r["doc_id"]), "score": float(r["score"])}
+        if snippet:
+            hit["snippet"] = r["snippet"]
+        print(json.dumps(hit))
+    return 0
+
+
 def _parse_synonyms(spec: str | None) -> dict[str, str] | None:
     out = {}
     for seg in filter(None, (spec or "").split(",")):
@@ -357,15 +369,8 @@ def main(argv: list[str] | None = None) -> int:
             must_not_text=args.must_not, should_text=args.should,
             search_after=cursor, geo=geo,
         )
-        if args.fast:
-            pdf = idx.search_local(args.text, **kw)
-            rows = list(pdf.itertuples(index=False))
-            for r in rows:
-                print(json.dumps({"doc_id": int(r.doc_id), "score": float(r.score)}))
-        else:
-            for r in idx.search(args.text, **kw).collect():
-                print(json.dumps({"doc_id": r["doc_id"], "score": r["score"]}))
-        return 0
+        search = idx.search_local if args.fast else idx.search
+        return _print_hits(search(args.text, **kw))
 
     if args.cmd == "phrase":
         from .engine.wand import CompressedIndex
@@ -377,115 +382,79 @@ def main(argv: list[str] | None = None) -> int:
             raise SystemExit(
                 "phrase needs an index built with --index-options positions"
             )
-        if args.fast:
-            pdf = (
-                idx.match_phrase_prefix_local(args.text, k=args.k)
-                if args.type_ahead
-                else idx.match_phrase_local(args.text, k=args.k, slop=args.slop)
-            )
-            for r in pdf.itertuples(index=False):
-                print(json.dumps({"doc_id": int(r.doc_id),
-                                  "score": float(r.score)}))
-            return 0
-        rows = (
-            idx.match_phrase_prefix(args.text, k=args.k)
-            if args.type_ahead
-            else idx.match_phrase(args.text, k=args.k, slop=args.slop)
-        ).collect()
-        for r in rows:
-            print(json.dumps({"doc_id": r["doc_id"], "score": r["score"]}))
-        return 0
+        if args.type_ahead:
+            phrase = (idx.match_phrase_prefix_local if args.fast
+                      else idx.match_phrase_prefix)
+            return _print_hits(phrase(args.text, k=args.k))
+        phrase = idx.match_phrase_local if args.fast else idx.match_phrase
+        return _print_hits(phrase(args.text, k=args.k, slop=args.slop))
 
     if args.cmd == "fscore":
         from .engine.wand import CompressedIndex
 
         idx = CompressedIndex(spark, args.index)
-        for r in idx.function_score(
+        return _print_hits(idx.function_score(
             args.text, args.field, k=args.k, modifier=args.modifier,
             factor=args.factor, boost_mode=args.boost_mode,
-        ).collect():
-            print(json.dumps({"doc_id": r["doc_id"], "score": r["score"]}))
-        return 0
+        ))
 
     if args.cmd == "rescore":
         from .engine.wand import CompressedIndex
 
         idx = CompressedIndex(spark, args.index)
-        for r in idx.rescore(
+        return _print_hits(idx.rescore(
             args.text, args.rescore_text, k=args.k,
             window_size=args.window_size, query_weight=args.query_weight,
             rescore_query_weight=args.rescore_weight,
             score_mode=args.score_mode,
-        ).collect():
-            print(json.dumps({"doc_id": r["doc_id"], "score": r["score"]}))
-        return 0
+        ))
 
     if args.cmd == "dismax":
         from .engine.wand import CompressedIndex
 
         idx = CompressedIndex(spark, args.index)
-        for r in idx.dis_max(
-            args.text, k=args.k, tie_breaker=args.tie_breaker
-        ).collect():
-            print(json.dumps({"doc_id": r["doc_id"], "score": r["score"]}))
-        return 0
+        return _print_hits(
+            idx.dis_max(args.text, k=args.k, tie_breaker=args.tie_breaker)
+        )
 
     if args.cmd == "boosting":
         from .engine.wand import CompressedIndex
 
         idx = CompressedIndex(spark, args.index)
-        for r in idx.boosting(
+        return _print_hits(idx.boosting(
             args.positive, args.negative, k=args.k,
             negative_boost=args.negative_boost,
-        ).collect():
-            print(json.dumps({"doc_id": r["doc_id"], "score": r["score"]}))
-        return 0
+        ))
 
     if args.cmd == "fuzzy":
         from .engine.wand import CompressedIndex
 
         idx = CompressedIndex(spark, args.index)
-        kwf = dict(k=args.k, max_edits=args.max_edits,
-                   prefix_len=args.prefix_len,
-                   max_expansions=args.max_expansions)
-        if args.fast:
-            pdf = idx.fuzzy_term_search_local(args.term, **kwf)
-            for r in pdf.itertuples(index=False):
-                print(json.dumps(
-                    {"doc_id": int(r.doc_id), "score": float(r.score)}
-                ))
-            return 0
-        rows = idx.fuzzy_term_search(args.term, **kwf).collect()
-        for r in rows:
-            print(json.dumps({"doc_id": r["doc_id"], "score": r["score"]}))
-        return 0
+        fuzzy = idx.fuzzy_term_search_local if args.fast else idx.fuzzy_term_search
+        return _print_hits(fuzzy(
+            args.term, k=args.k, max_edits=args.max_edits,
+            prefix_len=args.prefix_len, max_expansions=args.max_expansions,
+        ))
 
     if args.cmd == "mlt":
         from .engine.wand import CompressedIndex
 
         idx = CompressedIndex(spark, args.index)
         docs = read_docs_table(spark, args.input)
-        rows = idx.more_like_this(
+        return _print_hits(idx.more_like_this(
             args.doc_id, docs, k=args.k,
             source_id_col=args.id_col, source_text_col=args.text_col,
-        ).collect()
-        for r in rows:
-            print(json.dumps({"doc_id": r["doc_id"], "score": r["score"]}))
-        return 0
+        ))
 
     if args.cmd == "highlight":
         from .engine.wand import CompressedIndex
 
         idx = CompressedIndex(spark, args.index)
         docs = read_docs_table(spark, args.input)
-        rows = idx.search_highlighted(
+        return _print_hits(idx.search_highlighted(
             args.text, docs, k=args.k, frag_tokens=args.frag_tokens,
             source_id_col=args.id_col, source_text_col=args.text_col,
-        ).collect()
-        for r in rows:
-            print(json.dumps({"doc_id": r["doc_id"], "score": r["score"],
-                              "snippet": r["snippet"]}))
-        return 0
+        ), snippet=True)
 
     if args.cmd == "msearch":
         from .engine.multifield import MultiFieldIndex
@@ -494,18 +463,12 @@ def main(argv: list[str] | None = None) -> int:
         if args.type == "cross_fields":
             if args.fast:
                 raise SystemExit("cross_fields has no coordinator fast path yet")
-            for r in mf.multi_match_cross_fields(args.text, k=args.k).collect():
-                print(json.dumps({"doc_id": r["doc_id"], "score": r["score"]}))
-            return 0
-        kw = dict(k=args.k, match_type=args.type, tie_breaker=args.tie_breaker)
-        if args.fast:
-            pdf = mf.multi_match_local(args.text, **kw)
-            for r in pdf.itertuples(index=False):
-                print(json.dumps({"doc_id": int(r.doc_id), "score": float(r.score)}))
-        else:
-            for r in mf.multi_match(args.text, **kw).collect():
-                print(json.dumps({"doc_id": r["doc_id"], "score": r["score"]}))
-        return 0
+            return _print_hits(mf.multi_match_cross_fields(args.text, k=args.k))
+        multi_match = mf.multi_match_local if args.fast else mf.multi_match
+        return _print_hits(multi_match(
+            args.text, k=args.k, match_type=args.type,
+            tie_breaker=args.tie_breaker,
+        ))
 
     if args.cmd == "facets":
         from .engine.wand import CompressedIndex

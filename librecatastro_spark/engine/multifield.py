@@ -47,7 +47,39 @@ from pyspark.sql import functions as F
 from ..analyzer import analyze_text
 from ..bm25 import ROUND_DECIMALS
 from ..index.builder import build_index
-from .wand import _RESULT_SCHEMA, CompressedIndex, _empty, _shard_topk_fn
+from .wand import (
+    _RESULT_SCHEMA,
+    CompressedIndex,
+    _empty,
+    _ranked,
+    _ranked_local,
+)
+
+
+def _tie_breaker(match_type: str, tie_breaker: float) -> float:
+    """The tie_breaker a multi_match type combines with: ``most_fields``
+    sums (1.0), ``best_fields`` takes the caller's."""
+    if match_type == "most_fields":
+        return 1.0
+    if match_type == "best_fields":
+        return float(tie_breaker)
+    raise ValueError(f"unsupported multi_match type: {match_type}")
+
+
+def _combine(results: list[pd.DataFrame], tb: float):
+    """Combine (doc_id, score) frames per doc: the best score + tb × the
+    others' sum (tb 0: the max), rounded to ROUND_DECIMALS; (doc_ids,
+    scores), doc_id ascending."""
+    ids = np.concatenate([r["doc_id"].to_numpy(dtype=np.int64) for r in results])
+    w = np.concatenate([r["score"].to_numpy(dtype=np.float64) for r in results])
+    uids, inv = np.unique(ids, return_inverse=True)
+    best = np.zeros(len(uids))  # BM25 > 0, so 0 is below any score
+    np.maximum.at(best, inv, w)
+    comb = best
+    if tb:
+        tot = np.bincount(inv, weights=w, minlength=len(uids))
+        comb = best + tb * (tot - best)
+    return uids, np.round(comb, ROUND_DECIMALS)
 
 
 class MultiFieldIndex:
@@ -126,28 +158,41 @@ class MultiFieldIndex:
             )
         return MultiFieldIndex(spark, out_dir, fields)
 
-    def _per_shard(self, blocks: DataFrame, combine, ests: list) -> DataFrame:
-        """The fields' unioned posting blocks through the engine's one
-        per-shard grouped map (``CompressedIndex._per_shard``), planned
-        by the Σ df of every field's live terms — the sub-indexes share
-        the one-task limit, so any one of them plans the stage."""
-        est = None if None in ests else sum(ests)
-        return self.sub[self.fields[0]]._per_shard(
-            blocks, combine, _RESULT_SCHEMA, est,
-            cols=CompressedIndex._SEEK_COLS + ("_field",),
-        )
-
-    def _analyze_per_field(self, text: str) -> dict[str, list[str]]:
+    def _live_terms(self, text: str):
         """ES multi_match semantics: the query text is analyzed PER FIELD
-        with that field's analyzer (each sub-index's meta.analyzer_re —
-        the per-field analyzer hook). With all-default analyzers every
-        field sees identical terms, exactly the pre-seam behavior."""
+        with that field's analyzer (each sub-index's full analyzer
+        chain — the per-field analyzer hook). Yields (field, sub-index,
+        indexed terms, idfs) for each field holding a query term."""
         per_field = {
             f: sorted(set(self.sub[f]._analyze(text))) for f in self.fields
         }
         if not any(per_field.values()):
             raise ValueError("query analyzes to zero terms")
-        return per_field
+        for f in self.fields:
+            s = self.sub[f]
+            idfs = s._idfs(per_field[f])
+            live = [t for t in per_field[f] if t in idfs]
+            if live:  # else no query term exists in this field's vocabulary
+                yield f, s, live, idfs
+
+    def _union(self, live: list, combine) -> DataFrame:
+        """The ``live`` (field, sub-index, terms) posting blocks, each
+        tagged ``_field``, unioned through the engine's one per-shard
+        grouped map (``CompressedIndex._per_shard``), planned by the Σ df
+        of every field's live terms — the sub-indexes share the one-task
+        limit, so any one of them plans the stage."""
+        blocks, ests = None, []
+        for f, s, terms in live:
+            b = s.postings.where(F.col("term").isin(terms)).withColumn(
+                "_field", F.lit(f)
+            )
+            blocks = b if blocks is None else blocks.unionByName(b)
+            ests.append(s._df_sum(terms))
+        est = None if None in ests else sum(ests)
+        return self.sub[self.fields[0]]._per_shard(
+            blocks, combine, _RESULT_SCHEMA, est,
+            cols=CompressedIndex._SEEK_COLS + ("_field",),
+        )
 
     def multi_match(
         self,
@@ -157,70 +202,30 @@ class MultiFieldIndex:
         match_type: str = "best_fields",
         tie_breaker: float = 0.0,
     ) -> DataFrame:
-        if match_type == "most_fields":
-            tb = 1.0
-        elif match_type == "best_fields":
-            tb = float(tie_breaker)
-        else:
-            raise ValueError(f"unsupported multi_match type: {match_type}")
-        per_field = self._analyze_per_field(text)
+        tb = _tie_breaker(match_type, tie_breaker)
         local_k = k + offset
-        fns, parts, ests = {}, [], []
-        for f in self.fields:
-            s = self.sub[f]
-            terms = per_field[f]
-            idfs = s._idfs(terms)
-            live = [t for t in terms if t in idfs]
-            if not live:
-                continue  # no query term exists in this field's vocabulary
-            fns[f] = _shard_topk_fn(
-                live, idfs, s.meta.avgdl, 1 << 60, filtered=False,
-                must_not_terms=[], require_all=False,
-                dense_hint=int(s.meta.n_docs),
-            )
-            parts.append(
-                s.postings.where(F.col("term").isin(live))
-                .withColumn("_field", F.lit(f))
-            )
-            ests.append(s._df_sum(live))
-        if not parts:
+        fns, live_fields = {}, []
+        for f, s, live, idfs in self._live_terms(text):
+            fns[f] = s._match_kernel(live, idfs)
+            live_fields.append((f, s, live))
+        if not live_fields:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        blocks = parts[0]
-        for p in parts[1:]:
-            blocks = blocks.unionByName(p)
 
         def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-            ids_l, w_l = [], []
+            results = []
             for f, fd in fns.items():
                 sub = pdf[pdf["_field"] == f]
-                if len(sub) == 0:
-                    continue
-                r = fd(sub.drop(columns=["_field"]))
-                ids_l.append(r["doc_id"].to_numpy(dtype=np.int64))
-                w_l.append(r["score"].to_numpy(dtype=np.float64))
-            if not ids_l:
+                if len(sub):
+                    results.append(fd(sub.drop(columns=["_field"])))
+            if not results:
                 return _empty()
-            ids = np.concatenate(ids_l)
-            w = np.concatenate(w_l)
-            uids, inv = np.unique(ids, return_inverse=True)
-            best = np.zeros(len(uids))  # BM25 > 0, so 0 is below any score
-            np.maximum.at(best, inv, w)
-            comb = best
-            if tb:
-                tot = np.bincount(inv, weights=w, minlength=len(uids))
-                comb = best + tb * (tot - best)
-            comb = np.round(comb, ROUND_DECIMALS)
+            uids, comb = _combine(results, tb)
             if len(uids) > local_k:
                 order = np.lexsort((uids, -comb))[:local_k]
                 uids, comb = uids[order], comb[order]
             return pd.DataFrame({"doc_id": uids, "score": comb})
 
-        partial = self._per_shard(blocks, combine, ests)
-        ranked = partial.orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ranked = ranked.offset(offset)
-        return ranked.limit(k)
-
+        return _ranked(self._union(live_fields, combine), k, offset)
 
     def multi_match_cross_fields(self, text: str, k: int = 10,
                                  offset: int = 0) -> DataFrame:
@@ -244,59 +249,31 @@ class MultiFieldIndex:
         term) pair — a per-term weight IS that term's single-term score
         — takes the per-term max across fields, and sums per doc.
         """
-        per_field = self._analyze_per_field(text)
         local_k = k + offset
         fns: dict[tuple[str, str], object] = {}
-        parts, ests = [], []
-        for f in self.fields:
-            s = self.sub[f]
-            terms = per_field[f]
-            idfs = s._idfs(terms)
-            live = [t for t in terms if t in idfs]
-            if not live:
-                continue
+        live_fields = []
+        for f, s, live, idfs in self._live_terms(text):
             for t in live:
-                fns[(f, t)] = _shard_topk_fn(
-                    [t], {t: idfs[t]}, s.meta.avgdl, 1 << 60, filtered=False,
-                    must_not_terms=[], require_all=False,
-                    dense_hint=int(s.meta.n_docs),
-                )
-            parts.append(
-                s.postings.where(F.col("term").isin(live))
-                .withColumn("_field", F.lit(f))
-            )
-            ests.append(s._df_sum(live))
-        if not parts:
+                fns[(f, t)] = s._match_kernel([t], {t: idfs[t]})
+            live_fields.append((f, s, live))
+        if not live_fields:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        blocks = parts[0]
-        for p in parts[1:]:
-            blocks = blocks.unionByName(p)
 
         def combine(pdf: pd.DataFrame) -> pd.DataFrame:
             per_term: dict[str, list] = {}
             for (f, t), fd in fns.items():
                 sub = pdf[(pdf["_field"] == f) & (pdf["term"] == t)]
-                if len(sub) == 0:
-                    continue
-                r = fd(sub.drop(columns=["_field"]))
-                if len(r):
+                if len(sub):
                     per_term.setdefault(t, []).append(
-                        (r["doc_id"].to_numpy(dtype=np.int64),
-                         r["score"].to_numpy(dtype=np.float64))
+                        fd(sub.drop(columns=["_field"]))
                     )
-            ids_l, w_l = [], []
-            for t, chunks in per_term.items():
-                ids = np.concatenate([c[0] for c in chunks])
-                w = np.concatenate([c[1] for c in chunks])
-                uids, inv = np.unique(ids, return_inverse=True)
-                best = np.zeros(len(uids))
-                np.maximum.at(best, inv, w)
-                ids_l.append(uids)
-                w_l.append(best)
-            if not ids_l:
+            if not per_term:
                 return _empty()
-            ids = np.concatenate(ids_l)
-            w = np.concatenate(w_l)
+            # each term from its best field (the weights are already
+            # rounded, so the max re-rounds to itself), summed per doc
+            best = [_combine(rs, 0.0) for rs in per_term.values()]
+            ids = np.concatenate([b[0] for b in best])
+            w = np.concatenate([b[1] for b in best])
             uids, inv = np.unique(ids, return_inverse=True)
             tot = np.round(
                 np.bincount(inv, weights=w, minlength=len(uids)),
@@ -307,11 +284,7 @@ class MultiFieldIndex:
                 uids, tot = uids[order], tot[order]
             return pd.DataFrame({"doc_id": uids, "score": tot})
 
-        partial = self._per_shard(blocks, combine, ests)
-        ranked = partial.orderBy(F.desc("score"), F.asc("doc_id"))
-        if offset:
-            ranked = ranked.offset(offset)
-        return ranked.limit(k)
+        return _ranked(self._union(live_fields, combine), k, offset)
 
     def multi_match_local(
         self,
@@ -321,60 +294,27 @@ class MultiFieldIndex:
         match_type: str = "best_fields",
         tie_breaker: float = 0.0,
     ) -> pd.DataFrame:
-        """Coordinator fast path for multi_match — same semantics and the
-        SAME per-field numpy kernel as the distributed path (rank-identity
-        tested), but each field's posting blocks come from that
-        sub-index's term-dictionary seek (+ decoded-postings cache) and
-        the whole-index pass runs on the driver. Data read is O(postings
-        of the query terms across the fields) regardless of corpus size —
-        ES's coordinator serving a multi_match, collapsed onto one node."""
-        if match_type == "most_fields":
-            tb = 1.0
-        elif match_type == "best_fields":
-            tb = float(tie_breaker)
-        else:
-            raise ValueError(f"unsupported multi_match type: {match_type}")
-        per_field = self._analyze_per_field(text)
-        ids_l, w_l = [], []
-        for f in self.fields:
-            s = self.sub[f]
-            terms = per_field[f]
-            idfs = s._idfs(terms)
-            live = [t for t in terms if t in idfs]
-            if not live:
-                continue
+        """``multi_match`` run on the coordinator: each field's blocks come
+        from its sub-index's term-dictionary seek (+ decoded-postings
+        cache) and the same per-field kernel runs once whole-index on the
+        driver; no Spark job (rank-identity tested)."""
+        tb = _tie_breaker(match_type, tie_breaker)
+        results = []
+        for f, s, live, idfs in self._live_terms(text):
             blocks = s._seek_blocks(live)
             if not len(blocks):
                 continue
-            fd = _shard_topk_fn(
-                live, idfs, s.meta.avgdl, 1 << 60, filtered=False,
-                must_not_terms=[], require_all=False,
-                decoder=s._make_decoder(blocks),
-                dense_hint=int(s.meta.n_docs),
+            # one whole-index pass per field (see CompressedIndex._execute
+            # for why it is bit-identical to the per-shard split)
+            results.append(
+                s._match_kernel(live, idfs, s._make_decoder(blocks))(blocks)
             )
-            r = fd(blocks)  # one whole-index pass per field (see wand.py
-            #               search_local for why this is bit-identical to
-            #               the per-shard split)
-            ids_l.append(r["doc_id"].to_numpy(dtype=np.int64))
-            w_l.append(r["score"].to_numpy(dtype=np.float64))
-        if not ids_l:
+        if not results:
             return _empty()
-        ids = np.concatenate(ids_l)
-        w = np.concatenate(w_l)
-        uids, inv = np.unique(ids, return_inverse=True)
-        best = np.zeros(len(uids))
-        np.maximum.at(best, inv, w)
-        comb = best
-        if tb:
-            tot = np.bincount(inv, weights=w, minlength=len(uids))
-            comb = best + tb * (tot - best)
-        out = pd.DataFrame(
-            {"doc_id": uids, "score": np.round(comb, ROUND_DECIMALS)}
+        uids, comb = _combine(results, tb)
+        return _ranked_local(
+            pd.DataFrame({"doc_id": uids, "score": comb}), k, offset
         )
-        out = out.sort_values(
-            ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-        ).iloc[offset : offset + k]
-        return out.reset_index(drop=True)
 
 
 def cross_fields_exact(
@@ -440,12 +380,7 @@ def multi_match_exact(
     Per-field rounded scores full-outer-join on doc_id; absent fields
     coalesce to 0 (BM25 > 0, so greatest/sum over coalesced zeros equal
     max/sum over present fields)."""
-    if match_type == "most_fields":
-        tb = 1.0
-    elif match_type == "best_fields":
-        tb = float(tie_breaker)
-    else:
-        raise ValueError(f"unsupported multi_match type: {match_type}")
+    tb = _tie_breaker(match_type, tie_breaker)
     scored = []
     for i, (f, eng) in enumerate(sorted(engines.items())):
         s = eng.match_scores(text).select(

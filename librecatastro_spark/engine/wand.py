@@ -45,9 +45,12 @@ summed) disables pruning and filters on matched-term count.
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 import re
+from dataclasses import dataclass
+from typing import Callable
 
 import numpy as np
 import pandas as pd
@@ -68,19 +71,24 @@ from ..index.codec import decode_varbyte, delta_decode
 _RESULT_SCHEMA = "doc_id long, score double"
 
 
-def _prefix_successor(p: str) -> str | None:
-    """Smallest string ordering strictly above EVERY string with prefix p
-    (codepoint-lexicographic, matching Parquet min/max stats on UTF-8):
-    increment the last incrementable codepoint, dropping any trailing
-    U+10FFFF chars; None when p is all-U+10FFFF (no finite upper bound).
-    Skips the surrogate range, which cannot appear in valid UTF-8."""
+def _prefix_range(col, p: str):
+    """``col`` in [p, successor(p)) — exactly the strings starting with p
+    under codepoint-lexicographic order (Spark's UTF8String order and
+    Parquet min/max stats on UTF-8), with both endpoints plain literals
+    a scan prunes row groups on. ``col`` is a Catalyst column or a
+    pyarrow field expression; the operators read the same on both. The
+    successor increments the last incrementable codepoint, dropping any
+    trailing U+10FFFF chars and skipping the surrogate range, which
+    cannot appear in valid UTF-8; an all-U+10FFFF p has no finite upper
+    bound."""
+    cond = col >= p
     for i in range(len(p) - 1, -1, -1):
         c = ord(p[i]) + 1
         if 0xD800 <= c <= 0xDFFF:
             c = 0xE000
         if c <= 0x10FFFF:
-            return p[:i] + chr(c)
-    return None
+            return cond & (col < p[:i] + chr(c))
+    return cond
 
 
 _PD_DTYPES = {"long": "int64", "double": "float64", "string": "object"}
@@ -93,45 +101,122 @@ def _empty(schema: str = _RESULT_SCHEMA) -> pd.DataFrame:
     return pd.DataFrame({n: pd.Series(dtype=_PD_DTYPES[t]) for n, t in cols})
 
 
-def _filter_cond(
-    filters: dict[str, str] | None = None,
-    prefix: tuple[str, str] | None = None,
-    ranges: dict[str, tuple] | None = None,
-    exists_cols: list[str] | None = None,
-    ids: list[int] | None = None,
-    geo: tuple | None = None,
-):
-    """The constant-score filter clauses as ONE Catalyst condition over
-    the attrs table (None when no clause is given) — equality / ``terms``
-    In, StartsWith, inclusive ranges, IsNotNull and the doc-id In all
-    reach the attrs Parquet scan as PushedFilters; ``geo`` compiles
-    through ops.geo.geo_clause_cond (see ``CompressedIndex.search``)."""
-    if not (filters or prefix or ranges or exists_cols) and ids is None and geo is None:
-        return None
-    cond = F.lit(True)
-    for col, val in (filters or {}).items():
-        # list/tuple/set value = ES `terms` query: col IN (…) — pushed to
-        # the attrs scan as an In filter
-        if isinstance(val, (list, tuple, set)):
-            cond = cond & F.col(col).isin(*sorted(val))
-        else:
-            cond = cond & (F.col(col) == F.lit(val))
-    if prefix is not None:
-        cond = cond & F.col(prefix[0]).startswith(prefix[1])
-    for col, (lo, hi) in (ranges or {}).items():
-        if lo is not None:
-            cond = cond & (F.col(col) >= F.lit(lo))
-        if hi is not None:
-            cond = cond & (F.col(col) <= F.lit(hi))
-    for col in exists_cols or []:
-        cond = cond & F.col(col).isNotNull()
-    if ids is not None:
-        cond = cond & F.col("doc_id").isin([int(i) for i in ids])
-    if geo is not None:
-        from ..ops.geo import geo_clause_cond
+@dataclass(frozen=True)
+class _Clauses:
+    """The constant-score filter clauses of one query, parsed once and
+    rendered per execution site: ``cond()`` for Catalyst over the attrs
+    table, ``docs(dataset)`` for a pyarrow scan of it. Equality /
+    ``terms`` In, the [p, successor) prefix range, inclusive ranges,
+    IsNotNull, the doc-id In and the geo prune box reach the attrs
+    Parquet scan on both sites; ``geo`` compiles through ops.geo. False
+    when no clause is given."""
 
-        cond = cond & geo_clause_cond(geo)
-    return cond
+    filters: dict | None = None
+    prefix: tuple[str, str] | None = None
+    ranges: dict | None = None
+    exists_cols: list | None = None
+    ids: list | None = None
+    geo: tuple | None = None
+
+    def __bool__(self) -> bool:
+        return bool(
+            self.filters or self.prefix or self.ranges or self.exists_cols
+            or self.ids is not None or self.geo is not None
+        )
+
+    def cond(self):
+        """ONE Catalyst condition over the attrs table (None when no
+        clause is given) — every clause reaches the attrs Parquet scan as
+        PushedFilters (StartsWith included); ``geo`` compiles through
+        ops.geo.geo_clause_cond (see ``CompressedIndex.search``)."""
+        if not self:
+            return None
+        cond = F.lit(True)
+        for col, val in (self.filters or {}).items():
+            # list/tuple/set value = ES `terms` query: col IN (…) — pushed to
+            # the attrs scan as an In filter
+            if isinstance(val, (list, tuple, set)):
+                cond = cond & F.col(col).isin(*sorted(val))
+            else:
+                cond = cond & (F.col(col) == F.lit(val))
+        if self.prefix is not None:
+            cond = cond & F.col(self.prefix[0]).startswith(self.prefix[1])
+        for col, (lo, hi) in (self.ranges or {}).items():
+            if lo is not None:
+                cond = cond & (F.col(col) >= F.lit(lo))
+            if hi is not None:
+                cond = cond & (F.col(col) <= F.lit(hi))
+        for col in self.exists_cols or []:
+            cond = cond & F.col(col).isNotNull()
+        if self.ids is not None:
+            cond = cond & F.col("doc_id").isin([int(i) for i in self.ids])
+        if self.geo is not None:
+            from ..ops.geo import geo_clause_cond
+
+            cond = cond & geo_clause_cond(self.geo)
+        return cond
+
+    def docs(self, dataset) -> pd.DataFrame:
+        """The (shard, doc_id) pairs of the pyarrow attrs ``dataset``
+        passing every clause. The predicates push into the scan
+        (row-group stats + dictionary filtering) and only the columns the
+        re-checks need are materialized, so memory is O(matching docs)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        es = []
+        for col, val in (self.filters or {}).items():
+            if isinstance(val, (list, tuple, set)):
+                es.append(pc.field(col).isin(sorted(val)))
+            else:
+                es.append(pc.field(col) == val)
+        cols = ["shard", "doc_id"]
+        if self.prefix is not None:
+            # the range form prunes row groups and dictionaries; it is a
+            # strict SUPERSET of the prefix match ('src1z' falls in
+            # ['src1', 'src2') without starting a longer prefix), so the
+            # exact starts_with re-check below restores the Catalyst
+            # StartsWith semantics
+            es.append(_prefix_range(pc.field(self.prefix[0]), self.prefix[1]))
+            cols.append(self.prefix[0])
+        for col, (lo, hi) in (self.ranges or {}).items():
+            if lo is not None:
+                es.append(pc.field(col) >= lo)
+            if hi is not None:
+                es.append(pc.field(col) <= hi)
+        es += [~pc.field(col).is_null() for col in self.exists_cols or []]
+        if self.ids is not None:
+            es.append(pc.field("doc_id").isin([int(i) for i in self.ids]))
+        if self.geo is not None:
+            # the clause's prune box (radius: the shared conservative
+            # radius_bbox; polygon: the vertex bbox with strict uppers —
+            # the Catalyst prune's bounds); the exact re-check (haversine
+            # / ray cast) runs below on the survivors
+            from ..ops.geo import geo_clause_prune_box, parse_geo_clause
+
+            _, g_lon, g_lat, _ = parse_geo_clause(self.geo)
+            lat_lo, lat_hi, lon_lo, lon_hi, strict = geo_clause_prune_box(self.geo)
+            lat = pc.field(g_lat)
+            es += [lat >= lat_lo, (lat < lat_hi) if strict else (lat <= lat_hi)]
+            if lon_lo is not None:
+                lon = pc.field(g_lon)
+                es += [lon >= lon_lo, (lon < lon_hi) if strict else (lon <= lon_hi)]
+            cols += [c for c in (g_lon, g_lat) if c not in cols]
+        expr = None
+        for e in es:
+            expr = e if expr is None else expr & e
+        tbl = dataset.to_table(columns=cols, filter=expr)
+        if self.prefix is not None:
+            tbl = tbl.filter(pc.starts_with(pc.field(self.prefix[0]), self.prefix[1]))
+        if self.geo is not None:
+            from ..ops.geo import geo_clause_mask_np
+
+            tbl = tbl.filter(pa.array(geo_clause_mask_np(
+                self.geo,
+                tbl.column(g_lon).to_numpy(zero_copy_only=False),
+                tbl.column(g_lat).to_numpy(zero_copy_only=False),
+            )))
+        return tbl.select(["shard", "doc_id"]).to_pandas()
 
 
 def _ranked(
@@ -168,6 +253,44 @@ def _ranked_local(out: pd.DataFrame, k: int, offset: int = 0) -> pd.DataFrame:
         ["score", "doc_id"], ascending=[False, True], kind="mergesort"
     ).iloc[offset : offset + k]
     return out.reset_index(drop=True)
+
+
+@dataclass(frozen=True)
+class _Scored:
+    """One scored query parsed once — analysis, idfs, validation and the
+    kernel arguments — and run on either execution site by
+    ``CompressedIndex._execute``. ``terms`` are the scored terms,
+    ``wanted`` every term whose postings the kernel reads, and
+    ``kernel(decoder)`` builds the per-shard kernel (the coordinator
+    passes its decoded-postings cache; the phrase kernels decode
+    themselves and ignore it). ``positional`` queries read the position
+    columns, restrict the distributed scan to the doc window where every
+    term has postings and route by decode volume; ``pfx`` is a phrase
+    prefix's open last token. ``est`` is the decode estimate (None
+    without a resident dictionary); ``empty`` marks a query no doc can
+    match."""
+
+    terms: list
+    wanted: list
+    kernel: Callable
+    est: int | None
+    k: int
+    offset: int = 0
+    empty: bool = False
+    clauses: _Clauses = _Clauses()
+    after: tuple | None = None
+    positional: bool = False
+    pfx: str | None = None
+
+
+def _doc_page(docs_enc, lo: int, hi: int) -> pd.DataFrame:
+    """Distinct doc ids of the posting blocks' ``docs_enc`` buffers,
+    ascending, rows [lo, hi), each at constant score 1.0 — the decode
+    both constant-score tails share."""
+    parts = [delta_decode(decode_varbyte(e)) for e in docs_enc]
+    ids = np.unique(np.concatenate(parts)) if parts else np.empty(0, np.int64)
+    ids = ids[lo:hi].astype(np.int64)
+    return pd.DataFrame({"doc_id": ids, "score": np.full(len(ids), 1.0)})
 
 
 def _key_counts(keys: pd.Series, after: str | None = None) -> pd.DataFrame:
@@ -775,11 +898,27 @@ class CompressedIndex:
         merge stay O(shards × k) at ANY page depth — the ES search_after
         scale story, reproduced on the same rounded total order both
         engines rank by (mutually exclusive with ``offset``)."""
+        return self._execute(self._search_spec(
+            text, k, offset, require_all, must_not_text, should_text,
+            search_after, min_match,
+            _Clauses(filters, prefix, ranges, exists_cols, ids, geo),
+        ), local=False)
+
+    def _search_spec(
+        self, text, k, offset, require_all, must_not_text, should_text,
+        search_after, min_match, clauses: _Clauses,
+    ) -> _Scored:
+        """``search`` / ``search_local`` parsed once, before any posting
+        I/O: the argument checks, analysis of the query, should and
+        must_not texts, idfs from the term dictionary (zero-df terms
+        dropped) and the scorer's arguments."""
         if search_after is not None and offset:
             raise ValueError("offset and search_after are mutually exclusive")
         terms = sorted(set(self._analyze(text)))
         if not terms:
             raise ValueError("query analyzes to zero terms")
+        if min_match is not None and (min_match < 1 or require_all):
+            raise ValueError("min_match must be >= 1 and not combine with require_all")
         should_terms = [
             t for t in sorted(set(self._analyze(should_text or ""))) if t not in terms
         ]
@@ -787,35 +926,93 @@ class CompressedIndex:
         terms = [t for t in terms if t in idfs]  # drop zero-df terms
         should_terms = [t for t in should_terms if t in idfs]
         must_not_terms = sorted(set(self._analyze(must_not_text or "")))
-        if min_match is not None and (min_match < 1 or require_all):
-            raise ValueError("min_match must be >= 1 and not combine with require_all")
-        if not terms or (min_match or 1) > len(terms):
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
         wanted = terms + should_terms + must_not_terms
-        blocks = self.postings.where(F.col("term").isin(wanted))
-        local_k = k + offset  # each shard must surface the whole window
-        cond = _filter_cond(filters, prefix, ranges, exists_cols, ids, geo)
-        fn = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, local_k,
-            cond is not None,
-            must_not_terms, require_all, should_terms,
+        kernel = functools.partial(
+            _shard_topk_fn, terms, idfs, self.meta.avgdl, k + offset,
+            bool(clauses), must_not_terms, require_all, should_terms,
             dense_hint=int(self.meta.n_docs), cursor=search_after,
             min_match=min_match,
         )
-        # filter clauses stay in Catalyst: the predicate reaches the attrs
-        # Parquet scan (PushedFilters — equality and StartsWith both push
-        # down), so the cogroup ships only the SURVIVING (shard, doc_id)
-        # pairs into the scorer — O(selectivity × corpus), not O(corpus),
-        # per shard. Unfiltered, the stage reads only the query-term
-        # postings.
+        return _Scored(
+            terms, wanted, kernel, self._df_sum(wanted), k, offset,
+            empty=not terms or (min_match or 1) > len(terms),
+            clauses=clauses, after=search_after,
+        )
+
+    def _execute(self, spec: _Scored, local: bool):
+        """Run a parsed scored query on one execution site; the sites
+        differ only in the seek, the filter rendering and the merge.
+
+        * cluster: the postings scan pruned to ``wanted`` (In, plus a
+          phrase prefix's [pfx, successor) range and a positional
+          query's doc window, ``_doc_window``) → ``_per_shard``, the
+          filter clauses cogrouped from a Catalyst attrs scan
+          (``_Clauses.cond``: the predicate reaches the attrs Parquet
+          scan as PushedFilters, so the cogroup ships only the SURVIVING
+          (shard, doc_id) pairs) → ``_ranked``;
+        * local: the coordinator term-dictionary seek (``_seek_blocks``;
+          a phrase prefix expands through the resident dictionary) → the
+          kernel run once whole-index on the driver over the
+          decoded-postings cache (``_make_decoder``), the filter clauses
+          from a pyarrow attrs scan (``_Clauses.docs``) →
+          ``_ranked_local``.
+
+        The whole-index local pass is bit-identical to the per-shard
+        split: shards partition the doc-id space, so a doc's postings
+        all live in one shard, and the scorer accumulates every doc's sum
+        in canonical term order (see ``_shard_topk_fn``) even though the
+        GLOBAL θ prunes a different kept/pruned split than any per-shard
+        θ; the phrase kernels have no θ. Rank-identity between the sites
+        is asserted in bench.py and the tests. A positional query whose
+        decode estimate exceeds ``_PHRASE_LOCAL_MAX_POSTINGS`` (or is
+        unknown: no resident dictionary) runs on the cluster even when
+        asked for locally; only latency moves."""
+        if local and spec.positional and (
+            spec.est is None or spec.est > self._PHRASE_LOCAL_MAX_POSTINGS
+        ):
+            return self._execute(spec, local=False).toPandas()
+        cols = self._POS_COLS if spec.positional else self._SEEK_COLS
+        if local:
+            if spec.empty:
+                return _empty()
+            wanted = spec.wanted
+            if spec.pfx is not None:
+                expansion = self._prefix_terms(spec.pfx)
+                if not expansion:
+                    return _empty()
+                wanted = sorted(set(wanted) | set(expansion))
+            blocks = self._seek_blocks(wanted, cols=cols)
+            attrs = spec.clauses.docs(self._attrs_dataset()) if spec.clauses else None
+            if not len(blocks):
+                return _empty()
+            fn = spec.kernel(
+                decoder=None if spec.positional else self._make_decoder(blocks)
+            )
+            return _ranked_local(fn(blocks, attrs), spec.k, spec.offset)
+        if spec.empty:
+            return self.spark.createDataFrame([], _RESULT_SCHEMA)
+        term = F.col("term")
+        cond = term.isin(spec.wanted)
+        if spec.pfx is not None:
+            cond = cond | _prefix_range(term, spec.pfx)
+        if spec.positional:
+            win = self._doc_window(spec.terms)
+            if win is None:
+                return self.spark.createDataFrame([], _RESULT_SCHEMA)
+            cond = (
+                cond
+                & (F.col("last_doc_id") >= win[0])
+                & (F.col("first_doc_id") <= win[1])
+            )
         allowed = (
-            None if cond is None
-            else self.attrs.where(cond).select("shard", "doc_id")
+            self.attrs.where(spec.clauses.cond()).select("shard", "doc_id")
+            if spec.clauses else None
         )
         partial = self._per_shard(
-            blocks, fn, _RESULT_SCHEMA, self._df_sum(wanted), allowed=allowed
+            self.postings.where(cond), spec.kernel(), _RESULT_SCHEMA,
+            spec.est, cols=cols, allowed=allowed,
         )
-        return _ranked(partial, k, offset, after=search_after)
+        return _ranked(partial, spec.k, spec.offset, after=spec.after)
 
     def _needs_positions(self, method: str) -> None:
         """Phrase queries are answered from positional postings only —
@@ -863,28 +1060,38 @@ class CompressedIndex:
         per-shard grouped map (verify + BM25 require_all top-k in one
         decode pass) → global rounded (score DESC, doc_id ASC) merge.
         """
-        self._needs_positions("match_phrase")
+        return self._execute(
+            self._phrase_spec("match_phrase", text, k, offset, slop), local=False
+        )
+
+    def _phrase_spec(
+        self, method: str, text: str, k: int, offset: int, slop: int = 0,
+        prefix: bool = False,
+    ) -> _Scored:
+        """The four phrase methods parsed once: the positions check,
+        analysis, the complete/prefix split (``prefix``: the last token is
+        open), the complete terms' idfs, the decode estimate and the
+        positional kernel's arguments."""
+        self._needs_positions(method)
         seq = self._analyze(text)
         if not seq:
             raise ValueError("phrase analyzes to zero terms")
-        terms = sorted(set(seq))
-        idfs = self._idfs(terms)
-        win = self._doc_window(terms) if len(idfs) == len(terms) else None
-        if win is None:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        blocks = self.postings.where(
-            F.col("term").isin(terms)
-            & (F.col("last_doc_id") >= win[0])
-            & (F.col("first_doc_id") <= win[1])
-        )
-        from .positions import phrase_topk_fn
+        complete, pfx = (seq[:-1], seq[-1]) if prefix else (seq, None)
+        terms = sorted(set(complete))
+        idfs = self._idfs(terms) if terms else {}
+        avgdl, n = self.meta.avgdl, k + offset
+        from .positions import phrase_prefix_topk_fn, phrase_topk_fn
 
-        fn = phrase_topk_fn(seq, idfs, self.meta.avgdl, k + offset, slop)
-        partial = self._per_shard(
-            blocks, fn, _RESULT_SCHEMA, self._phrase_stage_estimate(terms),
-            cols=self._POS_COLS,
+        if prefix:
+            def kernel(decoder=None):
+                return phrase_prefix_topk_fn(complete, pfx, idfs, avgdl, n)
+        else:
+            def kernel(decoder=None):
+                return phrase_topk_fn(seq, idfs, avgdl, n, slop)
+        return _Scored(
+            terms, terms, kernel, self._phrase_decode_estimate(terms), k,
+            offset, empty=len(idfs) < len(terms), positional=True, pfx=pfx,
         )
-        return _ranked(partial, k, offset)
 
     def _doc_window(self, terms: list[str]) -> tuple[int, int] | None:
         """Doc-id window [lo, hi] where EVERY term has postings — [max
@@ -935,37 +1142,12 @@ class CompressedIndex:
         window-pruned expansion postings) at any corpus size. The
         expansion is never collected and never scored, so there is no
         max_expansions dependence."""
-        self._needs_positions("match_phrase_prefix")
-        seq = self._analyze(text)
-        if not seq:
-            raise ValueError("phrase analyzes to zero terms")
-        complete, pfx = seq[:-1], seq[-1]
-        if not complete:
-            return self.term_prefix_search(pfx, k=k, offset=offset)
-        terms = sorted(set(complete))
-        idfs = self._idfs(terms)
-        win = self._doc_window(terms) if len(idfs) == len(terms) else None
-        if win is None:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        pfx_hi = _prefix_successor(pfx)
-        exp_cond = F.col("term") >= pfx
-        if pfx_hi is not None:
-            exp_cond = exp_cond & (F.col("term") < pfx_hi)
-        blocks = self.postings.where(
-            (F.col("term").isin(terms) | exp_cond)
-            & (F.col("last_doc_id") >= win[0])
-            & (F.col("first_doc_id") <= win[1])
+        spec = self._phrase_spec(
+            "match_phrase_prefix", text, k, offset, prefix=True
         )
-        from .positions import phrase_prefix_topk_fn
-
-        fn = phrase_prefix_topk_fn(
-            complete, pfx, idfs, self.meta.avgdl, k + offset
-        )
-        partial = self._per_shard(
-            blocks, fn, _RESULT_SCHEMA, self._phrase_stage_estimate(terms),
-            cols=self._POS_COLS,
-        )
-        return _ranked(partial, k, offset)
+        if not spec.terms:
+            return self.term_prefix_search(spec.pfx, k=k, offset=offset)
+        return self._execute(spec, local=False)
 
     #: aliases for callers that name the phrase queries this way
     #: (perfbench/run.py, the oracle's wand_match_phrase_pos entries)
@@ -991,35 +1173,21 @@ class CompressedIndex:
     #: only latency moves.
     _PHRASE_LOCAL_MAX_POSTINGS = 1_000_000
 
-    def _phrase_decode_estimate(self, terms: list[str]) -> int:
-        """Estimated positions-decode volume of the local phrase kernel:
+    def _phrase_decode_estimate(self, terms: list[str]) -> int | None:
+        """Estimated positions-decode volume of a phrase over ``terms``:
         (min df over terms / N) × Σ cf over terms — 0 if any term is
         unindexed (the result is empty and the local path answers
-        instantly). O(terms), answered from the resident term-stats
-        snapshot when present; one tiny term_stats collect otherwise."""
-        if not terms:
-            return 0
-        if self._df_local is not None and self._cf_local is not None:
-            dfs = [self._df_local.get(t, 0) for t in terms]
-            cfs = [self._cf_local.get(t, 0) for t in terms]
-        else:
-            rows = self.term_stats.where(F.col("term").isin(terms)).collect()
-            by = {r["term"]: (int(r["df"]), int(r["cf"])) for r in rows}
-            dfs = [by.get(t, (0, 0))[0] for t in terms]
-            cfs = [by.get(t, (0, 0))[1] for t in terms]
-        if min(dfs) == 0:
-            return 0
-        n = max(int(self.meta.n_docs), 1)
-        return int(min(dfs) / n * sum(cfs))
-
-    def _phrase_stage_estimate(self, terms: list[str]) -> int | None:
-        """``_phrase_decode_estimate`` as the distributed phrases'
-        ``_per_shard`` estimate — None (the shuffled plan) without a
-        resident dictionary, where the estimate itself would cost a
-        Spark job."""
+        instantly). O(terms) over the resident term-stats snapshot; None
+        without one, where the estimate would itself cost a Spark job
+        (the distributed phrases then keep the shuffled plan, and the
+        coordinator twins run on the cluster)."""
         if self._df_local is None:
             return None
-        return self._phrase_decode_estimate(terms)
+        dfs = [self._df_local.get(t, 0) for t in terms]
+        if not dfs or min(dfs) == 0:
+            return 0
+        n = max(int(self.meta.n_docs), 1)
+        return int(min(dfs) / n * sum(self._cf_local.get(t, 0) for t in terms))
 
     def match_phrase_local(
         self,
@@ -1028,38 +1196,15 @@ class CompressedIndex:
         offset: int = 0,
         slop: int = 0,
     ) -> pd.DataFrame:
-        """Coordinator fast path for ``match_phrase`` — the same kernel
-        (engine/positions.py) over a term-dictionary-seek pyarrow read of
-        the phrase terms' posting+position blocks, run once whole-index
-        on the driver (the phrase scorer has no θ
-        pruning, so the shard split cannot change results;
-        rank-identity with the distributed path is tested). This is the
-        serving-latency story for phrase queries: ms-latency off the
-        same index, no Spark job, no source scan — and it stays true on
-        HOT phrases because the twin routes by estimated positions-
-        decode volume ((min df / N) × Σ cf — window share times total
-        occurrences, read from the resident term-stats snapshot before
-        any data I/O): above ``_PHRASE_LOCAL_MAX_POSTINGS`` it runs the
-        distributed kernel instead, which wins there."""
-        self._needs_positions("match_phrase_local")
-        seq = self._analyze(text)
-        if not seq:
-            raise ValueError("phrase analyzes to zero terms")
-        terms = sorted(set(seq))
-        if self._phrase_decode_estimate(terms) > self._PHRASE_LOCAL_MAX_POSTINGS:
-            return self.match_phrase(
-                text, k=k, offset=offset, slop=slop
-            ).toPandas()
-        idfs = self._idfs(terms)
-        if len(idfs) < len(terms):
-            return _empty()
-        blocks = self._seek_blocks(terms, cols=self._POS_COLS)
-        if len(blocks) == 0:
-            return _empty()
-        from .positions import phrase_topk_fn
-
-        fn = phrase_topk_fn(seq, idfs, self.meta.avgdl, k + offset, slop)
-        return _ranked_local(fn(blocks), k, offset)
+        """``match_phrase`` run on the coordinator (``_execute``): the
+        term-dictionary seek of the phrase terms' posting+position
+        blocks, the same kernel once whole-index on the driver, no Spark
+        job — unless the decode estimate routes the phrase to the
+        cluster (``_PHRASE_LOCAL_MAX_POSTINGS``)."""
+        return self._execute(
+            self._phrase_spec("match_phrase_local", text, k, offset, slop),
+            local=True,
+        )
 
     def match_phrase_prefix_local(
         self,
@@ -1067,53 +1212,35 @@ class CompressedIndex:
         k: int = 10,
         offset: int = 0,
     ) -> pd.DataFrame:
-        """Coordinator fast path for ``match_phrase_prefix`` — the
-        same kernel (positions.phrase_prefix_topk_fn) over a
-        term-dictionary-seek pyarrow read of the complete terms' AND the
-        [pfx, …) expansion terms' posting+position blocks, run once
-        whole-index on the driver (no θ pruning in the phrase kernel, so
-        the shard split cannot change results; rank-identity tested).
-        The expansion enumerates the RESIDENT term dictionary
-        (``_df_local`` — required, like the fuzzy coordinator twin);
-        single-token queries fall back to the constant-score local tail.
-        This is the type-ahead serving story: ms-latency per keystroke,
-        no Spark job, no source scan."""
-        self._needs_positions("match_phrase_prefix_local")
-        seq = self._analyze(text)
-        if not seq:
-            raise ValueError("phrase analyzes to zero terms")
-        complete, pfx = seq[:-1], seq[-1]
+        """``match_phrase_prefix`` run on the coordinator
+        (``_execute``): the prefix expands through the RESIDENT term
+        dictionary (required, ValueError without it) and the seek reads
+        the complete and expansion terms' blocks; a single-token query
+        takes the constant-score local tail. Routes by decode estimate
+        like ``match_phrase_local``."""
+        self._resident("match_phrase_prefix_local")
+        spec = self._phrase_spec(
+            "match_phrase_prefix_local", text, k, offset, prefix=True
+        )
+        if not spec.terms:
+            return self._constant_score_local(
+                self._prefix_terms(spec.pfx), k, offset=offset
+            )
+        return self._execute(spec, local=True)
+
+    def _resident(self, method: str) -> dict[str, int]:
+        """The resident term dictionary (term → df); a coordinator
+        expansion cannot run without it."""
         if self._df_local is None:
             raise ValueError(
-                "match_phrase_prefix_local needs the resident term "
-                "dictionary; use match_phrase_prefix"
+                f"{method} needs the resident term dictionary (term_stats "
+                "exceeds the local cap); use the distributed path"
             )
-        expansion = [t for t in self._df_local if t.startswith(pfx)]
-        if not complete:
-            return self._constant_score_local(sorted(expansion), k, offset=offset)
-        terms = sorted(set(complete))
-        # same decode-volume routing as match_phrase_local: the
-        # expansion streams are pruned against the COMPLETE terms'
-        # windows, so the rarest complete term's window share bounds
-        # the kernel's work
-        if self._phrase_decode_estimate(terms) > self._PHRASE_LOCAL_MAX_POSTINGS:
-            return self.match_phrase_prefix(
-                text, k=k, offset=offset
-            ).toPandas()
-        idfs = self._idfs(terms)
-        if len(idfs) < len(terms) or not expansion:
-            return _empty()
-        blocks = self._seek_blocks(
-            sorted(set(terms) | set(expansion)), cols=self._POS_COLS
-        )
-        if len(blocks) == 0:
-            return _empty()
-        from .positions import phrase_prefix_topk_fn
+        return self._df_local
 
-        fn = phrase_prefix_topk_fn(
-            complete, pfx, idfs, self.meta.avgdl, k + offset
-        )
-        return _ranked_local(fn(blocks), k, offset)
+    def _prefix_terms(self, pfx: str) -> list[str]:
+        """Every resident dictionary term starting with ``pfx``, sorted."""
+        return sorted(t for t in self._resident("prefix expansion") if t.startswith(pfx))
 
     def _executor(self):
         """Persistent coordinator thread pool for the seek's per-file
@@ -1378,153 +1505,19 @@ class CompressedIndex:
         ids: list[int] | None = None,
         geo: tuple | None = None,
     ) -> pd.DataFrame:
-        """Coordinator fast path: identical semantics and the SAME numpy
-        kernel as ``search`` (rank-identity tested in test_fastpath), but
-        the per-shard scorer runs on the driver over pyarrow reads of ONLY
-        the query terms' posting blocks — Parquet row-group stats prune the
-        term-sorted files, the Lucene term-dictionary-seek analog. This is
-        how an interactive query node serves ms-latency queries off the
-        same index the cluster built: data read is O(postings of the query
-        terms) regardless of corpus size, so a thin coordinator handles it
-        at any scale. Use ``search`` (the distributed path) when the
-        candidate set itself is cluster-sized (batch scoring, analytics
-        joins); this is the ES coordinator+shard-fanout collapsed onto one
-        node, exactly the reference's single-ES-box deployment
-        (docker-compose.yml:7)."""
-        import pyarrow.compute as pc
-
-        terms = sorted(set(self._analyze(text)))
-        if not terms:
-            raise ValueError("query analyzes to zero terms")
-        should_terms = [
-            t for t in sorted(set(self._analyze(should_text or ""))) if t not in terms
-        ]
-        idfs = self._idfs(terms + should_terms)
-        terms = [t for t in terms if t in idfs]  # drop zero-df terms
-        should_terms = [t for t in should_terms if t in idfs]
-        must_not_terms = sorted(set(self._analyze(must_not_text or "")))
-        if min_match is not None and (min_match < 1 or require_all):
-            raise ValueError("min_match must be >= 1 and not combine with require_all")
-        if not terms or (min_match or 1) > len(terms):
-            return _empty()
-        wanted = terms + should_terms + must_not_terms
-        blocks = self._seek_blocks(wanted)
-        attrs = None
-        has_filter = bool(
-            filters or prefix or ranges or exists_cols or ids is not None
-            or geo is not None
-        )
-        if has_filter:
-            # predicates pushed into the pyarrow scan (row-group stats +
-            # dictionary filtering), and only (shard, doc_id) is
-            # materialized — the coordinator never holds the full attrs
-            # table, so filtered fast-path memory is O(matching docs)
-            expr = None
-            for col, val in (filters or {}).items():
-                if isinstance(val, (list, tuple, set)):
-                    e = pc.field(col).isin(sorted(val))
-                else:
-                    e = pc.field(col) == val
-                expr = e if expr is None else expr & e
-            if prefix is not None:
-                p = prefix[1]
-                # range form for row-group/dictionary pruning only: every
-                # string with prefix p satisfies p <= s < successor(p)
-                # (a strict SUPERSET of the prefix match — e.g. 'src1z'
-                # falls in ['src1', 'src2') without starting a longer
-                # prefix); the exact starts_with re-check below restores
-                # semantics identical to the distributed path's Catalyst
-                # StartsWith
-                e = pc.field(prefix[0]) >= p
-                upper = _prefix_successor(p)
-                if upper is not None:
-                    e = e & (pc.field(prefix[0]) < upper)
-                expr = e if expr is None else expr & e
-            for col, (lo, hi) in (ranges or {}).items():
-                # same inclusive-range semantics as the Catalyst path;
-                # pyarrow pushes both bounds into row-group stats pruning
-                if lo is not None:
-                    e = pc.field(col) >= lo
-                    expr = e if expr is None else expr & e
-                if hi is not None:
-                    e = pc.field(col) <= hi
-                    expr = e if expr is None else expr & e
-            for col in exists_cols or []:
-                e = ~pc.field(col).is_null()
-                expr = e if expr is None else expr & e
-            if ids is not None:
-                e = pc.field("doc_id").isin([int(i) for i in ids])
-                expr = e if expr is None else expr & e
-            if geo is not None:
-                # the clause's prune box pushed into the pyarrow scan
-                # (radius: the shared conservative radius_bbox; polygon:
-                # the vertex bbox with strict uppers — byte-identical to
-                # the Catalyst path's prune); the exact re-check
-                # (haversine / ray cast) runs below on the survivors
-                from ..ops.geo import geo_clause_prune_box, parse_geo_clause
-
-                _, g_lon, g_lat, _ = parse_geo_clause(geo)
-                lat_lo, lat_hi, lon_lo, lon_hi, strict = (
-                    geo_clause_prune_box(geo)
-                )
-                e = pc.field(g_lat) >= lat_lo
-                e = e & (
-                    (pc.field(g_lat) < lat_hi) if strict
-                    else (pc.field(g_lat) <= lat_hi)
-                )
-                if lon_lo is not None:
-                    e = e & (pc.field(g_lon) >= lon_lo)
-                    e = e & (
-                        (pc.field(g_lon) < lon_hi) if strict
-                        else (pc.field(g_lon) <= lon_hi)
-                    )
-                expr = e if expr is None else expr & e
-            cols = ["shard", "doc_id"]
-            if prefix is not None:
-                cols.append(prefix[0])
-            if geo is not None:
-                cols += [c for c in (g_lon, g_lat) if c not in cols]
-            tbl = self._attrs_dataset().to_table(columns=cols, filter=expr)
-            if prefix is not None:
-                tbl = tbl.filter(
-                    pc.starts_with(pc.field(prefix[0]), prefix[1])
-                )
-            if geo is not None:
-                from ..ops.geo import geo_clause_mask_np
-
-                mask = geo_clause_mask_np(
-                    geo,
-                    tbl.column(g_lon).to_numpy(zero_copy_only=False),
-                    tbl.column(g_lat).to_numpy(zero_copy_only=False),
-                )
-                import pyarrow as pa
-
-                tbl = tbl.filter(pa.array(mask))
-            attrs = tbl.select(["shard", "doc_id"]).to_pandas()
-        if search_after is not None and offset:
-            raise ValueError("offset and search_after are mutually exclusive")
-        if not len(blocks):
-            return _empty()
-        fn = _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, k + offset,
-            has_filter,
-            must_not_terms, require_all, should_terms,
-            decoder=self._make_decoder(blocks),
-            dense_hint=int(self.meta.n_docs), cursor=search_after,
-            min_match=min_match,
-        )
-        # one whole-index numpy pass instead of 16 per-shard passes: shards
-        # partition the doc-id space, so a doc's postings all live in one
-        # shard, and the scorer accumulates every doc's sum in canonical
-        # term order (see _shard_topk_fn) — bit-identical either way, even
-        # though this pass prunes with the GLOBAL theta (strictly tighter
-        # than any per-shard theta, so the kept/pruned split differs). One
-        # pass pays the pandas fixed costs once. The distributed path
-        # keeps the per-shard split (that is what parallelizes it across
-        # executors); rank-identity between the two is asserted in
-        # bench.py and tests/test_fastpath.py.
-        out = fn(blocks, attrs) if has_filter else fn(blocks)
-        return _ranked_local(out, k, offset)
+        """``search`` run on the coordinator (``_execute``): the same
+        parsed query and numpy kernel, over the term-dictionary seek of
+        ONLY the query terms' posting blocks and a pyarrow attrs scan —
+        no Spark job, data read O(postings of the query terms) at any
+        corpus size (rank-identity tested in test_fastpath). This is the
+        ES coordinator+shard fan-out collapsed onto one node, the
+        reference's single-ES-box deployment (docker-compose.yml:7); use
+        ``search`` when the candidate set itself is cluster-sized."""
+        return self._execute(self._search_spec(
+            text, k, offset, require_all, must_not_text, should_text,
+            search_after, min_match,
+            _Clauses(filters, prefix, ranges, exists_cols, ids, geo),
+        ), local=True)
 
     def more_like_this(
         self,
@@ -1620,20 +1613,9 @@ class CompressedIndex:
         global doc_id sort, the same keyset-free pagination contract the
         scored paths use. ``est`` is the blocks' Σ df (``_per_shard``)."""
         n = k + offset
-
-        def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-            parts = [delta_decode(decode_varbyte(e)) for e in pdf["docs_enc"]]
-            ids = (
-                np.unique(np.concatenate(parts))
-                if parts
-                else np.empty(0, dtype=np.int64)
-            )
-            return pd.DataFrame(
-                {"doc_id": ids[:n].astype(np.int64), "score": 1.0}
-            )
-
         partial = self._per_shard(
-            blocks, fn, _RESULT_SCHEMA, est, cols=("docs_enc",)
+            blocks, lambda pdf: _doc_page(pdf["docs_enc"], 0, n),
+            _RESULT_SCHEMA, est, cols=("docs_enc",),
         )
         ranked = partial.orderBy(F.asc("doc_id"))
         if offset:
@@ -1704,12 +1686,8 @@ class CompressedIndex:
         (term, df)."""
         if not prefix:
             raise ValueError("suggest needs a non-empty prefix")
-        hi = _prefix_successor(prefix)
-        cond = F.col("term") >= prefix
-        if hi is not None:
-            cond = cond & (F.col("term") < hi)
         return (
-            self.term_stats.where(cond)
+            self.term_stats.where(_prefix_range(F.col("term"), prefix))
             .select("term", F.col("df").cast("long").alias("df"))
             .orderBy(F.desc("df"), F.asc("term"))
             .limit(k)
@@ -1841,9 +1819,9 @@ class CompressedIndex:
         filter-only path uses. The clauses are ``search``'s, compiled by
         the same code (``geo`` included); an unknown clause name raises
         TypeError instead of silently matching every doc."""
-        cond = _filter_cond(filters, prefix, ranges, exists_cols, ids, geo)
+        clauses = _Clauses(filters, prefix, ranges, exists_cols, ids, geo)
         return (
-            (self.attrs if cond is None else self.attrs.where(cond))
+            (self.attrs.where(clauses.cond()) if clauses else self.attrs)
             .select("doc_id", F.lit(float(boost)).alias("score"))
             .orderBy(F.asc("doc_id"))
             .limit(k)
@@ -1885,13 +1863,6 @@ class CompressedIndex:
         seek analog). Constant-score 1.0, deterministic doc_id order;
         ``offset`` pages within it (the single-token type-ahead routes
         thread theirs through here)."""
-        # [prefix, successor(prefix)) is EXACTLY the startswith set under
-        # codepoint-lexicographic comparison (Spark's UTF8String order),
-        # with both endpoints plain literals the Parquet scan prunes on
-        hi = _prefix_successor(prefix)
-        cond = F.col("term") >= prefix
-        if hi is not None:
-            cond = cond & (F.col("term") < hi)
         # the resident dictionary is a hash map: the estimate walks it,
         # lazily, and stops once the Σ df passes the one-task limit
         # (a full walk of the 52k-term bench vocabulary is ~2 ms)
@@ -1899,7 +1870,8 @@ class CompressedIndex:
             t for t in self._df_local or () if t.startswith(prefix)
         )
         return self._constant_score_docs(
-            self.postings.where(cond), k, est, offset=offset
+            self.postings.where(_prefix_range(F.col("term"), prefix)), k, est,
+            offset=offset,
         )
 
     def pinned(self, ids: list[int], text: str, k: int = 10) -> DataFrame:
@@ -1962,95 +1934,37 @@ class CompressedIndex:
     ) -> pd.DataFrame:
         """Coordinator twin of ``_constant_score_docs``: term-dictionary
         seek of the candidate terms' posting blocks (pyarrow row-group
-        pruning, no Spark job), distinct doc ids, constant score 1.0,
-        doc_id ASC page [offset, offset+k) — the shared tail of the
-        local term-expansion queries."""
+        pruning, no Spark job), then the same distinct-doc page
+        [offset, offset+k)."""
         if not cands:
             return _empty()
-        blocks = self._seek_blocks(cands)
-        if len(blocks) == 0:
-            return _empty()
-        parts = [delta_decode(decode_varbyte(e)) for e in blocks["docs_enc"]]
-        ids = np.unique(np.concatenate(parts))[offset : offset + k]
-        return pd.DataFrame(
-            {"doc_id": ids.astype(np.int64),
-             "score": np.full(len(ids), 1.0, dtype=np.float64)}
-        )
+        return _doc_page(self._seek_blocks(cands)["docs_enc"], offset, offset + k)
 
     def fuzzy_term_search_local(
         self, term: str, k: int = 10, max_edits: int = 1, prefix_len: int = 0,
         max_expansions: int = 50,
     ) -> pd.DataFrame:
-        """Coordinator fast path for ``fuzzy_term_search`` — identical
-        semantics and results (rank-identity-tested), no Spark job: the
-        expansion walks the RESIDENT term dictionary (``_df_local``, the
-        Lucene-FST-analog snapshot the index keeps when term_stats fits
-        the local cap) with a length band + early-exit bounded
-        Levenshtein, caps at ``max_expansions`` best-by-df exactly like
-        ``_cap_expansion``, and reads only the matched terms' posting
-        blocks via the term-dictionary seek. This is the serving story
-        for the fuzzy DSL shape: ms-latency typo queries off the same
-        index the cluster built."""
-        q = self._analyze(term)
-        if len(q) != 1:
-            raise ValueError("fuzzy_term_search takes exactly one analyzed term")
-        qt = q[0]
-        pfx = qt[:prefix_len]
-        cands = self._expansion_local(
-            lambda t: (not prefix_len or t.startswith(pfx))
-            and abs(len(t) - len(qt)) <= max_edits
-            and _lev_within(t, qt, max_edits),
-            max_expansions,
-        )
-        return self._constant_score_local(cands, k)
-
-    def _expansion_local(self, match_fn, max_expansions: int) -> list[str]:
-        """Shared local-expansion tail: walk the RESIDENT term dictionary
-        with ``match_fn``, cap at ``max_expansions`` best-by-df (same
-        (-df, term) order as ``_cap_expansion``, so local and distributed
-        expansions are term-for-term identical)."""
-        if max_expansions <= 0:
-            raise ValueError("max_expansions must be positive")
-        if self._df_local is None:
-            raise ValueError(
-                "coordinator expansion needs the resident term dictionary "
-                "(term_stats exceeds the local cap); use the distributed path"
-            )
-        cands = [(t, d) for t, d in self._df_local.items() if match_fn(t)]
-        cands.sort(key=lambda td: (-td[1], td[0]))
-        return [t for t, _ in cands[:max_expansions]]
+        """``fuzzy_term_search`` on the coordinator: the expansion walks
+        the RESIDENT term dictionary (length band + early-exit bounded
+        Levenshtein, ``_lev_within``), then the seek; no Spark job."""
+        return self._fuzzy(term, k, max_edits, prefix_len, max_expansions, True)
 
     def wildcard_term_search_local(
         self, pattern: str, k: int = 10, max_expansions: int = 50
     ) -> pd.DataFrame:
-        """Coordinator fast path for ``wildcard_term_search`` — identical
-        results (the anchored translation below is the same regex the
-        distributed rlike evaluates; its ``.*``/``.``/escaped-literal
-        alphabet behaves identically in Java regex and CPython sre), no
-        Spark job: resident-dictionary expansion + term-dictionary-seek
-        postings read."""
-        if not pattern:
-            raise ValueError("wildcard_term_search needs a non-empty pattern")
-        rx = re.compile(_wildcard_regex(pattern))
-        cands = self._expansion_local(
-            lambda t: rx.match(t) is not None, max_expansions
-        )
-        return self._constant_score_local(cands, k)
+        """``wildcard_term_search`` on the coordinator: CPython sre
+        evaluates the same anchored regex (``.*``/``.``/escaped
+        literals read alike in Java regex) over the resident
+        dictionary; no Spark job."""
+        return self._wildcard(pattern, k, max_expansions, True)
 
     def regexp_term_search_local(
         self, regex: str, k: int = 10, max_expansions: int = 50
     ) -> pd.DataFrame:
-        """Coordinator fast path for ``regexp_term_search`` — identical
-        results within the engine's documented Java∩RE2 pattern subset
-        (char classes, alternation, quantifiers — no backrefs), which
-        CPython sre evaluates identically; no Spark job."""
-        if not regex:
-            raise ValueError("regexp_term_search needs a non-empty regex")
-        rx = re.compile(f"^(?:{regex})$")
-        cands = self._expansion_local(
-            lambda t: rx.match(t) is not None, max_expansions
-        )
-        return self._constant_score_local(cands, k)
+        """``regexp_term_search`` on the coordinator: CPython sre reads
+        the engine's Java∩RE2 pattern subset alike, over the resident
+        dictionary; no Spark job."""
+        return self._regexp(regex, k, max_expansions, True)
 
     def composite_agg_local(
         self,
@@ -2111,8 +2025,6 @@ class CompressedIndex:
         a leading wildcard or hot fuzzy stem over a billion-term code
         vocabulary (the uid tail) collects at most ``max_expansions``
         rows, not the expansion."""
-        if max_expansions <= 0:
-            raise ValueError("max_expansions must be positive")
         rows = (
             vocab.select("term", "df")
             .orderBy(F.desc("df"), F.asc("term"))
@@ -2121,13 +2033,26 @@ class CompressedIndex:
         )
         return [r["term"] for r in rows]
 
-    def _expansion_docs(
-        self, vocab: DataFrame, max_expansions: int, k: int
-    ) -> DataFrame:
-        """Shared tail of the distributed term-expansion queries: the
-        ``_cap_expansion`` survivors push In(term) into the postings
-        scan, then ``_constant_score_docs`` (empty when no term
-        matched)."""
+    def _expand(self, k: int, max_expansions: int, *, match=None, vocab=None):
+        """A term-expansion query on the site its predicate is rendered
+        for. ``match`` (a Python predicate over a term) walks the
+        RESIDENT term dictionary on the coordinator, then
+        ``_constant_score_local``; ``vocab`` (a Catalyst-filtered
+        term_stats (term, df) scan) runs distributed, then In(term) into
+        the postings scan and ``_constant_score_docs``. Both keep the
+        best ``max_expansions`` terms by (-df, term), so the two sites
+        expand term-for-term alike (``_cap_expansion``)."""
+        if max_expansions <= 0:
+            raise ValueError("max_expansions must be positive")
+        if match is not None:
+            cands = sorted(
+                ((t, d) for t, d in self._resident("coordinator expansion").items()
+                 if match(t)),
+                key=lambda td: (-td[1], td[0]),
+            )
+            return self._constant_score_local(
+                [t for t, _ in cands[:max_expansions]], k
+            )
         cands = self._cap_expansion(vocab, max_expansions)
         if not cands:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
@@ -2161,17 +2086,29 @@ class CompressedIndex:
         (Spark == DuckDB); ES additionally counts transpositions as one
         edit by default — documented divergence.
         """
+        return self._fuzzy(term, k, max_edits, prefix_len, max_expansions, False)
+
+    def _fuzzy(self, term, k, max_edits, prefix_len, max_expansions, local):
+        """``fuzzy_term_search`` and its coordinator twin: one analysis,
+        the expansion rendered for the chosen site (``_expand``)."""
         q = self._analyze(term)
         if len(q) != 1:
             raise ValueError("fuzzy_term_search takes exactly one analyzed term")
         qt = q[0]
+        pfx = qt[:prefix_len]
+        if local:
+            return self._expand(k, max_expansions, match=lambda t: (
+                (not prefix_len or t.startswith(pfx))
+                and abs(len(t) - len(qt)) <= max_edits
+                and _lev_within(t, qt, max_edits)
+            ))
         vocab = self.term_stats.select("term", "df")
         if prefix_len > 0:
-            vocab = vocab.where(F.col("term").startswith(qt[:prefix_len]))
+            vocab = vocab.where(F.col("term").startswith(pfx))
         vocab = vocab.where(
             F.length("term").between(len(qt) - max_edits, len(qt) + max_edits)
         ).where(F.levenshtein(F.col("term"), F.lit(qt)) <= max_edits)
-        return self._expansion_docs(vocab, max_expansions, k)
+        return self._expand(k, max_expansions, vocab=vocab)
 
     def wildcard_term_search(
         self, pattern: str, k: int = 10, max_expansions: int = 50
@@ -2193,23 +2130,23 @@ class CompressedIndex:
         Constant score 1.0, deterministic doc_id order (same contract and
         oracle shape as prefix/fuzzy; ES wildcard is constant-score too).
         """
+        return self._wildcard(pattern, k, max_expansions, False)
+
+    def _wildcard(self, pattern, k, max_expansions, local):
+        """``wildcard_term_search`` and its coordinator twin: one
+        validation and regex translation, rendered per site."""
         if not pattern:
             raise ValueError("wildcard_term_search needs a non-empty pattern")
-        lit_prefix = ""
-        for ch in pattern:
-            if ch in "*?":
-                break
-            lit_prefix += ch
         rx = _wildcard_regex(pattern)
+        if local:
+            return self._expand(k, max_expansions, match=re.compile(rx).match)
+        lit_prefix = re.match(r"[^*?]*", pattern).group().lower()
         vocab = self.term_stats.select("term", "df")
         if lit_prefix:
-            hi = _prefix_successor(lit_prefix.lower())
-            cond = F.col("term") >= lit_prefix.lower()
-            if hi is not None:
-                cond = cond & (F.col("term") < hi)
-            vocab = vocab.where(cond)
-        vocab = vocab.where(F.col("term").rlike(rx))
-        return self._expansion_docs(vocab, max_expansions, k)
+            vocab = vocab.where(_prefix_range(F.col("term"), lit_prefix))
+        return self._expand(
+            k, max_expansions, vocab=vocab.where(F.col("term").rlike(rx))
+        )
 
     def regexp_term_search(
         self, regex: str, k: int = 10, max_expansions: int = 50
@@ -2224,12 +2161,19 @@ class CompressedIndex:
         (regexp_full_match) is exact; documented engine contract, same
         restriction ES's RE2-like Lucene syntax imposes in practice.
         Constant score 1.0, deterministic doc_id order."""
+        return self._regexp(regex, k, max_expansions, False)
+
+    def _regexp(self, regex, k, max_expansions, local):
+        """``regexp_term_search`` and its coordinator twin: one
+        validation and anchoring, rendered per site."""
         if not regex:
             raise ValueError("regexp_term_search needs a non-empty regex")
-        vocab = self.term_stats.select("term", "df").where(
-            F.col("term").rlike(f"^(?:{regex})$")
-        )
-        return self._expansion_docs(vocab, max_expansions, k)
+        rx = f"^(?:{regex})$"
+        if local:
+            return self._expand(k, max_expansions, match=re.compile(rx).match)
+        return self._expand(k, max_expansions, vocab=self.term_stats.select(
+            "term", "df"
+        ).where(F.col("term").rlike(rx)))
 
     _STATS_SCHEMA = (
         "cnt long, min_val double, max_val double, sum_val double, avg_val double"
@@ -2761,13 +2705,14 @@ class CompressedIndex:
         idfs = self._idfs(terms)
         return [t for t in terms if t in idfs], idfs
 
-    def _match_kernel(self, terms: list[str], idfs: dict[str, float]):
+    def _match_kernel(self, terms: list[str], idfs: dict[str, float], decoder=None):
         """The uncut OR kernel: ``fn(blocks)`` scores EVERY doc matching
         ≥1 of ``terms`` (no top-k cut, so θ never rises and no block is
-        pruned) — the full match set with its BM25 scores."""
+        pruned) — the full match set with its BM25 scores. ``decoder``
+        is the coordinator's decoded-postings cache (``_make_decoder``)."""
         return _shard_topk_fn(
             terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False,
+            must_not_terms=[], require_all=False, decoder=decoder,
             dense_hint=int(self.meta.n_docs),
         )
 

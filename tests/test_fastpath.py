@@ -175,6 +175,17 @@ def test_edge_cases_contract(index, path):
     assert 0 < len(big) < 10**6
 
 
+@pytest.mark.parametrize("path", ["search", "search_local"])
+def test_offset_and_search_after_rejected_on_both_paths(index, path):
+    """``offset`` with ``search_after`` is rejected before analysis on
+    both serving paths — even when no query term is indexed, where an
+    empty answer would otherwise hide the caller's mistake."""
+    fn = getattr(index, path)
+    for text in ("zzzqqq nosuchtoken", "query scan"):
+        with pytest.raises(ValueError, match="mutually exclusive"):
+            fn(text, k=5, offset=5, search_after=(1.0, 3))
+
+
 def test_composite_local_null_facet(spark, tmp_path_factory):
     """Nullable facet column (r5 regression): the distributed kernel's
     pandas astype(str) counts nulls as a 'None' bucket; the coordinator

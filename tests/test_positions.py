@@ -331,3 +331,37 @@ def test_phrase_local_volume_routing(pidx, monkeypatch):
     mixed = pidx._phrase_decode_estimate(["def", "spark"])
     assert 0 < mixed < hot
     assert pidx._phrase_decode_estimate(["def", "zzznotindexed"]) == 0
+
+
+def test_non_resident_dictionary_same_rows(spark, pidx, monkeypatch):
+    """An index whose term dictionary is not resident (term_stats above
+    ``_LOCAL_TERMSTATS_BYTES``) answers every scored shape with the
+    resident instance's rows — idfs, estimates and expansions then come
+    from Spark scans of term_stats — and the coordinator expansions
+    that need the resident dictionary refuse."""
+    monkeypatch.setattr(CompressedIndex, "_LOCAL_TERMSTATS_BYTES", 0)
+    cold = CompressedIndex(spark, pidx.out_dir)
+    assert cold._df_local is None and pidx._df_local is not None
+    try:
+        for ix_rows, call, some in (
+            (rows, lambda ix: ix.search("def return", k=15), True),
+            (rows, lambda ix: ix.search(
+                "def spark", k=10, must_not_text="merge", filters={"lang": "py"}
+            ), True),
+            (lrows, lambda ix: ix.search_local("def return", k=15, offset=3), True),
+            (rows, lambda ix: ix.match_phrase("def return", k=15), True),
+            (lrows, lambda ix: ix.match_phrase_local("def return", k=15), True),
+            (lrows, lambda ix: ix.match_phrase_local("def zzznotindexed"), False),
+            (rows, lambda ix: ix.fuzzy_term_search("retrn", k=50), True),
+        ):
+            want = ix_rows(call(pidx))
+            assert bool(want) == some
+            assert ix_rows(call(cold)) == want
+        for call in (
+            lambda: cold.match_phrase_prefix_local("def re", k=5),
+            lambda: cold.fuzzy_term_search_local("retrn", k=5),
+        ):
+            with pytest.raises(ValueError, match="resident term dictionary"):
+                call()
+    finally:
+        cold.term_stats.unpersist()

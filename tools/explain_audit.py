@@ -7,7 +7,8 @@ WholeStageCodegen spans around the Catalyst parts, broadcast joins where
 a small side exists, and the absence of unexpected exchanges.
 
 Usage: python tools/explain_audit.py [sf_dir]   (default sf0.001)
-Writes PLANS.md at the repo root.
+Writes PLANS.md at the repo root, with run-specific paths and ids made
+stable (``stable``), so two runs on one commit write identical files.
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 import shutil
 import sys
 import tempfile
@@ -52,6 +54,27 @@ CHECKS = {
     "single_partition": "Exchange SinglePartition",
     "reads_pos_enc": "pos_enc:binary",  # the column in a scan's ReadSchema
 }
+
+
+_EXPR_ID = re.compile(r"(?<=[\w)])#(\d+)")
+_PLAN_ID = re.compile(r"\[plan_id=(\d+)\]")
+
+
+def stable(section: str, work: str) -> str:
+    """``section`` with what differs between runs of one commit replaced
+    by stable placeholders: the run's temp directory becomes ``<work>``,
+    and Catalyst expression ids (``name#N``) and ``[plan_id=N]``s are
+    renumbered 1, 2, … in order of first appearance. A regeneration then
+    rewrites only the sections whose plans changed."""
+
+    def renumber(pattern: re.Pattern, fmt: str, text: str) -> str:
+        ids: dict[str, int] = {}
+        return pattern.sub(
+            lambda m: fmt.format(ids.setdefault(m.group(1), len(ids) + 1)), text
+        )
+
+    section = renumber(_EXPR_ID, "#{}", section.replace(work, "<work>"))
+    return renumber(_PLAN_ID, "[plan_id={}]", section)
 
 
 def audit(name: str, df, expect: dict[str, bool], notes: str) -> tuple[str, list[str]]:
@@ -584,7 +607,8 @@ def main() -> int:
         "",
     ]
     with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
-        fh.write("\n".join(header) + "\n" + "\n".join(sections))
+        fh.write("\n".join(header) + "\n"
+                 + "\n".join(stable(s, work) for s in sections))
     print("PLANS.md written;", "OK" if not problems else f"problems: {problems}")
     shutil.rmtree(work, ignore_errors=True)
     return 0 if not problems else 1
