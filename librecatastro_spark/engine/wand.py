@@ -3,25 +3,30 @@
 Per-shard scorer + global merge — exactly the reference's ES architecture:
 5 shards each return local top-k, the coordinator re-ranks (reference:
 src/utils/elasticsearch_utils.py:28-30 config; inherent to every
-es.search). Here: per-shard ``applyInPandas`` → local top-k → Catalyst
-``TakeOrderedAndProject`` global merge.
+es.search). Here: one seek plan from the resident footer stats →
+per-shard seek + kernel inside executor tasks (``_shard_task``) →
+local top-k → Catalyst ``TakeOrderedAndProject`` global merge.
 
 Scale design:
   * Document lengths travel INSIDE the posting blocks (``dls_enc`` —
-    the Lucene-norms analog), so an unfiltered query shuffles only the
+    the Lucene-norms analog), so an unfiltered query reads only the
     query terms' blocks: cost O(postings of Q terms), independent of
     corpus size. No doc-table join, ever.
-  * Keyword/prefix filter queries evaluate the predicate in CATALYST
-    first (pushed to the attrs Parquet scan: equality and StartsWith both
-    appear as PushedFilters) and cogroup only the surviving
-    (shard, doc_id) pairs with the blocks — the scorer never sees a
-    non-matching attrs row, so filtered-query shuffle is
-    O(matching docs + query-term postings).
+  * Posting files are term-sorted, so a query reads only the row groups
+    whose footer term range can hold its terms (``_seek_plan``) — on
+    the driver for the coordinator path, in the executor tasks for the
+    distributed one; both run the same per-file read.
+  * Filter clauses (keyword, prefix, ranges, exists, ids, geo) run as a
+    pyarrow scan of each shard's attrs files with the predicates pushed
+    to row-group stats (``_Clauses.docs``) — the scorer never sees a
+    non-matching attrs row.
   * Block bounds are rescaled by idf_now / idf_build so pruning stays
     safe after incremental appends grow N (see builder.py).
-  * A per-shard grouped map whose decode volume is small runs as one
-    stage and one task, with no Exchange ahead of the scorer
-    (``CompressedIndex._per_shard``); a larger one keeps the shuffle.
+  * A query whose decode volume is small runs every shard in one task
+    (one job, one stage, one task with the merge); a larger one runs
+    one task per shard (``CompressedIndex._dispatch``). Aggregations
+    and the compound scorers keep the per-shard grouped map
+    (``CompressedIndex._per_shard``).
 
 The classic block-max WAND pointer walk is per-document Python — banned
 (input_hint). We use a **vectorized two-pass block-max prune** with the
@@ -57,6 +62,7 @@ import pandas as pd
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..analyzer import Analyzer, tokenize_expr
 from ..bm25 import B, K1, ROUND_DECIMALS
@@ -69,26 +75,133 @@ from ..index.builder import (
 from ..index.codec import decode_varbyte, delta_decode
 
 _RESULT_SCHEMA = "doc_id long, score double"
+_RESULT_STRUCT = StructType(
+    [StructField("doc_id", LongType()), StructField("score", DoubleType())]
+)
 
 
-def _prefix_range(col, p: str):
-    """``col`` in [p, successor(p)) — exactly the strings starting with p
-    under codepoint-lexicographic order (Spark's UTF8String order and
-    Parquet min/max stats on UTF-8), with both endpoints plain literals
-    a scan prunes row groups on. ``col`` is a Catalyst column or a
-    pyarrow field expression; the operators read the same on both. The
-    successor increments the last incrementable codepoint, dropping any
-    trailing U+10FFFF chars and skipping the surrogate range, which
-    cannot appear in valid UTF-8; an all-U+10FFFF p has no finite upper
-    bound."""
-    cond = col >= p
+def _successor(p: str) -> str | None:
+    """The least string above every string starting with ``p`` under
+    codepoint-lexicographic order (Spark's UTF8String order and Parquet
+    min/max stats on UTF-8): the last incrementable codepoint
+    incremented, any trailing U+10FFFF chars dropped, the surrogate
+    range skipped (it cannot appear in valid UTF-8). None for an
+    all-U+10FFFF ``p``, which has no finite upper bound."""
     for i in range(len(p) - 1, -1, -1):
         c = ord(p[i]) + 1
         if 0xD800 <= c <= 0xDFFF:
             c = 0xE000
         if c <= 0x10FFFF:
-            return cond & (col < p[:i] + chr(c))
-    return cond
+            return p[:i] + chr(c)
+    return None
+
+
+def _prefix_range(col, p: str):
+    """``col`` in [p, successor(p)) — exactly the strings starting with
+    p, with both endpoints plain literals a scan prunes row groups on.
+    ``col`` is a Catalyst column or a pyarrow field expression; the
+    operators read the same on both."""
+    succ = _successor(p)
+    return col >= p if succ is None else (col >= p) & (col < succ)
+
+
+def _shard_files(root: str):
+    """(shard, path) of every parquet file under ``root``'s hive
+    ``shard=N`` directories, in sorted listing order."""
+    for entry in sorted(os.listdir(root)):
+        if not entry.startswith("shard="):
+            continue
+        d = os.path.join(root, entry)
+        for fname in sorted(os.listdir(d)):
+            if fname.endswith(".parquet"):
+                yield int(entry.split("=", 1)[1]), os.path.join(d, fname)
+
+
+@dataclass(frozen=True)
+class _Seek:
+    """The posting rows one seek keeps: ``term`` in ``terms`` or, with
+    ``pfx``, in the phrase prefix's [pfx, successor) range; with
+    ``window`` (lo, hi), only blocks whose doc-id range overlaps it."""
+
+    terms: tuple
+    pfx: str | None = None
+    window: tuple | None = None
+
+    def __post_init__(self):
+        object.__setattr__(self, "terms", tuple(sorted(set(self.terms))))
+
+    def mask(self, tbl):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        term = tbl.column("term")
+        keep = pc.is_in(term, value_set=pa.array(self.terms, pa.string()))
+        if self.pfx is not None:
+            rng = pc.greater_equal(term, self.pfx)
+            succ = _successor(self.pfx)
+            if succ is not None:
+                rng = pc.and_(rng, pc.less(term, succ))
+            keep = pc.or_(keep, rng)
+        if self.window is not None:
+            lo, hi = self.window
+            keep = pc.and_(keep, pc.and_(
+                pc.greater_equal(tbl.column("last_doc_id"), lo),
+                pc.less_equal(tbl.column("first_doc_id"), hi),
+            ))
+        return keep
+
+
+def _read_row_groups(path: str, rgs: list, shard: int, cols, seek: _Seek):
+    """One postings file's part of a seek: row groups ``rgs`` of
+    ``path``, only ``cols`` (which include ``term``), the rows ``seek``
+    keeps, tagged with their ``shard``; None when no row is kept.
+    The coordinator runs it per file on its thread pool, an executor
+    task serially per shard (``_shard_task``)."""
+    import pyarrow as pa
+
+    pf = pq.ParquetFile(path)
+    try:
+        tbl = pf.read_row_groups(rgs, columns=list(cols), use_threads=False)
+    finally:
+        pf.close()
+    tbl = tbl.filter(seek.mask(tbl))
+    if not tbl.num_rows:
+        return None
+    return tbl.append_column(
+        "shard", pa.array(np.full(tbl.num_rows, shard, dtype=np.int32))
+    )
+
+
+def _shard_task(groups, cols, seek, fn, clauses, attrs_schema, attrs_root):
+    """The executor side of a distributed scored query: for each
+    ``(shard, [(postings file, row groups)], attrs files)`` of its
+    partition, the seek's per-file reads (rows ``seek`` keeps, ``cols``
+    only), the filter clauses over that
+    shard's attrs files (``_Clauses.docs``) and the per-shard kernel
+    ``fn`` — exactly what the coordinator runs, once per shard, so θ
+    pruning is per shard as in ES. Yields (doc_id, score) rows. Every
+    argument is picklable and nothing here reaches the index object:
+    the task needs only pyarrow access to the index path."""
+    import pyarrow as pa
+    import pyarrow.dataset as pads
+
+    for shard, files, attrs_files in groups:
+        tabs = [
+            t for path, rgs in files
+            if (t := _read_row_groups(path, rgs, shard, cols, seek)) is not None
+        ]
+        if not tabs:
+            continue
+        blocks = pa.concat_tables(tabs).to_pandas()
+        if clauses:
+            ds = pads.dataset(
+                attrs_files, schema=attrs_schema, partitioning="hive",
+                partition_base_dir=attrs_root,
+            )
+            out = fn(blocks, clauses.docs(ds))
+        else:
+            out = fn(blocks)
+        yield from zip(out["doc_id"].tolist(), out["score"].tolist())
 
 
 _PD_DTYPES = {"long": "int64", "double": "float64", "string": "object"}
@@ -103,9 +216,11 @@ def _empty(schema: str = _RESULT_SCHEMA) -> pd.DataFrame:
 
 @dataclass(frozen=True)
 class _Clauses:
-    """The constant-score filter clauses of one query, parsed once and
-    rendered per execution site: ``cond()`` for Catalyst over the attrs
-    table, ``docs(dataset)`` for a pyarrow scan of it. Equality /
+    """The constant-score filter clauses of one query, parsed and checked
+    once (``check``) and rendered two ways: ``docs(dataset)`` for a
+    pyarrow scan of the attrs files (every scored query, on either
+    site), ``cond()`` for Catalyst over the attrs table
+    (``constant_score``). Equality /
     ``terms`` In, the [p, successor) prefix range, inclusive ranges,
     IsNotNull, the doc-id In and the geo prune box reach the attrs
     Parquet scan on both sites; ``geo`` compiles through ops.geo. False
@@ -124,11 +239,27 @@ class _Clauses:
             or self.ids is not None or self.geo is not None
         )
 
+    def check(self, columns) -> "_Clauses":
+        """Validate the clauses against the attrs ``columns`` on the
+        driver, before any job: a malformed geo clause and a column the
+        attrs table lacks raise ValueError here, not inside a task."""
+        named = [*(self.filters or {}), *(self.ranges or {}), *(self.exists_cols or [])]
+        if self.prefix is not None:
+            named.append(self.prefix[0])
+        if self.geo is not None:
+            from ..ops.geo import parse_geo_clause
+
+            named += parse_geo_clause(self.geo)[1:3]
+        missing = sorted({c for c in named if c not in columns})
+        if missing:
+            raise ValueError(f"index attrs lack columns {missing}")
+        return self
+
     def cond(self):
         """ONE Catalyst condition over the attrs table (None when no
         clause is given) — every clause reaches the attrs Parquet scan as
         PushedFilters (StartsWith included); ``geo`` compiles through
-        ops.geo.geo_clause_cond (see ``CompressedIndex.search``)."""
+        ops.geo.geo_clause_cond."""
         if not self:
             return None
         cond = F.lit(True)
@@ -157,8 +288,9 @@ class _Clauses:
         return cond
 
     def docs(self, dataset) -> pd.DataFrame:
-        """The (shard, doc_id) pairs of the pyarrow attrs ``dataset``
-        passing every clause. The predicates push into the scan
+        """The (shard, doc_id) pairs of the pyarrow attrs ``dataset`` (the
+        whole table on the coordinator, one shard's files in an executor
+        task) passing every clause. The predicates push into the scan
         (row-group stats + dictionary filtering) and only the columns the
         re-checks need are materialized, so memory is O(matching docs)."""
         import pyarrow as pa
@@ -264,7 +396,7 @@ class _Scored:
     ``kernel(decoder)`` builds the per-shard kernel (the coordinator
     passes its decoded-postings cache; the phrase kernels decode
     themselves and ignore it). ``positional`` queries read the position
-    columns, restrict the distributed scan to the doc window where every
+    columns, restrict the distributed seek to the doc window where every
     term has postings and route by decode volume; ``pfx`` is a phrase
     prefix's open last token. ``est`` is the decode estimate (None
     without a resident dictionary); ``empty`` marks a query no doc can
@@ -718,6 +850,7 @@ class CompressedIndex:
         self.term_stats = load_term_stats(spark, out_dir)
         self._pads_attrs = None
         self._seek_handles = None
+        self._attrs_files = None
         self._dec_cache = None
         self._dec_cache_bytes = 0
         self._df_local: dict[str, int] | None = None
@@ -810,10 +943,14 @@ class CompressedIndex:
         cols: tuple[str, ...] = _SEEK_COLS,
         allowed: DataFrame | None = None,
     ) -> DataFrame:
-        """The per-shard grouped map every distributed kernel runs in:
-        ``fn(blocks)`` once per shard — ``fn(blocks, allowed)`` when the
-        stage cogroups an attrs side — over only the ``cols`` the kernel
-        reads. Grouping stays per shard (θ pruning is per shard); only
+        """The per-shard grouped map the aggregations (``_match_set_stage``),
+        the compound scorers (``function_score``, ``dis_max``,
+        ``boosting``) and ``multifield`` run in — ``search``, the phrases
+        and the expansion tails run in executor tasks instead
+        (``_dispatch``): ``fn(blocks)`` once per shard — ``fn(blocks,
+        allowed)`` when the stage cogroups an attrs side — over only the
+        ``cols`` the kernel reads. Grouping stays per shard (θ pruning is
+        per shard); only
         the Spark plan that runs the groups depends on the work: ``est``
         is the postings the stage decodes (None: unknown), plus n_docs
         when it cogroups attrs (the attrs scan reads the whole table).
@@ -901,8 +1038,14 @@ class CompressedIndex:
         return self._execute(self._search_spec(
             text, k, offset, require_all, must_not_text, should_text,
             search_after, min_match,
-            _Clauses(filters, prefix, ranges, exists_cols, ids, geo),
+            self._clauses(filters, prefix, ranges, exists_cols, ids, geo),
         ), local=False)
+
+    def _clauses(self, filters, prefix, ranges, exists_cols, ids, geo) -> _Clauses:
+        """The filter clauses, checked against the attrs schema."""
+        return _Clauses(filters, prefix, ranges, exists_cols, ids, geo).check(
+            self.attrs.columns
+        )
 
     def _search_spec(
         self, text, k, offset, require_all, must_not_text, should_text,
@@ -940,21 +1083,22 @@ class CompressedIndex:
         )
 
     def _execute(self, spec: _Scored, local: bool):
-        """Run a parsed scored query on one execution site; the sites
-        differ only in the seek, the filter rendering and the merge.
+        """Run a parsed scored query on one execution site. Both sites
+        run one pipeline: the term-dictionary seek (``_seek_plan`` turns
+        the resident footer stats into the row groups that can hold
+        ``wanted`` or a phrase prefix's [pfx, successor) range; each
+        file's part is one ``_read_row_groups``), the filter clauses as
+        a pyarrow scan of the attrs files (``_Clauses.docs``) and the
+        spec's kernel. They differ in where it runs and in the merge.
 
-        * cluster: the postings scan pruned to ``wanted`` (In, plus a
-          phrase prefix's [pfx, successor) range and a positional
-          query's doc window, ``_doc_window``) → ``_per_shard``, the
-          filter clauses cogrouped from a Catalyst attrs scan
-          (``_Clauses.cond``: the predicate reaches the attrs Parquet
-          scan as PushedFilters, so the cogroup ships only the SURVIVING
-          (shard, doc_id) pairs) → ``_ranked``;
-        * local: the coordinator term-dictionary seek (``_seek_blocks``;
-          a phrase prefix expands through the resident dictionary) → the
-          kernel run once whole-index on the driver over the
-          decoded-postings cache (``_make_decoder``), the filter clauses
-          from a pyarrow attrs scan (``_Clauses.docs``) →
+        * cluster: ``_dispatch`` runs it inside executor tasks, once per
+          shard, with the kernel decoding inline (``decoder=None``); a
+          positional query's seek also keeps only the doc window where
+          every term has postings (``_doc_window``) → ``_ranked``, one
+          TakeOrderedAndProject job;
+        * local: the seek's per-file reads fan out on the coordinator's
+          thread pool → the kernel run once whole-index on the driver
+          over the decoded-postings cache (``_make_decoder``) →
           ``_ranked_local``.
 
         The whole-index local pass is bit-identical to the per-shard
@@ -975,13 +1119,7 @@ class CompressedIndex:
         if local:
             if spec.empty:
                 return _empty()
-            wanted = spec.wanted
-            if spec.pfx is not None:
-                expansion = self._prefix_terms(spec.pfx)
-                if not expansion:
-                    return _empty()
-                wanted = sorted(set(wanted) | set(expansion))
-            blocks = self._seek_blocks(wanted, cols=cols)
+            blocks = self._seek_blocks(spec.wanted, cols=cols, pfx=spec.pfx)
             attrs = spec.clauses.docs(self._attrs_dataset()) if spec.clauses else None
             if not len(blocks):
                 return _empty()
@@ -991,28 +1129,51 @@ class CompressedIndex:
             return _ranked_local(fn(blocks, attrs), spec.k, spec.offset)
         if spec.empty:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        term = F.col("term")
-        cond = term.isin(spec.wanted)
-        if spec.pfx is not None:
-            cond = cond | _prefix_range(term, spec.pfx)
+        win = None
         if spec.positional:
             win = self._doc_window(spec.terms)
             if win is None:
                 return self.spark.createDataFrame([], _RESULT_SCHEMA)
-            cond = (
-                cond
-                & (F.col("last_doc_id") >= win[0])
-                & (F.col("first_doc_id") <= win[1])
-            )
-        allowed = (
-            self.attrs.where(spec.clauses.cond()).select("shard", "doc_id")
-            if spec.clauses else None
-        )
-        partial = self._per_shard(
-            self.postings.where(cond), spec.kernel(), _RESULT_SCHEMA,
-            spec.est, cols=cols, allowed=allowed,
+        partial = self._dispatch(
+            _Seek(spec.wanted, spec.pfx, win), cols,
+            spec.kernel(), spec.est, spec.clauses,
         )
         return _ranked(partial, spec.k, spec.offset, after=spec.after)
+
+    def _dispatch(
+        self, seek: _Seek, cols, fn, est: int | None,
+        clauses: _Clauses = _Clauses(),
+    ) -> DataFrame:
+        """The cluster site: the seek plan of ``seek`` (``_seek_plan``:
+        shard → [(postings file, row groups)], from the resident footer
+        stats) as ``sc.parallelize(...).mapPartitions`` over
+        ``_shard_task``, which reads each shard's row groups (the rows
+        ``seek`` keeps, ``cols`` only), computes its filter clauses
+        from its own attrs files and runs ``fn`` once per shard — the
+        per-shard kernel of the ES fan-out. The result is a lazy
+        DataFrame of (doc_id, score) rows: no Catalyst scan, no Arrow
+        hand-off of posting blocks from the JVM, no Exchange. ``est`` is
+        the decode estimate: at most ``_ONE_TASK_MAX_POSTINGS``, every
+        shard runs in one task (one job, one stage, one task with the
+        merge); above it, or unknown (no resident dictionary), one task
+        per shard."""
+        _, attrs_files = self._files()
+        groups = [
+            (shard, files, attrs_files.get(shard, []) if clauses else [])
+            for shard, files in self._seek_plan(seek.terms, seek.pfx).items()
+        ]
+        if not groups:
+            return self.spark.createDataFrame([], _RESULT_SCHEMA)
+        one = est is not None and est <= self._ONE_TASK_MAX_POSTINGS
+        task = functools.partial(
+            _shard_task, cols=tuple(cols), seek=seek, fn=fn, clauses=clauses,
+            attrs_schema=self._attrs_dataset().schema if clauses else None,
+            attrs_root=os.path.join(self.out_dir, "attrs"),
+        )
+        rdd = self.spark.sparkContext.parallelize(
+            groups, 1 if one else len(groups)
+        ).mapPartitions(task)
+        return self.spark.createDataFrame(rdd, _RESULT_STRUCT, verifySchema=False)
 
     def _needs_positions(self, method: str) -> None:
         """Phrase queries are answered from positional postings only —
@@ -1055,10 +1216,11 @@ class CompressedIndex:
         DuckDB oracle. ES's phrase-frequency scoring is intentionally not
         reproduced (documented divergence).
 
-        Plan: postings scan pruned to the phrase terms (In filter +
-        doc-window BETWEEN from block metadata, ``_doc_window``) →
-        per-shard grouped map (verify + BM25 require_all top-k in one
-        decode pass) → global rounded (score DESC, doc_id ASC) merge.
+        Plan: the seek of the phrase terms' row groups, kept to the
+        doc window where every term has postings (``_doc_window``, from
+        block metadata) → the per-shard kernel in executor tasks (verify
+        + BM25 require_all top-k in one decode pass) → global rounded
+        (score DESC, doc_id ASC) merge.
         """
         return self._execute(
             self._phrase_spec("match_phrase", text, k, offset, slop), local=False
@@ -1131,11 +1293,11 @@ class CompressedIndex:
         doc_id ASC — the same contract, and the vocab-range scan is the
         cheaper plan for pure type-ahead).
 
-        Plan: ONE postings scan covering both roles — In(complete terms)
-        OR the [pfx, successor) vocab range (both predicates push to the
-        term-sorted Parquet files; the range prunes row groups exactly
-        like ``term_prefix_search``), doc-window BETWEEN from the
-        complete terms' block metadata → per-shard grouped map
+        Plan: ONE seek covering both roles — the complete terms OR the
+        [pfx, successor) vocab range (both prune the term-sorted files'
+        row groups; the range exactly like ``term_prefix_search``), kept
+        to the complete terms' doc window → the per-shard kernel in
+        executor tasks
         (positions.phrase_prefix_topk_fn: chain the complete positions,
         then a zero-slop step into the concatenated expansion streams) →
         global rounded merge. Data volume is O(complete-term postings +
@@ -1213,10 +1375,11 @@ class CompressedIndex:
         offset: int = 0,
     ) -> pd.DataFrame:
         """``match_phrase_prefix`` run on the coordinator
-        (``_execute``): the prefix expands through the RESIDENT term
-        dictionary (required, ValueError without it) and the seek reads
-        the complete and expansion terms' blocks; a single-token query
-        takes the constant-score local tail. Routes by decode estimate
+        (``_execute``), which needs the RESIDENT term dictionary
+        (ValueError without it): the seek reads the complete terms' and
+        the [pfx, successor) range's blocks; a single-token query
+        expands through the dictionary and takes the constant-score
+        local tail. Routes by decode estimate
         like ``match_phrase_local``."""
         self._resident("match_phrase_prefix_local")
         spec = self._phrase_spec(
@@ -1263,106 +1426,117 @@ class CompressedIndex:
             self._pool_size = want
         return ex
 
-    def _seek_blocks(
-        self, wanted: list[str], cols: tuple[str, ...] = _SEEK_COLS
-    ) -> pd.DataFrame:
-        """Coordinator term-dictionary seek: posting files are term-sorted
-        (builder sorts ("shard", "term", ...) into the partitioned write),
-        so each file's row-group term min/max forms two ascending lists and
-        the row groups that can hold a term are exactly
-        [bisect_left(maxs, t), bisect_right(mins, t)). Footers and stats
-        are parsed ONCE per index open (the resident Lucene term dictionary
-        analog — ~1 ms/file); a query then reads only its own row groups
-        via ParquetFile.read_row_groups, and of them only ``cols`` (which
-        must include ``term``). Conservative by construction:
-        parquet stat truncation only widens [min, max], and a file whose
-        stats are missing or out of order (a legacy unsorted index) demotes
-        to reading all its row groups — never a missed posting."""
-        import bisect
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
+    def _files(self) -> tuple[list, dict[int, list[str]]]:
+        """The index's file listing, built once per ``refresh()``: each
+        postings file's seek handle ``(path, n_row_groups, shard, mins,
+        maxs)`` — the row groups' term min/max from the footer stats, the
+        resident Lucene term dictionary analog (~1 ms/file) — and each
+        shard's attrs files, which ship with a seek plan so executor tasks
+        do no directory discovery. No file handle stays open (an index can
+        have thousands of files; pinning one fd each would exhaust
+        ulimit). A file whose stats are missing or out of order (a legacy
+        unsorted index) gets ``mins`` None: every seek reads all of it."""
         if self._seek_handles is None:
-            # stats only — no file handle is kept open (an index can have
-            # thousands of files; pinning one fd each would exhaust ulimit)
             handles = []
             post_dir = os.path.join(self.out_dir, "postings")
-            for entry in sorted(os.listdir(post_dir)):
-                if not entry.startswith("shard="):
-                    continue
-                shard = int(entry.split("=", 1)[1])
-                d = os.path.join(post_dir, entry)
-                for fname in sorted(os.listdir(d)):
-                    if not fname.endswith(".parquet"):
-                        continue
-                    path = os.path.join(d, fname)
-                    pf = pq.ParquetFile(path)
-                    try:
-                        md = pf.metadata
-                        n_rgs = md.num_row_groups
-                        mins: list[str] | None = []
-                        maxs: list[str] = []
-                        if n_rgs:
-                            rg0 = md.row_group(0)
-                            tcol = next(
-                                j
-                                for j in range(rg0.num_columns)
-                                if rg0.column(j).path_in_schema == "term"
-                            )
-                            for i in range(n_rgs):
-                                s = md.row_group(i).column(tcol).statistics
-                                if s is None or not s.has_min_max:
-                                    mins = None  # no stats → scan whole file
-                                    break
-                                mins.append(s.min)
-                                maxs.append(s.max)
-                    finally:
-                        pf.close()
-                    if mins is not None and (
-                        any(a > b for a, b in zip(mins, mins[1:]))
-                        or any(a > b for a, b in zip(maxs, maxs[1:]))
-                    ):
-                        mins = None  # not term-sorted → scan whole file
-                    handles.append((path, n_rgs, shard, mins, maxs))
-            self._seek_handles = handles
-        value_set = pa.array(sorted(set(wanted)), pa.string())
+            for shard, path in _shard_files(post_dir):
+                pf = pq.ParquetFile(path)
+                try:
+                    md = pf.metadata
+                    n_rgs = md.num_row_groups
+                    mins: list[str] | None = []
+                    maxs: list[str] = []
+                    if n_rgs:
+                        rg0 = md.row_group(0)
+                        tcol = next(
+                            j
+                            for j in range(rg0.num_columns)
+                            if rg0.column(j).path_in_schema == "term"
+                        )
+                        for i in range(n_rgs):
+                            s = md.row_group(i).column(tcol).statistics
+                            if s is None or not s.has_min_max:
+                                mins = None  # no stats → scan whole file
+                                break
+                            mins.append(s.min)
+                            maxs.append(s.max)
+                finally:
+                    pf.close()
+                if mins is not None and (
+                    any(a > b for a, b in zip(mins, mins[1:]))
+                    or any(a > b for a, b in zip(maxs, maxs[1:]))
+                ):
+                    mins = None  # not term-sorted → scan whole file
+                handles.append((path, n_rgs, shard, mins, maxs))
+            attrs: dict[int, list[str]] = {}
+            for shard, path in _shard_files(os.path.join(self.out_dir, "attrs")):
+                attrs.setdefault(shard, []).append(path)
+            self._seek_handles, self._attrs_files = handles, attrs
+        return self._seek_handles, self._attrs_files
 
-        def read_one(handle):
-            path, n_rgs, shard, mins, maxs = handle
+    def _seek_plan(
+        self, wanted, pfx: str | None = None
+    ) -> dict[int, list[tuple[str, list[int]]]]:
+        """Coordinator term-dictionary seek plan: shard → [(postings file,
+        row groups)] holding ``wanted`` or, with ``pfx``, any term in
+        [pfx, successor). Posting files are term-sorted (builder sorts
+        ("shard", "term", ...) into the partitioned write), so each file's
+        row-group term min/max form two ascending lists and the row groups
+        that can hold a term t are exactly [bisect_left(maxs, t),
+        bisect_right(mins, t)); a range [pfx, succ) hits
+        [bisect_left(maxs, pfx), bisect_left(mins, succ)). Conservative by
+        construction: parquet stat truncation only widens [min, max], and
+        a file without usable stats is read whole — never a missed
+        posting. Files keep the listing's order, so both sites read blocks
+        in the same order."""
+        import bisect
+
+        terms = sorted(set(wanted))
+        succ = None if pfx is None else _successor(pfx)
+        plan: dict[int, list[tuple[str, list[int]]]] = {}
+        for path, n_rgs, shard, mins, maxs in self._files()[0]:
             if mins is None:
                 rgs = list(range(n_rgs))
             else:
-                rgs = sorted(
-                    {
-                        i
-                        for t in wanted
-                        for i in range(
-                            bisect.bisect_left(maxs, t),
-                            bisect.bisect_right(mins, t),
-                        )
-                    }
-                )
-            if not rgs:
-                return None
-            pf = pq.ParquetFile(path)
-            try:
-                tbl = pf.read_row_groups(rgs, columns=list(cols), use_threads=False)
-            finally:
-                pf.close()
-            tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=value_set))
-            if not tbl.num_rows:
-                return None
-            return tbl.append_column(
-                "shard", pa.array(np.full(tbl.num_rows, shard, dtype=np.int32))
-            )
+                hit = {
+                    i
+                    for t in terms
+                    for i in range(
+                        bisect.bisect_left(maxs, t), bisect.bisect_right(mins, t)
+                    )
+                }
+                if pfx is not None:
+                    hit.update(range(
+                        bisect.bisect_left(maxs, pfx),
+                        n_rgs if succ is None else bisect.bisect_left(mins, succ),
+                    ))
+                rgs = sorted(hit)
+            if rgs:
+                plan.setdefault(shard, []).append((path, rgs))
+        return plan
 
-        # per-file reads fan out on the persistent pool (arrow IO +
-        # decompression release the GIL); use_threads=False inside keeps
-        # one decode per task instead of pool-on-pool thrash
+    def _seek_blocks(
+        self, wanted, cols: tuple[str, ...] = _SEEK_COLS, pfx: str | None = None
+    ) -> pd.DataFrame:
+        """The coordinator seek: ``_seek_plan``'s row groups read per file
+        (``_read_row_groups``, only ``cols``, which must include ``term``)
+        on the persistent thread pool — arrow IO and decompression release
+        the GIL; ``use_threads=False`` inside keeps one decode per task
+        instead of pool-on-pool thrash — as one pandas frame of blocks
+        with their ``shard``."""
+        import pyarrow as pa
+
+        seek = _Seek(wanted, pfx)
+        reads = [
+            (path, rgs, shard)
+            for shard, files in self._seek_plan(wanted, pfx).items()
+            for path, rgs in files
+        ]
         tabs = [
             t
-            for t in self._executor().map(read_one, self._seek_handles)
+            for t in self._executor().map(
+                lambda r: _read_row_groups(*r, cols, seek), reads
+            )
             if t is not None
         ]
         if not tabs:
@@ -1516,7 +1690,7 @@ class CompressedIndex:
         return self._execute(self._search_spec(
             text, k, offset, require_all, must_not_text, should_text,
             search_after, min_match,
-            _Clauses(filters, prefix, ranges, exists_cols, ids, geo),
+            self._clauses(filters, prefix, ranges, exists_cols, ids, geo),
         ), local=True)
 
     def more_like_this(
@@ -1602,20 +1776,27 @@ class CompressedIndex:
         )
         return hits.join(hl, "doc_id", "left").select("doc_id", "score", "snippet")
 
+    #: the posting columns the constant-score tails read: ``_doc_page``
+    #: decodes only ``docs_enc``
+    _DOC_COLS = ("term", "docs_enc")
+
     def _constant_score_docs(
-        self, blocks: DataFrame, k: int, est: int | None, offset: int = 0
+        self, k: int, est: int | None, offset: int = 0, *,
+        terms=(), pfx: str | None = None,
     ) -> DataFrame:
-        """Distinct doc_ids of the given posting blocks, constant score 1.0,
-        deterministic doc_id order — the shared tail of the term-expansion
-        queries (prefix, fuzzy). Per-shard decode keeps only its local
-        top-(k+offset) by doc_id, so the merge shuffles O(shards ×
+        """Distinct doc_ids of the posting blocks of ``terms`` (or of the
+        [pfx, successor) range), constant score 1.0, deterministic doc_id
+        order — the shared tail of the term-expansion queries (prefix,
+        fuzzy, wildcard, regexp). The executor seek of ``_dispatch``
+        reads ``_DOC_COLS``; each shard keeps only its local
+        top-(k+offset) by doc_id, so the merge sees O(shards ×
         (k+offset)) rows; the page cut (offset → limit) happens after the
         global doc_id sort, the same keyset-free pagination contract the
-        scored paths use. ``est`` is the blocks' Σ df (``_per_shard``)."""
+        scored paths use. ``est`` is the blocks' Σ df."""
         n = k + offset
-        partial = self._per_shard(
-            blocks, lambda pdf: _doc_page(pdf["docs_enc"], 0, n),
-            _RESULT_SCHEMA, est, cols=("docs_enc",),
+        partial = self._dispatch(
+            _Seek(terms, pfx), self._DOC_COLS,
+            lambda bl: _doc_page(bl["docs_enc"], 0, n), est,
         )
         ranked = partial.orderBy(F.asc("doc_id"))
         if offset:
@@ -1819,7 +2000,7 @@ class CompressedIndex:
         filter-only path uses. The clauses are ``search``'s, compiled by
         the same code (``geo`` included); an unknown clause name raises
         TypeError instead of silently matching every doc."""
-        clauses = _Clauses(filters, prefix, ranges, exists_cols, ids, geo)
+        clauses = self._clauses(filters, prefix, ranges, exists_cols, ids, geo)
         return (
             (self.attrs.where(clauses.cond()) if clauses else self.attrs)
             .select("doc_id", F.lit(float(boost)).alias("score"))
@@ -1856,11 +2037,12 @@ class CompressedIndex:
     def term_prefix_search(
         self, prefix: str, k: int = 10, offset: int = 0
     ) -> DataFrame:
-        """B5 prefix query as a term-dictionary RANGE scan: the predicate
-        ``term >= p AND term < p + U+10FFFF`` reaches the Parquet scan as
-        min/max row-group pruning (postings are written sorted by term, so
-        non-matching row groups are skipped — the Lucene term-dictionary
-        seek analog). Constant-score 1.0, deterministic doc_id order;
+        """B5 prefix query as a term-dictionary RANGE seek: the range
+        [p, successor(p)) selects row groups by their footer term min/max
+        (postings are written sorted by term, so non-matching row groups
+        are skipped — the Lucene term-dictionary seek analog), read in
+        executor tasks (``_constant_score_docs``). Constant-score 1.0,
+        deterministic doc_id order;
         ``offset`` pages within it (the single-token type-ahead routes
         thread theirs through here)."""
         # the resident dictionary is a hash map: the estimate walks it,
@@ -1869,10 +2051,7 @@ class CompressedIndex:
         est = self._df_sum(
             t for t in self._df_local or () if t.startswith(prefix)
         )
-        return self._constant_score_docs(
-            self.postings.where(_prefix_range(F.col("term"), prefix)), k, est,
-            offset=offset,
-        )
+        return self._constant_score_docs(k, est, offset, pfx=prefix)
 
     def pinned(self, ids: list[int], text: str, k: int = 10) -> DataFrame:
         """ES ``pinned`` query — promoted ids above organic hits; see
@@ -1934,11 +2113,12 @@ class CompressedIndex:
     ) -> pd.DataFrame:
         """Coordinator twin of ``_constant_score_docs``: term-dictionary
         seek of the candidate terms' posting blocks (pyarrow row-group
-        pruning, no Spark job), then the same distinct-doc page
-        [offset, offset+k)."""
+        pruning, ``_DOC_COLS`` only, no Spark job), then the same
+        distinct-doc page [offset, offset+k)."""
         if not cands:
             return _empty()
-        return _doc_page(self._seek_blocks(cands)["docs_enc"], offset, offset + k)
+        blocks = self._seek_blocks(cands, cols=self._DOC_COLS)
+        return _doc_page(blocks["docs_enc"], offset, offset + k)
 
     def fuzzy_term_search_local(
         self, term: str, k: int = 10, max_edits: int = 1, prefix_len: int = 0,
@@ -2038,8 +2218,9 @@ class CompressedIndex:
         for. ``match`` (a Python predicate over a term) walks the
         RESIDENT term dictionary on the coordinator, then
         ``_constant_score_local``; ``vocab`` (a Catalyst-filtered
-        term_stats (term, df) scan) runs distributed, then In(term) into
-        the postings scan and ``_constant_score_docs``. Both keep the
+        term_stats (term, df) scan) runs distributed, then the seek of
+        the matched terms in executor tasks (``_constant_score_docs``).
+        Both keep the
         best ``max_expansions`` terms by (-df, term), so the two sites
         expand term-for-term alike (``_cap_expansion``)."""
         if max_expansions <= 0:
@@ -2056,10 +2237,7 @@ class CompressedIndex:
         cands = self._cap_expansion(vocab, max_expansions)
         if not cands:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        return self._constant_score_docs(
-            self.postings.where(F.col("term").isin(cands)), k,
-            self._df_sum(cands),
-        )
+        return self._constant_score_docs(k, self._df_sum(cands), terms=cands)
 
     def fuzzy_term_search(
         self, term: str, k: int = 10, max_edits: int = 1, prefix_len: int = 0,
@@ -2077,7 +2255,7 @@ class CompressedIndex:
         constraint pushes StringStartsWith into the vocab scan. The
         matched terms — capped at ``max_expansions`` best-by-df via a
         distributed TakeOrderedAndProject (see ``_cap_expansion``) —
-        then push an ``In(term, …)`` filter into the postings scan.
+        then seek their row groups in executor tasks.
 
         Constant score 1.0 with deterministic doc_id order — the same
         contract as ``term_prefix_search`` (ES scores fuzzy matches with
@@ -2126,7 +2304,7 @@ class CompressedIndex:
         distributed and the driver holds at most ``max_expansions``
         survivors via ``_cap_expansion``), the survivors are matched
         with one codegen'd ``rlike`` on an anchored regex, and the
-        matched terms push ``In(term, …)`` into the postings scan.
+        matched terms' row groups are sought in executor tasks.
         Constant score 1.0, deterministic doc_id order (same contract and
         oracle shape as prefix/fuzzy; ES wildcard is constant-score too).
         """
@@ -2155,7 +2333,7 @@ class CompressedIndex:
         ENTIRE text matches ``regex`` (ES anchors implicitly; so does
         this). Dictionary-expansion architecture as above — one rlike
         over the vocab scan, ``max_expansions``-capped best-by-df
-        (``_cap_expansion``), then In(term) into the postings. Patterns
+        (``_cap_expansion``), then the seek of those terms. Patterns
         must stay in the Java-regex ∩ RE2 common subset (char classes,
         alternation, quantifiers — no backrefs) so the DuckDB twin
         (regexp_full_match) is exact; documented engine contract, same

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from librecatastro_spark.engine.wand import CompressedIndex
 from librecatastro_spark.index.builder import build_index, load_term_stats
 from librecatastro_spark.session import get_spark
+from perfbench.obs import Footprint
 
 
 def formatted_plan(df) -> str:
@@ -58,14 +59,16 @@ CHECKS = {
 
 _EXPR_ID = re.compile(r"(?<=[\w)])#(\d+)")
 _PLAN_ID = re.compile(r"\[plan_id=(\d+)\]")
+_RDD_ID = re.compile(r"RDD\[(\d+)\]")
 
 
 def stable(section: str, work: str) -> str:
     """``section`` with what differs between runs of one commit replaced
     by stable placeholders: the run's temp directory becomes ``<work>``,
     and Catalyst expression ids (``name#N``) and ``[plan_id=N]``s are
-    renumbered 1, 2, … in order of first appearance. A regeneration then
-    rewrites only the sections whose plans changed."""
+    and an executor-path scan's ``RDD[N]`` are renumbered 1, 2, … in
+    order of first appearance. A regeneration then rewrites only the
+    sections whose plans changed."""
 
     def renumber(pattern: re.Pattern, fmt: str, text: str) -> str:
         ids: dict[str, int] = {}
@@ -74,10 +77,79 @@ def stable(section: str, work: str) -> str:
         )
 
     section = renumber(_EXPR_ID, "#{}", section.replace(work, "<work>"))
+    section = renumber(_RDD_ID, "RDD[{}]", section)
     return renumber(_PLAN_ID, "[plan_id={}]", section)
 
 
-def audit(name: str, df, expect: dict[str, bool], notes: str) -> tuple[str, list[str]]:
+#: the plan of a query the executor tasks answer (``_dispatch``): an RDD
+#: scan of the per-shard rows under one TakeOrderedAndProject merge — no
+#: grouped map and no Exchange on either side
+EXECUTOR_PLAN = {"take_ordered": True, "grouped_map": False, "exchange": False}
+
+
+def seek_audit(index, make, pos_enc: bool = False):
+    """``(df, lines, problems)``: the DataFrame ``make()`` builds and an
+    audit of the seek its executor tasks run, recorded at
+    ``index._dispatch``: the row groups the seek plan reads against the
+    ones ``perfbench.obs.Footprint`` says its terms need (equal for exact
+    terms; for a phrase prefix's [pfx, successor) range, at least the
+    ones its dictionary expansion needs — no posting lost), the posting
+    columns read (``pos_enc`` only when ``pos_enc``) and the tasks."""
+    seen = []
+    dispatch = index._dispatch
+
+    def record(seek, cols, *args, **kwargs):
+        out = dispatch(seek, cols, *args, **kwargs)
+        seen.append((seek, tuple(cols), out.rdd.getNumPartitions()))
+        return out
+
+    index._dispatch = record
+    try:
+        df = make()
+    finally:
+        del index._dispatch
+    lines, problems = [], []
+    if not seen:
+        problems.append("no executor seek ran")
+    fp = Footprint(index.out_dir)
+    for seek, cols, tasks in seen:
+        plan = index._seek_plan(seek.terms, seek.pfx)
+        planned = sum(len(rgs) for files in plan.values() for _, rgs in files)
+        n_files = sum(len(files) for files in plan.values())
+        terms = list(seek.terms)
+        if seek.pfx is not None:
+            terms += [t for t in fp.postings if t.startswith(seek.pfx)]
+        need = fp.cost(sorted(set(terms)))["row_groups"]
+        ok = planned >= need if seek.pfx is not None else planned == need
+        cmp = ">=" if seek.pfx is not None else "=="
+        what = f"{len(seek.terms)} terms" + (
+            f" + prefix range [{seek.pfx!r}, successor)" if seek.pfx is not None else ""
+        )
+        lines.append(
+            f"- {'OK ' if ok else '!! '}seek: {what} → {planned} row groups "
+            f"in {n_files} files (Footprint.cost {need}; expected planned "
+            f"{cmp} cost)"
+        )
+        reads_pos = "pos_enc" in cols
+        lines.append(
+            f"- {'OK ' if reads_pos == pos_enc else '!! '}columns read: "
+            f"{', '.join(cols)} (`pos_enc` {'present' if reads_pos else 'absent'}, "
+            f"expected {'present' if pos_enc else 'absent'})"
+        )
+        lines.append(f"- tasks: {tasks} for {len(plan)} shards")
+        if not ok:
+            problems.append(f"seek plans {planned} row groups, Footprint.cost {need}")
+        if reads_pos != pos_enc:
+            problems.append(f"seek reads {cols}")
+    return df, lines, problems
+
+
+def audit(
+    name: str, df, expect: dict[str, bool], notes: str, seek=None
+) -> tuple[str, list[str]]:
+    """One PLANS.md section: ``df``'s formatted plan grepped for
+    ``expect``; ``seek`` is ``seek_audit``'s (lines, problems) for a
+    query the executor tasks answer."""
     plan = formatted_plan(df)
     problems = []
     for key, want in expect.items():
@@ -94,6 +166,9 @@ def audit(name: str, df, expect: dict[str, bool], notes: str) -> tuple[str, list
             f"- {mark}`{CHECKS[key]}` {'present' if have else 'absent'}"
             f" (expected {'present' if want else 'absent'})"
         )
+    if seek is not None:
+        lines += seek[0]
+        problems += [f"{name}: {p}" for p in seek[1]]
     lines += ["", "```", plan.strip(), "```", ""]
     return "\n".join(lines), problems
 
@@ -133,52 +208,67 @@ def main() -> int:
     )
     sections.append(s); problems += p
 
+    df, *seek = seek_audit(index, lambda: index.search("query scan", k=10))
     s, p = audit(
         "BM25 top-k via WAND scorer (unfiltered)",
-        index.search("query scan", k=10),
-        {"take_ordered": True, "grouped_map": True, "exchange": False},
-        "Per-shard grouped-map scorer then a single global "
-        "TakeOrderedAndProject merge — the ES shard-fanout/coordinator "
-        "pattern. The query-term postings are a small decode volume, so "
-        "the grouped map runs over one coalesced partition: NO Exchange "
-        "anywhere, one stage and one task.",
+        df, EXECUTOR_PLAN,
+        "Per-shard seek + scorer inside executor tasks, then a single "
+        "global TakeOrderedAndProject merge — the ES shard-fanout/"
+        "coordinator pattern. The driver turns the resident footer stats "
+        "into a seek plan (the row groups that can hold the query terms); "
+        "each task reads its shards' row groups with pyarrow and runs the "
+        "kernel, so the plan is an RDD scan of (doc_id, score) rows: no "
+        "grouped map, no Exchange anywhere, and the query-term postings "
+        "are a small decode volume, so every shard runs in one task.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
     index._ONE_TASK_MAX_POSTINGS = 0
     try:
-        fanned = index.search("query scan", k=10)
+        fanned, *seek = seek_audit(
+            index, lambda: index.search("query scan", k=10)
+        )
     finally:
         del index._ONE_TASK_MAX_POSTINGS
     s, p = audit(
         "BM25 top-k fanned out (one-task limit forced to 0)",
-        fanned,
-        {"take_ordered": True, "grouped_map": True, "exchange": True},
+        fanned, EXECUTOR_PLAN,
         "With the one-task decode-volume limit at 0, the estimate "
-        "exceeds it and the stage keeps the shuffled plan: the blocks "
-        "hash-partition on shard into the shuffle partitions (Exchange "
-        "hashpartitioning(shard)) ahead of the same grouped map — the "
-        "shape a large query gets.",
+        "exceeds it and the seek plan runs one task per shard (the "
+        "`tasks` line) — the shape a large query gets. There is still no "
+        "shuffle on either side: each task scores whole shards and the "
+        "merge is one TakeOrderedAndProject over their top-k rows.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
+    df, *seek = seek_audit(
+        index, lambda: index.search("query scan", k=10, filters={"lang": "py"})
+    )
     s, p = audit(
         "Keyword-FILTERED WAND query (B4+B14 — r2 pushdown fix)",
-        index.search("query scan", k=10, filters={"lang": "py"}),
-        {"pushed_filter": True, "take_ordered": True},
-        "The keyword predicate is applied to the attrs table in CATALYST "
-        "before the cogroup, so it reaches the attrs Parquet scan as a "
-        "PushedFilter and the scorer receives only surviving "
-        "(shard, doc_id) pairs — round 1 shipped the whole attrs "
-        "partition into pandas instead.",
+        df, EXECUTOR_PLAN,
+        "The keyword predicate runs in each executor task as a pyarrow "
+        "scan of that shard's attrs files with the predicate pushed to "
+        "row-group stats and dictionary filtering (`_Clauses.docs`), so "
+        "the scorer receives only surviving doc ids — round 1 shipped the "
+        "whole attrs partition into pandas instead. The clauses are "
+        "checked against the attrs schema on the driver before any job.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
+    df, *seek = seek_audit(
+        index, lambda: index.search("query scan", k=10, prefix=("lang", "p"))
+    )
     s, p = audit(
         "Prefix-FILTERED WAND query (B5+B14 — r2 pushdown fix)",
-        index.search("query scan", k=10, prefix=("lang", "p")),
-        {"pushed_filter": True, "pushed_startswith": True, "take_ordered": True},
-        "StartsWith pushes to the Parquet scan exactly like equality.",
+        df, EXECUTOR_PLAN,
+        "The prefix clause reaches each shard's attrs scan as the "
+        "[p, successor) range (row-group pruning), with an exact "
+        "starts_with re-check on the survivors, exactly like equality.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
@@ -190,47 +280,49 @@ def main() -> int:
         index_options="positions",
     )
     pindex = CompressedIndex(spark, pos_dir)
+    df, *seek = seek_audit(pindex, lambda: pindex.search("query scan", k=10))
     s, p = audit(
         "BM25 top-k on a positions index (column pruning)",
-        pindex.search("query scan", k=10),
-        {"pushed_filter": True, "take_ordered": True, "reads_pos_enc": False},
+        df, EXECUTOR_PLAN,
         "The scorer reads only the columns its kernel decodes: on an "
-        "index built with positions, the postings scan's ReadSchema "
-        "leaves out pos_enc, the largest column of a positional block.",
+        "index built with positions, the executor seek leaves out "
+        "pos_enc, the largest column of a positional block (the "
+        "`columns read` line).",
+        seek=seek,
     )
     sections.append(s); problems += p
+    df, *seek = seek_audit(
+        pindex, lambda: pindex.match_phrase("the scan", k=10), pos_enc=True
+    )
     s, p = audit(
         "match_phrase index-only plan (r3 positional postings)",
-        pindex.match_phrase("the scan", k=10),
-        {
-            "pushed_filter": True, "take_ordered": True, "cartesian": False,
-            "arrow_eval": False, "grouped_map": True,
-        },
-        "Index-only phrase: the ONLY relation in the plan is the postings "
-        "scan (In(term) + doc-window BETWEEN pushed to Parquet footer "
-        "stats); NO ArrowEvalPython means the source table is never "
-        "scanned — phrase verify + BM25 scoring happen inside the one "
-        "per-shard grouped map (FlatMapGroupsInPandas) over decoded "
-        "position streams, and the merge is TakeOrderedAndProject. The "
-        "query's data volume is O(phrase terms' postings) at any corpus "
-        "size.",
+        df, {**EXECUTOR_PLAN, "cartesian": False, "arrow_eval": False},
+        "Index-only phrase: the executor seek reads the phrase terms' "
+        "row groups, position columns included, kept to the doc window "
+        "where every term has postings (from block metadata); NO "
+        "ArrowEvalPython means the source table is never scanned — "
+        "phrase verify + BM25 scoring happen per shard in the task over "
+        "decoded position streams, and the merge is "
+        "TakeOrderedAndProject. The query's data volume is O(phrase "
+        "terms' postings) at any corpus size.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
+    df, *seek = seek_audit(
+        pindex, lambda: pindex.match_phrase_prefix("the sc", k=10), pos_enc=True
+    )
     s, p = audit(
         "match_phrase_prefix index-only plan (r4)",
-        pindex.match_phrase_prefix("the sc", k=10),
-        {
-            "pushed_filter": True, "take_ordered": True, "cartesian": False,
-            "arrow_eval": False, "grouped_map": True,
-        },
-        "Index-only type-ahead: ONE postings scan covers both roles — "
-        "In(complete terms) OR the [pfx, successor) range, both pushed "
-        "to the term-sorted Parquet files, doc-window BETWEEN from the "
-        "complete terms' block metadata. NO ArrowEvalPython (the source "
-        "table is never scanned); the expansion streams chain inside the "
-        "per-shard grouped map with a zero-slop step and are never "
-        "collected. Merge is TakeOrderedAndProject.",
+        df, {**EXECUTOR_PLAN, "cartesian": False, "arrow_eval": False},
+        "Index-only type-ahead: ONE seek covers both roles — the complete "
+        "terms OR the [pfx, successor) range, both pruning the "
+        "term-sorted files' row groups by footer stats, kept to the "
+        "complete terms' doc window. NO ArrowEvalPython (the source table "
+        "is never scanned); the expansion streams chain inside the "
+        "per-shard kernel with a zero-slop step and are never collected. "
+        "Merge is TakeOrderedAndProject.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
@@ -277,14 +369,18 @@ def main() -> int:
     )
     sections.append(s); problems += p
 
+    df, *seek = seek_audit(
+        index, lambda: index.fuzzy_term_search("scen", k=10, max_edits=1)
+    )
     s, p = audit(
         "fuzzy_term_search expansion plan (r3)",
-        index.fuzzy_term_search("scen", k=10, max_edits=1),
-        {"pushed_filter": True, "cartesian": False},
+        df, {**EXECUTOR_PLAN, "cartesian": False},
         "Dictionary expansion (vocab scan + codegen Levenshtein) runs "
-        "eagerly and is vocab-bounded; the final plan pushes the matched "
-        "terms into the postings scan as In(term,…) — row-group pruning "
-        "via the term-sorted files, exactly like an exact term query.",
+        "eagerly and is vocab-bounded; the matched terms then go to the "
+        "executor seek, which reads only their row groups (term-sorted "
+        "files, footer-stat pruning) and only term + docs_enc, exactly "
+        "like an exact term query. Merge: doc_id ASC TakeOrderedAndProject.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
@@ -305,11 +401,12 @@ def main() -> int:
         "search_after keyset page plan (r3)",
         index.search("the scan", k=10, search_after=(2.0, 100)),
         {"take_ordered": True, "cartesian": False},
-        "Keyset cursor: each shard filters on the rounded (score, doc_id) "
-        "tuple INSIDE the scorer and returns only its local top-k past "
-        "the cursor, restated as a Catalyst Filter above the partial — "
-        "shuffle stays O(shards x k) at any page depth (offset pages "
-        "grow every shard's window to k+offset instead).",
+        "Keyset cursor: each shard's executor task filters on the "
+        "rounded (score, doc_id) tuple INSIDE the scorer and returns only "
+        "its local top-k past the cursor, restated as a Catalyst Filter "
+        "above the RDD scan of those rows — the merge stays O(shards x k) "
+        "at any page depth (offset pages grow every shard's window to "
+        "k+offset instead).",
     )
     sections.append(s); problems += p
 
@@ -487,36 +584,36 @@ def main() -> int:
         salt_threshold=10_000, n_salts=4, resume=False,
     )
     geo_index = CompressedIndex(spark, geo_dir)
+    df, *seek = seek_audit(geo_index, lambda: geo_index.search(
+        "the scan", k=10, geo=("lon", "lat", 0.0, 0.0, 2_000_000.0)
+    ))
     s, p = audit(
         "geo_distance-FILTERED WAND query (r4)",
-        geo_index.search("the scan", k=10,
-                         geo=("lon", "lat", 0.0, 0.0, 2_000_000.0)),
-        {"pushed_filter": True, "take_ordered": True, "cartesian": False},
-        "The conservative radius bbox is four plain comparisons that "
-        "reach the attrs Parquet scan as PushedFilters (row-group min/"
-        "max pruning eliminates almost every file before any trig); the "
-        "exact haversine predicate evaluates in codegen above the scan, "
-        "and the scorer cogroup ships only surviving (shard, doc_id) "
-        "pairs. Merge is TakeOrderedAndProject.",
+        df, {**EXECUTOR_PLAN, "cartesian": False},
+        "The conservative radius bbox is four plain comparisons pushed to "
+        "each shard's pyarrow attrs scan (row-group min/max pruning "
+        "eliminates most row groups before any trig); the exact haversine "
+        "re-check runs in numpy on the bbox survivors inside the task, "
+        "and the scorer sees only surviving doc ids. Merge is "
+        "TakeOrderedAndProject.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
+    df, *seek = seek_audit(geo_index, lambda: geo_index.search(
+        "the scan", k=10,
+        geo=("lon", "lat",
+             [(-60.0, -40.0), (80.0, -30.0), (70.0, 60.0), (-50.0, 50.0)]),
+    ))
     s, p = audit(
         "geo_polygon-FILTERED WAND query (r5)",
-        geo_index.search(
-            "the scan", k=10,
-            geo=("lon", "lat",
-                 [(-60.0, -40.0), (80.0, -30.0), (70.0, 60.0),
-                  (-50.0, 50.0)]),
-        ),
-        {"pushed_filter": True, "take_ordered": True, "cartesian": False,
-         "arrow_eval": True},
-        "The vertex bbox is four plain comparisons that reach the attrs "
-        "Parquet scan as PushedFilters; ONLY the bbox survivors flow "
-        "through the Arrow-batched ray-cast re-check (ArrowEvalPython — "
-        "O(bbox selectivity × corpus) rows cross the Python boundary, "
-        "never the corpus), and the scorer cogroup ships only surviving "
-        "(shard, doc_id) pairs. Merge is TakeOrderedAndProject.",
+        df, {**EXECUTOR_PLAN, "cartesian": False, "arrow_eval": False},
+        "The vertex bbox is four plain comparisons pushed to each shard's "
+        "pyarrow attrs scan; ONLY the bbox survivors go through the numpy "
+        "ray-cast re-check inside the task (no ArrowEvalPython: nothing "
+        "crosses a JVM→Python boundary), and the scorer sees only "
+        "surviving doc ids. Merge is TakeOrderedAndProject.",
+        seek=seek,
     )
     sections.append(s); problems += p
 

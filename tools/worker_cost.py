@@ -1,12 +1,18 @@
 """CPU per one-task query, split by process: driver Python, JVM, Python
 workers.
 
-Starts a local session with ``session.get_spark`` and runs two query
+Starts a local session with ``session.get_spark`` and runs three query
 shapes, each of which runs as one Spark task:
 
-- ``trivial``: a grouped map over one row that returns it;
+- ``trivial``: a DataFrame grouped map over one row that returns it —
+  the job floor of the plan the aggregations still run
+  (``CompressedIndex._per_shard``);
+- ``rdd``: ``sc.parallelize([0], 1).mapPartitions(...)`` over one
+  element — the job floor of the plan distributed ``search``, the
+  phrases and the expansion tails run (``CompressedIndex._dispatch``);
 - ``search``: a distributed ``CompressedIndex.search`` on a tiny index
-  (400 docs, 4 shards).
+  (400 docs, 4 shards): the rdd floor plus the seek plan on the driver,
+  the seek and kernel in the task and the TakeOrderedAndProject merge.
 
 CPU comes from ``/proc/<pid>/stat`` (user + system): the driver is this
 process, the JVM is the gateway's child, and the Python workers are the
@@ -113,9 +119,12 @@ def main() -> int:
                         n_shards=4, shards_per_job=4, block_size=16, resume=False)
             ix = CompressedIndex(spark, os.path.join(tmp, "idx"))
             one = spark.range(1).coalesce(1)
+            sc = spark.sparkContext
             shapes = {
                 "trivial": lambda: one.groupBy("id").applyInPandas(
                     lambda key, pdf: pdf, schema="id long").collect(),
+                "rdd": lambda: sc.parallelize([0], 1).mapPartitions(
+                    lambda it: it).collect(),
                 "search": lambda: ix.search("def return", k=5).collect(),
             }
             print(f"daemon {daemon}, {args.rounds} rounds x {args.per_round} queries")
