@@ -62,7 +62,6 @@ import pandas as pd
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..analyzer import Analyzer, tokenize_expr
 from ..bm25 import B, K1, ROUND_DECIMALS
@@ -75,9 +74,6 @@ from ..index.builder import (
 from ..index.codec import decode_varbyte, delta_decode
 
 _RESULT_SCHEMA = "doc_id long, score double"
-_RESULT_STRUCT = StructType(
-    [StructField("doc_id", LongType()), StructField("score", DoubleType())]
-)
 
 
 def _successor(p: str) -> str | None:
@@ -176,9 +172,9 @@ def _shard_task(groups, cols, seek, fn, clauses, attrs_schema, attrs_root):
     """The executor side of a distributed scored query: for each
     ``(shard, [(postings file, row groups)], attrs files)`` of its
     partition, the seek's per-file reads (rows ``seek`` keeps, ``cols``
-    only), the filter clauses over that
-    shard's attrs files (``_Clauses.docs``) and the per-shard kernel
-    ``fn`` — exactly what the coordinator runs, once per shard, so θ
+    only), the filter clauses over that shard's attrs files
+    (``_Clauses.docs``) and the per-shard kernel ``fn`` — exactly what
+    the coordinator runs, once per shard, so θ
     pruning is per shard as in ES. Yields (doc_id, score) rows. Every
     argument is picklable and nothing here reaches the index object:
     the task needs only pyarrow access to the index path."""
@@ -1173,7 +1169,7 @@ class CompressedIndex:
         rdd = self.spark.sparkContext.parallelize(
             groups, 1 if one else len(groups)
         ).mapPartitions(task)
-        return self.spark.createDataFrame(rdd, _RESULT_STRUCT, verifySchema=False)
+        return self.spark.createDataFrame(rdd, _RESULT_SCHEMA, verifySchema=False)
 
     def _needs_positions(self, method: str) -> None:
         """Phrase queries are answered from positional postings only —
