@@ -250,13 +250,22 @@ def main() -> None:
         # ---- r4/r5 serving surface: rescore / pinned / fetch_fields /
         # geo_distance search / geo ring agg — semantics asserted before
         # timing, like every other DSL shape. geo_point attrs are a pure
-        # doc_id-derived projection over the SAME index (no third
-        # build); the geo clause and ring kernel read attrs through the
-        # DataFrame path exactly as a corpus with real lon/lat would.
-        gindex = CompressedIndex(spark, idx_dir)
-        gindex.attrs = gindex.attrs.withColumn(
+        # doc_id-derived projection written as attrs files beside the
+        # SAME index's other files (symlinked; no third build): the
+        # executor tasks and the ring kernel read them from the index
+        # exactly as a corpus with real lon/lat would.
+        geo_dir = os.path.join(work, "geo_index")
+        shutil.rmtree(geo_dir, ignore_errors=True)
+        os.makedirs(geo_dir)
+        for entry in os.listdir(idx_dir):
+            if entry != "attrs":
+                os.symlink(os.path.join(idx_dir, entry), os.path.join(geo_dir, entry))
+        spark.read.parquet(os.path.join(idx_dir, "attrs")).withColumn(
             "lon", (F.col("doc_id") % 720) / 2.0 - 180.0
-        ).withColumn("lat", ((F.col("doc_id") * 7) % 360) / 2.0 - 90.0)
+        ).withColumn("lat", ((F.col("doc_id") * 7) % 360) / 2.0 - 90.0).write.mode(
+            "overwrite"
+        ).partitionBy("shard").parquet(os.path.join(geo_dir, "attrs"))
+        gindex = CompressedIndex(spark, geo_dir)
         GEO = ("lon", "lat", -60.0, 0.0, 4_000_000.0)
         RINGS = [(None, 4e6), (4e6, 9e6), (9e6, None)]
         base = [(r["doc_id"], r["score"])
