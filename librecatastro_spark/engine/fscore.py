@@ -27,6 +27,9 @@ ranks it FIRST — silently breaking cross-path rank identity.
 
 from __future__ import annotations
 
+import numbers
+import re
+
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -51,6 +54,37 @@ def field_factor_expr(col: Column, modifier: str, factor: float) -> Column:
     if modifier == "sqrt":
         return F.sqrt(F.greatest(v, F.lit(0.0)))
     return v
+
+
+#: Java's Double.parseDouble grammar (decimal or hex, f/d suffix) and
+#: Spark's inf / nan literals — what its string → double cast accepts
+_JAVA_DOUBLE = re.compile(
+    r"[+-]?(?:(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?"
+    r"|0[xX](?:[0-9a-fA-F]+\.?[0-9a-fA-F]*|\.[0-9a-fA-F]+)[pP][+-]?\d+)[fFdD]?"
+)
+_SPECIAL = re.compile(r"[+-]?(?:inf|infinity|nan)", re.IGNORECASE)
+_JAVA_SPACE = "".join(map(chr, range(33)))  # what Java's String.trim drops
+
+
+def try_double_np(v: np.ndarray) -> np.ndarray:
+    """Spark's ``try_cast(v as double)`` of a column's values as pyarrow
+    hands them to pandas, NaN where Spark gives null: numbers and bools
+    cast, strings parse as Java doubles or Spark's inf / nan literals,
+    anything else is null."""
+    if v.dtype != object:
+        return v.astype(np.float64)
+    out = np.full(len(v), np.nan)
+    for i, x in enumerate(v):
+        if isinstance(x, numbers.Number):  # a nullable bool column's values
+            out[i] = float(x)
+            continue
+        t = x.strip(_JAVA_SPACE) if isinstance(x, str) else ""
+        if _SPECIAL.fullmatch(t):
+            out[i] = float(t)
+        elif _JAVA_DOUBLE.fullmatch(t):
+            t = t.rstrip("fFdD")
+            out[i] = float.fromhex(t) if "x" in t.lower() else float(t)
+    return out
 
 
 def field_factor_np(v: np.ndarray, modifier: str, factor: float) -> np.ndarray:

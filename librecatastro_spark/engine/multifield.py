@@ -13,8 +13,9 @@ Spark-first shape: one CompressedIndex per field under
 (index/builder.py shard_expr), so a document's postings for every field
 land in the SAME shard number. That co-location is the whole trick:
 
-  * the per-field posting blocks union (tagged with ``_field``) and
-    group by shard ONCE;
+  * ONE executor seek plan spans the sub-indexes: each shard's task
+    reads every field's posting blocks of that shard (tagged with
+    ``_field``);
   * the per-shard kernel scores each field with that field's own
     df/dl/avgdl statistics (the single-field scorer, uncut, reused
     verbatim), combines per doc LOCALLY, and keeps only its top-k.
@@ -47,10 +48,12 @@ from pyspark.sql import functions as F
 from ..analyzer import analyze_text
 from ..bm25 import ROUND_DECIMALS
 from ..index.builder import build_index
+from .score_queries import _topk
 from .wand import (
     _RESULT_SCHEMA,
     CompressedIndex,
     _empty,
+    _Seek,
     _ranked,
     _ranked_local,
 )
@@ -176,22 +179,17 @@ class MultiFieldIndex:
                 yield f, s, live, idfs
 
     def _union(self, live: list, combine) -> DataFrame:
-        """The ``live`` (field, sub-index, terms) posting blocks, each
-        tagged ``_field``, unioned through the engine's one per-shard
-        grouped map (``CompressedIndex._per_shard``), planned by the Σ df
-        of every field's live terms — the sub-indexes share the one-task
-        limit, so any one of them plans the stage."""
-        blocks, ests = None, []
-        for f, s, terms in live:
-            b = s.postings.where(F.col("term").isin(terms)).withColumn(
-                "_field", F.lit(f)
-            )
-            blocks = b if blocks is None else blocks.unionByName(b)
-            ests.append(s._df_sum(terms))
-        est = None if None in ests else sum(ests)
-        return self.sub[self.fields[0]]._per_shard(
-            blocks, combine, _RESULT_SCHEMA, est,
-            cols=CompressedIndex._SEEK_COLS + ("_field",),
+        """``combine`` over the ``live`` (field, sub-index, terms) posting
+        blocks, once per shard: one executor seek (``_dispatch``) whose
+        plan joins every sub-index's seek of its terms, each block
+        tagged ``_field``, planned by the Σ df of every field's live
+        terms — the sub-indexes share the one-task limit, so any one of
+        them runs the stage."""
+        ests = [s._df_sum(terms) for _, s, terms in live]
+        return self.sub[self.fields[0]]._dispatch(
+            [(s, _Seek(terms, field=f)) for f, s, terms in live],
+            CompressedIndex._SEEK_COLS, combine,
+            None if None in ests else sum(ests),
         )
 
     def multi_match(
@@ -219,11 +217,7 @@ class MultiFieldIndex:
                     results.append(fd(sub.drop(columns=["_field"])))
             if not results:
                 return _empty()
-            uids, comb = _combine(results, tb)
-            if len(uids) > local_k:
-                order = np.lexsort((uids, -comb))[:local_k]
-                uids, comb = uids[order], comb[order]
-            return pd.DataFrame({"doc_id": uids, "score": comb})
+            return _topk(*_combine(results, tb), local_k)
 
         return _ranked(self._union(live_fields, combine), k, offset)
 
@@ -275,14 +269,8 @@ class MultiFieldIndex:
             ids = np.concatenate([b[0] for b in best])
             w = np.concatenate([b[1] for b in best])
             uids, inv = np.unique(ids, return_inverse=True)
-            tot = np.round(
-                np.bincount(inv, weights=w, minlength=len(uids)),
-                ROUND_DECIMALS,
-            )
-            if len(uids) > local_k:
-                order = np.lexsort((uids, -tot))[:local_k]
-                uids, tot = uids[order], tot[order]
-            return pd.DataFrame({"doc_id": uids, "score": tot})
+            tot = np.bincount(inv, weights=w, minlength=len(uids))
+            return _topk(uids, tot, local_k)
 
         return _ranked(self._union(live_fields, combine), k, offset)
 

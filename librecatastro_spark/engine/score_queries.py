@@ -28,7 +28,7 @@ import numpy as np
 import pandas as pd
 
 from ..bm25 import ROUND_DECIMALS
-from .fscore import combine_np, field_factor_np
+from .fscore import combine_np, field_factor_np, try_double_np
 from .positions import _decode_term
 from .wand import _empty, _impact
 
@@ -85,10 +85,12 @@ def function_score_fn(
     modifier: str,
     factor: float,
     boost_mode: str,
+    field: str,
 ):
-    """fn(blocks, attrs) — attrs carries (doc_id, _fv): the numeric field
-    for this shard's docs (cogrouped, so the field never leaves its
-    shard). score' = round(combine(raw BM25 sum, factor_fn(_fv)))."""
+    """fn(blocks, attrs) — attrs carries (doc_id, ``field``) for this
+    shard's docs (read by the shard's own task, so the field never
+    leaves its shard). score' = round(combine(raw BM25 sum,
+    factor_fn(field as a double, the Spark try_cast)))."""
 
     def fn(blocks: pd.DataFrame, attrs: pd.DataFrame) -> pd.DataFrame:
         if len(blocks) == 0 or attrs is None or len(attrs) == 0:
@@ -99,11 +101,10 @@ def function_score_fn(
         a_ids = attrs["doc_id"].to_numpy(dtype=np.int64)
         order = np.argsort(a_ids, kind="stable")
         a_ids = a_ids[order]
-        a_fv = attrs["_fv"].to_numpy(dtype=np.float64)[order]
         pos = np.searchsorted(a_ids, uids)
         ok = (pos < len(a_ids)) & (a_ids[np.minimum(pos, len(a_ids) - 1)] == uids)
         fv = np.zeros(len(uids), dtype=np.float64)
-        fv[ok] = a_fv[pos[ok]]
+        fv[ok] = try_double_np(attrs[field].to_numpy()[order[pos[ok]]])
         fac = field_factor_np(fv, modifier, factor)
         return _topk(uids, combine_np(sums, fac, boost_mode), k)
 

@@ -24,9 +24,9 @@ Scale design:
     safe after incremental appends grow N (see builder.py).
   * A query whose decode volume is small runs every shard in one task
     (one job, one stage, one task with the merge); a larger one runs
-    one task per shard (``CompressedIndex._dispatch``). Aggregations
-    and the compound scorers keep the per-shard grouped map
-    (``CompressedIndex._per_shard``).
+    one task per shard (``CompressedIndex._dispatch``). Every
+    distributed per-shard stage runs there: scored queries, the
+    match-set aggregations, the compound scorers and multi_match.
 
 The classic block-max WAND pointer walk is per-document Python — banned
 (input_hint). We use a **vectorized two-pass block-max prune** with the
@@ -117,11 +117,14 @@ def _shard_files(root: str):
 class _Seek:
     """The posting rows one seek keeps: ``term`` in ``terms`` or, with
     ``pfx``, in the phrase prefix's [pfx, successor) range; with
-    ``window`` (lo, hi), only blocks whose doc-id range overlaps it."""
+    ``window`` (lo, hi), only blocks whose doc-id range overlaps it.
+    ``field`` tags the rows it reads with a ``_field`` column (the
+    sub-index of a multi-field seek)."""
 
     terms: tuple
     pfx: str | None = None
     window: tuple | None = None
+    field: str | None = None
 
     def __post_init__(self):
         object.__setattr__(self, "terms", tuple(sorted(set(self.terms))))
@@ -150,9 +153,9 @@ class _Seek:
 def _read_row_groups(path: str, rgs: list, shard: int, cols, seek: _Seek):
     """One postings file's part of a seek: row groups ``rgs`` of
     ``path``, only ``cols`` (which include ``term``), the rows ``seek``
-    keeps, tagged with their ``shard``; None when no row is kept.
-    The coordinator runs it per file on its thread pool, an executor
-    task serially per shard (``_shard_task``)."""
+    keeps, tagged with their ``shard`` (and ``seek.field``); None when
+    no row is kept. The coordinator runs it per file on its thread
+    pool, an executor task serially per shard (``_shard_task``)."""
     import pyarrow as pa
 
     pf = pq.ParquetFile(path)
@@ -163,51 +166,64 @@ def _read_row_groups(path: str, rgs: list, shard: int, cols, seek: _Seek):
     tbl = tbl.filter(seek.mask(tbl))
     if not tbl.num_rows:
         return None
-    return tbl.append_column(
+    tbl = tbl.append_column(
         "shard", pa.array(np.full(tbl.num_rows, shard, dtype=np.int32))
     )
+    if seek.field is not None:
+        tbl = tbl.append_column("_field", pa.array([seek.field] * tbl.num_rows))
+    return tbl
 
 
-def _shard_task(groups, cols, seek, fn, clauses, attrs_schema, attrs_root):
-    """The executor side of a distributed scored query: for each
-    ``(shard, [(postings file, row groups)], attrs files)`` of its
-    partition, the seek's per-file reads (rows ``seek`` keeps, ``cols``
-    only), the filter clauses over that shard's attrs files
-    (``_Clauses.docs``) and the per-shard kernel ``fn`` — exactly what
-    the coordinator runs, once per shard, so θ
-    pruning is per shard as in ES. Yields (doc_id, score) rows. Every
-    argument is picklable and nothing here reaches the index object:
-    the task needs only pyarrow access to the index path."""
+def _shard_task(groups, cols, fn, clauses, attrs_cols, attrs_schema, attrs_root,
+                schema):
+    """The executor side of ``_dispatch``: for each ``(shard,
+    [(postings file, row groups, _Seek)], attrs files)`` of its
+    partition, the per-file reads (``cols`` only) and the per-shard
+    kernel ``fn`` — what the coordinator runs, once per shard, so θ
+    pruning is per shard as in ES — as ``fn(blocks, attrs)`` with
+    ``attrs_cols``: ONE pyarrow scan of the shard's attrs files for the
+    (shard, doc_id, *attrs_cols) rows passing ``clauses``
+    (``_Clauses.docs``). Yields the kernel's
+    rows as the DDL ``schema`` types them. The arguments are picklable;
+    nothing here reaches the index object."""
     import pyarrow as pa
     import pyarrow.dataset as pads
 
     for shard, files, attrs_files in groups:
         tabs = [
-            t for path, rgs in files
+            t for path, rgs, seek in files
             if (t := _read_row_groups(path, rgs, shard, cols, seek)) is not None
         ]
         if not tabs:
             continue
         blocks = pa.concat_tables(tabs).to_pandas()
-        if clauses:
+        if attrs_cols is not None:
             ds = pads.dataset(
                 attrs_files, schema=attrs_schema, partitioning="hive",
                 partition_base_dir=attrs_root,
             )
-            out = fn(blocks, clauses.docs(ds))
+            out = fn(blocks, clauses.docs(ds, attrs_cols))
         else:
             out = fn(blocks)
-        yield from zip(out["doc_id"].tolist(), out["score"].tolist())
+        yield from zip(*(
+            out[n].to_numpy(dtype=_NP_TYPES[t]).tolist() for n, t in _columns(schema)
+        ))
 
 
-_PD_DTYPES = {"long": "int64", "double": "float64", "string": "object"}
+_NP_TYPES = {"long": np.int64, "double": np.float64, "string": object}
+
+
+def _columns(schema: str) -> list[tuple[str, str]]:
+    """(name, type) of each column of a DDL ``schema``."""
+    return [tuple(c.split()) for c in schema.split(",")]
 
 
 def _empty(schema: str = _RESULT_SCHEMA) -> pd.DataFrame:
     """Zero-row pandas frame typed like the DDL ``schema`` (long, double
     and string columns) — what a per-shard kernel emits with no rows."""
-    cols = (c.split() for c in schema.split(","))
-    return pd.DataFrame({n: pd.Series(dtype=_PD_DTYPES[t]) for n, t in cols})
+    return pd.DataFrame(
+        {n: pd.Series(dtype=_NP_TYPES[t]) for n, t in _columns(schema)}
+    )
 
 
 @dataclass(frozen=True)
@@ -283,12 +299,14 @@ class _Clauses:
             cond = cond & geo_clause_cond(self.geo)
         return cond
 
-    def docs(self, dataset) -> pd.DataFrame:
-        """The (shard, doc_id) pairs of the pyarrow attrs ``dataset`` (the
-        whole table on the coordinator, one shard's files in an executor
-        task) passing every clause. The predicates push into the scan
-        (row-group stats + dictionary filtering) and only the columns the
-        re-checks need are materialized, so memory is O(matching docs)."""
+    def docs(self, dataset, extra=()) -> pd.DataFrame:
+        """The (shard, doc_id, *extra) rows of the pyarrow attrs
+        ``dataset`` (the whole table on the coordinator, one shard's
+        files in an executor task) passing every clause — with no
+        clause, every row: the one attrs read of a distributed stage.
+        The predicates push into the scan (row-group stats + dictionary
+        filtering) and only ``extra`` and the columns the re-checks need
+        are materialized, so memory is O(matching docs)."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -298,7 +316,8 @@ class _Clauses:
                 es.append(pc.field(col).isin(sorted(val)))
             else:
                 es.append(pc.field(col) == val)
-        cols = ["shard", "doc_id"]
+        keep = list(dict.fromkeys(["shard", "doc_id", *extra]))
+        cols = list(keep)
         if self.prefix is not None:
             # the range form prunes row groups and dictionaries; it is a
             # strict SUPERSET of the prefix match ('src1z' falls in
@@ -306,7 +325,8 @@ class _Clauses:
             # exact starts_with re-check below restores the Catalyst
             # StartsWith semantics
             es.append(_prefix_range(pc.field(self.prefix[0]), self.prefix[1]))
-            cols.append(self.prefix[0])
+            if self.prefix[0] not in cols:
+                cols.append(self.prefix[0])
         for col, (lo, hi) in (self.ranges or {}).items():
             if lo is not None:
                 es.append(pc.field(col) >= lo)
@@ -344,7 +364,7 @@ class _Clauses:
                 tbl.column(g_lon).to_numpy(zero_copy_only=False),
                 tbl.column(g_lat).to_numpy(zero_copy_only=False),
             )))
-        return tbl.select(["shard", "doc_id"]).to_pandas()
+        return tbl.select(keep).to_pandas()
 
 
 def _ranked(
@@ -498,8 +518,8 @@ def _shard_topk_fn(
     path; ``fn(blocks, allowed_docs)`` for filtered queries, where
     ``allowed_docs`` holds ONLY the doc_ids that already survived the
     keyword/prefix predicates — the predicates themselves are evaluated
-    upstream (Catalyst with Parquet pushdown on the distributed path,
-    pyarrow scan filters on the coordinator path), never in pandas here.
+    upstream (a pyarrow scan of the attrs files with the predicates
+    pushed down, ``_Clauses.docs``, on either path), never in pandas here.
     All numpy/pandas batch ops — no per-row Python.
 
     ``decoder`` (coordinator path only) substitutes the inline varbyte
@@ -901,26 +921,22 @@ class CompressedIndex:
         }
 
     #: The largest decode volume (postings, or positions for a phrase)
-    #: a per-shard stage runs in ONE Spark task (``_per_shard``).
-    #: Measured on a 4-core VM, 60k-doc bench corpus, 16 shards, hot-term
-    #: OR ``search``, 8 interleaved runs per size, with the Python worker
-    #: daemon of ``librecatastro_spark.pyworker``, whose tasks cost ~3
-    #: ms of worker CPU each, not ~95 ms: one task's wall time is
-    #: 0.94-0.96x the shuffle's at 15k-30k, +10 % at 45k, +12-14 % at 60k
-    #: and +33-44 % at 90k-480k; its engine CPU is 16-25 % lower up to
-    #: 30k and within ±12 % of the shuffle's above it. The limit sits
-    #: below that knee, so a query the shuffle answers sooner keeps the
-    #: shuffle.
+    #: a per-shard stage runs in ONE Spark task (``_dispatch``); above
+    #: it, one task per shard. Measured on the per-shard grouped map the
+    #: executor seek replaced (4-core VM, 60k-doc bench corpus, 16
+    #: shards, hot-term OR ``search``): one coalesced task's wall time
+    #: was 0.94-0.96x the shuffle's at 15k-30k and +10-44 % above 45k.
+    #: Not yet re-measured against one task per shard.
     _ONE_TASK_MAX_POSTINGS = 30_000
 
     def _df_sum(self, terms) -> int | None:
         """Σ df over ``terms`` from the resident dictionary — the postings
-        a stage over them decodes, its ``_per_shard`` estimate — counted
+        a stage over them decodes, its ``_dispatch`` estimate — counted
         only until it passes ``_ONE_TASK_MAX_POSTINGS`` (past it, the
         exact sum does not change the plan, so a lazy ``terms`` is
         walked no further). None when the dictionary is not resident:
-        no Spark job is spent on an estimate, and the stage keeps the
-        shuffled plan."""
+        no Spark job is spent on an estimate, and the stage runs one
+        task per shard."""
         if self._df_local is None:
             return None
         total, cap = 0, self._ONE_TASK_MAX_POSTINGS
@@ -929,51 +945,6 @@ class CompressedIndex:
             if total > cap:
                 break
         return total
-
-    def _per_shard(
-        self,
-        blocks: DataFrame,
-        fn,
-        schema: str,
-        est: int | None,
-        cols: tuple[str, ...] = _SEEK_COLS,
-        allowed: DataFrame | None = None,
-    ) -> DataFrame:
-        """The per-shard grouped map the aggregations (``_match_set_stage``),
-        the compound scorers (``function_score``, ``dis_max``,
-        ``boosting``) and ``multifield`` run in — ``search``, the phrases
-        and the expansion tails run in executor tasks instead
-        (``_dispatch``): ``fn(blocks)`` once per shard — ``fn(blocks,
-        allowed)`` when the stage cogroups an attrs side — over only the
-        ``cols`` the kernel reads. Grouping stays per shard (θ pruning is
-        per shard); only
-        the Spark plan that runs the groups depends on the work: ``est``
-        is the postings the stage decodes (None: unknown), plus n_docs
-        when it cogroups attrs (the attrs scan reads the whole table).
-        At most ``_ONE_TASK_MAX_POSTINGS``, every side is coalesced to
-        one partition; SinglePartition already satisfies the grouped
-        map's clustering, so the query runs as one stage and one task,
-        with no Exchange, so a small query pays the per-task cost once,
-        not per shuffle partition: ~3 ms of Python-worker CPU with
-        ``librecatastro_spark.pyworker`` (~95 ms with the stock daemon),
-        plus the JVM's scheduling of the stage (``tools/worker_cost.py``,
-        4-core VM). Above it, or unknown, the plan is the plain shuffled
-        grouped map, one task per shuffle partition."""
-        blocks = blocks.select("shard", *cols)
-        if est is not None and allowed is not None:
-            est += int(self.meta.n_docs)
-        if est is not None and est <= self._ONE_TASK_MAX_POSTINGS:
-            blocks = blocks.coalesce(1)
-            allowed = None if allowed is None else allowed.coalesce(1)
-        if allowed is None:
-            return blocks.groupBy("shard").applyInPandas(
-                lambda key, bl: fn(bl), schema=schema
-            )
-        return (
-            blocks.groupBy("shard")
-            .cogroup(allowed.groupBy("shard"))
-            .applyInPandas(lambda bl, at: fn(bl, at), schema=schema)
-        )
 
     def search(
         self,
@@ -995,9 +966,9 @@ class CompressedIndex:
         """Top-k BM25 (doc_id, score), score DESC / doc_id ASC.
 
         ``exists_cols`` is the ES exists query (attr non-null);
-        ``ids`` the ES ids query (doc-id In list) — both evaluated in
-        Catalyst beside the other filters, pushed to the attrs scan
-        (IsNotNull / In reach Parquet row-group pruning).
+        ``ids`` the ES ids query (doc-id In list) — both evaluated
+        beside the other filters, pushed to the attrs scan (is-not-null
+        / In reach Parquet row-group pruning).
 
         ``geo`` is the ES geo_distance query over geo_point attr columns
         — (lon_col, lat_col, lon0, lat0, radius_m) — OR the ES
@@ -1005,9 +976,9 @@ class CompressedIndex:
         reference's flagship geo predicate (geo_polygon.py:36-54). Both
         compile through the shared ops.geo.geo_clause_cond: a
         scan-pushable bbox prune (radius-derived or vertex bbox) ANDed
-        with the exact test (Catalyst haversine / Arrow ray cast on the
-        bbox survivors), evaluated beside the other filter clauses so
-        the scorer cogroup ships only surviving (shard, doc_id) pairs.
+        with the exact test (haversine / ray cast on the bbox
+        survivors), evaluated beside the other filter clauses so the
+        scorer sees only surviving (shard, doc_id) pairs.
 
         ``min_match`` is ES ``minimum_should_match`` on a match query: a
         doc qualifies only if it matches at least that many DISTINCT
@@ -1018,9 +989,8 @@ class CompressedIndex:
 
         ``ranges`` is the ES range query over keyword/numeric attr
         columns: {col: (lo, hi)}, bounds inclusive, either side None for
-        open-ended — evaluated in Catalyst like the equality filters, so
-        the comparison reaches the attrs Parquet scan as PushedFilters
-        (GreaterThanOrEqual/LessThanOrEqual row-group pruning).
+        open-ended — evaluated like the equality filters, so the
+        comparison reaches the attrs Parquet scan (row-group pruning).
 
         Pagination, two forms (ES ``from`` vs ``search_after``):
         ``offset`` makes every shard surface the whole k+offset window —
@@ -1137,39 +1107,52 @@ class CompressedIndex:
         return _ranked(partial, spec.k, spec.offset, after=spec.after)
 
     def _dispatch(
-        self, seek: _Seek, cols, fn, est: int | None,
-        clauses: _Clauses = _Clauses(),
+        self, seek, cols, fn, est: int | None,
+        clauses: _Clauses = _Clauses(), schema: str = _RESULT_SCHEMA,
+        attrs_cols: list | None = None,
     ) -> DataFrame:
-        """The cluster site: the seek plan of ``seek`` (``_seek_plan``:
-        shard → [(postings file, row groups)], from the resident footer
-        stats) as ``sc.parallelize(...).mapPartitions`` over
-        ``_shard_task``, which reads each shard's row groups (the rows
-        ``seek`` keeps, ``cols`` only), computes its filter clauses
-        from its own attrs files and runs ``fn`` once per shard — the
-        per-shard kernel of the ES fan-out. The result is a lazy
-        DataFrame of (doc_id, score) rows: no Catalyst scan, no Arrow
-        hand-off of posting blocks from the JVM, no Exchange. ``est`` is
-        the decode estimate: at most ``_ONE_TASK_MAX_POSTINGS``, every
-        shard runs in one task (one job, one stage, one task with the
-        merge); above it, or unknown (no resident dictionary), one task
-        per shard."""
+        """The cluster site, the engine's one distributed per-shard
+        stage: the seek plan of ``seek`` (``_seek_plan``: shard →
+        [(postings file, row groups)], from the resident footer stats)
+        as ``sc.parallelize(...).mapPartitions`` over ``_shard_task``,
+        which runs ``fn`` once per shard over the rows ``seek`` keeps
+        (``cols`` only) and, with ``clauses`` or ``attrs_cols``, the
+        shard's own attrs rows. ``seek`` is a ``_Seek`` or (sub-index,
+        ``_Seek``) pairs over indexes sharing this doc-id shard split
+        (multi_match), planned as one. The result is a lazy DataFrame
+        of the kernel's rows in the DDL ``schema``: no Catalyst scan, no
+        Arrow hand-off of posting blocks from the JVM, no Exchange.
+        ``est`` is the decode estimate: at most
+        ``_ONE_TASK_MAX_POSTINGS``, every shard runs in one task (one
+        job, one stage, one task with the merge or the reduce); above
+        it, or unknown (no resident dictionary), one task per shard."""
+        if clauses and attrs_cols is None:
+            attrs_cols = []  # the (shard, doc_id) rows passing the clauses
         _, attrs_files = self._files()
+        plan: dict[int, list] = {}
+        for ix, sk in [(self, seek)] if isinstance(seek, _Seek) else seek:
+            for shard, files in ix._seek_plan(sk.terms, sk.pfx).items():
+                plan.setdefault(shard, []).extend((p, rgs, sk) for p, rgs in files)
         groups = [
-            (shard, files, attrs_files.get(shard, []) if clauses else [])
-            for shard, files in self._seek_plan(seek.terms, seek.pfx).items()
+            (shard, files, [] if attrs_cols is None else attrs_files.get(shard, []))
+            for shard, files in plan.items()
         ]
         if not groups:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
+            return self.spark.createDataFrame([], schema)
         one = est is not None and est <= self._ONE_TASK_MAX_POSTINGS
         task = functools.partial(
-            _shard_task, cols=tuple(cols), seek=seek, fn=fn, clauses=clauses,
-            attrs_schema=self._attrs_dataset().schema if clauses else None,
-            attrs_root=os.path.join(self.out_dir, "attrs"),
+            _shard_task, cols=tuple(cols), fn=fn, clauses=clauses,
+            attrs_cols=attrs_cols,
+            attrs_schema=None if attrs_cols is None else self._attrs_dataset().schema,
+            attrs_root=os.path.join(self.out_dir, "attrs"), schema=schema,
         )
         rdd = self.spark.sparkContext.parallelize(
             groups, 1 if one else len(groups)
         ).mapPartitions(task)
-        return self.spark.createDataFrame(rdd, _RESULT_SCHEMA, verifySchema=False)
+        df = self.spark.createDataFrame(rdd, schema, verifySchema=False)
+        # one task: Coalesce 1 tells Catalyst the rows are one partition,
+        # so a reduce above (groupBy, Window, sort) adds no Exchange
+        return df.coalesce(1) if one else df
 
     def _needs_positions(self, method: str) -> None:
         """Phrase queries are answered from positional postings only —
@@ -1337,7 +1320,7 @@ class CompressedIndex:
         unindexed (the result is empty and the local path answers
         instantly). O(terms) over the resident term-stats snapshot; None
         without one, where the estimate would itself cost a Spark job
-        (the distributed phrases then keep the shuffled plan, and the
+        (the distributed phrases then run one task per shard, and the
         coordinator twins run on the cluster)."""
         if self._df_local is None:
             return None
@@ -1371,21 +1354,21 @@ class CompressedIndex:
         offset: int = 0,
     ) -> pd.DataFrame:
         """``match_phrase_prefix`` run on the coordinator
-        (``_execute``), which needs the RESIDENT term dictionary
-        (ValueError without it): the seek reads the complete terms' and
-        the [pfx, successor) range's blocks; a single-token query
-        expands through the dictionary and takes the constant-score
-        local tail. Routes by decode estimate
-        like ``match_phrase_local``."""
-        self._resident("match_phrase_prefix_local")
+        (``_execute``): the seek reads the complete terms' and the [pfx,
+        successor) range's blocks; a single-token query expands through
+        the resident dictionary and takes the constant-score local tail.
+        Routes by decode estimate like ``match_phrase_local``; without a
+        resident dictionary it answers on the cluster."""
         spec = self._phrase_spec(
             "match_phrase_prefix_local", text, k, offset, prefix=True
         )
-        if not spec.terms:
-            return self._constant_score_local(
-                self._prefix_terms(spec.pfx), k, offset=offset
-            )
-        return self._execute(spec, local=True)
+        if spec.terms:
+            return self._execute(spec, local=True)
+        if self._df_local is None:
+            return self.term_prefix_search(spec.pfx, k=k, offset=offset).toPandas()
+        return self._constant_score_local(
+            self._prefix_terms(spec.pfx), k, offset=offset
+        )
 
     def _resident(self, method: str) -> dict[str, int]:
         """The resident term dictionary (term → df); a coordinator
@@ -1823,7 +1806,7 @@ class CompressedIndex:
         The shard kernel reuses the single-field scorer uncut (decode is
         O(query-term postings) like every path; the collapse cut bounds
         the SHUFFLE) and joins the shard's attrs slice for the key column
-        — the same cogroup shape as a filtered query.
+        (``_match_set_stage``).
         """
         terms, idfs = self._match_terms(text)
         if collapse_col not in self.attrs.columns:
@@ -1885,8 +1868,8 @@ class CompressedIndex:
         all paths; engine/score_queries.py has the kernel). Score
         reshaping invalidates BM25 block-max pruning, so the kernel
         decodes the query terms' postings fully — the AND-branch bill —
-        and the field values cogroup shard-locally (each shard ships only
-        its own (doc_id, field) rows). Rank-identical to
+        and each shard's task reads the field from its own attrs files
+        (the field never leaves its shard). Rank-identical to
         ExactBM25.function_score (tested)."""
         from .fscore import _check
         from .score_queries import function_score_fn
@@ -1897,15 +1880,12 @@ class CompressedIndex:
         terms, idfs = self._match_terms(text)
         if not terms:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        blocks = self.postings.where(F.col("term").isin(terms))
         fn = function_score_fn(
-            terms, idfs, self.meta.avgdl, k, modifier, factor, boost_mode
+            terms, idfs, self.meta.avgdl, k, modifier, factor, boost_mode, field
         )
-        allowed = self.attrs.select(
-            "shard", "doc_id", F.col(field).try_cast("double").alias("_fv")
-        )
-        partial = self._per_shard(
-            blocks, fn, _RESULT_SCHEMA, self._df_sum(terms), allowed=allowed
+        partial = self._dispatch(
+            _Seek(terms), self._SEEK_COLS, fn, self._df_sum(terms),
+            attrs_cols=[field],
         )
         return _ranked(partial, k)
 
@@ -1933,12 +1913,11 @@ class CompressedIndex:
         if not clause_terms:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
         wanted = sorted({t for ct in clause_terms for t in ct})
-        blocks = self.postings.where(F.col("term").isin(wanted))
         fn = dis_max_fn(
             clause_terms, idfs, self.meta.avgdl, k, float(tie_breaker)
         )
-        partial = self._per_shard(
-            blocks, fn, _RESULT_SCHEMA, self._df_sum(wanted)
+        partial = self._dispatch(
+            _Seek(wanted), self._SEEK_COLS, fn, self._df_sum(wanted)
         )
         return _ranked(partial, k)
 
@@ -1965,15 +1944,13 @@ class CompressedIndex:
         neg_terms = [t for t in neg_terms if t in idfs]
         if not pos_terms:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        blocks = self.postings.where(
-            F.col("term").isin(pos_terms + neg_terms)
-        )
         fn = boosting_fn(
             pos_terms, neg_terms, idfs, self.meta.avgdl, k,
             float(negative_boost),
         )
-        partial = self._per_shard(
-            blocks, fn, _RESULT_SCHEMA, self._df_sum(pos_terms + neg_terms)
+        wanted = pos_terms + neg_terms
+        partial = self._dispatch(
+            _Seek(wanted), self._SEEK_COLS, fn, self._df_sum(wanted)
         )
         return _ranked(partial, k)
 
@@ -2183,7 +2160,7 @@ class CompressedIndex:
         # mirror the distributed kernel's conversion EXACTLY: Arrow →
         # pandas → astype(str), so nulls become counted 'None' (object
         # columns) / 'nan' (numeric-with-null columns) buckets just like
-        # the applyInPandas kernel's m[facet_col].astype(str). A pyarrow
+        # the executor kernel's m[facet_col].astype(str). A pyarrow
         # string cast instead would KEEP nulls, which value_counts then
         # silently drops — breaking the twins' bucket identity on any
         # nullable facet column.
@@ -2898,33 +2875,29 @@ class CompressedIndex:
         reduce,
         schema: str,
     ) -> DataFrame:
-        """The full-match-set stage every aggregation shares: ONE scan of
-        the query terms' postings, scored per shard by ``_match_kernel``,
-        and ONE blocks⋈attrs cogroup on shard that joins each shard's
-        matched docs to its own attrs slice (``cols`` only — the field
-        never leaves its shard). ``reduce(rows)`` sees one shard's
+        """The full-match-set stage every aggregation shares: the executor
+        seek of the query terms' postings (``_dispatch``), scored per
+        shard by ``_match_kernel`` and joined to that shard's own attrs
+        rows (``cols`` only — the field never leaves its shard; a doc
+        with no attrs row drops out). ``reduce(rows)`` sees one shard's
         matched (doc_id, score, *cols) rows and returns that shard's
         map-side partial in ``schema``; a shard with no matched row
         emits none. The shuffle is O(shards × partial rows) — O(matches)
-        only for a per-match partial (percentiles). ``cols=None`` drops
-        the attrs side: the plan is the blocks-only grouped map and
-        ``reduce`` sees the kernel's (doc_id, score) rows."""
-        blocks = self.postings.where(F.col("term").isin(terms))
+        only for a per-match partial (percentiles). ``cols=None`` reads
+        no attrs: ``reduce`` sees the kernel's (doc_id, score) rows."""
         fd = self._match_kernel(terms, idfs)
-        est = self._df_sum(terms)
-        if cols is None:
-            return self._per_shard(blocks, lambda bl: reduce(fd(bl)), schema, est)
         empty = _empty(schema)
-        want = [c for c in dict.fromkeys(cols) if c != "doc_id"]
+        want = None if cols is None else [
+            c for c in dict.fromkeys(cols) if c != "doc_id"
+        ]
 
-        def fn(bl: pd.DataFrame, at: pd.DataFrame) -> pd.DataFrame:
-            r = fd(bl)
-            if len(r) == 0 or len(at) == 0:
-                return empty
-            m = r.merge(at[["doc_id", *want]], on="doc_id")
+        def fn(bl: pd.DataFrame, at: pd.DataFrame | None = None) -> pd.DataFrame:
+            m = fd(bl)
+            if at is not None:
+                m = m.merge(at[["doc_id", *want]], on="doc_id")
             return reduce(m) if len(m) else empty
 
-        allowed = self.attrs.select(
-            "shard", "doc_id", *[c for c in want if c != "shard"]
+        return self._dispatch(
+            _Seek(terms), self._SEEK_COLS, fn, self._df_sum(terms),
+            schema=schema, attrs_cols=want,
         )
-        return self._per_shard(blocks, fn, schema, est, allowed=allowed)

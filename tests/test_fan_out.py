@@ -1,12 +1,15 @@
-"""Decode-volume-sized fan-out of the distributed per-shard grouped map.
+"""Decode-volume-sized fan-out of the distributed per-shard stage.
 
-Every distributed kernel runs in ``CompressedIndex._per_shard``: a
-decode-volume estimate within the one-task limit runs the whole query as
-one Spark job, one stage and one task (coalesce(1), no Exchange); a
-larger one keeps the shuffled grouped map. Grouping stays per shard either way,
-so the ranked answers must not depend on the plan. The phrase doc-window
-now comes from the coordinator footer-stats seek instead of a Spark
-min/max job; it must equal that aggregation on every index state.
+Every distributed kernel — scored queries, phrases, expansion tails,
+the match-set aggregations, the compound scorers and multi_match — runs
+in executor tasks (``CompressedIndex._dispatch``): a decode-volume
+estimate within the one-task limit runs every shard in one Spark task
+(one job, one stage, one task with the merge or the reduce, no
+Exchange); a larger one runs one task per shard. The kernel runs once
+per shard either way, so the answers must not depend on the plan. The
+phrase doc-window comes from the coordinator footer-stats seek instead
+of a Spark min/max job; it must equal that aggregation on every index
+state.
 """
 
 from __future__ import annotations
@@ -18,6 +21,11 @@ from pyspark.sql import functions as F
 
 from librecatastro_spark.corpus import assign_doc_ids, generate_corpus
 from librecatastro_spark.engine import ExactBM25
+from librecatastro_spark.engine.multifield import (
+    MultiFieldIndex,
+    cross_fields_exact,
+    multi_match_exact,
+)
 from librecatastro_spark.engine.wand import CompressedIndex
 from librecatastro_spark.index.builder import build_index
 
@@ -95,26 +103,23 @@ def test_small_query_runs_one_job_one_stage_one_task(spark, pidx, call):
     assert got  # non-degenerate: every call matches documents
 
 
-def _shuffles_on_shard(df) -> bool:
-    """Whether the plan hash-partitions on shard ahead of a grouped map."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "hashpartitioning(shard" in plan
-
-
-def test_aggregation_stage_counts_the_attrs_scan(pidx, monkeypatch):
-    """A match-set aggregation cogroups the whole attrs table, so its
-    estimate is the Σ df plus n_docs: small, the match-set stage runs in
-    one task with no shuffle on shard; with the one-task limit at the
-    Σ df alone it keeps the shuffled plan, while a search over the same
-    terms (no attrs side) still runs in one task."""
-    agg = lambda: pidx.facet_counts("def return", "lang")  # noqa: E731
-    assert not _shuffles_on_shard(agg())
+def test_aggregation_estimate_is_the_postings_alone(spark, pidx, monkeypatch):
+    """A match-set aggregation reads each shard's attrs rows inside the
+    shard's own task, so its estimate is the query terms' Σ df alone:
+    with the one-task limit at exactly that, ``facet_counts`` runs as
+    one job, one stage and one task (the per-shard stage and the
+    reduce), and its plan holds no pandas grouped or cogrouped map."""
     monkeypatch.setattr(
         CompressedIndex, "_ONE_TASK_MAX_POSTINGS",
         pidx._df_sum(["def", "return"]),
     )
-    assert _shuffles_on_shard(agg())
-    assert not _shuffles_on_shard(pidx.search("def return", k=10))
+    agg = pidx.facet_counts("def return", "lang")
+    plan = agg._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "FlatMapCoGroupsInPandas" not in plan
+    got = []
+    assert spark_counts(spark, lambda: got.extend(agg.collect())) == (1, 1, 1)
+    assert got
 
 
 @pytest.mark.parametrize("name", sorted(SEARCHES))
@@ -135,28 +140,97 @@ def test_search_fan_out_identity(spark, pidx, exact, monkeypatch, name):
     assert one and one_after
 
 
+@pytest.fixture(scope="module")
+def mf(spark, corpus, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("fan_mf"))
+    return MultiFieldIndex.build(
+        spark, corpus, out, fields=("content", "path"), n_shards=4, block_size=16,
+    )
+
+
+@pytest.fixture(scope="module")
+def exact_fields(corpus):
+    return {f: ExactBM25(corpus, text_col=f, cache=True) for f in ("content", "path")}
+
+
+def _match_ids(e):
+    """The exact engine's full match set as (doc_id,) rows, doc_id ASC."""
+    return e.match_scores("def return").select("doc_id").orderBy("doc_id")
+
+
+#: name → (the compressed call, its exact twin or None: only the
+#: one-task vs fanned-out identity is checked)
+FAN_CALLS = {
+    "phrase": (lambda ix: ix.match_phrase_positional("def return", k=20),
+               lambda e: e.match_phrase("def return", k=20)),
+    "phrase_prefix": (lambda ix: ix.match_phrase_prefix_positional("def re", k=20),
+                      lambda e: e.match_phrase_prefix("def re", k=20)),
+    "fuzzy": (lambda ix: ix.fuzzy_term_search("returm", k=20),
+              lambda e: e.fuzzy_term_search("returm", k=20)),
+    "facet": (lambda ix: ix.facet_counts("def return", "lang"),
+              lambda e: e.facet_counts("def return", "lang")),
+    "function_score": (
+        lambda ix: ix.function_score("def return", "doc_id", k=20, modifier="sqrt"),
+        lambda e: e.function_score("def return", "doc_id", k=20, modifier="sqrt"),
+    ),
+    "dis_max": (
+        lambda ix: ix.dis_max(["def return", "import yield"], k=20, tie_breaker=0.3),
+        lambda e: e.dis_max(["def return", "import yield"], k=20, tie_breaker=0.3),
+    ),
+    "boosting": (lambda ix: ix.boosting("def return", "import", k=20),
+                 lambda e: e.boosting("def return", "import", k=20)),
+    "collapse": (lambda ix: ix.collapse_search("def return", "repo", k=8),
+                 lambda e: e.collapse_search("def return", "repo", k=8)),
+    "match_doc_ids": (
+        lambda ix: ix.match_doc_ids("def return").orderBy("doc_id"), _match_ids,
+    ),
+    "top_hits": (lambda ix: ix.top_hits_agg("def return", "lang", 2, 3), None),
+    "percentiles": (lambda ix: ix.percentiles_agg("def return", "doc_id"), None),
+}
+
+
 def test_phrase_expansion_and_agg_fan_out_identity(pidx, exact, monkeypatch):
-    """Both positional phrase twins, one expansion tail and one
-    match-set aggregation give the same answer fanned out as in one
-    task, and the same as the exact engine."""
-    calls = {
-        "phrase": (lambda e: e.match_phrase("def return", k=20)),
-        "phrase_prefix": (lambda e: e.match_phrase_prefix("def re", k=20)),
-        "fuzzy": (lambda e: e.fuzzy_term_search("returm", k=20)),
-        "facet": (lambda e: e.facet_counts("def return", "lang")),
-    }
-    compressed = {
-        "phrase": lambda: pidx.match_phrase_positional("def return", k=20),
-        "phrase_prefix": lambda: pidx.match_phrase_prefix_positional("def re", k=20),
-        "fuzzy": lambda: pidx.fuzzy_term_search("returm", k=20),
-        "facet": lambda: pidx.facet_counts("def return", "lang"),
-    }
-    one = {n: [tuple(r) for r in c().collect()] for n, c in compressed.items()}
+    """The positional phrase twins, one expansion tail, the match-set
+    aggregations and the compound scorers give the same answer fanned
+    out as in one task, and the same as the exact engine where it has
+    the method."""
+    one = {n: [tuple(r) for r in c(pidx).collect()] for n, (c, _) in FAN_CALLS.items()}
     monkeypatch.setattr(CompressedIndex, "_ONE_TASK_MAX_POSTINGS", 0)
-    for name, c in compressed.items():
-        want = [tuple(r) for r in calls[name](exact).collect()]
-        assert [tuple(r) for r in c().collect()] == one[name] == want, name
-        assert want, name
+    for name, (c, twin) in FAN_CALLS.items():
+        assert [tuple(r) for r in c(pidx).collect()] == one[name], name
+        if twin is not None:
+            assert [tuple(r) for r in twin(exact).collect()] == one[name], name
+        assert one[name], name
+
+
+@pytest.mark.parametrize("name", ["best_fields", "most_fields", "cross_fields"])
+def test_multi_match_fan_out_identity(mf, exact_fields, monkeypatch, name):
+    """multi_match (best_fields, most_fields) and
+    multi_match_cross_fields — one seek plan across the sub-indexes —
+    give the same page fanned out as in one task, and the same as their
+    DataFrame twins over per-field exact engines."""
+    text = "def mod4 return"
+    if name == "cross_fields":
+        call = lambda: mf.multi_match_cross_fields(text, k=15, offset=2)  # noqa: E731
+        want = rows(cross_fields_exact(exact_fields, text, k=15, offset=2))
+    else:
+        kw = dict(k=15, offset=2, match_type=name)
+        call = lambda: mf.multi_match(text, **kw)  # noqa: E731
+        want = rows(multi_match_exact(exact_fields, text, **kw))
+    one = rows(call())
+    monkeypatch.setattr(CompressedIndex, "_ONE_TASK_MAX_POSTINGS", 0)
+    assert rows(call()) == one == want and want
+
+
+def test_multi_match_tie_breaker_fan_out_identity(mf, monkeypatch):
+    """best_fields with a tie_breaker: the same page fanned out, in one
+    task and on the coordinator (``multi_match_local``)."""
+    kw = dict(k=15, offset=2, tie_breaker=0.3)
+    one = rows(mf.multi_match("def mod4 return", **kw))
+    local = mf.multi_match_local("def mod4 return", **kw)
+    monkeypatch.setattr(CompressedIndex, "_ONE_TASK_MAX_POSTINGS", 0)
+    assert rows(mf.multi_match("def mod4 return", **kw)) == one
+    assert list(zip(local["doc_id"], local["score"])) == one and one
 
 
 def _window_ref(ix: CompressedIndex, terms: list[str]):

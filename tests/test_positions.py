@@ -66,6 +66,10 @@ def lrows(pdf):
     return list(zip(pdf["doc_id"].tolist(), pdf["score"].tolist()))
 
 
+def tuples(df):
+    return [tuple(r) for r in df.collect()]
+
+
 # ---------------------------------------------------------------- codec --
 
 def test_position_codec_roundtrip():
@@ -335,10 +339,12 @@ def test_phrase_local_volume_routing(pidx, monkeypatch):
 
 def test_non_resident_dictionary_same_rows(spark, pidx, monkeypatch):
     """An index whose term dictionary is not resident (term_stats above
-    ``_LOCAL_TERMSTATS_BYTES``) answers every scored shape with the
-    resident instance's rows — idfs, estimates and expansions then come
-    from Spark scans of term_stats — and the coordinator expansions
-    that need the resident dictionary refuse."""
+    ``_LOCAL_TERMSTATS_BYTES``) answers every scored shape, both phrase
+    prefix twins and the match-set stages (no estimate: one task per
+    shard) with the resident instance's rows — idfs, estimates and
+    expansions then come from Spark scans of term_stats — and the
+    coordinator fuzzy expansion, which needs the resident dictionary,
+    refuses."""
     monkeypatch.setattr(CompressedIndex, "_LOCAL_TERMSTATS_BYTES", 0)
     cold = CompressedIndex(spark, pidx.out_dir)
     assert cold._df_local is None and pidx._df_local is not None
@@ -352,16 +358,16 @@ def test_non_resident_dictionary_same_rows(spark, pidx, monkeypatch):
             (rows, lambda ix: ix.match_phrase("def return", k=15), True),
             (lrows, lambda ix: ix.match_phrase_local("def return", k=15), True),
             (lrows, lambda ix: ix.match_phrase_local("def zzznotindexed"), False),
+            (lrows, lambda ix: ix.match_phrase_prefix_local("def re", k=15), True),
+            (lrows, lambda ix: ix.match_phrase_prefix_local("re", k=15, offset=2), True),
             (rows, lambda ix: ix.fuzzy_term_search("retrn", k=50), True),
+            (tuples, lambda ix: ix.facet_counts("def return", "lang"), True),
+            (rows, lambda ix: ix.function_score("def return", "doc_id", k=15), True),
         ):
             want = ix_rows(call(pidx))
             assert bool(want) == some
             assert ix_rows(call(cold)) == want
-        for call in (
-            lambda: cold.match_phrase_prefix_local("def re", k=5),
-            lambda: cold.fuzzy_term_search_local("retrn", k=5),
-        ):
-            with pytest.raises(ValueError, match="resident term dictionary"):
-                call()
+        with pytest.raises(ValueError, match="resident term dictionary"):
+            cold.fuzzy_term_search_local("retrn", k=5)
     finally:
         cold.term_stats.unpersist()

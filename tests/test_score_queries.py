@@ -223,6 +223,28 @@ def test_function_score_nonnumeric_field_is_missing_zero(exact, cidx):
     assert all(s == 0.0 for _, s in e)
 
 
+def test_field_values_parse_like_spark_try_cast(spark):
+    """The executor kernel reads ``function_score``'s field from the
+    attrs files and casts it itself; each value must come out as
+    Spark's ``try_cast(... as double)`` gives it (null → NaN)."""
+    import numpy as np
+
+    from librecatastro_spark.engine.fscore import try_double_np
+
+    vals = ["1", " 2.5 ", "1e3", "-.5", "1.5f", "2D", "0x1.8p1", "inf",
+            "-Infinity", "NaN", "+nan", "abc", "1_0", "", "\t7\n", "0x10",
+            "1e400", "1.2.3", None]
+    df = spark.createDataFrame([(v,) for v in vals], "v string")
+    want = [r[0] for r in df.select(F.col("v").try_cast("double")).collect()]
+    got = list(try_double_np(np.array(vals, dtype=object)))
+    flags = spark.createDataFrame([(True,), (None,), (False,)], "v boolean")
+    vals += [True, None, False]
+    want += [r[0] for r in flags.select(F.col("v").try_cast("double")).collect()]
+    got += list(try_double_np(np.array([True, None, False], dtype=object)))
+    for v, w, g in zip(vals, want, got):
+        assert (w is None or math.isnan(w)) if math.isnan(g) else w == g, v
+
+
 @pytest.mark.parametrize("modifier", ["sqrt", "log1p"])
 def test_function_score_negative_product_clamped(exact, cidx, modifier):
     """Negative field*factor is clamped to 0 before sqrt/log1p on every

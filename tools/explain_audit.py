@@ -26,7 +26,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
-from librecatastro_spark.engine.wand import CompressedIndex
+from librecatastro_spark.engine.wand import CompressedIndex, _Seek
 from librecatastro_spark.index.builder import build_index, load_term_stats
 from librecatastro_spark.session import get_spark
 from perfbench.obs import Footprint
@@ -51,7 +51,6 @@ CHECKS = {
     "explode": "Generate",
     "arrow_eval": "ArrowEvalPython",
     "grouped_map": "FlatMapGroupsInPandas",
-    "cogrouped_map": "FlatMapCoGroupsInPandas",
     "single_partition": "Exchange SinglePartition",
     "reads_pos_enc": "pos_enc:binary",  # the column in a scan's ReadSchema
 }
@@ -111,34 +110,39 @@ def seek_audit(index, make, pos_enc: bool = False):
     lines, problems = [], []
     if not seen:
         problems.append("no executor seek ran")
-    fp = Footprint(index.out_dir)
     for seek, cols, tasks in seen:
-        plan = index._seek_plan(seek.terms, seek.pfx)
-        planned = sum(len(rgs) for files in plan.values() for _, rgs in files)
-        n_files = sum(len(files) for files in plan.values())
-        terms = list(seek.terms)
-        if seek.pfx is not None:
-            terms += [t for t in fp.postings if t.startswith(seek.pfx)]
-        need = fp.cost(sorted(set(terms)))["row_groups"]
-        ok = planned >= need if seek.pfx is not None else planned == need
-        cmp = ">=" if seek.pfx is not None else "=="
-        what = f"{len(seek.terms)} terms" + (
-            f" + prefix range [{seek.pfx!r}, successor)" if seek.pfx is not None else ""
-        )
-        lines.append(
-            f"- {'OK ' if ok else '!! '}seek: {what} → {planned} row groups "
-            f"in {n_files} files (Footprint.cost {need}; expected planned "
-            f"{cmp} cost)"
-        )
+        # a multi-field seek is (sub-index, _Seek) pairs, one per field
+        pairs = [(index, seek)] if isinstance(seek, _Seek) else seek
+        shards = set()
+        for ix, sk in pairs:
+            fp = Footprint(ix.out_dir)
+            plan = ix._seek_plan(sk.terms, sk.pfx)
+            shards |= set(plan)
+            planned = sum(len(rgs) for files in plan.values() for _, rgs in files)
+            n_files = sum(len(files) for files in plan.values())
+            terms = list(sk.terms)
+            if sk.pfx is not None:
+                terms += [t for t in fp.postings if t.startswith(sk.pfx)]
+            need = fp.cost(sorted(set(terms)))["row_groups"]
+            ok = planned >= need if sk.pfx is not None else planned == need
+            cmp = ">=" if sk.pfx is not None else "=="
+            what = f"{len(sk.terms)} terms" + (
+                f" + prefix range [{sk.pfx!r}, successor)" if sk.pfx is not None else ""
+            ) + (f" of field {sk.field!r}" if sk.field is not None else "")
+            lines.append(
+                f"- {'OK ' if ok else '!! '}seek: {what} → {planned} row groups "
+                f"in {n_files} files (Footprint.cost {need}; expected planned "
+                f"{cmp} cost)"
+            )
+            if not ok:
+                problems.append(f"seek plans {planned} row groups, Footprint.cost {need}")
         reads_pos = "pos_enc" in cols
         lines.append(
             f"- {'OK ' if reads_pos == pos_enc else '!! '}columns read: "
             f"{', '.join(cols)} (`pos_enc` {'present' if reads_pos else 'absent'}, "
             f"expected {'present' if pos_enc else 'absent'})"
         )
-        lines.append(f"- tasks: {tasks} for {len(plan)} shards")
-        if not ok:
-            problems.append(f"seek plans {planned} row groups, Footprint.cost {need}")
+        lines.append(f"- tasks: {tasks} for {len(shards)} shards")
         if reads_pos != pos_enc:
             problems.append(f"seek reads {cols}")
     return df, lines, problems
@@ -326,32 +330,32 @@ def main() -> int:
     )
     sections.append(s); problems += p
 
+    df, *seek = seek_audit(
+        index, lambda: index.function_score("the scan", "n_chars", k=10)
+    )
     s, p = audit(
         "function_score field-boost plan (r3 compound scoring)",
-        index.function_score("the scan", "n_chars", k=10),
-        {
-            "pushed_filter": True, "take_ordered": True, "cartesian": False,
-            "cogrouped_map": True,
-        },
+        df, {**EXECUTOR_PLAN, "cartesian": False},
         "Score reshaping voids BM25 block-max bounds, so the kernel "
-        "decodes the query terms' postings fully (the AND-branch bill); "
-        "the numeric field cogroups shard-locally (each shard ships only "
-        "its own (doc_id, field) rows — never a global join), the "
-        "In(term) predicate is pushed to the postings scan, and the "
+        "decodes the query terms' postings fully (the AND-branch bill). "
+        "Each shard's task reads the numeric field from its own attrs "
+        "files (the field never leaves its shard — no global join), the "
+        "executor seek reads only the query terms' row groups, and the "
         "merge is TakeOrderedAndProject.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
+    df, *seek = seek_audit(index, lambda: index.dis_max(
+        ["the scan", "data model"], k=10, tie_breaker=0.3
+    ))
     s, p = audit(
         "dis_max multi-clause plan (r3 compound scoring)",
-        index.dis_max(["the scan", "data model"], k=10, tie_breaker=0.3),
-        {
-            "pushed_filter": True, "take_ordered": True, "cartesian": False,
-            "grouped_map": True,
-        },
-        "ONE postings scan covers every clause's terms (union of In "
-        "filters); per-shard the kernel computes each clause's sums and "
-        "max-combines — no second scan per clause, no cartesian.",
+        df, {**EXECUTOR_PLAN, "cartesian": False},
+        "ONE executor seek covers every clause's terms; per shard the "
+        "kernel computes each clause's sums and max-combines — no second "
+        "read per clause, no cartesian.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
@@ -410,27 +414,39 @@ def main() -> int:
     )
     sections.append(s); problems += p
 
+    df, *seek = seek_audit(
+        index, lambda: index.collapse_search("the scan", "lang", k=5)
+    )
     s, p = audit(
         "collapse_search field-collapsing plan (r3)",
-        index.collapse_search("the scan", "lang", k=5),
-        {"window": True, "take_ordered": True, "cartesian": False},
-        "Each shard emits its per-key best capped at its local top-k "
-        "keys (exact by pigeonhole even though keys span shards), so the "
+        df, {**EXECUTOR_PLAN, "window": True, "cartesian": False},
+        "Each shard's task emits its per-key best capped at its local "
+        "top-k keys (exact by pigeonhole even though keys span shards), "
+        "joining the key column from its own attrs files, so the "
         "key-partitioned Window re-collapse and the TakeOrderedAndProject "
-        "merge see O(shards x k) rows, never the match set.",
+        "merge see O(shards x k) rows, never the match set. One task "
+        "(Coalesce 1) already satisfies the Window's partitioning: no "
+        "Exchange.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
+    df, *seek = seek_audit(index, lambda: index.top_hits_agg(
+        "the scan", "lang", k_per_group=2, n_groups=3
+    ))
     s, p = audit(
         "top_hits terms-bucket plan (r4 de-serialized key rank)",
-        index.top_hits_agg("the scan", "lang", k_per_group=2, n_groups=3),
-        {"window": True, "single_partition": False, "take_ordered": True,
-         "cartesian": False},
-        "Per-key top-j is a key-PARTITIONED Window; the winning keys are "
-        "a map-side-combined groupBy + orderBy().limit(n_groups) "
-        "(TakeOrderedAndProject) semi-joined back — NO partition-less "
-        "Window (Exchange SinglePartition absent), so no single task "
-        "ever sorts the O(distinct group keys) frame of a hot query.",
+        df, {**EXECUTOR_PLAN, "window": True, "single_partition": False,
+             "exchange": True, "broadcast": True, "cartesian": False},
+        "Per-key top-j is a key-PARTITIONED Window over the executor "
+        "tasks' per-shard top-j rows; the winning keys are a "
+        "map-side-combined groupBy + orderBy().limit(n_groups) "
+        "(TakeOrderedAndProject) semi-joined back through a broadcast "
+        "(the plan's only Exchange is that BroadcastExchange) — NO "
+        "partition-less Window (Exchange SinglePartition absent), so no "
+        "single task ever sorts the O(distinct group keys) frame of a "
+        "hot query.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
@@ -442,17 +458,20 @@ def main() -> int:
         spark, docs, mf_dir, fields=("text", "source"),
         n_shards=4, block_size=32,
     )
+    df, *seek = seek_audit(
+        mf.sub[mf.fields[0]],
+        lambda: mf.multi_match("the src3", k=10, tie_breaker=0.3),
+    )
     s, p = audit(
         "multi_match shard-local combine plan (r3)",
-        mf.multi_match("the src3", k=10, tie_breaker=0.3),
-        {"pushed_filter": True, "take_ordered": True, "cartesian": False},
-        "Per-field posting blocks (In(term,…) pushed to each sub-index "
-        "scan) union and group by shard ONCE — sub-indexes share the "
-        "doc-id range split, so a doc's postings for every field are in "
-        "the same task and the cross-field combine (max/sum of per-field "
-        "BM25) happens inside the grouped kernel: ONE grouped map keyed "
-        "by shard (one coalesced task for a small query), exact "
+        df, {**EXECUTOR_PLAN, "cartesian": False},
+        "ONE executor seek plan spans the sub-indexes (a seek line per "
+        "field): they share the doc-id range split, so each shard's task "
+        "reads that shard's blocks of every field, tagged `_field`, and "
+        "the cross-field combine (max/sum of per-field BM25) happens "
+        "inside the per-shard kernel (one task for a small query), exact "
         "post-combine top-k, TakeOrderedAndProject merge.",
+        seek=seek,
     )
     sections.append(s); problems += p
 
@@ -563,14 +582,18 @@ def main() -> int:
     )
     sections.append(s); problems += p
 
+    df, *seek = seek_audit(
+        index, lambda: index.composite_agg("the scan", "lang", size=4, after="a")
+    )
     s, p = audit(
         "composite agg keyset page plan (r3)",
-        index.composite_agg("the scan", "lang", size=4, after="a"),
-        {"take_ordered": True, "cartesian": False},
-        "The after-cursor filters keys INSIDE the per-shard combine "
-        "(key predicates commute with sum-by-key), so the shuffle "
-        "carries only post-cursor keys and the page cut is a "
-        "TakeOrderedAndProject, never a full sort.",
+        df, {**EXECUTOR_PLAN, "cartesian": False},
+        "The after-cursor filters keys INSIDE the per-shard combine of "
+        "the executor tasks (key predicates commute with sum-by-key), so "
+        "the reduce sees only post-cursor keys and the page cut is a "
+        "TakeOrderedAndProject, never a full sort. One task (Coalesce 1) "
+        "already satisfies the reduce's partitioning: no Exchange.",
+        seek=seek,
     )
     sections.append(s); problems += p
 

@@ -5,11 +5,12 @@ Starts a local session with ``session.get_spark`` and runs three query
 shapes, each of which runs as one Spark task:
 
 - ``trivial``: a DataFrame grouped map over one row that returns it —
-  the job floor of the plan the aggregations still run
-  (``CompressedIndex._per_shard``);
+  the job floor of the per-shard grouped map the engine ran before the
+  executor seek replaced it, kept for comparison;
 - ``rdd``: ``sc.parallelize([0], 1).mapPartitions(...)`` over one
-  element — the job floor of the plan distributed ``search``, the
-  phrases and the expansion tails run (``CompressedIndex._dispatch``);
+  element — the job floor of the engine's only distributed shape
+  (``CompressedIndex._dispatch``: scored queries, phrases, expansion
+  tails, aggregations, compound scorers, multi_match);
 - ``search``: a distributed ``CompressedIndex.search`` on a tiny index
   (400 docs, 4 shards): the rdd floor plus the seek plan on the driver,
   the seek and kernel in the task and the TakeOrderedAndProject merge.
