@@ -184,8 +184,8 @@ def _shard_task(groups, cols, fn, clauses, attrs_cols, attrs_schema, attrs_root,
     ``attrs_cols``: ONE pyarrow scan of the shard's attrs files for the
     (shard, doc_id, *attrs_cols) rows passing ``clauses``
     (``_Clauses.docs``). Yields the kernel's
-    rows as the DDL ``schema`` types them. The arguments are picklable;
-    nothing here reaches the index object."""
+    rows as the DDL ``schema`` types them (``_values``). The arguments
+    are picklable; nothing here reaches the index object."""
     import pyarrow as pa
     import pyarrow.dataset as pads
 
@@ -205,12 +205,19 @@ def _shard_task(groups, cols, fn, clauses, attrs_cols, attrs_schema, attrs_root,
             out = fn(blocks, clauses.docs(ds, attrs_cols))
         else:
             out = fn(blocks)
-        yield from zip(*(
-            out[n].to_numpy(dtype=_NP_TYPES[t]).tolist() for n, t in _columns(schema)
-        ))
+        yield from zip(*(_values(out[n], t) for n, t in _columns(schema)))
 
 
 _NP_TYPES = {"long": np.int64, "double": np.float64, "string": object}
+
+
+def _values(s: pd.Series, t: str) -> list:
+    """One kernel column as Python values of the DDL type ``t``, NaN /
+    None / NA as None (a Spark null, as an Arrow hand-off masks them),
+    so a reduce above skips a missing attr value, not counts a NaN."""
+    na = s.isna().to_numpy()
+    vals = iter(s[~na].to_numpy(dtype=_NP_TYPES[t]).tolist())
+    return [None if m else next(vals) for m in na]
 
 
 def _columns(schema: str) -> list[tuple[str, str]]:
@@ -251,11 +258,11 @@ class _Clauses:
             or self.ids is not None or self.geo is not None
         )
 
-    def check(self, columns) -> "_Clauses":
-        """Validate the clauses against the attrs ``columns`` on the
-        driver, before any job: a malformed geo clause and a column the
-        attrs table lacks raise ValueError here, not inside a task."""
-        named = [*(self.filters or {}), *(self.ranges or {}), *(self.exists_cols or [])]
+    def check(self, columns, extra=()) -> "_Clauses":
+        """Validate the clauses and the ``extra`` columns against the
+        attrs ``columns`` on the driver, before any job: a malformed geo
+        clause and a column the attrs lack raise ValueError here."""
+        named = [*extra, *(self.filters or {}), *(self.ranges or {}), *(self.exists_cols or [])]
         if self.prefix is not None:
             named.append(self.prefix[0])
         if self.geo is not None:
@@ -1101,36 +1108,36 @@ class CompressedIndex:
             if win is None:
                 return self.spark.createDataFrame([], _RESULT_SCHEMA)
         partial = self._dispatch(
-            _Seek(spec.wanted, spec.pfx, win), cols,
+            [(self, _Seek(spec.wanted, spec.pfx, win))], cols,
             spec.kernel(), spec.est, spec.clauses,
         )
         return _ranked(partial, spec.k, spec.offset, after=spec.after)
 
     def _dispatch(
-        self, seek, cols, fn, est: int | None,
+        self, seeks: list, cols, fn, est: int | None,
         clauses: _Clauses = _Clauses(), schema: str = _RESULT_SCHEMA,
         attrs_cols: list | None = None,
     ) -> DataFrame:
         """The cluster site, the engine's one distributed per-shard
-        stage: the seek plan of ``seek`` (``_seek_plan``: shard →
-        [(postings file, row groups)], from the resident footer stats)
-        as ``sc.parallelize(...).mapPartitions`` over ``_shard_task``,
-        which runs ``fn`` once per shard over the rows ``seek`` keeps
-        (``cols`` only) and, with ``clauses`` or ``attrs_cols``, the
-        shard's own attrs rows. ``seek`` is a ``_Seek`` or (sub-index,
-        ``_Seek``) pairs over indexes sharing this doc-id shard split
-        (multi_match), planned as one. The result is a lazy DataFrame
-        of the kernel's rows in the DDL ``schema``: no Catalyst scan, no
-        Arrow hand-off of posting blocks from the JVM, no Exchange.
-        ``est`` is the decode estimate: at most
-        ``_ONE_TASK_MAX_POSTINGS``, every shard runs in one task (one
-        job, one stage, one task with the merge or the reduce); above
-        it, or unknown (no resident dictionary), one task per shard."""
+        stage: the seek plan of ``seeks`` — (index, ``_Seek``) pairs over
+        indexes sharing this doc-id shard split (one per field for
+        multi_match), planned as one (``_seek_plan``) — as
+        ``sc.parallelize(...).mapPartitions`` over ``_shard_task``, which
+        runs ``fn`` once per shard over the rows each seek keeps (``cols``
+        only) and, with ``clauses`` or ``attrs_cols`` (checked against
+        the attrs files before any job), the shard's own attrs rows. The
+        result is a lazy DataFrame of the kernel's rows in the DDL
+        ``schema``: no Catalyst scan, no Arrow hand-off of posting blocks
+        from the JVM, no Exchange. ``est`` is the decode estimate: within
+        ``_one_task``, every shard runs in one task; above it, or unknown
+        (no resident dictionary), one task per shard."""
         if clauses and attrs_cols is None:
             attrs_cols = []  # the (shard, doc_id) rows passing the clauses
+        if attrs_cols is not None:
+            clauses.check(self._attrs_dataset().schema.names, attrs_cols)
         _, attrs_files = self._files()
         plan: dict[int, list] = {}
-        for ix, sk in [(self, seek)] if isinstance(seek, _Seek) else seek:
+        for ix, sk in seeks:
             for shard, files in ix._seek_plan(sk.terms, sk.pfx).items():
                 plan.setdefault(shard, []).extend((p, rgs, sk) for p, rgs in files)
         groups = [
@@ -1139,7 +1146,6 @@ class CompressedIndex:
         ]
         if not groups:
             return self.spark.createDataFrame([], schema)
-        one = est is not None and est <= self._ONE_TASK_MAX_POSTINGS
         task = functools.partial(
             _shard_task, cols=tuple(cols), fn=fn, clauses=clauses,
             attrs_cols=attrs_cols,
@@ -1147,12 +1153,17 @@ class CompressedIndex:
             attrs_root=os.path.join(self.out_dir, "attrs"), schema=schema,
         )
         rdd = self.spark.sparkContext.parallelize(
-            groups, 1 if one else len(groups)
+            groups, 1 if self._one_task(est) else len(groups)
         ).mapPartitions(task)
-        df = self.spark.createDataFrame(rdd, schema, verifySchema=False)
-        # one task: Coalesce 1 tells Catalyst the rows are one partition,
-        # so a reduce above (groupBy, Window, sort) adds no Exchange
-        return df.coalesce(1) if one else df
+        return self.spark.createDataFrame(rdd, schema, verifySchema=False)
+
+    def _one_task(self, est: int | None) -> bool:
+        """Whether a stage decoding ``est`` postings runs in one task."""
+        return est is not None and est <= self._ONE_TASK_MAX_POSTINGS
+
+    def _check_attrs(self, *cols) -> None:
+        """Refuse, on the driver, a column the attrs files lack."""
+        _Clauses().check(self._attrs_dataset().schema.names, cols)
 
     def _needs_positions(self, method: str) -> None:
         """Phrase queries are answered from positional postings only —
@@ -1774,7 +1785,7 @@ class CompressedIndex:
         scored paths use. ``est`` is the blocks' Σ df."""
         n = k + offset
         partial = self._dispatch(
-            _Seek(terms, pfx), self._DOC_COLS,
+            [(self, _Seek(terms, pfx))], self._DOC_COLS,
             lambda bl: _doc_page(bl["docs_enc"], 0, n), est,
         )
         ranked = partial.orderBy(F.asc("doc_id"))
@@ -1809,8 +1820,7 @@ class CompressedIndex:
         (``_match_set_stage``).
         """
         terms, idfs = self._match_terms(text)
-        if collapse_col not in self.attrs.columns:
-            raise ValueError(f"index attrs lack column {collapse_col!r}")
+        self._check_attrs(collapse_col)
         if not terms:
             return self.spark.createDataFrame([], self._COLLAPSE_SCHEMA)
 
@@ -1875,8 +1885,7 @@ class CompressedIndex:
         from .score_queries import function_score_fn
 
         _check(modifier, boost_mode)
-        if field not in self.attrs.columns:
-            raise ValueError(f"index attrs lack column {field!r}")
+        self._check_attrs(field)
         terms, idfs = self._match_terms(text)
         if not terms:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
@@ -1884,7 +1893,7 @@ class CompressedIndex:
             terms, idfs, self.meta.avgdl, k, modifier, factor, boost_mode, field
         )
         partial = self._dispatch(
-            _Seek(terms), self._SEEK_COLS, fn, self._df_sum(terms),
+            [(self, _Seek(terms))], self._SEEK_COLS, fn, self._df_sum(terms),
             attrs_cols=[field],
         )
         return _ranked(partial, k)
@@ -1917,7 +1926,7 @@ class CompressedIndex:
             clause_terms, idfs, self.meta.avgdl, k, float(tie_breaker)
         )
         partial = self._dispatch(
-            _Seek(wanted), self._SEEK_COLS, fn, self._df_sum(wanted)
+            [(self, _Seek(wanted))], self._SEEK_COLS, fn, self._df_sum(wanted)
         )
         return _ranked(partial, k)
 
@@ -1950,7 +1959,7 @@ class CompressedIndex:
         )
         wanted = pos_terms + neg_terms
         partial = self._dispatch(
-            _Seek(wanted), self._SEEK_COLS, fn, self._df_sum(wanted)
+            [(self, _Seek(wanted))], self._SEEK_COLS, fn, self._df_sum(wanted)
         )
         return _ranked(partial, k)
 
@@ -1992,8 +2001,7 @@ class CompressedIndex:
         pair costs a bounded cardinality, not a ranking guarantee.
         """
         terms, idfs = self._match_terms(text)
-        if facet_col not in self.attrs.columns:
-            raise ValueError(f"index attrs lack column {facet_col!r}")
+        self._check_attrs(facet_col)
         if not terms:
             return self.spark.createDataFrame([], self._FACET_SCHEMA)
         partial = self._match_set_stage(
@@ -2141,8 +2149,7 @@ class CompressedIndex:
         import pyarrow.compute as pc
 
         terms, idfs = self._match_terms(text)
-        if facet_col not in self.attrs.columns:
-            raise ValueError(f"index attrs lack column {facet_col!r}")
+        self._check_attrs(facet_col)
         empty = _empty(self._FACET_SCHEMA)
         if not terms:
             return empty
@@ -2427,9 +2434,7 @@ class CompressedIndex:
         terms, idfs = self._match_terms(text)
         names = sorted(buckets)
         need_cols = sorted({c for b in buckets.values() for c in b})
-        for c in need_cols:
-            if c not in self.attrs.columns:
-                raise ValueError(f"index attrs lack column {c!r}")
+        self._check_attrs(*need_cols)
         zero = self.spark.createDataFrame(
             [(n, 0) for n in names], self._BUCKET_SCHEMA
         )
@@ -2468,8 +2473,7 @@ class CompressedIndex:
         keys throw under Spark's default mapKeyDedupPolicy=EXCEPTION)
         and the zero-frame groupBy would silently merge their counts."""
         terms, idfs = self._match_terms(text)
-        if num_col not in self.attrs.columns and num_col != "doc_id":
-            raise ValueError(f"index attrs lack column {num_col!r}")
+        self._check_attrs(num_col)
         return self._interval_buckets(
             terms, idfs, bounds, [num_col],
             lambda m: m[num_col].astype("float64").to_numpy(),
@@ -2498,9 +2502,7 @@ class CompressedIndex:
         from ..ops.geo import haversine_np
 
         terms, idfs = self._match_terms(text)
-        for c in (lon_col, lat_col):
-            if c not in self.attrs.columns:
-                raise ValueError(f"index attrs lack column {c!r}")
+        self._check_attrs(lon_col, lat_col)
         return self._interval_buckets(
             terms, idfs, bounds, [lon_col, lat_col],
             lambda m: haversine_np(
@@ -2578,9 +2580,7 @@ class CompressedIndex:
         (parallelism cannot reorder a float accumulation).
         """
         terms, idfs = self._match_terms(text)
-        for c in (facet_col, num_col):
-            if c not in self.attrs.columns and c != "doc_id":
-                raise ValueError(f"index attrs lack column {c!r}")
+        self._check_attrs(facet_col, num_col)
         if not terms:
             return self.spark.createDataFrame(
                 [], "facet_key string, cnt long, min_val double, "
@@ -2688,8 +2688,7 @@ class CompressedIndex:
         Exact counts (map-side per-shard combine), key ASC.
         """
         terms, idfs = self._match_terms(text)
-        if facet_col not in self.attrs.columns:
-            raise ValueError(f"index attrs lack column {facet_col!r}")
+        self._check_attrs(facet_col)
         if not terms:
             return self.spark.createDataFrame([], self._FACET_SCHEMA)
         partial = self._match_set_stage(
@@ -2725,8 +2724,9 @@ class CompressedIndex:
         (TakeOrderedAndProject) — never a partition-less Window, whose
         single task would sort O(distinct keys in the match set) rows
         (millions for a hot query grouped by repo at 100×)."""
-        if group_col == "doc_id" or group_col not in self.attrs.columns:
-            raise ValueError(f"index attrs lack group column {group_col!r}")
+        if group_col == "doc_id":
+            raise ValueError("doc_id is not a group column")
+        self._check_attrs(group_col)
         terms, idfs = self._match_terms(text)
         schema = "doc_id long, score double, group_key string"
         if not terms:
@@ -2897,7 +2897,10 @@ class CompressedIndex:
                 m = m.merge(at[["doc_id", *want]], on="doc_id")
             return reduce(m) if len(m) else empty
 
-        return self._dispatch(
-            _Seek(terms), self._SEEK_COLS, fn, self._df_sum(terms),
+        est = self._df_sum(terms)
+        partial = self._dispatch(
+            [(self, _Seek(terms))], self._SEEK_COLS, fn, est,
             schema=schema, attrs_cols=want,
         )
+        # one task: Coalesce 1 spares the reduce above an Exchange
+        return partial.coalesce(1) if self._one_task(est) else partial

@@ -19,6 +19,7 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
+from librecatastro_spark.bm25 import ROUND_DECIMALS
 from librecatastro_spark.corpus import assign_doc_ids, generate_corpus
 from librecatastro_spark.engine import ExactBM25
 from librecatastro_spark.engine.multifield import (
@@ -96,8 +97,8 @@ SEARCHES = {
         "constant_score_tail"])
 def test_small_query_runs_one_job_one_stage_one_task(spark, pidx, call):
     """A small decode-volume estimate runs the query as ONE Spark job of
-    one stage and one task: no shuffle ahead of the grouped map (the
-    filters cogroup included), no second job for the phrase doc-window."""
+    one stage and one task: no shuffle ahead of the merge (the filter
+    clauses included), no second job for the phrase doc-window."""
     got = []
     assert spark_counts(spark, lambda: got.extend(call(pidx).collect())) == (1, 1, 1)
     assert got  # non-degenerate: every call matches documents
@@ -231,6 +232,61 @@ def test_multi_match_tie_breaker_fan_out_identity(mf, monkeypatch):
     monkeypatch.setattr(CompressedIndex, "_ONE_TASK_MAX_POSTINGS", 0)
     assert rows(mf.multi_match("def mod4 return", **kw)) == one
     assert list(zip(local["doc_id"], local["score"])) == one and one
+
+
+@pytest.fixture(scope="module")
+def nullable(spark, corpus, tmp_path_factory):
+    """(exact engine, index) over a long attr ``num`` that is null in
+    every doc of shard 0 (doc ids 0-99: 400 docs, 4 range shards) and in
+    every 7th doc elsewhere."""
+    docs = corpus.withColumn("num", F.when(
+        (F.col("doc_id") >= 100) & (F.col("doc_id") % 7 != 0), F.col("doc_id") % 13
+    ).cast("long"))
+    out = str(tmp_path_factory.mktemp("fan_null"))
+    build_index(spark, docs, out, attr_cols=("lang", "num"), n_shards=4, block_size=16)
+    return ExactBM25(docs, attr_cols=("lang", "num")), CompressedIndex(spark, out)
+
+
+def test_nullable_attr_aggregations_skip_nulls(nullable, monkeypatch):
+    """A null attr value reaches the Catalyst reduce as a null, not a
+    NaN: stats, percentiles and the per-facet min / max skip it — also
+    from shard 0, whose matched values are all null — one task, fanned
+    out and over the exact engine's match set alike, and a null
+    collapse key stays null."""
+    exact, ix = nullable
+    text = "def return"
+    m = exact.match_scores(text).select("doc_id").join(exact.attrs, "doc_id")
+    pcts = [25.0, 50.0, 75.0, 95.0]
+    want = {
+        "stats": m.agg(
+            F.count("*"), F.min("num").cast("double"), F.max("num").cast("double"),
+            F.sum("num").cast("double"),
+            F.round(F.sum("num") / F.count("*"), ROUND_DECIMALS),
+        ).collect(),
+        "percentiles": [
+            (p, round(v, ROUND_DECIMALS)) for p, v in zip(pcts, m.agg(F.percentile(
+                F.col("num").cast("double"), F.array(*[F.lit(p / 100) for p in pcts])
+            )).first()[0])
+        ],
+        "facet_min_max": m.groupBy("lang").agg(
+            F.min("num").cast("double"), F.max("num").cast("double")
+        ).orderBy("lang").collect(),
+    }
+    calls = {
+        "stats": lambda: ix.stats_agg(text, "num").collect(),
+        "percentiles": lambda: ix.percentiles_agg(text, "num", pcts).collect(),
+        "facet_min_max": lambda: ix.facet_metric_agg(text, "lang", "num").select(
+            "facet_key", "min_val", "max_val"
+        ).orderBy("facet_key").collect(),
+        "collapse": lambda: ix.collapse_search(text, "num", k=50).collect(),
+    }
+    one = {n: [tuple(r) for r in c()] for n, c in calls.items()}
+    assert None in {r[2] for r in one["collapse"]}
+    for name, rows_ in want.items():
+        assert one[name] == [tuple(r) for r in rows_], name
+    monkeypatch.setattr(CompressedIndex, "_ONE_TASK_MAX_POSTINGS", 0)
+    for name, c in calls.items():
+        assert [tuple(r) for r in c()] == one[name] and one[name], name
 
 
 def _window_ref(ix: CompressedIndex, terms: list[str]):

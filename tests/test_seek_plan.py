@@ -7,7 +7,8 @@ executor tasks. The plan must read exactly the row groups
 ``perfbench.obs.Footprint`` says an exact-term seek must read, and must
 lose no posting of a phrase prefix's [pfx, successor) range. The
 constant-score tails read only the columns ``_doc_page`` decodes, and a
-malformed filter clause is refused on the driver before any Spark job.
+malformed filter clause or an attr column the attrs files lack is refused
+on the driver before any Spark job.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ import os
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from librecatastro_spark.corpus import assign_doc_ids, generate_corpus
 from librecatastro_spark.engine import ExactBM25, wand
@@ -225,3 +227,26 @@ def test_bad_clause_refused_before_any_job(spark, small_rg_index, clause):
 
     assert jobs_run(spark, lambda: run(lambda: ix.search("def", k=5, **clause))) == 0
     run(lambda: ix.search_local("def", k=5, **clause))
+
+
+@pytest.mark.parametrize("call", [
+    lambda ix: ix.stats_agg("def", "nope"),
+    lambda ix: ix.histogram_agg("def", "nope", 10),
+    lambda ix: ix.cardinality_agg("def", "nope"),
+    lambda ix: ix.percentiles_agg("def", "nope"),
+    lambda ix: ix.function_score("def", "spark_only"),
+    lambda ix: ix.facet_metric_agg("def", "lang", "spark_only"),
+], ids=["stats", "histogram", "cardinality", "percentiles", "function_score",
+        "facet_metric"])
+def test_unknown_attr_column_refused_before_any_job(spark, small_rg_index, monkeypatch,
+                                                    call):
+    """A column the attrs files lack — unknown, or only in the Spark attrs
+    frame — is refused on the driver, not inside an executor task."""
+    ix = small_rg_index
+    monkeypatch.setattr(ix, "attrs", ix.attrs.withColumn("spark_only", F.lit(1)))
+
+    def run():
+        with pytest.raises(ValueError, match="lack columns"):
+            call(ix)
+
+    assert jobs_run(spark, run) == 0

@@ -26,7 +26,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
-from librecatastro_spark.engine.wand import CompressedIndex, _Seek
+from librecatastro_spark.engine.wand import CompressedIndex
 from librecatastro_spark.index.builder import build_index, load_term_stats
 from librecatastro_spark.session import get_spark
 from perfbench.obs import Footprint
@@ -97,9 +97,9 @@ def seek_audit(index, make, pos_enc: bool = False):
     seen = []
     dispatch = index._dispatch
 
-    def record(seek, cols, *args, **kwargs):
-        out = dispatch(seek, cols, *args, **kwargs)
-        seen.append((seek, tuple(cols), out.rdd.getNumPartitions()))
+    def record(seeks, cols, *args, **kwargs):
+        out = dispatch(seeks, cols, *args, **kwargs)
+        seen.append((seeks, tuple(cols), out.rdd.getNumPartitions()))
         return out
 
     index._dispatch = record
@@ -110,11 +110,9 @@ def seek_audit(index, make, pos_enc: bool = False):
     lines, problems = [], []
     if not seen:
         problems.append("no executor seek ran")
-    for seek, cols, tasks in seen:
-        # a multi-field seek is (sub-index, _Seek) pairs, one per field
-        pairs = [(index, seek)] if isinstance(seek, _Seek) else seek
+    for seeks, cols, tasks in seen:
         shards = set()
-        for ix, sk in pairs:
+        for ix, sk in seeks:  # one (sub-index, _Seek) pair per field
             fp = Footprint(ix.out_dir)
             plan = ix._seek_plan(sk.terms, sk.pfx)
             shards |= set(plan)
