@@ -15,7 +15,9 @@ Scale design:
   * Posting files are term-sorted, so a query reads only the row groups
     whose footer term range can hold its terms (``_seek_plan``) — on
     the driver for the coordinator path, in the executor tasks for the
-    distributed one; both run the same per-file read.
+    distributed one; both keep rows by the same rule (``_select``). The
+    coordinator reads each column chunk from disk at most once per
+    index generation (its cache, ``_seek_blocks``); tasks read uncached.
   * Filter clauses (keyword, prefix, ranges, exists, ids, geo) run as a
     pyarrow scan of each shard's attrs files with the predicates pushed
     to row-group stats (``_Clauses.docs``) — the scorer never sees a
@@ -150,19 +152,43 @@ class _Seek:
         return keep
 
 
-def _read_row_groups(path: str, rgs: list, shard: int, cols, seek: _Seek):
-    """One postings file's part of a seek: row groups ``rgs`` of
-    ``path``, only ``cols`` (which include ``term``), the rows ``seek``
-    keeps, tagged with their ``shard`` (and ``seek.field``); None when
-    no row is kept. The coordinator runs it per file on its thread
-    pool, an executor task serially per shard (``_shard_task``)."""
-    import pyarrow as pa
-
+def _read_columns(path: str, reads) -> list:
+    """The raw column read of one postings file, the only place a seek
+    touches the disk: for each ``(row group, cols)`` of ``reads``, that
+    row group's ``cols`` decompressed into one pyarrow table, every row
+    kept. ``use_threads=False``: the coordinator already runs one call
+    per file on its thread pool, and nested arrow threads there would
+    thrash."""
     pf = pq.ParquetFile(path)
     try:
-        tbl = pf.read_row_groups(rgs, columns=list(cols), use_threads=False)
+        return [
+            pf.read_row_group(rg, columns=list(cols), use_threads=False)
+            for rg, cols in reads
+        ]
     finally:
         pf.close()
+
+
+def _read_row_groups(path: str, rgs: list, shard: int, cols, seek: _Seek):
+    """One postings file's part of a seek in an executor task
+    (``_shard_task``): row groups ``rgs`` of ``path``, only ``cols``
+    (which include ``term``), read uncached (``_read_columns``) — a task
+    is stateless per query — then ``_select``ed. The coordinator reads
+    the same chunks through its column-chunk cache
+    (``CompressedIndex._seek_blocks``) and applies the same
+    ``_select``."""
+    import pyarrow as pa
+
+    tabs = _read_columns(path, [(rg, cols) for rg in rgs])
+    return _select(pa.concat_tables(tabs), shard, seek)
+
+
+def _select(tbl, shard: int, seek: _Seek):
+    """The one selection rule of both seek sites: the rows of one
+    postings file's table ``tbl`` that ``seek`` keeps, tagged with
+    their ``shard`` (and ``seek.field``); None when no row is kept."""
+    import pyarrow as pa
+
     tbl = tbl.filter(seek.mask(tbl))
     if not tbl.num_rows:
         return None
@@ -401,13 +427,15 @@ def _ranked(
 
 def _ranked_local(out: pd.DataFrame, k: int, offset: int = 0) -> pd.DataFrame:
     """Coordinator twin of ``_ranked`` over a pandas partial: the same
-    rounding, the same (score DESC, doc_id ASC) order (stable sort) and
-    the same [offset, offset + k) page."""
-    out["score"] = out["score"].round(ROUND_DECIMALS)
-    out = out.sort_values(
-        ["score", "doc_id"], ascending=[False, True], kind="mergesort"
-    ).iloc[offset : offset + k]
-    return out.reset_index(drop=True)
+    rounding, the same (score DESC, doc_id ASC) order (one numpy
+    lexsort; (score, doc_id) pairs are unique) and the same [offset,
+    offset + k) page."""
+    score = out["score"].to_numpy(dtype=np.float64).round(ROUND_DECIMALS)
+    page = np.lexsort((out["doc_id"].to_numpy(), -score))[offset : offset + k]
+    return pd.DataFrame({
+        c: score[page] if c == "score" else out[c].to_numpy()[page]
+        for c in out.columns
+    })
 
 
 @dataclass(frozen=True)
@@ -856,7 +884,14 @@ class CompressedIndex:
         SNAPSHOTS these for query latency (the ES analog: a shard's term
         dictionary is resident); after ``append_batch`` rewrites
         term_stats/meta/postings, call ``refresh()`` (or reopen) so
-        queries see the new N/avgdl/df and the appended posting files."""
+        queries see the new N/avgdl/df and the appended posting files.
+        It also drops the coordinator cache, whole: the decompressed
+        posting column chunks (``_seek_blocks``) and the decoded
+        postings (``_make_decoder``), one LRU under one
+        ``LC_POSTING_CACHE_MB`` budget. Nothing is cached at open; the
+        cache fills as queries read."""
+        from collections import OrderedDict
+
         spark, out_dir = self.spark, self.out_dir
         self.meta = read_meta(out_dir)
         # query analysis uses the INDEX's analyzer (meta.analyzer_re, the
@@ -874,7 +909,7 @@ class CompressedIndex:
         self._pads_attrs = None
         self._seek_handles = None
         self._attrs_files = None
-        self._dec_cache = None
+        self._dec_cache: OrderedDict = OrderedDict()
         self._dec_cache_bytes = 0
         self._df_local: dict[str, int] | None = None
         self._cf_local: dict[str, int] | None = None
@@ -1059,19 +1094,21 @@ class CompressedIndex:
         """Run a parsed scored query on one execution site. Both sites
         run one pipeline: the term-dictionary seek (``_seek_plan`` turns
         the resident footer stats into the row groups that can hold
-        ``wanted`` or a phrase prefix's [pfx, successor) range; each
-        file's part is one ``_read_row_groups``), the filter clauses as
+        ``wanted`` or a phrase prefix's [pfx, successor) range, and
+        ``_select`` keeps each file's rows), the filter clauses as
         a pyarrow scan of the attrs files (``_Clauses.docs``) and the
         spec's kernel. They differ in where it runs and in the merge.
 
         * cluster: ``_dispatch`` runs it inside executor tasks, once per
-          shard, with the kernel decoding inline (``decoder=None``); a
+          shard, reading (``_read_row_groups``) and decoding
+          (``decoder=None``) inline, uncached; a
           positional query's seek also keeps only the doc window where
           every term has postings (``_doc_window``) → ``_ranked``, one
           TakeOrderedAndProject job;
-        * local: the seek's per-file reads fan out on the coordinator's
-          thread pool → the kernel run once whole-index on the driver
-          over the decoded-postings cache (``_make_decoder``) →
+        * local: the seek's column chunks come from the coordinator
+          cache, the misses read per file on its thread pool
+          (``_seek_blocks``) → the kernel run once whole-index on the
+          driver over the decoded-postings cache (``_make_decoder``) →
           ``_ranked_local``.
 
         The whole-index local pass is bit-identical to the per-shard
@@ -1397,8 +1434,8 @@ class CompressedIndex:
 
     def _executor(self):
         """Persistent coordinator thread pool for the seek's per-file
-        reads. Thread SPAWN on a 4-core VM cost ~35 ms (the round-2 host
-        memory-wall), so a per-query
+        column reads (the cache misses). Thread SPAWN on a 4-core VM
+        cost ~35 ms (the round-2 host memory-wall), so a per-query
         ThreadPoolExecutor added ~0.2 s of pure thread creation to every
         fast-path call; one long-lived pool per open index amortizes it
         to zero. Pool size is read from LC_FASTPATH_THREADS at first use;
@@ -1508,30 +1545,90 @@ class CompressedIndex:
     def _seek_blocks(
         self, wanted, cols: tuple[str, ...] = _SEEK_COLS, pfx: str | None = None
     ) -> pd.DataFrame:
-        """The coordinator seek: ``_seek_plan``'s row groups read per file
-        (``_read_row_groups``, only ``cols``, which must include ``term``)
-        on the persistent thread pool — arrow IO and decompression release
-        the GIL; ``use_threads=False`` inside keeps one decode per task
-        instead of pool-on-pool thrash — as one pandas frame of blocks
-        with their ``shard``."""
+        """The coordinator seek: ``_seek_plan``'s row groups, only
+        ``cols`` (which must include ``term``), as one pandas frame of the
+        blocks ``_select`` keeps, with their ``shard``. Each planned
+        column chunk — (postings file, row group, column), decompressed —
+        comes from the coordinator cache; only the misses are read, one
+        ``_read_columns`` per file on the thread pool (arrow IO and
+        decompression release the GIL), and cached under the budget the
+        decoded postings share (``_cache_put``). Postings files are
+        immutable for an index generation (``refresh()`` drops the
+        cache), so a chunk is read from disk at most once per generation
+        while it stays cached; the query holds its own references, so an
+        eviction never touches it. Executor tasks read uncached
+        (``_read_row_groups``)."""
         import pyarrow as pa
 
         seek = _Seek(wanted, pfx)
-        reads = [
-            (path, rgs, shard)
-            for shard, files in self._seek_plan(wanted, pfx).items()
-            for path, rgs in files
+        files = [
+            (shard, path, rgs)
+            for shard, fl in self._seek_plan(wanted, pfx).items()
+            for path, rgs in fl
         ]
+        chunks = self._column_chunks([(path, rgs) for _, path, rgs in files], cols)
         tabs = [
             t
-            for t in self._executor().map(
-                lambda r: _read_row_groups(*r, cols, seek), reads
-            )
-            if t is not None
+            for shard, path, rgs in files
+            if (t := _select(pa.concat_tables([
+                pa.table({c: chunks[path, rg, c] for c in cols}) for rg in rgs
+            ]), shard, seek)) is not None
         ]
         if not tabs:
             return pd.DataFrame(columns=["shard", *cols])
         return pa.concat_tables(tabs).to_pandas()
+
+    def _column_chunks(self, files, cols) -> dict:
+        """(path, row group, column) → the decompressed column chunk, for
+        ``cols`` of every ``(path, row groups)`` in ``files``: the hits
+        looked up and the misses cached on the calling thread (so the
+        cache needs no lock), the misses read per file on the thread
+        pool."""
+        cache, got, reads = self._dec_cache, {}, []
+        for path, rgs in files:
+            miss = []
+            for rg in rgs:
+                need = []
+                for c in cols:
+                    hit = cache.get((path, rg, c))
+                    if hit is None:
+                        need.append(c)
+                    else:
+                        cache.move_to_end((path, rg, c))
+                        got[path, rg, c] = hit[0]
+                if need:
+                    miss.append((rg, need))
+            if miss:
+                reads.append((path, miss))
+        for (path, miss), tabs in zip(
+            reads, self._executor().map(lambda r: _read_columns(*r), reads)
+        ):
+            for (rg, need), tbl in zip(miss, tabs):
+                for c in need:
+                    col = tbl.column(c)
+                    got[path, rg, c] = col
+                    self._cache_put((path, rg, c), col, col.nbytes)
+        return got
+
+    def _cache_put(self, key, value, nbytes: int, pinned=frozenset()) -> None:
+        """Insert into the coordinator cache — one LRU by bytes holding
+        both column chunks and decoded postings, ``_dec_cache_bytes``
+        against the ``LC_POSTING_CACHE_MB`` budget (default 512; 0 caches
+        nothing) — evicting least-recently-used entries not in
+        ``pinned``. An entry that does not fit the budget even after
+        every unpinned eviction is not cached (its caller still serves
+        it), so the byte count never exceeds the budget."""
+        budget = int(os.environ.get("LC_POSTING_CACHE_MB", "512")) * (1 << 20)
+        if not budget or nbytes > budget:
+            return
+        cache = self._dec_cache
+        while self._dec_cache_bytes + nbytes > budget:
+            victim = next((k for k in cache if k not in pinned), None)
+            if victim is None:
+                return
+            self._dec_cache_bytes -= cache.pop(victim)[1]
+        cache[key] = (value, nbytes)
+        self._dec_cache_bytes += nbytes
 
     def _attrs_dataset(self):
         """The attrs pyarrow dataset for coordinator reads — discovery
@@ -1559,19 +1656,14 @@ class CompressedIndex:
         intersection pruning must NOT pay (or pin) the full decode, so
         small requests decode inline and cache nothing. Blocks are
         located by first_doc_id (unique per (shard, term): salt
-        sub-ranges are disjoint and block doc ranges are sorted). LRU by
-        bytes, budget LC_POSTING_CACHE_MB (default 512; 0 caches
-        nothing); entries touched by the current query are pinned
-        against its own eviction, and an entry that alone exceeds the
-        budget is served for this query but not cached."""
-        from collections import OrderedDict
-
-        if self._dec_cache is None:
-            self._dec_cache = OrderedDict()
-            self._dec_cache_bytes = 0
-        cache = self._dec_cache
+        sub-ranges are disjoint and block doc ranges are sorted). The
+        entries share one LRU by bytes and one LC_POSTING_CACHE_MB budget
+        (default 512; 0 caches nothing) with the seek's column chunks
+        (``_cache_put``); entries touched by the current query are pinned
+        against its own eviction, and an entry that does not fit is
+        served for this query but not cached. Executor tasks decode
+        inline, uncached."""
         avgdl = self.meta.avgdl
-        budget = int(os.environ.get("LC_POSTING_CACHE_MB", "512")) * (1 << 20)
         full_idx = blocks.groupby(["shard", "term"], sort=False).indices
         all_counts = blocks["n_docs"].to_numpy(dtype=np.int64)
         pinned: set = set()
@@ -1588,25 +1680,16 @@ class CompressedIndex:
             return starts, ids, _impact(tfs, dls, avgdl)
 
         def fill(key, gkey) -> tuple | None:
-            """Decode the FULL (shard, term) block set into a cache entry;
-            an entry that alone exceeds the whole budget is returned for
-            this query's use but not cached."""
+            """Decode the FULL (shard, term) block set into a cache entry,
+            returned for this query's use whether or not it is cached."""
             sub = blocks.iloc[full_idx[gkey]]
             starts, ids, fb = raw_decode(sub)
             firsts = sub["first_doc_id"].to_numpy(dtype=np.int64)
             order = np.argsort(firsts, kind="stable")
             ent = (firsts[order], starts[order], ids, fb)
-            nbytes = ids.nbytes + fb.nbytes + 2 * firsts.nbytes
-            if nbytes > budget:
-                return ent  # serve from it this query, but don't cache
-            while cache and self._dec_cache_bytes + nbytes > budget:
-                victim = next((k for k in cache if k not in pinned), None)
-                if victim is None:
-                    break
-                _, old_bytes = cache.pop(victim)
-                self._dec_cache_bytes -= old_bytes
-            cache[key] = (ent, nbytes)
-            self._dec_cache_bytes += nbytes
+            self._cache_put(
+                key, ent, ids.nbytes + fb.nbytes + 2 * firsts.nbytes, pinned
+            )
             return ent
 
         def decoder(rows: pd.DataFrame):
@@ -1627,9 +1710,9 @@ class CompressedIndex:
                     np.cumsum(cn) - cn, cn
                 )
                 oidx = np.repeat(ro[m], cn) + within
-                hit = cache.get(key)
+                hit = self._dec_cache.get(key)
                 if hit is not None:
-                    cache.move_to_end(key)
+                    self._dec_cache.move_to_end(key)
                     ent = hit[0]
                 else:
                     term_total = int(all_counts[full_idx[gkey]].sum())
@@ -2592,16 +2675,18 @@ class CompressedIndex:
         )
 
         def metrics(m: pd.DataFrame) -> pd.DataFrame:
-            v = m[num_col].astype("float64")
-            g = v.groupby(m[facet_col].astype(str)).agg(
-                ["count", "sum", "min", "max"]
-            )
+            # cnt counts the bucket's documents (ES doc_count, SQL
+            # count(*)), null values included; sum, min and max skip
+            # nulls and stay null for an all-null bucket, so its avg is
+            # null, as sum / count(*) is
+            g = m[num_col].astype("float64").groupby(m[facet_col].astype(str))
+            size = g.size()
             return pd.DataFrame(
-                {"facet_key": g.index.to_numpy(dtype=object),
-                 "cnt": g["count"].to_numpy(dtype="int64"),
-                 "sum_val": g["sum"].to_numpy(dtype="float64"),
-                 "min_val": g["min"].to_numpy(dtype="float64"),
-                 "max_val": g["max"].to_numpy(dtype="float64")}
+                {"facet_key": size.index.to_numpy(dtype=object),
+                 "cnt": size.to_numpy(dtype="int64"),
+                 "sum_val": g.sum(min_count=1).to_numpy(dtype="float64"),
+                 "min_val": g.min().to_numpy(dtype="float64"),
+                 "max_val": g.max().to_numpy(dtype="float64")}
             )
 
         partial = self._match_set_stage(

@@ -251,8 +251,9 @@ def test_nullable_attr_aggregations_skip_nulls(nullable, monkeypatch):
     """A null attr value reaches the Catalyst reduce as a null, not a
     NaN: stats, percentiles and the per-facet min / max skip it — also
     from shard 0, whose matched values are all null — one task, fanned
-    out and over the exact engine's match set alike, and a null
-    collapse key stays null."""
+    out and over the exact engine's match set alike, while a facet
+    bucket's cnt counts its documents (count(*)) and its avg_val is
+    round(sum / count(*)); a null collapse key stays null."""
     exact, ix = nullable
     text = "def return"
     m = exact.match_scores(text).select("doc_id").join(exact.attrs, "doc_id")
@@ -268,15 +269,16 @@ def test_nullable_attr_aggregations_skip_nulls(nullable, monkeypatch):
                 F.col("num").cast("double"), F.array(*[F.lit(p / 100) for p in pcts])
             )).first()[0])
         ],
-        "facet_min_max": m.groupBy("lang").agg(
-            F.min("num").cast("double"), F.max("num").cast("double")
+        "facet_metrics": m.groupBy("lang").agg(
+            F.count("*"), F.min("num").cast("double"), F.max("num").cast("double"),
+            F.round(F.sum("num") / F.count("*"), ROUND_DECIMALS),
         ).orderBy("lang").collect(),
     }
     calls = {
         "stats": lambda: ix.stats_agg(text, "num").collect(),
         "percentiles": lambda: ix.percentiles_agg(text, "num", pcts).collect(),
-        "facet_min_max": lambda: ix.facet_metric_agg(text, "lang", "num").select(
-            "facet_key", "min_val", "max_val"
+        "facet_metrics": lambda: ix.facet_metric_agg(text, "lang", "num").select(
+            "facet_key", "cnt", "min_val", "max_val", "avg_val"
         ).orderBy("facet_key").collect(),
         "collapse": lambda: ix.collapse_search(text, "num", k=50).collect(),
     }

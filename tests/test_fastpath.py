@@ -11,6 +11,7 @@ from __future__ import annotations
 import pytest
 
 from librecatastro_spark.index.builder import build_index
+from librecatastro_spark.engine import wand
 from librecatastro_spark.engine.wand import CompressedIndex
 
 GOLDEN = [
@@ -136,20 +137,83 @@ def test_fastpath_threading_invariant(index, monkeypatch):
 
 
 def test_fastpath_cache_invariant(index, monkeypatch):
-    """The decoded-postings cache must never change results: budget 0
-    (LC_POSTING_CACHE_MB=0 — every fill is served uncached),
-    tiny (every fill exceeds the budget, so entries are served uncached
-    and evicted across queries), and default all agree on every golden
-    shape. The AND/filtered golden queries additionally exercise the
-    small-slice inline path (requests covering <half a term's postings
-    bypass the cache)."""
+    """The coordinator cache — decompressed posting column chunks and
+    decoded postings in one LRU under one budget — must never change
+    results: budget 0 (LC_POSTING_CACHE_MB=0 — nothing is cached, so
+    every call reads its chunks from disk), tiny (1 MB: entries that do
+    not fit are served uncached, others are evicted across queries, and
+    the byte count never exceeds the budget) and default (512 MB: a
+    repeat of each shape reads nothing) all agree on every golden shape.
+    The AND/filtered golden queries additionally exercise the small-slice
+    inline path (requests covering <half a term's postings bypass the
+    decoded-postings cache)."""
+    reads = []
+    read = wand._read_columns
+
+    def spy(path, wants):
+        reads.append(path)
+        return read(path, wants)
+
+    monkeypatch.setattr(wand, "_read_columns", spy)
     results = {}
-    for mb in ("0", "1", "512"):
-        monkeypatch.setenv("LC_POSTING_CACHE_MB", mb)
+    for mb in ("0", "1", None):
+        if mb is None:
+            monkeypatch.delenv("LC_POSTING_CACHE_MB", raising=False)
+        else:
+            monkeypatch.setenv("LC_POSTING_CACHE_MB", mb)
+        budget = int(mb or 512) << 20
         index.refresh()  # drop any previously filled cache
-        results[mb] = [_local_rows(index, q) for q in GOLDEN]
+        assert not index._dec_cache and index._dec_cache_bytes == 0
+        rows = []
+        for q in GOLDEN:
+            rows.append(_local_rows(index, q))
+            assert index._dec_cache_bytes <= budget, (mb, q)
+        for q, want in zip(GOLDEN, rows):
+            reads.clear()
+            assert _local_rows(index, q) == want, (mb, q)
+            if mb == "0":
+                assert reads, q
+            elif mb is None:
+                assert not reads, q
+        if mb == "0":
+            assert not index._dec_cache and index._dec_cache_bytes == 0
+        results[mb or "512"] = rows
     assert results["0"] == results["512"]
     assert results["1"] == results["512"]
+
+
+def test_search_local_after_append_and_refresh(spark, tmp_path):
+    """A warm coordinator cache does not outlive its index generation:
+    after ``append_batch`` + ``refresh()`` the cache is empty, and
+    ``search_local`` — cold, then warm — equals ``ExactBM25`` over the
+    grown corpus."""
+    from pyspark.sql import functions as F
+
+    from librecatastro_spark.corpus import assign_doc_ids, generate_corpus
+    from librecatastro_spark.engine import ExactBM25
+    from librecatastro_spark.streaming.incremental import append_batch
+
+    docs = assign_doc_ids(generate_corpus(
+        spark, 300, min_tokens=20, max_tokens=80, partitions=2
+    )).cache()
+    out = str(tmp_path / "idx")
+    build_index(spark, docs.where(F.col("doc_id") < 200), out,
+                n_shards=2, block_size=16)
+    ix = CompressedIndex(spark, out)
+    queries = ("def return", "import class value")
+    for text in queries:
+        ix.search_local(text, k=20)
+    assert ix._dec_cache_bytes > 0
+    append_batch(spark, out, docs.where(F.col("doc_id") >= 200))
+    ix.refresh()
+    assert not ix._dec_cache and ix._dec_cache_bytes == 0
+    exact = ExactBM25(docs)
+    for text in queries:
+        want = [(r["doc_id"], r["score"]) for r in exact.search(text, k=20).collect()]
+        assert want
+        for _ in range(2):
+            got = ix.search_local(text, k=20)
+            assert list(zip(got["doc_id"].tolist(), got["score"].tolist())) == want
 
 
 @pytest.mark.parametrize("path", ["search", "search_local"])

@@ -2,10 +2,11 @@
 
 ``CompressedIndex._seek_plan`` turns the resident footer stats into the
 row groups a query reads (shard → [(postings file, row groups)]); the
-coordinator reads them on its thread pool, the distributed path inside
-executor tasks. The plan must read exactly the row groups
-``perfbench.obs.Footprint`` says an exact-term seek must read, and must
-lose no posting of a phrase prefix's [pfx, successor) range. The
+coordinator reads them through its column-chunk cache, the misses on its
+thread pool, the distributed path inside executor tasks. The plan must
+read exactly the row groups ``perfbench.obs.Footprint`` says an
+exact-term seek must read, and must lose no posting of a phrase
+prefix's [pfx, successor) range. The
 constant-score tails read only the columns ``_doc_page`` decodes, and a
 malformed filter clause or an attr column the attrs files lack is refused
 on the driver before any Spark job.
@@ -150,28 +151,34 @@ def test_boundary_prefix_rows_same_on_every_route(small_rg_index, corpus):
 def test_constant_score_local_reads_doc_columns_only(small_rg_index, monkeypatch):
     """The coordinator expansion tail and the single-token phrase prefix
     seek ("term", "docs_enc") only — the columns ``_doc_page`` decodes —
-    and answer as the distributed twins do."""
+    and answer as the distributed twins do; a repeat reads nothing (the
+    column-chunk cache holds the chunks)."""
     ix = small_rg_index
     want = {
         "fuzzy": [tuple(r) for r in ix.fuzzy_term_search("returm", k=30).collect()],
         "prefix": [tuple(r) for r in ix.term_prefix_search("re", k=30).collect()],
     }
     seen = []
-    read = wand._read_row_groups
+    read = wand._read_columns
 
-    def spy(path, rgs, shard, cols, seek):
-        seen.append(tuple(cols))
-        return read(path, rgs, shard, cols, seek)
+    def spy(path, reads):
+        seen.extend(tuple(cols) for _, cols in reads)
+        return read(path, reads)
 
-    monkeypatch.setattr(wand, "_read_row_groups", spy)
+    monkeypatch.setattr(wand, "_read_columns", spy)
     for name, call in (
         ("fuzzy", lambda: ix.fuzzy_term_search_local("returm", k=30)),
         ("prefix", lambda: ix.match_phrase_prefix_local("re", k=30)),
     ):
+        ix.refresh()  # a cold cache: the read shows its columns
         seen.clear()
         got = call()
         assert seen and set(seen) == {("term", "docs_enc")}, name
         assert list(zip(got["doc_id"], got["score"])) == want[name] and want[name]
+        seen.clear()
+        again = call()
+        assert not seen, name
+        assert list(zip(again["doc_id"], again["score"])) == want[name]
 
 
 def test_distributed_sites_read_only_kernel_columns(small_rg_index, monkeypatch):

@@ -15,6 +15,14 @@ shapes, each of which runs as one Spark task:
   (400 docs, 4 shards): the rdd floor plus the seek plan on the driver,
   the seek and kernel in the task and the TakeOrderedAndProject merge.
 
+A fourth shape, ``local``, runs the same query through
+``CompressedIndex.search_local`` — no Spark job — twice: ``cold``, with
+``LC_POSTING_CACHE_MB=0`` so every call reads and decodes its postings,
+and ``warm``, with the default budget after the warm-up calls filled the
+coordinator cache. Its CPU is the driver's alone, split by thread from
+``/proc/self/task``: the calling thread, the seek pool's threads (the
+column reads) and every other driver thread.
+
 CPU comes from ``/proc/<pid>/stat`` (user + system): the driver is this
 process, the JVM is the gateway's child, and the Python workers are the
 JVM's descendants (the daemon and every worker it forked). ``/proc``
@@ -23,6 +31,9 @@ divided by its size; the tool prints the median per query over the
 rounds, with n.
 
 Usage: python tools/worker_cost.py [--stock] [--rounds 8] [--per-round 10]
+
+(``local`` runs ten times ``--per-round`` queries a round: one call costs
+a few ms, under one tick.)
 
 ``--stock`` passes ``extra_conf={"spark.python.daemon.module":
 "pyspark.daemon"}``, the stock daemon, to compare with the daemon
@@ -36,18 +47,21 @@ import os
 import statistics
 import sys
 import tempfile
+import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TICK_MS = 1e3 / os.sysconf("SC_CLK_TCK")
 GROUPS = ("driver", "jvm", "workers")
+THREADS = ("caller", "pool", "other")
 
 
-def _stat(pid: int) -> tuple[int, int] | None:
-    """(parent pid, user + system ticks) of ``pid``; None once it exited."""
+def _stat(path: str) -> tuple[int, int] | None:
+    """(parent pid, user + system ticks) from a ``/proc`` stat file;
+    None once its process or thread exited."""
     try:
-        with open(f"/proc/{pid}/stat") as f:
+        with open(path) as f:
             fields = f.read().rsplit(")", 1)[1].split()
     except (FileNotFoundError, ProcessLookupError):
         return None
@@ -57,7 +71,7 @@ def _stat(pid: int) -> tuple[int, int] | None:
 def cpu_ticks(jvm: int) -> dict[str, dict[int, int]]:
     """Ticks per live pid of each group."""
     stats = {p: s for p in map(int, filter(str.isdigit, os.listdir("/proc")))
-             if (s := _stat(p)) is not None}
+             if (s := _stat(f"/proc/{p}/stat")) is not None}
     workers, frontier = {}, [jvm]
     while frontier:
         parent = frontier.pop()
@@ -88,6 +102,37 @@ def measure(run, jvm: int, rounds: int, per_round: int) -> dict[str, list[float]
             ticks = sum(t - before[g].get(p, 0) for p, t in after[g].items())
             samples[g].append(ticks * TICK_MS / per_round)
     return samples
+
+
+def thread_ticks() -> dict[int, int]:
+    """Ticks per live thread of this process."""
+    return {int(t): s[1] for t in os.listdir("/proc/self/task")
+            if (s := _stat(f"/proc/self/task/{t}/stat")) is not None}
+
+
+def measure_threads(run, pool_tids, rounds: int, per_round: int) -> dict[str, list[float]]:
+    """ms per query of the calling thread, the threads ``pool_tids()``
+    names and the other driver threads, one sample per round."""
+    me = threading.get_native_id()
+    samples = {g: [] for g in THREADS}
+    for _ in range(rounds):
+        before = thread_ticks()
+        for _ in range(per_round):
+            run()
+        after = thread_ticks()
+        delta = {t: v - before.get(t, 0) for t, v in after.items()}
+        pool = sum(delta.get(t, 0) for t in pool_tids())
+        caller = delta.get(me, 0)
+        for g, ticks in zip(THREADS, (caller, pool, sum(delta.values()) - caller - pool)):
+            samples[g].append(ticks * TICK_MS / per_round)
+    return samples
+
+
+def report(name: str, s: dict[str, list[float]], groups, rounds: int) -> None:
+    med = {g: statistics.median(s[g]) for g in groups}
+    total = statistics.median([sum(s[g][i] for g in groups) for i in range(rounds)])
+    print(f"{name:8s} " + " ".join(f"{med[g]:11.1f}" for g in groups)
+          + f" {total:9.1f}   n={rounds}")
 
 
 def main() -> int:
@@ -134,12 +179,30 @@ def main() -> int:
             for name, run in shapes.items():
                 for _ in range(3):  # start the workers, warm the JIT
                     run()
-                s = measure(run, jvm, args.rounds, args.per_round)
-                med = {g: statistics.median(s[g]) for g in GROUPS}
-                total = statistics.median(
-                    [sum(s[g][i] for g in GROUPS) for i in range(args.rounds)])
-                print(f"{name:8s} " + " ".join(f"{med[g]:11.1f}" for g in GROUPS)
-                      + f" {total:9.1f}   n={args.rounds}")
+                report(name, measure(run, jvm, args.rounds, args.per_round),
+                       GROUPS, args.rounds)
+
+            def local():
+                ix.search_local("def return", k=5)
+
+            def pool_tids():
+                return [t.native_id for t in ix._executor()._threads]
+
+            print(f"local: search_local, driver threads only, "
+                  f"{args.rounds} rounds x {10 * args.per_round} queries")
+            print(f"{'cache':8s} " + " ".join(f"{g + '_ms':>11s}" for g in THREADS)
+                  + f" {'total_ms':>9s}   (median per query, n rounds)")
+            warm = os.environ.get("LC_POSTING_CACHE_MB")  # None: the default
+            for name, mb in (("cold", "0"), ("warm", warm)):
+                if mb is None:
+                    os.environ.pop("LC_POSTING_CACHE_MB")
+                else:
+                    os.environ["LC_POSTING_CACHE_MB"] = mb
+                for _ in range(3):
+                    local()
+                report(name, measure_threads(
+                    local, pool_tids, args.rounds, 10 * args.per_round
+                ), THREADS, args.rounds)
     finally:
         spark.stop()
     return 0
