@@ -26,20 +26,24 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..bm25 import ROUND_DECIMALS
+from ..bm25 import B, K1, ROUND_DECIMALS
 from ..index.codec import decode_positions, decode_varbyte
 
 
 def _decode_term(rows: pd.DataFrame, with_pos: bool):
-    """Decode one term's block rows (already doc-ordered: block doc ranges
-    are sorted and salt sub-ranges disjoint, caller sorts by first_doc_id)
-    into flat (ids, tfs, dls, pos). ``pos`` is the per-occurrence position
-    stream aligned with ``repeat(ids, tfs)``; None when with_pos=False."""
+    """The engine's one varbyte block decoder: block ``rows`` into flat
+    (ids, tfs, dls, pos) in posting order (row order, doc order within
+    a block). Varbyte is self-delimiting, so every row's buffers decode
+    in ONE numpy pass per column; each block's first delta is absolute,
+    so its ids are the cumsum of deltas minus the running total just
+    before the block. ``pos`` is the per-occurrence position stream
+    aligned with ``repeat(ids, tfs)``; None when with_pos=False. Every
+    kernel decodes through here, so the codec calls go through this
+    module's ``decode_varbyte`` / ``decode_positions``."""
     counts = rows["n_docs"].to_numpy(dtype=np.int64)
-    starts = np.zeros(len(counts), dtype=np.int64)
-    starts[1:] = np.cumsum(counts)[:-1]
     d = decode_varbyte(b"".join(rows["docs_enc"])).astype(np.int64)
     c = np.cumsum(d)
+    starts = np.cumsum(counts) - counts
     ids = c - np.repeat(c[starts] - d[starts], counts)
     tfs = decode_varbyte(b"".join(rows["tfs_enc"])).astype(np.int64)
     dls = decode_varbyte(b"".join(rows["dls_enc"])).astype(np.int64)
@@ -49,6 +53,65 @@ def _decode_term(rows: pd.DataFrame, with_pos: bool):
             b"".join(x for x in rows["pos_enc"] if x is not None), tfs
         )
     return ids, tfs, dls, pos
+
+
+def _impact(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
+    """Idf-independent BM25 factor per posting: score = idf * impact.
+    Factored out so the decoded-postings cache can precompute it once per
+    index generation and every scoring path multiplies by the SAME float
+    values — cached and uncached results stay bit-identical."""
+    return tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
+
+
+def _decode_impacts(rows: pd.DataFrame, avgdl: float):
+    """(ids, impact) of block ``rows`` in posting order — the uncached
+    decode of the BM25 kernels (``_decode_term`` + ``_impact``). The
+    coordinator's decoded-postings cache (wand ``_make_decoder``) fills
+    from it, so both return the same floats."""
+    ids, tfs, dls, _ = _decode_term(rows, False)
+    return ids, _impact(tfs.astype(np.float64), dls.astype(np.float64), avgdl)
+
+
+def _overlapping(rows: pd.DataFrame, cand: np.ndarray) -> pd.DataFrame:
+    """The block ``rows`` whose doc-id range [first_doc_id, last_doc_id]
+    holds a doc of the sorted ``cand`` — the filter step of every
+    kernel's filter-then-verify: a candidate's postings all live in
+    such blocks, so the others are dropped before any decode."""
+    lo = np.searchsorted(
+        cand, rows["first_doc_id"].to_numpy(dtype=np.int64), side="left"
+    )
+    hi = np.searchsorted(
+        cand, rows["last_doc_id"].to_numpy(dtype=np.int64), side="right"
+    )
+    return rows[hi > lo]
+
+
+def _decode_complete(blocks: pd.DataFrame, distinct: list[str], idfs: dict):
+    """Intersection-aware decode of a phrase's complete terms (the
+    AND-branch pattern of wand ``_shard_topk_fn``): the rarest term
+    (highest idf) decodes fully and seeds the candidate docs; every
+    other term decodes only its blocks ``_overlapping`` them — a
+    selective phrase ("def uid00123") decodes ~the rare term's postings
+    plus a handful of hot-term blocks, not the hot terms' full posting
+    lists. Returns ({term: (ids, tfs, dls, pos)}, candidates), or None
+    when a term has no block left (no doc holds every term)."""
+    per_term = {}
+    for t in distinct:
+        sub = blocks[blocks["term"] == t]
+        if len(sub) == 0:
+            return None
+        per_term[t] = sub.sort_values("first_doc_id", kind="stable")
+    rare = max(distinct, key=lambda t: idfs[t])
+    decoded = {rare: _decode_term(per_term[rare], True)}
+    cand = decoded[rare][0]  # unique & sorted: one posting row per (doc, term)
+    for t in distinct:
+        if t == rare:
+            continue
+        sub = _overlapping(per_term[t], cand)
+        if len(sub) == 0:
+            return None
+        decoded[t] = _decode_term(sub, True)
+    return decoded, cand
 
 
 #: pseudo-term key for the type-ahead expansion stream — analyzer tokens
@@ -135,6 +198,12 @@ def phrase_verify(
     return common[np.unique(cur // cap)]
 
 
+def _empty_scores() -> pd.DataFrame:
+    return pd.DataFrame(
+        {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
+    )
+
+
 def phrase_topk_fn(
     seq: list[str],
     idfs: dict[str, float],
@@ -146,55 +215,25 @@ def phrase_topk_fn(
     irrelevant to the result) positional phrase scorer:
     ``fn(blocks) -> (doc_id, score)`` top-k.
 
-    Intersection-aware decode (the AND-branch pattern from
-    _shard_topk_fn): the rarest term decodes fully and seeds the
-    candidate doc set; every other term's blocks are range-pruned against
-    the candidates BEFORE decode — a selective phrase ("def uid00123")
-    decodes ~the rare term's postings plus a handful of hot-term blocks,
-    not the hot terms' full posting lists. Scoring is BM25 require_all
-    over the distinct terms, accumulated in sorted-term order with the
-    same _impact factoring as every other path — bit-identical floats to
-    ExactBM25.match_phrase (rank-identity-tested)."""
+    The complete terms decode intersection-aware (``_decode_complete``),
+    then ``phrase_verify`` chains their positions. Scoring is BM25
+    require_all over the distinct terms, accumulated in sorted-term order
+    with the same _impact factoring as every other path — bit-identical
+    floats to ExactBM25.match_phrase (rank-identity-tested)."""
     distinct = sorted(set(seq))
 
     def fn(blocks: pd.DataFrame, attrs=None) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-        )
-        if len(blocks) == 0:
-            return empty
-        per_term = {}
-        for t in distinct:
-            sub = blocks[blocks["term"] == t]
-            if len(sub) == 0:
-                return empty
-            per_term[t] = sub.sort_values("first_doc_id", kind="stable")
-        rare = max(distinct, key=lambda t: idfs[t])
-        decoded = {}
-        r_ids, r_tfs, r_dls, r_pos = _decode_term(per_term[rare], True)
-        decoded[rare] = (r_ids, r_tfs, r_dls, r_pos)
-        cand = r_ids  # unique & sorted: one posting row per (doc, term)
-        for t in distinct:
-            if t == rare:
-                continue
-            sub = per_term[t]
-            lo = np.searchsorted(
-                cand, sub["first_doc_id"].to_numpy(dtype=np.int64), side="left"
-            )
-            hi = np.searchsorted(
-                cand, sub["last_doc_id"].to_numpy(dtype=np.int64), side="right"
-            )
-            sub = sub[hi > lo]
-            if len(sub) == 0:
-                return empty
-            decoded[t] = _decode_term(sub, True)
+        got = _decode_complete(blocks, distinct, idfs)
+        if got is None:
+            return _empty_scores()
+        decoded = got[0]
         verified = phrase_verify(
             {t: (decoded[t][0], decoded[t][1], decoded[t][3]) for t in distinct},
             seq,
             slop,
         )
         if len(verified) == 0:
-            return empty
+            return _empty_scores()
         return _score_verified(decoded, distinct, idfs, avgdl, verified, k)
 
     return fn
@@ -209,8 +248,6 @@ def _score_verified(
     factoring as every other path, so floats are bit-identical to
     ExactBM25's phrase scores (rank-identity-tested). Shared by the
     phrase and phrase-prefix positional kernels."""
-    from .wand import _impact
-
     acc = np.zeros(len(verified), dtype=np.float64)
     for t in distinct:
         ids, tfs, dls, _ = decoded[t]
@@ -246,78 +283,34 @@ def phrase_prefix_topk_fn(
     token starting with ``pfx`` at the NEXT position).
 
     The input blocks carry BOTH roles: rows whose term is in ``seq`` and
-    rows whose term starts with ``pfx`` (the Catalyst scan unions the two
-    pushed predicates); a complete term that itself starts with ``pfx``
+    rows whose term starts with ``pfx`` (one seek keeps both: wand
+    ``_Seek`` with ``pfx``); a complete term that itself starts with ``pfx``
     legitimately serves both. Complete terms decode intersection-aware
-    (rarest seeds candidates, exactly phrase_topk_fn); the expansion rows
-    are range-pruned against those candidates BEFORE decode, then their
-    occurrence streams concatenate into the chain's zero-slop tail —
-    never collected, never scored, so there is no max_expansions
-    dependence (ExactBM25.match_phrase_prefix's semantics exactly)."""
+    (``_decode_complete``); the expansion rows are ``_overlapping``-pruned
+    against the rarest term's candidates BEFORE decode, and decode as
+    one occurrence stream: the chain's zero-slop tail — never collected,
+    never scored, so there is no max_expansions dependence
+    (ExactBM25.match_phrase_prefix's semantics exactly)."""
     distinct = sorted(set(seq))
 
     def fn(blocks: pd.DataFrame, attrs=None) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-        )
-        if len(blocks) == 0:
-            return empty
         exp_rows = blocks[blocks["term"].str.startswith(pfx)]
+        got = _decode_complete(blocks, distinct, idfs) if len(exp_rows) else None
+        if got is None:
+            return _empty_scores()
+        decoded, cand = got
+        exp_rows = _overlapping(exp_rows, cand)
         if len(exp_rows) == 0:
-            return empty
-        per_term = {}
-        for t in distinct:
-            sub = blocks[blocks["term"] == t]
-            if len(sub) == 0:
-                return empty
-            per_term[t] = sub.sort_values("first_doc_id", kind="stable")
-        rare = max(distinct, key=lambda t: idfs[t])
-        decoded = {rare: _decode_term(per_term[rare], True)}
-        cand = decoded[rare][0]
-        for t in distinct:
-            if t == rare:
-                continue
-            sub = per_term[t]
-            lo = np.searchsorted(
-                cand, sub["first_doc_id"].to_numpy(dtype=np.int64), side="left"
-            )
-            hi = np.searchsorted(
-                cand, sub["last_doc_id"].to_numpy(dtype=np.int64), side="right"
-            )
-            sub = sub[hi > lo]
-            if len(sub) == 0:
-                return empty
-            decoded[t] = _decode_term(sub, True)
-        lo = np.searchsorted(
-            cand, exp_rows["first_doc_id"].to_numpy(dtype=np.int64), side="left"
-        )
-        hi = np.searchsorted(
-            cand, exp_rows["last_doc_id"].to_numpy(dtype=np.int64), side="right"
-        )
-        exp_rows = exp_rows[hi > lo]
-        if len(exp_rows) == 0:
-            return empty
-        ids_l, tfs_l, pos_l = [], [], []
-        for _, grp in exp_rows.groupby("term", sort=False):
-            gi, gt, _, gp = _decode_term(
-                grp.sort_values("first_doc_id", kind="stable"), True
-            )
-            ids_l.append(gi)
-            tfs_l.append(gt)
-            pos_l.append(gp)
-        nxt = (
-            np.concatenate(ids_l),
-            np.concatenate(tfs_l),
-            np.concatenate(pos_l),
-        )
+            return _empty_scores()
+        ids, tfs, _, pos = _decode_term(exp_rows, True)
         verified = phrase_verify(
             {t: (decoded[t][0], decoded[t][1], decoded[t][3]) for t in distinct},
             seq,
             0,
-            next_term_data=nxt,
+            next_term_data=(ids, tfs, pos),
         )
         if len(verified) == 0:
-            return empty
+            return _empty_scores()
         return _score_verified(decoded, distinct, idfs, avgdl, verified, k)
 
     return fn

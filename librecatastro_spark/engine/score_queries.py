@@ -29,8 +29,8 @@ import pandas as pd
 
 from ..bm25 import ROUND_DECIMALS
 from .fscore import combine_np, field_factor_np, try_double_np
-from .positions import _decode_term
-from .wand import _empty, _impact
+from .positions import _decode_impacts, _decode_term
+from .wand import _empty
 
 
 def _or_match_sums(
@@ -46,13 +46,10 @@ def _or_match_sums(
         sub = blocks[blocks["term"] == t]
         if len(sub) == 0:
             continue
-        ids, tfs, dls, _ = _decode_term(
-            sub.sort_values("first_doc_id", kind="stable"), False
+        ids, impact = _decode_impacts(
+            sub.sort_values("first_doc_id", kind="stable"), avgdl
         )
-        w = idfs[t] * _impact(
-            tfs.astype(np.float64), dls.astype(np.float64), avgdl
-        )
-        per_term.append((ids, w))
+        per_term.append((ids, idfs[t] * impact))
         uids = ids if uids is None else np.union1d(uids, ids)
     if uids is None or len(uids) == 0:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)

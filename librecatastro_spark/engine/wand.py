@@ -22,6 +22,11 @@ Scale design:
     pyarrow scan of each shard's attrs files with the predicates pushed
     to row-group stats (``_Clauses.docs``) — the scorer never sees a
     non-matching attrs row.
+  * Every kernel decodes posting blocks through ONE varbyte decoder
+    (positions ``_decode_term``; the BM25 kernels through its
+    ``_decode_impacts``, or the coordinator's cache of it) and drops
+    blocks holding no candidate doc with ONE range prune
+    (positions ``_overlapping``) before decode.
   * Block bounds are rescaled by idf_now / idf_build so pruning stays
     safe after incremental appends grow N (see builder.py).
   * A query whose decode volume is small runs every shard in one task
@@ -66,7 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..analyzer import Analyzer, tokenize_expr
-from ..bm25 import B, K1, ROUND_DECIMALS
+from ..bm25 import ROUND_DECIMALS
 from ..index.builder import (
     load_attrs,
     load_postings,
@@ -74,6 +79,12 @@ from ..index.builder import (
     read_meta,
 )
 from ..index.codec import decode_varbyte, delta_decode
+from .positions import (
+    _decode_impacts,
+    _overlapping,
+    phrase_prefix_topk_fn,
+    phrase_topk_fn,
+)
 
 _RESULT_SCHEMA = "doc_id long, score double"
 
@@ -118,14 +129,12 @@ def _shard_files(root: str):
 @dataclass(frozen=True)
 class _Seek:
     """The posting rows one seek keeps: ``term`` in ``terms`` or, with
-    ``pfx``, in the phrase prefix's [pfx, successor) range; with
-    ``window`` (lo, hi), only blocks whose doc-id range overlaps it.
-    ``field`` tags the rows it reads with a ``_field`` column (the
-    sub-index of a multi-field seek)."""
+    ``pfx``, in the phrase prefix's [pfx, successor) range. ``field``
+    tags the rows it reads with a ``_field`` column (the sub-index of a
+    multi-field seek)."""
 
     terms: tuple
     pfx: str | None = None
-    window: tuple | None = None
     field: str | None = None
 
     def __post_init__(self):
@@ -143,12 +152,6 @@ class _Seek:
             if succ is not None:
                 rng = pc.and_(rng, pc.less(term, succ))
             keep = pc.or_(keep, rng)
-        if self.window is not None:
-            lo, hi = self.window
-            keep = pc.and_(keep, pc.and_(
-                pc.greater_equal(tbl.column("last_doc_id"), lo),
-                pc.less_equal(tbl.column("first_doc_id"), hi),
-            ))
         return keep
 
 
@@ -446,9 +449,8 @@ class _Scored:
     ``wanted`` every term whose postings the kernel reads, and
     ``kernel(decoder)`` builds the per-shard kernel (the coordinator
     passes its decoded-postings cache; the phrase kernels decode
-    themselves and ignore it). ``positional`` queries read the position
-    columns, restrict the distributed seek to the doc window where every
-    term has postings and route by decode volume; ``pfx`` is a phrase
+    positions uncached and ignore it). ``positional`` queries read the
+    position columns and route by decode volume; ``pfx`` is a phrase
     prefix's open last token. ``est`` is the decode estimate (None
     without a resident dictionary); ``empty`` marks a query no doc can
     match."""
@@ -527,14 +529,6 @@ def _lev_within(a: str, b: str, max_edits: int) -> bool:
     return prev[lb] <= max_edits
 
 
-def _impact(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
-    """Idf-independent BM25 factor per posting: score = idf * impact.
-    Factored out so the decoded-postings cache can precompute it once per
-    index generation and every scoring path multiplies by the SAME float
-    values — cached and uncached results stay bit-identical."""
-    return tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
-
-
 def _shard_topk_fn(
     terms: list[str],
     idfs: dict[str, float],
@@ -557,13 +551,15 @@ def _shard_topk_fn(
     pushed down, ``_Clauses.docs``, on either path), never in pandas here.
     All numpy/pandas batch ops — no per-row Python.
 
-    ``decoder`` (coordinator path only) substitutes the inline varbyte
-    decode with ``decoder(rows) -> (ids, impact)`` — the same doc ids and
-    the same idf-independent BM25 impacts (see ``_impact``) in the same
-    posting order, gathered from the index's decoded-postings cache. The
-    distributed path always passes None (executors are stateless per
-    query), so its results are byte-identical with or without the
-    cache."""
+    Every posting is decoded through ``decoder(rows) -> (ids, impact)``:
+    the doc ids and the idf-independent BM25 impacts (positions
+    ``_impact``) in posting order. The coordinator passes its
+    decoded-postings cache (``CompressedIndex._make_decoder``); the
+    distributed path passes None (executors are stateless per query) and
+    decodes uncached through positions ``_decode_impacts``, which the
+    cache fills from — so results are byte-identical with or without
+    the cache."""
+    decode = decoder or functools.partial(_decode_impacts, avgdl=avgdl)
     # dense doc-id spaces (the builder assigns shards by id range over
     # n_docs, so ids are 0..N-ish) let per-doc sums run as one
     # np.bincount over a dense array instead of np.unique's O(n log n)
@@ -606,17 +602,7 @@ def _shard_topk_fn(
         if must_not_terms:
             nb = blocks[blocks["term"].isin(must_not_terms)]
             if len(nb):
-                if decoder is not None:
-                    excluded = np.unique(decoder(nb)[0])
-                else:
-                    nc = nb["n_docs"].to_numpy(dtype=np.int64)
-                    ns = np.zeros(len(nc), dtype=np.int64)
-                    ns[1:] = np.cumsum(nc)[:-1]
-                    nd = decode_varbyte(b"".join(nb["docs_enc"])).astype(np.int64)
-                    ncum = np.cumsum(nd)
-                    excluded = np.unique(
-                        ncum - np.repeat(ncum[ns] - nd[ns], nc)
-                    )
+                excluded = np.unique(decode(nb)[0])
         score_terms = terms + [t for t in (should_terms or []) if t not in terms]
         qb = blocks[blocks["term"].isin(score_terms)]
         if len(qb) == 0:
@@ -631,35 +617,11 @@ def _shard_topk_fn(
             return m
 
         def score_block_rows(rows: pd.DataFrame, with_th: bool = False):
-            """Decode + BM25-weight every posting of the given block rows in
-            BULK: varbyte is self-delimiting, so the concatenation of many
-            blocks' buffers decodes in ONE numpy pass; per-block delta
-            resets are undone with a cumsum-minus-base trick. Replaces a
-            per-block decode loop that cost ~0.25 ms × thousands of blocks
-            per query."""
-            if len(rows) == 0:
-                e = np.empty(0)
-                return e.astype(np.int64), e, e.astype(np.int64)
+            """Decode + BM25-weight every posting of the given block rows
+            in BULK (one ``decode`` call): (ids, idf * impact[, term
+            hash])."""
             counts = rows["n_docs"].to_numpy(dtype=np.int64)
-            if decoder is not None:
-                # fb is the idf-independent BM25 impact, precomputed once
-                # per index generation in the decoded-postings cache
-                ids, fb = decoder(rows)
-            else:
-                starts = np.zeros(len(counts), dtype=np.int64)
-                starts[1:] = np.cumsum(counts)[:-1]
-                d = decode_varbyte(b"".join(rows["docs_enc"])).astype(np.int64)
-                # per-block absolute ids: cumsum of deltas minus the
-                # running total just before each block start (first delta
-                # is absolute)
-                c = np.cumsum(d)
-                base = c[starts] - d[starts]
-                ids = c - np.repeat(base, counts)
-                tfs = decode_varbyte(b"".join(rows["tfs_enc"])).astype(np.float64)
-                dls = decode_varbyte(b"".join(rows["dls_enc"])).astype(np.float64)
-                # same factoring as _impact (idf * fb), so cached and
-                # uncached paths produce bit-identical floats
-                fb = _impact(tfs, dls, avgdl)
+            ids, fb = decode(rows)
             idf_b = rows["term"].map(idfs).to_numpy(dtype=np.float64)
             w = np.repeat(idf_b, counts) * fb
             if not with_th:
@@ -692,17 +654,10 @@ def _shard_topk_fn(
                 seed_mask = qb["term"] == rare
             else:
                 seed_mask = qb["term"].isin(terms)
-            seed_rows, other = qb[seed_mask], qb[~seed_mask]
-            s_ids, s_w, s_th = score_block_rows(seed_rows, with_th=True)
+            s_ids, s_w, s_th = score_block_rows(qb[seed_mask], with_th=True)
             cand = np.unique(s_ids)
-            pos_lo = np.searchsorted(
-                cand, other["first_doc_id"].to_numpy(dtype=np.int64), side="left"
-            )
-            pos_hi = np.searchsorted(
-                cand, other["last_doc_id"].to_numpy(dtype=np.int64), side="right"
-            )
             o_ids, o_w, o_th = score_block_rows(
-                other[pos_hi > pos_lo], with_th=True
+                _overlapping(qb[~seed_mask], cand), with_th=True
             )
             sel = np.isin(o_ids, cand)
             ids = np.concatenate([s_ids, o_ids[sel]])
@@ -771,50 +726,43 @@ def _shard_topk_fn(
             # back sorted, so the pruned-block patch below can merge by
             # searchsorted instead of a pandas aligned add
             uids, sums = agg_sums(ids[m], w[m])
-            if len(pruned) and len(uids):
-                lo = pruned["first_doc_id"].to_numpy(dtype=np.int64)
-                hi = pruned["last_doc_id"].to_numpy(dtype=np.int64)
-                # a pruned block matters only if its id range holds a candidate
-                pos_lo = np.searchsorted(uids, lo, side="left")
-                pos_hi = np.searchsorted(uids, hi, side="right")
-                need = pos_hi > pos_lo
-                if need.any():
-                    p_rows = pruned[need].sort_values(
-                        ["term", "first_doc_id"], kind="stable"
+            # a pruned block matters only if its id range holds a candidate
+            p_rows = _overlapping(pruned, uids)
+            if len(p_rows):
+                p_rows = p_rows.sort_values(["term", "first_doc_id"], kind="stable")
+                p_ids, p_w, _ = score_block_rows(p_rows)
+                sel = np.isin(p_ids, uids)
+                if sel.any():
+                    # recompute each patched doc's sum FROM SCRATCH in
+                    # the same canonical term order the kept-only sums
+                    # used — adding the patch on top of the kept
+                    # partial (`sums += adds`) would associate the
+                    # floats by the θ-dependent kept/pruned split,
+                    # which differs between passes (see above). A
+                    # patched doc's full posting set is always
+                    # kept ∪ this patch: any pruned block holding a
+                    # candidate is kept by ``_overlapping``.
+                    patched = np.unique(p_ids[sel])
+                    tcode = {
+                        t: i
+                        for i, t in enumerate(sorted(set(score_terms)))
+                    }
+                    k_tk = np.repeat(
+                        kept["term"].map(tcode).to_numpy(dtype=np.int64),
+                        kept["n_docs"].to_numpy(dtype=np.int64),
                     )
-                    p_ids, p_w, _ = score_block_rows(p_rows)
-                    sel = np.isin(p_ids, uids)
-                    if sel.any():
-                        # recompute each patched doc's sum FROM SCRATCH in
-                        # the same canonical term order the kept-only sums
-                        # used — adding the patch on top of the kept
-                        # partial (`sums += adds`) would associate the
-                        # floats by the θ-dependent kept/pruned split,
-                        # which differs between passes (see above). A
-                        # patched doc's full posting set is always
-                        # kept ∪ this patch: any pruned block holding a
-                        # candidate is in `need` by the range test.
-                        patched = np.unique(p_ids[sel])
-                        tcode = {
-                            t: i
-                            for i, t in enumerate(sorted(set(score_terms)))
-                        }
-                        k_tk = np.repeat(
-                            kept["term"].map(tcode).to_numpy(dtype=np.int64),
-                            kept["n_docs"].to_numpy(dtype=np.int64),
-                        )
-                        p_tk = np.repeat(
-                            p_rows["term"].map(tcode).to_numpy(dtype=np.int64),
-                            p_rows["n_docs"].to_numpy(dtype=np.int64),
-                        )
-                        mk = np.isin(ids, patched)
-                        cat_ids = np.concatenate([ids[mk], p_ids[sel]])
-                        cat_w = np.concatenate([w[mk], p_w[sel]])
-                        cat_tk = np.concatenate([k_tk[mk], p_tk[sel]])
-                        order = np.lexsort((cat_tk, cat_ids))
-                        r_uids, r_sums = agg_sums(cat_ids[order], cat_w[order])
-                        # every r_uid is in uids by the sel mask above
-                        sums[np.searchsorted(uids, r_uids)] = r_sums
+                    p_tk = np.repeat(
+                        p_rows["term"].map(tcode).to_numpy(dtype=np.int64),
+                        p_rows["n_docs"].to_numpy(dtype=np.int64),
+                    )
+                    mk = np.isin(ids, patched)
+                    cat_ids = np.concatenate([ids[mk], p_ids[sel]])
+                    cat_w = np.concatenate([w[mk], p_w[sel]])
+                    cat_tk = np.concatenate([k_tk[mk], p_tk[sel]])
+                    order = np.lexsort((cat_tk, cat_ids))
+                    r_uids, r_sums = agg_sums(cat_ids[order], cat_w[order])
+                    # every r_uid is in uids by the sel mask above
+                    sums[np.searchsorted(uids, r_uids)] = r_sums
             out_ids, out_scores = uids, sums
         # rank on the ROUNDED score — the same total order the global
         # merge uses (search: F.round then orderBy; search_local: round
@@ -1044,9 +992,9 @@ class CompressedIndex:
         scale story, reproduced on the same rounded total order both
         engines rank by (mutually exclusive with ``offset``)."""
         return self._execute(self._search_spec(
-            text, k, offset, require_all, must_not_text, should_text,
-            search_after, min_match,
-            self._clauses(filters, prefix, ranges, exists_cols, ids, geo),
+            text, k, offset, require_all, filters, prefix, must_not_text,
+            should_text, search_after, ranges, min_match, exists_cols, ids,
+            geo,
         ), local=False)
 
     def _clauses(self, filters, prefix, ranges, exists_cols, ids, geo) -> _Clauses:
@@ -1056,13 +1004,16 @@ class CompressedIndex:
         )
 
     def _search_spec(
-        self, text, k, offset, require_all, must_not_text, should_text,
-        search_after, min_match, clauses: _Clauses,
+        self, text, k=10, offset=0, require_all=False, filters=None,
+        prefix=None, must_not_text=None, should_text=None, search_after=None,
+        ranges=None, min_match=None, exists_cols=None, ids=None, geo=None,
     ) -> _Scored:
-        """``search`` / ``search_local`` parsed once, before any posting
-        I/O: the argument checks, analysis of the query, should and
-        must_not texts, idfs from the term dictionary (zero-df terms
-        dropped) and the scorer's arguments."""
+        """``search`` / ``search_local`` (same parameters) parsed once,
+        before any posting I/O: the argument checks, the filter clauses,
+        analysis of the query, should and must_not texts, idfs from the
+        term dictionary (zero-df terms dropped) and the scorer's
+        arguments."""
+        clauses = self._clauses(filters, prefix, ranges, exists_cols, ids, geo)
         if search_after is not None and offset:
             raise ValueError("offset and search_after are mutually exclusive")
         terms = sorted(set(self._analyze(text)))
@@ -1101,9 +1052,7 @@ class CompressedIndex:
 
         * cluster: ``_dispatch`` runs it inside executor tasks, once per
           shard, reading (``_read_row_groups``) and decoding
-          (``decoder=None``) inline, uncached; a
-          positional query's seek also keeps only the doc window where
-          every term has postings (``_doc_window``) → ``_ranked``, one
+          (``decoder=None``) uncached → ``_ranked``, one
           TakeOrderedAndProject job;
         * local: the seek's column chunks come from the coordinator
           cache, the misses read per file on its thread pool
@@ -1139,13 +1088,8 @@ class CompressedIndex:
             return _ranked_local(fn(blocks, attrs), spec.k, spec.offset)
         if spec.empty:
             return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        win = None
-        if spec.positional:
-            win = self._doc_window(spec.terms)
-            if win is None:
-                return self.spark.createDataFrame([], _RESULT_SCHEMA)
         partial = self._dispatch(
-            [(self, _Seek(spec.wanted, spec.pfx, win))], cols,
+            [(self, _Seek(spec.wanted, spec.pfx))], cols,
             spec.kernel(), spec.est, spec.clauses,
         )
         return _ranked(partial, spec.k, spec.offset, after=spec.after)
@@ -1243,11 +1187,11 @@ class CompressedIndex:
         DuckDB oracle. ES's phrase-frequency scoring is intentionally not
         reproduced (documented divergence).
 
-        Plan: the seek of the phrase terms' row groups, kept to the
-        doc window where every term has postings (``_doc_window``, from
-        block metadata) → the per-shard kernel in executor tasks (verify
-        + BM25 require_all top-k in one decode pass) → global rounded
-        (score DESC, doc_id ASC) merge.
+        Plan: the seek of the phrase terms' row groups → the per-shard
+        kernel in executor tasks (the rarest term's candidates prune the
+        other terms' blocks before decode, then verify + BM25
+        require_all top-k in one decode pass) → global rounded (score
+        DESC, doc_id ASC) merge.
         """
         return self._execute(
             self._phrase_spec("match_phrase", text, k, offset, slop), local=False
@@ -1269,8 +1213,6 @@ class CompressedIndex:
         terms = sorted(set(complete))
         idfs = self._idfs(terms) if terms else {}
         avgdl, n = self.meta.avgdl, k + offset
-        from .positions import phrase_prefix_topk_fn, phrase_topk_fn
-
         if prefix:
             def kernel(decoder=None):
                 return phrase_prefix_topk_fn(complete, pfx, idfs, avgdl, n)
@@ -1281,23 +1223,6 @@ class CompressedIndex:
             terms, terms, kernel, self._phrase_decode_estimate(terms), k,
             offset, empty=len(idfs) < len(terms), positional=True, pfx=pfx,
         )
-
-    def _doc_window(self, terms: list[str]) -> tuple[int, int] | None:
-        """Doc-id window [lo, hi] where EVERY term has postings — [max
-        over terms of min(first_doc_id), min over terms of
-        max(last_doc_id)] — read from posting-block METADATA by the
-        coordinator term-dictionary seek (``_seek_blocks`` over the
-        terms' row groups, three columns, no decode, no Spark job); None
-        when a term has no postings or the ranges do not overlap (no doc
-        can hold them all)."""
-        spans = self._seek_blocks(
-            terms, cols=("term", "first_doc_id", "last_doc_id")
-        ).groupby("term")
-        if len(spans) < len(set(terms)):
-            return None
-        lo = int(spans["first_doc_id"].min().max())
-        hi = int(spans["last_doc_id"].max().min())
-        return (lo, hi) if lo <= hi else None
 
     def match_phrase_prefix(
         self,
@@ -1322,13 +1247,12 @@ class CompressedIndex:
 
         Plan: ONE seek covering both roles — the complete terms OR the
         [pfx, successor) vocab range (both prune the term-sorted files'
-        row groups; the range exactly like ``term_prefix_search``), kept
-        to the complete terms' doc window → the per-shard kernel in
-        executor tasks
+        row groups; the range exactly like ``term_prefix_search``) → the
+        per-shard kernel in executor tasks
         (positions.phrase_prefix_topk_fn: chain the complete positions,
-        then a zero-slop step into the concatenated expansion streams) →
-        global rounded merge. Data volume is O(complete-term postings +
-        window-pruned expansion postings) at any corpus size. The
+        then a zero-slop step into the expansion stream) → global
+        rounded merge. Decode volume is O(complete-term postings +
+        candidate-pruned expansion postings) at any corpus size. The
         expansion is never collected and never scored, so there is no
         max_expansions dependence."""
         spec = self._phrase_spec(
@@ -1347,12 +1271,12 @@ class CompressedIndex:
     #: estimated POSITIONS-DECODE volume the single-core driver kernel
     #: loses to the distributed path, so the twin transparently routes
     #: there and the "serving-latency story" claim holds on hot phrases
-    #: too. The estimate is window-share × total occurrences:
-    #: (min df / N) × Σ cf — the kernel intersection-prunes every term's
-    #: blocks against the rarest term's candidate windows
-    #: (engine/positions.py), so it decodes roughly the window's share
+    #: too. The estimate is candidate-share × total occurrences:
+    #: (min df / N) × Σ cf — the kernel prunes every term's blocks
+    #: against the rarest term's candidates (engine/positions.py
+    #: ``_decode_complete``), so it decodes roughly the candidates' share
     #: of each term's occurrence stream. Neither Σ df (mis-routes the
-    #: hot+rare phrase: its rare window skips almost all hot blocks) nor
+    #: hot+rare phrase: its rare candidates skip almost all hot blocks) nor
     #: min df alone (blind to tf — hot code keywords run 75-160
     #: occurrences/doc, so equal candidate counts can differ 100× in
     #: positions decoded) separates the regimes; the product does, by
@@ -1643,9 +1567,10 @@ class CompressedIndex:
 
     def _make_decoder(self, blocks: pd.DataFrame):
         """Decoded-postings cache + row-aligned gather. Returns
-        ``decoder(rows) -> (ids, impact)`` emitting postings in exactly
-        the order the inline decode would (rows order, block order within
-        each row), so scoring is bit-identical with and without the cache.
+        ``decoder(rows) -> (ids, impact)`` equal to the uncached
+        positions ``_decode_impacts(rows, avgdl)`` bit for bit — the same
+        postings in the same order (rows order, block order within each
+        row) — so scoring is identical with and without the cache.
 
         The cache is the coordinator analog of Lucene's hot-segment page
         cache: postings are immutable for an index generation (refresh()
@@ -1654,7 +1579,8 @@ class CompressedIndex:
         LAZILY, only when the scorer actually asks for ≥half the term's
         postings — a selective AND that decodes 0.5% of a hot term via
         intersection pruning must NOT pay (or pin) the full decode, so
-        small requests decode inline and cache nothing. Blocks are
+        small requests decode uncached (``_decode_impacts``) and cache
+        nothing; a fill decodes through it too. Blocks are
         located by first_doc_id (unique per (shard, term): salt
         sub-ranges are disjoint and block doc ranges are sorted). The
         entries share one LRU by bytes and one LC_POSTING_CACHE_MB budget
@@ -1662,28 +1588,19 @@ class CompressedIndex:
         (``_cache_put``); entries touched by the current query are pinned
         against its own eviction, and an entry that does not fit is
         served for this query but not cached. Executor tasks decode
-        inline, uncached."""
+        uncached."""
         avgdl = self.meta.avgdl
         full_idx = blocks.groupby(["shard", "term"], sort=False).indices
         all_counts = blocks["n_docs"].to_numpy(dtype=np.int64)
         pinned: set = set()
 
-        def raw_decode(sub: pd.DataFrame):
-            counts = sub["n_docs"].to_numpy(dtype=np.int64)
-            starts = np.zeros(len(counts), dtype=np.int64)
-            starts[1:] = np.cumsum(counts)[:-1]
-            d = decode_varbyte(b"".join(sub["docs_enc"])).astype(np.int64)
-            c = np.cumsum(d)
-            ids = c - np.repeat(c[starts] - d[starts], counts)
-            tfs = decode_varbyte(b"".join(sub["tfs_enc"])).astype(np.float64)
-            dls = decode_varbyte(b"".join(sub["dls_enc"])).astype(np.float64)
-            return starts, ids, _impact(tfs, dls, avgdl)
-
         def fill(key, gkey) -> tuple | None:
             """Decode the FULL (shard, term) block set into a cache entry,
             returned for this query's use whether or not it is cached."""
             sub = blocks.iloc[full_idx[gkey]]
-            starts, ids, fb = raw_decode(sub)
+            ids, fb = _decode_impacts(sub, avgdl)
+            counts = sub["n_docs"].to_numpy(dtype=np.int64)
+            starts = np.cumsum(counts) - counts
             firsts = sub["first_doc_id"].to_numpy(dtype=np.int64)
             order = np.argsort(firsts, kind="stable")
             ent = (firsts[order], starts[order], ids, fb)
@@ -1698,8 +1615,7 @@ class CompressedIndex:
             total = int(bcount.sum())
             out_ids = np.empty(total, dtype=np.int64)
             out_fb = np.empty(total, dtype=np.float64)
-            ro = np.zeros(len(bcount), dtype=np.int64)
-            ro[1:] = np.cumsum(bcount)[:-1]
+            ro = np.cumsum(bcount) - bcount
             for gkey, m in rows.groupby(
                 ["shard", "term"], sort=False
             ).indices.items():
@@ -1718,11 +1634,11 @@ class CompressedIndex:
                     term_total = int(all_counts[full_idx[gkey]].sum())
                     if 2 * tot < term_total:
                         # small slice of a big term (intersection-pruned
-                        # AND, must_not probe): decode inline, keep the
+                        # AND, must_not probe): decode uncached, keep the
                         # pruning win, don't fault the whole term in
-                        _, i_ids, i_fb = raw_decode(rows.iloc[m])
-                        out_ids[oidx] = i_ids
-                        out_fb[oidx] = i_fb
+                        out_ids[oidx], out_fb[oidx] = _decode_impacts(
+                            rows.iloc[m], avgdl
+                        )
                         continue
                     ent = fill(key, gkey)
                 pinned.add(key)
@@ -1761,9 +1677,9 @@ class CompressedIndex:
         reference's single-ES-box deployment (docker-compose.yml:7); use
         ``search`` when the candidate set itself is cluster-sized."""
         return self._execute(self._search_spec(
-            text, k, offset, require_all, must_not_text, should_text,
-            search_after, min_match,
-            self._clauses(filters, prefix, ranges, exists_cols, ids, geo),
+            text, k, offset, require_all, filters, prefix, must_not_text,
+            should_text, search_after, ranges, min_match, exists_cols, ids,
+            geo,
         ), local=True)
 
     def more_like_this(
@@ -1827,11 +1743,13 @@ class CompressedIndex:
         fragment semantics in engine/highlight.py. On a synonym index the
         snippets show each token's CANONICAL form (the analyzed token the
         postings hold), where ES shows the surface form the document
-        used — documented divergence (see highlight_snippets)."""
+        used — documented divergence (see highlight_snippets). The query
+        is parsed once (``_search_spec``, ``search``'s keyword arguments
+        in ``kwargs``); its scored terms are the highlighted ones."""
         from .highlight import highlight_snippets
 
-        hits = self.search(text, k=k, **kwargs)
-        terms = sorted(set(self._analyze(text)))
+        spec = self._search_spec(text, k, **kwargs)
+        hits = self._execute(spec, local=False)
         cand = source.join(
             F.broadcast(
                 hits.withColumnRenamed("doc_id", source_id_col).select(source_id_col)
@@ -1840,7 +1758,7 @@ class CompressedIndex:
             "left_semi",
         )
         hl = highlight_snippets(
-            cand, terms, id_col=source_id_col, text_col=source_text_col,
+            cand, spec.terms, id_col=source_id_col, text_col=source_text_col,
             frag_tokens=frag_tokens,
             split_re=getattr(self.meta, "analyzer_re", None),
             stopwords=frozenset(getattr(self.meta, "stopwords", None) or ())
@@ -1900,19 +1818,31 @@ class CompressedIndex:
         The shard kernel reuses the single-field scorer uncut (decode is
         O(query-term postings) like every path; the collapse cut bounds
         the SHUFFLE) and joins the shard's attrs slice for the key column
-        (``_match_set_stage``).
+        (``_match_set_stage``). The key is the column's text as Spark's
+        ``cast(string)`` gives it: an integer column's key reads '3' even
+        when the column holds nulls (pandas reads it as float64), and a
+        null key stays null.
         """
+        import pyarrow as pa
+
         terms, idfs = self._match_terms(text)
         self._check_attrs(collapse_col)
         if not terms:
             return self.spark.createDataFrame([], self._COLLAPSE_SCHEMA)
+        as_int = pa.types.is_integer(
+            self._attrs_dataset().schema.field(collapse_col).type
+        )
 
         def best(m: pd.DataFrame) -> pd.DataFrame:
             m = m.rename(columns={collapse_col: "collapse_key"}).sort_values(
                 ["score", "doc_id"], ascending=[False, True], kind="mergesort"
             )
-            best = m.drop_duplicates("collapse_key", keep="first")
-            return best.head(k)[["doc_id", "score", "collapse_key"]]
+            best = m.drop_duplicates("collapse_key", keep="first").head(k)
+            if as_int:
+                best = best.assign(
+                    collapse_key=best["collapse_key"].astype("Int64").astype("string")
+                )
+            return best[["doc_id", "score", "collapse_key"]]
 
         partial = self._match_set_stage(
             terms, idfs, [collapse_col], best, self._COLLAPSE_SCHEMA

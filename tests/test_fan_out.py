@@ -6,10 +6,7 @@ in executor tasks (``CompressedIndex._dispatch``): a decode-volume
 estimate within the one-task limit runs every shard in one Spark task
 (one job, one stage, one task with the merge or the reduce, no
 Exchange); a larger one runs one task per shard. The kernel runs once
-per shard either way, so the answers must not depend on the plan. The
-phrase doc-window comes from the coordinator footer-stats seek instead
-of a Spark min/max job; it must equal that aggregation on every index
-state.
+per shard either way, so the answers must not depend on the plan.
 """
 
 from __future__ import annotations
@@ -98,7 +95,7 @@ SEARCHES = {
 def test_small_query_runs_one_job_one_stage_one_task(spark, pidx, call):
     """A small decode-volume estimate runs the query as ONE Spark job of
     one stage and one task: no shuffle ahead of the merge (the filter
-    clauses included), no second job for the phrase doc-window."""
+    clauses included)."""
     got = []
     assert spark_counts(spark, lambda: got.extend(call(pidx).collect())) == (1, 1, 1)
     assert got  # non-degenerate: every call matches documents
@@ -253,7 +250,9 @@ def test_nullable_attr_aggregations_skip_nulls(nullable, monkeypatch):
     from shard 0, whose matched values are all null — one task, fanned
     out and over the exact engine's match set alike, while a facet
     bucket's cnt counts its documents (count(*)) and its avg_val is
-    round(sum / count(*)); a null collapse key stays null."""
+    round(sum / count(*)); a collapse key is the long's text ('3', not
+    '3.0'), as ExactBM25's key cast to string, and a null one stays
+    null."""
     exact, ix = nullable
     text = "def return"
     m = exact.match_scores(text).select("doc_id").join(exact.attrs, "doc_id")
@@ -273,6 +272,9 @@ def test_nullable_attr_aggregations_skip_nulls(nullable, monkeypatch):
             F.count("*"), F.min("num").cast("double"), F.max("num").cast("double"),
             F.round(F.sum("num") / F.count("*"), ROUND_DECIMALS),
         ).orderBy("lang").collect(),
+        "collapse": exact.collapse_search(text, "num", k=50).withColumn(
+            "collapse_key", F.col("collapse_key").cast("string")
+        ).collect(),
     }
     calls = {
         "stats": lambda: ix.stats_agg(text, "num").collect(),
@@ -289,61 +291,3 @@ def test_nullable_attr_aggregations_skip_nulls(nullable, monkeypatch):
     monkeypatch.setattr(CompressedIndex, "_ONE_TASK_MAX_POSTINGS", 0)
     for name, c in calls.items():
         assert [tuple(r) for r in c()] == one[name] and one[name], name
-
-
-def _window_ref(ix: CompressedIndex, terms: list[str]):
-    """The doc-window as the Spark min/max aggregation over the posting
-    blocks computed it before the seek replaced it."""
-    spans = ix.postings.where(F.col("term").isin(terms)).groupBy("term").agg(
-        F.min("first_doc_id").alias("lo"), F.max("last_doc_id").alias("hi")
-    ).collect()
-    if len(spans) < len(terms):
-        return None
-    lo = max(int(r["lo"]) for r in spans)
-    hi = min(int(r["hi"]) for r in spans)
-    return (lo, hi) if lo <= hi else None
-
-
-def _disjoint_pair(ix: CompressedIndex) -> list[str]:
-    """Two indexed terms whose posting doc ranges do not overlap."""
-    spans = (
-        ix.postings.groupBy("term")
-        .agg(F.min("first_doc_id").alias("lo"), F.max("last_doc_id").alias("hi"))
-        .orderBy("hi", "term").collect()
-    )
-    first = spans[0]
-    later = next(r for r in spans if r["lo"] > first["hi"])
-    return sorted([first["term"], later["term"]])
-
-
-def _check_windows(ix: CompressedIndex) -> None:
-    pair = _disjoint_pair(ix)
-    for terms in (["def", "return"], ["import"], ["def", "import", "return"],
-                  pair, ["def", "zzznotindexed"]):
-        assert ix._doc_window(terms) == _window_ref(ix, terms), terms
-    assert ix._doc_window(pair) is None
-    assert ix._doc_window(["zzznotindexed"]) is None
-    assert ix._doc_window(["def", "return"]) is not None
-
-
-def test_doc_window_seek_equals_spark_aggregation(spark, corpus, tmp_path_factory):
-    """The seek-based window equals the Spark min/max aggregation on a
-    fresh index, after append_batch + refresh() and after delete_batch;
-    None for an unindexed term and for non-overlapping ranges."""
-    from librecatastro_spark.streaming.incremental import append_batch, delete_batch
-
-    out = str(tmp_path_factory.mktemp("winidx"))
-    build_index(
-        spark, corpus.where(F.col("doc_id") < 300), out, attr_cols=ATTRS,
-        n_shards=4, block_size=16, salt_threshold=120, n_salts=4,
-    )
-    ix = CompressedIndex(spark, out)
-    _check_windows(ix)
-    append_batch(spark, out, corpus.where(F.col("doc_id") >= 300))
-    ix.refresh()
-    _check_windows(ix)
-    assert ix._doc_window(["def", "return"])[1] >= 300  # sees the appended docs
-    deleted = [r["doc_id"] for r in corpus.where(F.col("doc_id") >= 350).collect()]
-    assert delete_batch(spark, out, deleted) == len(deleted)
-    ix.refresh()
-    _check_windows(ix)

@@ -182,6 +182,53 @@ def test_fastpath_cache_invariant(index, monkeypatch):
     assert results["1"] == results["512"]
 
 
+def test_make_decoder_equals_uncached_decode(spark, documents, tmp_path, monkeypatch):
+    """The decoded-postings cache gathers exactly what the uncached
+    ``positions._decode_impacts`` decodes, bit for bit: each term's full
+    rows (the cache fills), a slice under half a term (decoded uncached,
+    nothing cached), the same rows again (cache hits) and with
+    LC_POSTING_CACHE_MB=0 (nothing is ever cached). Small blocks give
+    the hot terms several blocks per shard."""
+    from librecatastro_spark.engine.positions import _decode_impacts
+
+    out = str(tmp_path / "idx")
+    build_index(
+        spark, documents, out, id_col="doc_id", text_col="text",
+        n_shards=2, block_size=16, resume=False,
+    )
+    index = CompressedIndex(spark, out)
+
+    def same(rows, decoder):
+        got = decoder(rows)
+        want = _decode_impacts(rows, index.meta.avgdl)
+        assert [(a.dtype, a.tobytes()) for a in got] == [
+            (a.dtype, a.tobytes()) for a in want
+        ]
+
+    hot = sorted(index._df_local, key=index._df_local.get)[-3:]
+    for mb in ("0", None):
+        if mb is None:
+            monkeypatch.delenv("LC_POSTING_CACHE_MB", raising=False)
+        else:
+            monkeypatch.setenv("LC_POSTING_CACHE_MB", mb)
+        index.refresh()
+        blocks = index._seek_blocks(hot + ["join", "query"])
+        groups = blocks.groupby(["shard", "term"]).indices
+        big = max(groups, key=lambda g: len(groups[g]))
+        key = (int(big[0]), big[1])
+        sl = blocks.iloc[groups[big][:1]]
+        assert 2 * sl["n_docs"].sum() < blocks.iloc[groups[big]]["n_docs"].sum()
+        decoder = index._make_decoder(blocks)
+        same(sl, decoder)
+        assert key not in index._dec_cache
+        for t in sorted(set(blocks["term"])):
+            same(blocks[blocks["term"] == t], decoder)
+        assert (key in index._dec_cache) == (mb is None)
+        for t in sorted(set(blocks["term"])):
+            same(blocks[blocks["term"] == t], decoder)
+        same(sl, decoder)
+
+
 def test_search_local_after_append_and_refresh(spark, tmp_path):
     """A warm coordinator cache does not outlive its index generation:
     after ``append_batch`` + ``refresh()`` the cache is empty, and

@@ -150,9 +150,33 @@ def test_positional_single_term_equals_term_match(pidx):
     assert po == se
 
 
-def test_positional_absent_term_empty(pidx):
+def _disjoint_pair(ix: CompressedIndex) -> tuple[str, str]:
+    """Two indexed terms whose posting doc ranges do not overlap, and no
+    term starting with the second overlaps the first's range either."""
+    spans = ix.postings.groupBy("term").agg(
+        F.min("first_doc_id").alias("lo"), F.max("last_doc_id").alias("hi")
+    ).collect()
+    first = min(spans, key=lambda r: (r["hi"], r["term"]))
+    later = next(
+        r["term"] for r in sorted(spans, key=lambda r: r["term"])
+        if all(s["lo"] > first["hi"] for s in spans if s["term"].startswith(r["term"]))
+    )
+    return first["term"], later
+
+
+def test_positional_absent_term_empty(pidx, exact):
     assert rows(pidx.match_phrase_positional("def zzznotindexed")) == []
     assert lrows(pidx.match_phrase_local("def zzznotindexed")) == []
+    # both terms indexed, but no doc can hold both: every shard's kernel
+    # runs out of overlapping blocks before verify
+    first, later = _disjoint_pair(pidx)
+    text = f"{first} {later}"
+    assert pidx._analyze(text) == [first, later]
+    assert rows(pidx.match_phrase(text)) == []
+    assert lrows(pidx.match_phrase_local(text)) == []
+    assert rows(pidx.match_phrase_prefix(text)) == []
+    assert lrows(pidx.match_phrase_prefix_local(text)) == []
+    assert rows(exact.match_phrase(text)) == []
 
 
 def test_positional_rejects_empty_phrase(pidx):
@@ -327,9 +351,9 @@ def test_phrase_local_volume_routing(pidx, monkeypatch):
             pidx.match_phrase_prefix_local("def re", k=25)
         ) == want_pp
     monkeypatch.undo()
-    # the estimator is window-share × total occurrences
+    # the estimator is candidate-share × total occurrences
     # ((min df / N) × Σ cf): a hot-hot phrase estimates far above a
-    # hot+rare one (the rare window skips the hot blocks), and an
+    # hot+rare one (the rare candidates skip the hot blocks), and an
     # unindexed term estimates 0 (empty result, instant local answer)
     hot = pidx._phrase_decode_estimate(["def", "return"])
     mixed = pidx._phrase_decode_estimate(["def", "spark"])

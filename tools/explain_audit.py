@@ -300,11 +300,11 @@ def main() -> int:
         "match_phrase index-only plan (r3 positional postings)",
         df, {**EXECUTOR_PLAN, "cartesian": False, "arrow_eval": False},
         "Index-only phrase: the executor seek reads the phrase terms' "
-        "row groups, position columns included, kept to the doc window "
-        "where every term has postings (from block metadata); NO "
+        "row groups, position columns included; NO "
         "ArrowEvalPython means the source table is never scanned — "
         "phrase verify + BM25 scoring happen per shard in the task over "
-        "decoded position streams, and the merge is "
+        "decoded position streams (the rarest term's candidates prune "
+        "the other terms' blocks before decode), and the merge is "
         "TakeOrderedAndProject. The query's data volume is O(phrase "
         "terms' postings) at any corpus size.",
         seek=seek,
@@ -319,8 +319,9 @@ def main() -> int:
         df, {**EXECUTOR_PLAN, "cartesian": False, "arrow_eval": False},
         "Index-only type-ahead: ONE seek covers both roles — the complete "
         "terms OR the [pfx, successor) range, both pruning the "
-        "term-sorted files' row groups by footer stats, kept to the "
-        "complete terms' doc window. NO ArrowEvalPython (the source table "
+        "term-sorted files' row groups by footer stats; the kernel prunes "
+        "blocks against the complete terms' candidates before decode. NO "
+        "ArrowEvalPython (the source table "
         "is never scanned); the expansion streams chain inside the "
         "per-shard kernel with a zero-slop step and are never collected. "
         "Merge is TakeOrderedAndProject.",
