@@ -136,10 +136,11 @@ LIMIT {k}"""
 def _multi_match_oracle(text: str, fields: list[str], tie_breaker: float,
                         k: int = 10, cross_fields: bool = False) -> str:
     """DuckDB twin of MultiFieldIndex.multi_match (best_fields +
-    tie_breaker): one BM25 score CTE per analyzed field (each with its
-    OWN df/dl/avgdl statistics, like the per-field sub-indexes), full
-    outer join on doc_id with absent fields as 0 (BM25 > 0), combined =
-    round(best + tb * (sum - best)). With ``cross_fields`` the combine
+    tie_breaker): one raw BM25 score CTE per analyzed field (each with
+    its OWN df/dl/avgdl statistics, like the per-field sub-indexes),
+    full outer join on doc_id with absent fields as 0 (BM25 > 0),
+    combined = round(best + tb * (sum - best)), rounded once. With
+    ``cross_fields`` the combine
     is term-centric instead (multi_match_cross_fields): per-(doc, term,
     field) rounded weights, max per (doc, term) across fields, sum per
     doc."""
@@ -149,7 +150,7 @@ def _multi_match_oracle(text: str, fields: list[str], tie_breaker: float,
         toks = duckdb_tokens_sql(f)
         w = bm25_sql(f"tf{i}.tf", f"df{i}.df", f"dl{i}.dl", f"g{i}.n", f"g{i}.avgdl")
         agg = (
-            f"round(sum({w}), {ROUND_DECIMALS}) AS s"
+            f"sum({w}) AS s"
             if not cross_fields
             else f"tf{i}.term, round({w}, {ROUND_DECIMALS}) AS w"
         )

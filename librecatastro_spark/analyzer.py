@@ -10,12 +10,11 @@ uses exactly this definition, so results are rank-identical across paths.
 Spec (applies to code-like ASCII corpora per BASELINE.json input_hint):
     lowercase → split on ``[^a-z0-9_]+`` → drop empty tokens
 
-Three equivalent implementations, equality-tested in tests/test_analyzer.py:
+Two equivalent implementations of the default chain, equality-tested in
+tests/test_analyzer.py (the build's Arrow pass, ``stats.term_freqs_arrow``,
+and the DuckDB oracle's ``duckdb_tokens_sql`` render it too):
   * ``tokenize_expr``  — pure Catalyst (JVM, whole-stage codegen): the
     default hot path. Tokenization stays out of Python entirely.
-  * ``tokenize_udf``   — Arrow-vectorized pandas_udf: the seam where a
-    production code-aware analyzer (camelCase split, stemming) would plug
-    in without touching the engine.
   * ``analyze_text``   — driver-side Python for query strings (tiny input).
 """
 
@@ -23,18 +22,15 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StringType
 
 # The single source of truth for token boundaries.
 TOKEN_SPLIT_RE = "[^a-z0-9_]+"
 _PY_SPLIT = re.compile(TOKEN_SPLIT_RE)
-# complement form: a token IS a run of these chars (findall(TOKEN_RE) ==
-# split(TOKEN_SPLIT_RE) minus empties — equality-tested in test_analyzer)
+# complement form: a token IS a run of these chars (the phrase regexes
+# match token runs with it)
 TOKEN_RE = "[a-z0-9_]+"
-_PY_FINDALL = re.compile(TOKEN_RE)
 
 
 def tokenize_expr(col: Column | str) -> Column:
@@ -134,30 +130,6 @@ class Analyzer:
             sw = F.array(*[F.lit(s) for s in sorted(self.stopwords)])
             toks = F.filter(toks, lambda x: ~F.array_contains(sw, x))
         return toks
-
-
-@F.pandas_udf(ArrayType(StringType()))
-def tokenize_udf(s: pd.Series) -> pd.Series:
-    """Arrow-vectorized tokenizer — semantically identical to tokenize_expr.
-
-    Pandas `.str` ops run in C over the whole Arrow batch; no per-row
-    Python beyond the final list comprehension on already-split arrays.
-    """
-    lowered = s.fillna("").str.lower()
-    split = lowered.str.split(_PY_SPLIT)
-    return split.map(lambda toks: [t for t in toks if t])
-
-
-@F.pandas_udf(LongType())
-def token_count_udf(s: pd.Series) -> pd.Series:
-    """Arrow-vectorized token count (= dl). CPython's C regex engine runs
-    ~30× faster than the JVM's on this char-class pattern (measured), so
-    doc-length extraction over big corpora goes through Arrow batches here
-    rather than Catalyst split()."""
-    lowered = s.fillna("").str.lower()
-    return pd.Series(
-        [len(_PY_FINDALL.findall(x)) for x in lowered], dtype="int64"
-    )
 
 
 def analyze_text(text: str) -> list[str]:

@@ -13,12 +13,17 @@ Spark-first shape: one CompressedIndex per field under
 (index/builder.py shard_expr), so a document's postings for every field
 land in the SAME shard number. That co-location is the whole trick:
 
-  * ONE executor seek plan spans the sub-indexes: each shard's task
-    reads every field's posting blocks of that shard (tagged with
-    ``_field``);
+  * ONE seek spans the sub-indexes (``CompressedIndex._dispatch``):
+    each shard's task reads every field's posting blocks of that shard
+    (tagged with ``_field``);
   * the per-shard kernel scores each field with that field's own
-    df/dl/avgdl statistics (the single-field scorer, uncut, reused
-    verbatim), combines per doc LOCALLY, and keeps only its top-k.
+    df/dl/avgdl statistics (the uncut OR sum, wand ``_or_sums``),
+    combines per doc LOCALLY, and keeps only its top-k.
+
+The same kernel runs once whole-index on the driver site
+(``multi_match_local``), each field decoding through its own
+sub-index's cache; a kernel shipped to executor tasks holds no
+sub-index.
 
 The cross-field combine therefore needs NO extra shuffle and the merge
 stays O(shards x k) for BOTH semantics. That matters because a
@@ -28,11 +33,16 @@ exact, and it is only shuffle-free if all of a doc's fields are in one
 task. (Decode cost is O(query-term postings) either way — the cut
 bounds the shuffle, not the scan, same as every query path here.)
 
-Scores: per-field BM25 rounded to ROUND_DECIMALS (identical to the
-single-field engines), combined = round(best + tie_breaker * (sum -
-best)). ``most_fields`` == tie_breaker 1.0. Twinned in the DuckDB
-oracle (__spark_entry__) and rank-identity-tested against the exact
-DataFrame twin below.
+Scores: each field's RAW BM25 sum, combined = best + tie_breaker *
+(sum - best) and rounded ONCE to ROUND_DECIMALS — the compound scorers'
+protocol (score_queries module docstring). Combining per-field scores
+already rounded makes decimal ties (2.9259 + 0.3 × 0.0445 = 2.93925),
+which numpy, Spark and DuckDB each round their own way.
+``most_fields`` == tie_breaker 1.0; at tie_breaker 0 the max of raw
+sums rounds to the max of rounded ones. ``cross_fields`` keeps its
+rounded per-(doc, term, field) weights (its docstring). Twinned in the
+DuckDB oracle (__spark_entry__) and rank-identity-tested against the
+exact DataFrame twins below.
 """
 
 from __future__ import annotations
@@ -48,14 +58,17 @@ from pyspark.sql import functions as F
 from ..analyzer import analyze_text
 from ..bm25 import ROUND_DECIMALS
 from ..index.builder import build_index
-from .score_queries import _topk
+from .score_queries import _combine
 from .wand import (
     _RESULT_SCHEMA,
     CompressedIndex,
+    _decoder,
     _empty,
-    _Seek,
+    _or_sums,
     _ranked,
     _ranked_local,
+    _Seek,
+    _topk,
 )
 
 
@@ -69,20 +82,27 @@ def _tie_breaker(match_type: str, tie_breaker: float) -> float:
     raise ValueError(f"unsupported multi_match type: {match_type}")
 
 
-def _combine(results: list[pd.DataFrame], tb: float):
-    """Combine (doc_id, score) frames per doc: the best score + tb × the
-    others' sum (tb 0: the max), rounded to ROUND_DECIMALS; (doc_ids,
-    scores), doc_id ascending."""
-    ids = np.concatenate([r["doc_id"].to_numpy(dtype=np.int64) for r in results])
-    w = np.concatenate([r["score"].to_numpy(dtype=np.float64) for r in results])
-    uids, inv = np.unique(ids, return_inverse=True)
-    best = np.zeros(len(uids))  # BM25 > 0, so 0 is below any score
-    np.maximum.at(best, inv, w)
-    comb = best
-    if tb:
-        tot = np.bincount(inv, weights=w, minlength=len(uids))
-        comb = best + tb * (tot - best)
-    return uids, np.round(comb, ROUND_DECIMALS)
+def _fields_combine(match_type: str, tie_breaker: float):
+    """The best_fields / most_fields kernel body: each field's raw OR
+    sum (``_or_sums``) combined per doc (``_combine``), unrounded."""
+    tb = _tie_breaker(match_type, tie_breaker)
+    return lambda fields: _combine([_or_sums(*f) for f in fields], tb)
+
+
+def _cross_fields(fields):
+    """The cross_fields kernel body: per (field, term), the term's
+    rounded weight; per term, its best field (the max of rounded
+    weights is rounded); summed per doc."""
+    per_term: dict[str, list] = {}
+    for blocks, terms, idfs, decode in fields:
+        for t in terms:
+            u, w = _or_sums(blocks, [t], idfs, decode)
+            if len(u):
+                per_term.setdefault(t, []).append((u, np.round(w, ROUND_DECIMALS)))
+    best = [_combine(parts, 0.0) for parts in per_term.values()]
+    uids, inv = np.unique(np.concatenate([u for u, _ in best]), return_inverse=True)
+    w = np.concatenate([w for _, w in best])
+    return uids, np.bincount(inv, weights=w, minlength=len(uids))
 
 
 class MultiFieldIndex:
@@ -178,19 +198,42 @@ class MultiFieldIndex:
             if live:  # else no query term exists in this field's vocabulary
                 yield f, s, live, idfs
 
-    def _union(self, live: list, combine) -> DataFrame:
-        """``combine`` over the ``live`` (field, sub-index, terms) posting
-        blocks, once per shard: one executor seek (``_dispatch``) whose
-        plan joins every sub-index's seek of its terms, each block
-        tagged ``_field``, planned by the Σ df of every field's live
-        terms — the sub-indexes share the one-task limit, so any one of
-        them runs the stage."""
-        ests = [s._df_sum(terms) for _, s, terms in live]
-        return self.sub[self.fields[0]]._dispatch(
-            [(s, _Seek(terms, field=f)) for f, s, terms in live],
+    def _union(self, text: str, k: int, offset: int, score, local: bool = False):
+        """One multi-field query on either site of ``_dispatch``: a seek
+        whose plan joins every sub-index's seek of its live terms
+        (``_live_terms``), each block tagged ``_field``, planned by the
+        Σ df of every field's live terms (the sub-indexes share the
+        one-task limit, so any one of them runs the stage). Per shard
+        (or once whole-index on the driver) the kernel hands ``score``
+        one (blocks, terms, idfs, decode) tuple per field holding
+        blocks and cuts the (uids, raw scores) it returns to the rounded
+        top-(k+offset); ``_ranked`` or ``_ranked_local`` merges. On the
+        driver each field decodes through its own sub-index's cache;
+        the cluster kernel holds no sub-index (it could not pickle)."""
+        live = list(self._live_terms(text))
+        if not live:
+            return _empty() if local else self.spark.createDataFrame([], _RESULT_SCHEMA)
+        fields = {f: (terms, idfs, s.meta.avgdl) for f, s, terms, idfs in live}
+        caches = {f: s for f, s, _, _ in live} if local else {}
+        n = k + offset
+
+        def combine(pdf: pd.DataFrame, attrs=None, cache=None) -> pd.DataFrame:
+            per_field = []
+            for f, (terms, idfs, avgdl) in fields.items():
+                sub = pdf[pdf["_field"] == f]
+                if len(sub):
+                    per_field.append(
+                        (sub, terms, idfs, _decoder(sub, caches.get(f), avgdl))
+                    )
+            return _topk(*score(per_field), n)
+
+        ests = [s._df_sum(terms) for _, s, terms, _ in live]
+        out = self.sub[self.fields[0]]._dispatch(
+            [(s, _Seek(terms, field=f)) for f, s, terms, _ in live],
             CompressedIndex._SEEK_COLS, combine,
-            None if None in ests else sum(ests),
+            None if None in ests else sum(ests), local=local,
         )
+        return _ranked_local(out, k, offset) if local else _ranked(out, k, offset)
 
     def multi_match(
         self,
@@ -200,26 +243,10 @@ class MultiFieldIndex:
         match_type: str = "best_fields",
         tie_breaker: float = 0.0,
     ) -> DataFrame:
-        tb = _tie_breaker(match_type, tie_breaker)
-        local_k = k + offset
-        fns, live_fields = {}, []
-        for f, s, live, idfs in self._live_terms(text):
-            fns[f] = s._match_kernel(live, idfs)
-            live_fields.append((f, s, live))
-        if not live_fields:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-
-        def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-            results = []
-            for f, fd in fns.items():
-                sub = pdf[pdf["_field"] == f]
-                if len(sub):
-                    results.append(fd(sub.drop(columns=["_field"])))
-            if not results:
-                return _empty()
-            return _topk(*_combine(results, tb), local_k)
-
-        return _ranked(self._union(live_fields, combine), k, offset)
+        """ES multi_match type=best_fields (best field + tie_breaker ×
+        the others) or most_fields (the sum) over the fields' raw BM25
+        sums, rounded once (module docstring)."""
+        return self._union(text, k, offset, _fields_combine(match_type, tie_breaker))
 
     def multi_match_cross_fields(self, text: str, k: int = 10,
                                  offset: int = 0) -> DataFrame:
@@ -239,40 +266,12 @@ class MultiFieldIndex:
 
         Same shard-local combine trick as multi_match (shared doc-id
         shard split), so the shuffle stays O(shards x (k+offset)): the
-        per-shard kernel runs the single-field scorer once per (field,
-        term) pair — a per-term weight IS that term's single-term score
-        — takes the per-term max across fields, and sums per doc.
+        per-shard kernel runs the uncut OR sum once per (field, term)
+        pair — a per-term weight IS that term's single-term score —
+        takes the per-term max across fields, and sums per doc
+        (``_cross_fields``).
         """
-        local_k = k + offset
-        fns: dict[tuple[str, str], object] = {}
-        live_fields = []
-        for f, s, live, idfs in self._live_terms(text):
-            for t in live:
-                fns[(f, t)] = s._match_kernel([t], {t: idfs[t]})
-            live_fields.append((f, s, live))
-        if not live_fields:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-
-        def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-            per_term: dict[str, list] = {}
-            for (f, t), fd in fns.items():
-                sub = pdf[(pdf["_field"] == f) & (pdf["term"] == t)]
-                if len(sub):
-                    per_term.setdefault(t, []).append(
-                        fd(sub.drop(columns=["_field"]))
-                    )
-            if not per_term:
-                return _empty()
-            # each term from its best field (the weights are already
-            # rounded, so the max re-rounds to itself), summed per doc
-            best = [_combine(rs, 0.0) for rs in per_term.values()]
-            ids = np.concatenate([b[0] for b in best])
-            w = np.concatenate([b[1] for b in best])
-            uids, inv = np.unique(ids, return_inverse=True)
-            tot = np.bincount(inv, weights=w, minlength=len(uids))
-            return _topk(uids, tot, local_k)
-
-        return _ranked(self._union(live_fields, combine), k, offset)
+        return self._union(text, k, offset, _cross_fields)
 
     def multi_match_local(
         self,
@@ -282,26 +281,12 @@ class MultiFieldIndex:
         match_type: str = "best_fields",
         tie_breaker: float = 0.0,
     ) -> pd.DataFrame:
-        """``multi_match`` run on the coordinator: each field's blocks come
-        from its sub-index's term-dictionary seek (+ decoded-postings
-        cache) and the same per-field kernel runs once whole-index on the
-        driver; no Spark job (rank-identity tested)."""
-        tb = _tie_breaker(match_type, tie_breaker)
-        results = []
-        for f, s, live, idfs in self._live_terms(text):
-            blocks = s._seek_blocks(live)
-            if not len(blocks):
-                continue
-            # one whole-index pass per field (see CompressedIndex._execute
-            # for why it is bit-identical to the per-shard split)
-            results.append(
-                s._match_kernel(live, idfs, s._make_decoder(blocks))(blocks)
-            )
-        if not results:
-            return _empty()
-        uids, comb = _combine(results, tb)
-        return _ranked_local(
-            pd.DataFrame({"doc_id": uids, "score": comb}), k, offset
+        """``multi_match`` run on the coordinator: the same kernel once
+        whole-index on the driver site (``_union``), each field's
+        blocks read and decoded through its sub-index's cache; no Spark
+        job (rank-identity tested)."""
+        return self._union(
+            text, k, offset, _fields_combine(match_type, tie_breaker), local=True
         )
 
 
@@ -365,16 +350,15 @@ def multi_match_exact(
 ) -> DataFrame:
     """DataFrame twin over per-field ExactBM25 engines — the exactness
     oracle for MultiFieldIndex.multi_match (rank-identity-tested).
-    Per-field rounded scores full-outer-join on doc_id; absent fields
+    Per-field raw scores full-outer-join on doc_id; absent fields
     coalesce to 0 (BM25 > 0, so greatest/sum over coalesced zeros equal
-    max/sum over present fields)."""
+    max/sum over present fields); the combine rounds once."""
     tb = _tie_breaker(match_type, tie_breaker)
     scored = []
     for i, (f, eng) in enumerate(sorted(engines.items())):
-        s = eng.match_scores(text).select(
-            "doc_id", F.round("score", ROUND_DECIMALS).alias(f"_s{i}")
-        )
-        scored.append(s)
+        scored.append(eng.match_scores(text).select(
+            "doc_id", F.col("score").alias(f"_s{i}")
+        ))
     joined = scored[0]
     for s in scored[1:]:
         joined = joined.join(s, "doc_id", "full_outer")

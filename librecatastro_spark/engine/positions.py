@@ -222,7 +222,7 @@ def phrase_topk_fn(
     floats to ExactBM25.match_phrase (rank-identity-tested)."""
     distinct = sorted(set(seq))
 
-    def fn(blocks: pd.DataFrame, attrs=None) -> pd.DataFrame:
+    def fn(blocks: pd.DataFrame, attrs=None, cache=None) -> pd.DataFrame:
         got = _decode_complete(blocks, distinct, idfs)
         if got is None:
             return _empty_scores()
@@ -293,7 +293,7 @@ def phrase_prefix_topk_fn(
     (ExactBM25.match_phrase_prefix's semantics exactly)."""
     distinct = sorted(set(seq))
 
-    def fn(blocks: pd.DataFrame, attrs=None) -> pd.DataFrame:
+    def fn(blocks: pd.DataFrame, attrs=None, cache=None) -> pd.DataFrame:
         exp_rows = blocks[blocks["term"].str.startswith(pfx)]
         got = _decode_complete(blocks, distinct, idfs) if len(exp_rows) else None
         if got is None:

@@ -5,10 +5,11 @@ These reshape a match's SCORE rather than its membership, so block-max
 pruning by raw BM25 bound does not apply (a low-BM25 doc can out-rank a
 high one after a field boost) — each kernel decodes the query terms'
 postings fully (the same O(query-term postings) bill the AND branch
-always pays), computes per-doc BM25 sums with the standard rounding
-protocol, applies the score transform, and cuts top-k PER SHARD; the
-global merge is the usual rounded (score DESC, doc_id ASC)
-TakeOrderedAndProject. All numpy batch ops — no per-row Python.
+always pays), computes per-doc BM25 sums (wand ``_or_sums``, the uncut
+OR sum every scorer shares) with the standard rounding protocol,
+applies the score transform, and cuts top-k PER SHARD; the global merge
+is the usual rounded (score DESC, doc_id ASC) TakeOrderedAndProject.
+All numpy batch ops — no per-row Python.
 
 Rounding protocol (shared with the exact-engine twins and the DuckDB
 oracles, so all three agree exactly): the transform is applied to the
@@ -29,49 +30,25 @@ import pandas as pd
 
 from ..bm25 import ROUND_DECIMALS
 from .fscore import combine_np, field_factor_np, try_double_np
-from .positions import _decode_impacts, _decode_term
-from .wand import _empty
+from .positions import _decode_term
+from .wand import _decoder, _empty, _or_sums, _topk
 
 
-def _or_match_sums(
-    blocks: pd.DataFrame, terms: list[str], idfs: dict[str, float], avgdl: float
-):
-    """(uids, RAW BM25 sums) for the OR match over ``terms`` in this
-    block frame. Accumulation is term-major over sorted distinct terms
-    (the canonical order every scoring path uses); the caller's final
-    transform + single rounding follow (module docstring)."""
-    uids = None
-    per_term = []
-    for t in sorted(set(terms)):
-        sub = blocks[blocks["term"] == t]
-        if len(sub) == 0:
-            continue
-        ids, impact = _decode_impacts(
-            sub.sort_values("first_doc_id", kind="stable"), avgdl
-        )
-        per_term.append((ids, idfs[t] * impact))
-        uids = ids if uids is None else np.union1d(uids, ids)
-    if uids is None or len(uids) == 0:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    acc = np.zeros(len(uids), dtype=np.float64)
-    for ids, w in per_term:
-        acc += np.bincount(
-            np.searchsorted(uids, ids), weights=w, minlength=len(uids)
-        )
-    return uids, acc
-
-
-def _topk(ids: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
-    scores = np.round(scores, ROUND_DECIMALS)
-    if len(ids) > k:
-        order = np.lexsort((ids, -scores))[:k]
-        ids, scores = ids[order], scores[order]
-    return pd.DataFrame(
-        {
-            "doc_id": ids.astype(np.int64, copy=False),
-            "score": scores.astype(np.float64, copy=False),
-        }
-    )
+def _combine(parts: list, tie_breaker: float):
+    """The ES dis_max / best_fields combine over per-clause (uids, raw
+    sums) ``parts``: per doc, the best score + ``tie_breaker`` × the
+    others' sum (0: the max; 1.0: the sum), unrounded — (uids, scores),
+    doc_id ascending. A doc absent from a part scores 0 there (BM25 >
+    0, so 0 is below any score)."""
+    ids = np.concatenate([u for u, _ in parts])
+    w = np.concatenate([s for _, s in parts])
+    uids, inv = np.unique(ids, return_inverse=True)
+    best = np.zeros(len(uids))
+    np.maximum.at(best, inv, w)
+    if not tie_breaker:
+        return uids, best
+    tot = np.bincount(inv, weights=w, minlength=len(uids))
+    return uids, best + tie_breaker * (tot - best)
 
 
 def function_score_fn(
@@ -84,15 +61,16 @@ def function_score_fn(
     boost_mode: str,
     field: str,
 ):
-    """fn(blocks, attrs) — attrs carries (doc_id, ``field``) for this
-    shard's docs (read by the shard's own task, so the field never
+    """fn(blocks, attrs, cache) — attrs carries (doc_id, ``field``) for
+    this shard's docs (read by the shard's own task, so the field never
     leaves its shard). score' = round(combine(raw BM25 sum,
     factor_fn(field as a double, the Spark try_cast)))."""
 
-    def fn(blocks: pd.DataFrame, attrs: pd.DataFrame) -> pd.DataFrame:
+    def fn(blocks: pd.DataFrame, attrs: pd.DataFrame | None = None,
+           cache=None) -> pd.DataFrame:
         if len(blocks) == 0 or attrs is None or len(attrs) == 0:
             return _empty()
-        uids, sums = _or_match_sums(blocks, terms, idfs, avgdl)
+        uids, sums = _or_sums(blocks, terms, idfs, _decoder(blocks, cache, avgdl))
         if len(uids) == 0:
             return _empty()
         a_ids = attrs["doc_id"].to_numpy(dtype=np.int64)
@@ -115,30 +93,18 @@ def dis_max_fn(
     k: int,
     tie_breaker: float,
 ):
-    """fn(blocks) — ES dis_max over match clauses on the same field:
-    score = best clause + tie_breaker * (sum of the others). A doc
-    matches if ANY clause matches. Raw clause sums combine, one final
-    round (the cross-engine protocol — module docstring)."""
+    """fn(blocks, attrs, cache) — ES dis_max over match clauses on the
+    same field: score = best clause + tie_breaker * (sum of the others)
+    (``_combine``). A doc matches if ANY clause matches. Raw clause sums
+    combine, one final round (the cross-engine protocol — module
+    docstring)."""
 
-    def fn(blocks: pd.DataFrame, attrs=None) -> pd.DataFrame:
-        if len(blocks) == 0:
-            return _empty()
-        per_clause = [
-            _or_match_sums(blocks, ct, idfs, avgdl) for ct in clause_terms
-        ]
-        per_clause = [(u, s) for u, s in per_clause if len(u)]
-        if not per_clause:
-            return _empty()
-        uids = per_clause[0][0]
-        for u, _ in per_clause[1:]:
-            uids = np.union1d(uids, u)
-        mx = np.zeros(len(uids), dtype=np.float64)
-        sm = np.zeros(len(uids), dtype=np.float64)
-        for u, s in per_clause:
-            idx = np.searchsorted(uids, u)
-            np.maximum.at(mx, idx, s)
-            sm[idx] += s
-        return _topk(uids, mx + tie_breaker * (sm - mx), k)
+    def fn(blocks: pd.DataFrame, attrs=None, cache=None) -> pd.DataFrame:
+        decode = _decoder(blocks, cache, avgdl)
+        return _topk(*_combine(
+            [_or_sums(blocks, ct, idfs, decode) for ct in clause_terms],
+            tie_breaker,
+        ), k)
 
     return fn
 
@@ -151,14 +117,15 @@ def boosting_fn(
     k: int,
     negative_boost: float,
 ):
-    """fn(blocks) — ES boosting query: the positive match's score is
-    multiplied by ``negative_boost`` for docs that ALSO match the
-    negative clause (demotion, not exclusion — the must_not contrast)."""
+    """fn(blocks, attrs, cache) — ES boosting query: the positive
+    match's score is multiplied by ``negative_boost`` for docs that ALSO
+    match the negative clause (demotion, not exclusion — the must_not
+    contrast)."""
 
-    def fn(blocks: pd.DataFrame, attrs=None) -> pd.DataFrame:
+    def fn(blocks: pd.DataFrame, attrs=None, cache=None) -> pd.DataFrame:
         if len(blocks) == 0:
             return _empty()
-        uids, sums = _or_match_sums(blocks, pos_terms, idfs, avgdl)
+        uids, sums = _or_sums(blocks, pos_terms, idfs, _decoder(blocks, cache, avgdl))
         if len(uids) == 0:
             return _empty()
         neg_ids = []

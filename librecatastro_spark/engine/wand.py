@@ -3,9 +3,13 @@
 Per-shard scorer + global merge — exactly the reference's ES architecture:
 5 shards each return local top-k, the coordinator re-ranks (reference:
 src/utils/elasticsearch_utils.py:28-30 config; inherent to every
-es.search). Here: one seek plan from the resident footer stats →
-per-shard seek + kernel inside executor tasks (``_shard_task``) →
-local top-k → Catalyst ``TakeOrderedAndProject`` global merge.
+es.search). Here ONE per-shard stage (``CompressedIndex._dispatch``)
+runs on two sites: the seek plan from the resident footer stats → the
+column read → ``_select`` → the attrs clauses → the kernel. The cluster
+site runs it once per shard inside executor tasks (``_shard_task``)
+under a Catalyst ``TakeOrderedAndProject`` merge; the driver site runs
+it once over the whole index under a numpy merge. Only the merge
+differs.
 
 Scale design:
   * Document lengths travel INSIDE the posting blocks (``dls_enc`` —
@@ -14,26 +18,29 @@ Scale design:
     corpus size. No doc-table join, ever.
   * Posting files are term-sorted, so a query reads only the row groups
     whose footer term range can hold its terms (``_seek_plan``) — on
-    the driver for the coordinator path, in the executor tasks for the
-    distributed one; both keep rows by the same rule (``_select``). The
-    coordinator reads each column chunk from disk at most once per
+    either site; both keep rows by the same rule (``_select``). The
+    driver site reads each column chunk from disk at most once per
     index generation (its cache, ``_seek_blocks``); tasks read uncached.
   * Filter clauses (keyword, prefix, ranges, exists, ids, geo) run as a
-    pyarrow scan of each shard's attrs files with the predicates pushed
-    to row-group stats (``_Clauses.docs``) — the scorer never sees a
+    pyarrow scan of the attrs files with the predicates pushed to
+    row-group stats (``_Clauses.docs``) — the scorer never sees a
     non-matching attrs row.
+  * Every per-shard kernel is ``fn(blocks, attrs=None, cache=None)``.
+    Executor tasks never pass ``cache``; the driver site passes its
+    index, through whose decoded-postings cache the BM25 kernels decode
+    (``_decoder``). A kernel shipped to executor tasks holds no index.
   * Every kernel decodes posting blocks through ONE varbyte decoder
     (positions ``_decode_term``; the BM25 kernels through its
     ``_decode_impacts``, or the coordinator's cache of it) and drops
     blocks holding no candidate doc with ONE range prune
-    (positions ``_overlapping``) before decode.
+    (positions ``_overlapping``) before decode. The uncut OR scorers
+    (the match set, the compound scorers, multi_match) share one sum,
+    ``_or_sums``.
   * Block bounds are rescaled by idf_now / idf_build so pruning stays
     safe after incremental appends grow N (see builder.py).
-  * A query whose decode volume is small runs every shard in one task
-    (one job, one stage, one task with the merge); a larger one runs
-    one task per shard (``CompressedIndex._dispatch``). Every
-    distributed per-shard stage runs there: scored queries, the
-    match-set aggregations, the compound scorers and multi_match.
+  * On the cluster site, a query whose decode volume is small runs
+    every shard in one task (one job, one stage, one task with the
+    merge); a larger one runs one task per shard.
 
 The classic block-max WAND pointer walk is per-document Python — banned
 (input_hint). We use a **vectorized two-pass block-max prune** with the
@@ -208,13 +215,14 @@ def _shard_task(groups, cols, fn, clauses, attrs_cols, attrs_schema, attrs_root,
     """The executor side of ``_dispatch``: for each ``(shard,
     [(postings file, row groups, _Seek)], attrs files)`` of its
     partition, the per-file reads (``cols`` only) and the per-shard
-    kernel ``fn`` — what the coordinator runs, once per shard, so θ
-    pruning is per shard as in ES — as ``fn(blocks, attrs)`` with
-    ``attrs_cols``: ONE pyarrow scan of the shard's attrs files for the
-    (shard, doc_id, *attrs_cols) rows passing ``clauses``
-    (``_Clauses.docs``). Yields the kernel's
-    rows as the DDL ``schema`` types them (``_values``). The arguments
-    are picklable; nothing here reaches the index object."""
+    kernel ``fn`` — the one the driver site runs once whole-index, here
+    once per shard, so θ pruning is per shard as in ES — as
+    ``fn(blocks, attrs)`` (never a ``cache``) with ``attrs_cols``: ONE
+    pyarrow scan of the shard's attrs files for the (shard, doc_id,
+    *attrs_cols) rows passing ``clauses`` (``_Clauses.docs``). Yields
+    the kernel's rows as the DDL ``schema`` types them (``_values``).
+    The arguments are picklable; nothing here reaches the index
+    object."""
     import pyarrow as pa
     import pyarrow.dataset as pads
 
@@ -447,13 +455,12 @@ class _Scored:
     kernel arguments — and run on either execution site by
     ``CompressedIndex._execute``. ``terms`` are the scored terms,
     ``wanted`` every term whose postings the kernel reads, and
-    ``kernel(decoder)`` builds the per-shard kernel (the coordinator
-    passes its decoded-postings cache; the phrase kernels decode
-    positions uncached and ignore it). ``positional`` queries read the
-    position columns and route by decode volume; ``pfx`` is a phrase
-    prefix's open last token. ``est`` is the decode estimate (None
-    without a resident dictionary); ``empty`` marks a query no doc can
-    match."""
+    ``kernel`` is the per-shard kernel (the phrase kernels decode
+    positions uncached and ignore ``cache``). ``positional`` queries
+    read the position columns and route by decode volume; ``pfx`` is a
+    phrase prefix's open last token. ``est`` is the decode estimate
+    (None without a resident dictionary); ``empty`` marks a query no
+    doc can match."""
 
     terms: list
     wanted: list
@@ -529,6 +536,59 @@ def _lev_within(a: str, b: str, max_edits: int) -> bool:
     return prev[lb] <= max_edits
 
 
+def _decoder(blocks: pd.DataFrame, cache, avgdl: float):
+    """``decode(rows) -> (ids, impact)`` for a BM25 kernel over
+    ``blocks``: the doc ids and the idf-independent BM25 impacts
+    (positions ``_impact``) in posting order. ``cache`` is the index the
+    driver site passes: its decoded-postings cache
+    (``CompressedIndex._make_decoder``). Executor tasks pass none and
+    decode uncached through positions ``_decode_impacts``, which the
+    cache fills from — so results are byte-identical on both sites."""
+    if cache is not None:
+        return cache._make_decoder(blocks)
+    return functools.partial(_decode_impacts, avgdl=avgdl)
+
+
+def _or_sums(blocks: pd.DataFrame, terms, idfs: dict[str, float], decode):
+    """(uids, RAW BM25 sums) of the uncut OR match over ``terms`` in
+    ``blocks``, decoded through ``decode`` (``_decoder``). Accumulation
+    is term-major over sorted distinct terms — the canonical order
+    every scoring path uses (see ``_shard_topk_fn``), so the sums equal
+    its floats; the caller transforms and rounds once (``_topk``)."""
+    uids = None
+    per_term = []
+    for t in sorted(set(terms)):
+        sub = blocks[blocks["term"] == t]
+        if len(sub) == 0:
+            continue
+        ids, impact = decode(sub.sort_values("first_doc_id", kind="stable"))
+        per_term.append((ids, idfs[t] * impact))
+        uids = ids if uids is None else np.union1d(uids, ids)
+    if uids is None:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    acc = np.zeros(len(uids), dtype=np.float64)
+    for ids, w in per_term:
+        acc += np.bincount(
+            np.searchsorted(uids, ids), weights=w, minlength=len(uids)
+        )
+    return uids, acc
+
+
+def _topk(ids: np.ndarray, scores: np.ndarray, k: int | None = None) -> pd.DataFrame:
+    """(doc_id, score) of the top ``k`` (every row when None) by the
+    ROUNDED score DESC, doc_id ASC — the total order the global merge
+    ranks by (``_ranked``); ``ids`` come in ascending."""
+    scores = np.round(scores, ROUND_DECIMALS)
+    if k is not None and len(ids) > k:
+        # lexsort's last key is primary; doc_id breaks ties ascending
+        order = np.lexsort((ids, -scores))[:k]
+        ids, scores = ids[order], scores[order]
+    return pd.DataFrame({
+        "doc_id": ids.astype(np.int64, copy=False),
+        "score": scores.astype(np.float64, copy=False),
+    })
+
+
 def _shard_topk_fn(
     terms: list[str],
     idfs: dict[str, float],
@@ -538,28 +598,18 @@ def _shard_topk_fn(
     must_not_terms: list[str],
     require_all: bool,
     should_terms: list[str] | None = None,
-    decoder=None,
     dense_hint: int = 0,
     cursor: tuple[float, int] | None = None,
     min_match: int | None = None,
 ):
     """Per-shard scorer factory. ``fn(blocks)`` for the blocks-only fast
-    path; ``fn(blocks, allowed_docs)`` for filtered queries, where
-    ``allowed_docs`` holds ONLY the doc_ids that already survived the
-    keyword/prefix predicates — the predicates themselves are evaluated
-    upstream (a pyarrow scan of the attrs files with the predicates
-    pushed down, ``_Clauses.docs``, on either path), never in pandas here.
-    All numpy/pandas batch ops — no per-row Python.
-
-    Every posting is decoded through ``decoder(rows) -> (ids, impact)``:
-    the doc ids and the idf-independent BM25 impacts (positions
-    ``_impact``) in posting order. The coordinator passes its
-    decoded-postings cache (``CompressedIndex._make_decoder``); the
-    distributed path passes None (executors are stateless per query) and
-    decodes uncached through positions ``_decode_impacts``, which the
-    cache fills from — so results are byte-identical with or without
-    the cache."""
-    decode = decoder or functools.partial(_decode_impacts, avgdl=avgdl)
+    path; ``fn(blocks, attrs)`` for filtered queries, where ``attrs``
+    holds ONLY the doc_ids that already survived the keyword/prefix
+    predicates — the predicates themselves are evaluated upstream (a
+    pyarrow scan of the attrs files with the predicates pushed down,
+    ``_Clauses.docs``, on either site), never in pandas here. Every
+    posting decodes through ``_decoder(blocks, cache, avgdl)``. All
+    numpy/pandas batch ops — no per-row Python."""
     # dense doc-id spaces (the builder assigns shards by id range over
     # n_docs, so ids are 0..N-ish) let per-doc sums run as one
     # np.bincount over a dense array instead of np.unique's O(n log n)
@@ -590,9 +640,11 @@ def _shard_topk_fn(
             return uids, sums
         return uids, sums, np.bincount(inv, weights=w2, minlength=len(uids))
 
-    def fn(blocks: pd.DataFrame, attrs: pd.DataFrame | None = None) -> pd.DataFrame:
+    def fn(blocks: pd.DataFrame, attrs: pd.DataFrame | None = None,
+           cache=None) -> pd.DataFrame:
         if len(blocks) == 0:
             return _empty()
+        decode = _decoder(blocks, cache, avgdl)
         allowed = None
         if filtered:
             if attrs is None or len(attrs) == 0:
@@ -769,25 +821,14 @@ def _shard_topk_fn(
         # then sort). Cutting on raw floats here while merging on rounded
         # ones upstream would let a raw-score boundary disagree with a
         # rounded tie, making per-shard and whole-index passes diverge.
-        out_scores = np.round(out_scores, ROUND_DECIMALS)
         if cursor is not None:
             # keyset predicate on the ROUNDED total order the merge uses:
             # strictly after (s0, d0) under (score DESC, doc_id ASC)
             s0, d0 = cursor
-            after = (out_scores < s0) | ((out_scores == s0) & (out_ids > d0))
+            rounded = np.round(out_scores, ROUND_DECIMALS)
+            after = (rounded < s0) | ((rounded == s0) & (out_ids > d0))
             out_ids, out_scores = out_ids[after], out_scores[after]
-        if len(out_ids) > k:
-            # top-k by (score desc, doc_id asc): lexsort's last key is
-            # primary; doc_id (already the unique-sorted minor order)
-            # breaks ties ascending
-            order = np.lexsort((out_ids, -out_scores))[:k]
-            out_ids, out_scores = out_ids[order], out_scores[order]
-        return pd.DataFrame(
-            {
-                "doc_id": out_ids.astype(np.int64, copy=False),
-                "score": out_scores.astype(np.float64, copy=False),
-            }
-        )
+        return _topk(out_ids, out_scores, k)
 
     return fn
 
@@ -1029,9 +1070,9 @@ class CompressedIndex:
         should_terms = [t for t in should_terms if t in idfs]
         must_not_terms = sorted(set(self._analyze(must_not_text or "")))
         wanted = terms + should_terms + must_not_terms
-        kernel = functools.partial(
-            _shard_topk_fn, terms, idfs, self.meta.avgdl, k + offset,
-            bool(clauses), must_not_terms, require_all, should_terms,
+        kernel = _shard_topk_fn(
+            terms, idfs, self.meta.avgdl, k + offset, bool(clauses),
+            must_not_terms, require_all, should_terms,
             dense_hint=int(self.meta.n_docs), cursor=search_after,
             min_match=min_match,
         )
@@ -1042,25 +1083,13 @@ class CompressedIndex:
         )
 
     def _execute(self, spec: _Scored, local: bool):
-        """Run a parsed scored query on one execution site. Both sites
-        run one pipeline: the term-dictionary seek (``_seek_plan`` turns
-        the resident footer stats into the row groups that can hold
-        ``wanted`` or a phrase prefix's [pfx, successor) range, and
-        ``_select`` keeps each file's rows), the filter clauses as
-        a pyarrow scan of the attrs files (``_Clauses.docs``) and the
-        spec's kernel. They differ in where it runs and in the merge.
+        """Run a parsed scored query on one execution site: the per-shard
+        stage (``_dispatch``: the seek of ``wanted`` or a phrase prefix's
+        [pfx, successor) range, the filter clauses and the spec's kernel)
+        on the cluster → ``_ranked``, one TakeOrderedAndProject job; or
+        on the driver → ``_ranked_local``.
 
-        * cluster: ``_dispatch`` runs it inside executor tasks, once per
-          shard, reading (``_read_row_groups``) and decoding
-          (``decoder=None``) uncached → ``_ranked``, one
-          TakeOrderedAndProject job;
-        * local: the seek's column chunks come from the coordinator
-          cache, the misses read per file on its thread pool
-          (``_seek_blocks``) → the kernel run once whole-index on the
-          driver over the decoded-postings cache (``_make_decoder``) →
-          ``_ranked_local``.
-
-        The whole-index local pass is bit-identical to the per-shard
+        The whole-index driver pass is bit-identical to the per-shard
         split: shards partition the doc-id space, so a doc's postings
         all live in one shard, and the scorer accumulates every doc's sum
         in canonical term order (see ``_shard_topk_fn``) even though the
@@ -1074,48 +1103,54 @@ class CompressedIndex:
             spec.est is None or spec.est > self._PHRASE_LOCAL_MAX_POSTINGS
         ):
             return self._execute(spec, local=False).toPandas()
-        cols = self._POS_COLS if spec.positional else self._SEEK_COLS
-        if local:
-            if spec.empty:
-                return _empty()
-            blocks = self._seek_blocks(spec.wanted, cols=cols, pfx=spec.pfx)
-            attrs = spec.clauses.docs(self._attrs_dataset()) if spec.clauses else None
-            if not len(blocks):
-                return _empty()
-            fn = spec.kernel(
-                decoder=None if spec.positional else self._make_decoder(blocks)
-            )
-            return _ranked_local(fn(blocks, attrs), spec.k, spec.offset)
         if spec.empty:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        partial = self._dispatch(
-            [(self, _Seek(spec.wanted, spec.pfx))], cols,
-            spec.kernel(), spec.est, spec.clauses,
+            return _empty() if local else self.spark.createDataFrame([], _RESULT_SCHEMA)
+        out = self._dispatch(
+            [(self, _Seek(spec.wanted, spec.pfx))],
+            self._POS_COLS if spec.positional else self._SEEK_COLS,
+            spec.kernel, spec.est, spec.clauses, local=local,
         )
-        return _ranked(partial, spec.k, spec.offset, after=spec.after)
+        if local:
+            return _ranked_local(out, spec.k, spec.offset)
+        return _ranked(out, spec.k, spec.offset, after=spec.after)
 
     def _dispatch(
         self, seeks: list, cols, fn, est: int | None,
         clauses: _Clauses = _Clauses(), schema: str = _RESULT_SCHEMA,
-        attrs_cols: list | None = None,
-    ) -> DataFrame:
-        """The cluster site, the engine's one distributed per-shard
-        stage: the seek plan of ``seeks`` — (index, ``_Seek``) pairs over
-        indexes sharing this doc-id shard split (one per field for
-        multi_match), planned as one (``_seek_plan``) — as
-        ``sc.parallelize(...).mapPartitions`` over ``_shard_task``, which
-        runs ``fn`` once per shard over the rows each seek keeps (``cols``
-        only) and, with ``clauses`` or ``attrs_cols`` (checked against
-        the attrs files before any job), the shard's own attrs rows. The
-        result is a lazy DataFrame of the kernel's rows in the DDL
-        ``schema``: no Catalyst scan, no Arrow hand-off of posting blocks
-        from the JVM, no Exchange. ``est`` is the decode estimate: within
-        ``_one_task``, every shard runs in one task; above it, or unknown
-        (no resident dictionary), one task per shard."""
+        attrs_cols: list | None = None, local: bool = False,
+    ):
+        """The engine's one per-shard stage, on two sites. ``seeks`` are
+        (index, ``_Seek``) pairs over indexes sharing this doc-id shard
+        split (one per field for multi_match); the stage reads the rows
+        each seek keeps (``cols`` only) and, with ``clauses`` or
+        ``attrs_cols`` (checked against the attrs files first), the attrs
+        rows passing the clauses, then runs ``fn(blocks, attrs, cache)``.
+
+        * cluster: the seeks' plan (``_seek_plan``) as
+          ``sc.parallelize(...).mapPartitions`` over ``_shard_task``,
+          which runs ``fn`` once per shard over that shard's rows and
+          attrs, reading and decoding uncached; a lazy DataFrame of the
+          kernel's rows in the DDL ``schema``: no Catalyst scan, no
+          Arrow hand-off of posting blocks from the JVM, no Exchange.
+          ``est`` is the decode estimate: within ``_one_task``, every
+          shard runs in one task; above it, or unknown (no resident
+          dictionary), one task per shard.
+        * driver (``local``): the coordinator seek (``_seek_blocks``),
+          one attrs scan of the whole index and ``fn`` once over the
+          whole index with this index as ``cache``; the kernel's pandas
+          frame (``schema``-typed and empty when no block is kept)."""
         if clauses and attrs_cols is None:
             attrs_cols = []  # the (shard, doc_id) rows passing the clauses
         if attrs_cols is not None:
             clauses.check(self._attrs_dataset().schema.names, attrs_cols)
+        if local:
+            blocks = self._seek_blocks(seeks, cols)
+            if not len(blocks):
+                return _empty(schema)
+            attrs = None if attrs_cols is None else clauses.docs(
+                self._attrs_dataset(), attrs_cols
+            )
+            return fn(blocks, attrs, self)
         _, attrs_files = self._files()
         plan: dict[int, list] = {}
         for ix, sk in seeks:
@@ -1213,12 +1248,10 @@ class CompressedIndex:
         terms = sorted(set(complete))
         idfs = self._idfs(terms) if terms else {}
         avgdl, n = self.meta.avgdl, k + offset
-        if prefix:
-            def kernel(decoder=None):
-                return phrase_prefix_topk_fn(complete, pfx, idfs, avgdl, n)
-        else:
-            def kernel(decoder=None):
-                return phrase_topk_fn(seq, idfs, avgdl, n, slop)
+        kernel = (
+            phrase_prefix_topk_fn(complete, pfx, idfs, avgdl, n) if prefix
+            else phrase_topk_fn(seq, idfs, avgdl, n, slop)
+        )
         return _Scored(
             terms, terms, kernel, self._phrase_decode_estimate(terms), k,
             offset, empty=len(idfs) < len(terms), positional=True, pfx=pfx,
@@ -1327,10 +1360,10 @@ class CompressedIndex:
     ) -> pd.DataFrame:
         """``match_phrase_prefix`` run on the coordinator
         (``_execute``): the seek reads the complete terms' and the [pfx,
-        successor) range's blocks; a single-token query expands through
-        the resident dictionary and takes the constant-score local tail.
-        Routes by decode estimate like ``match_phrase_local``; without a
-        resident dictionary it answers on the cluster."""
+        successor) range's blocks; a single-token query takes the
+        constant-score tail of ``term_prefix_search`` on the driver
+        site. Routes by decode estimate like ``match_phrase_local``;
+        without a resident dictionary it answers on the cluster."""
         spec = self._phrase_spec(
             "match_phrase_prefix_local", text, k, offset, prefix=True
         )
@@ -1338,9 +1371,7 @@ class CompressedIndex:
             return self._execute(spec, local=True)
         if self._df_local is None:
             return self.term_prefix_search(spec.pfx, k=k, offset=offset).toPandas()
-        return self._constant_score_local(
-            self._prefix_terms(spec.pfx), k, offset=offset
-        )
+        return self._constant_score_docs(k, None, offset, pfx=spec.pfx, local=True)
 
     def _resident(self, method: str) -> dict[str, int]:
         """The resident term dictionary (term → df); a coordinator
@@ -1351,10 +1382,6 @@ class CompressedIndex:
                 "exceeds the local cap); use the distributed path"
             )
         return self._df_local
-
-    def _prefix_terms(self, pfx: str) -> list[str]:
-        """Every resident dictionary term starting with ``pfx``, sorted."""
-        return sorted(t for t in self._resident("prefix expansion") if t.startswith(pfx))
 
     def _executor(self):
         """Persistent coordinator thread pool for the seek's per-file
@@ -1466,14 +1493,14 @@ class CompressedIndex:
                 plan.setdefault(shard, []).append((path, rgs))
         return plan
 
-    def _seek_blocks(
-        self, wanted, cols: tuple[str, ...] = _SEEK_COLS, pfx: str | None = None
-    ) -> pd.DataFrame:
-        """The coordinator seek: ``_seek_plan``'s row groups, only
-        ``cols`` (which must include ``term``), as one pandas frame of the
-        blocks ``_select`` keeps, with their ``shard``. Each planned
-        column chunk — (postings file, row group, column), decompressed —
-        comes from the coordinator cache; only the misses are read, one
+    def _seek_blocks(self, seeks: list, cols) -> pd.DataFrame:
+        """The coordinator seek, the driver site of ``_dispatch``: for
+        each (index, ``_Seek``) pair of ``seeks``, that index's
+        ``_seek_plan`` row groups, only ``cols`` (which must include
+        ``term``), as one pandas frame of the blocks ``_select`` keeps,
+        tagged with their ``shard`` (and ``_field``). Each planned column
+        chunk — (postings file, row group, column), decompressed — comes
+        from the index's own cache; only the misses are read, one
         ``_read_columns`` per file on the thread pool (arrow IO and
         decompression release the GIL), and cached under the budget the
         decoded postings share (``_cache_put``). Postings files are
@@ -1484,20 +1511,21 @@ class CompressedIndex:
         (``_read_row_groups``)."""
         import pyarrow as pa
 
-        seek = _Seek(wanted, pfx)
-        files = [
-            (shard, path, rgs)
-            for shard, fl in self._seek_plan(wanted, pfx).items()
-            for path, rgs in fl
-        ]
-        chunks = self._column_chunks([(path, rgs) for _, path, rgs in files], cols)
-        tabs = [
-            t
-            for shard, path, rgs in files
-            if (t := _select(pa.concat_tables([
-                pa.table({c: chunks[path, rg, c] for c in cols}) for rg in rgs
-            ]), shard, seek)) is not None
-        ]
+        tabs = []
+        for ix, sk in seeks:
+            files = [
+                (shard, path, rgs)
+                for shard, fl in ix._seek_plan(sk.terms, sk.pfx).items()
+                for path, rgs in fl
+            ]
+            chunks = ix._column_chunks([(path, rgs) for _, path, rgs in files], cols)
+            tabs += [
+                t
+                for shard, path, rgs in files
+                if (t := _select(pa.concat_tables([
+                    pa.table({c: chunks[path, rg, c] for c in cols}) for rg in rgs
+                ]), shard, sk)) is not None
+            ]
         if not tabs:
             return pd.DataFrame(columns=["shard", *cols])
         return pa.concat_tables(tabs).to_pandas()
@@ -1587,7 +1615,8 @@ class CompressedIndex:
         (default 512; 0 caches nothing) with the seek's column chunks
         (``_cache_put``); entries touched by the current query are pinned
         against its own eviction, and an entry that does not fit is
-        served for this query but not cached. Executor tasks decode
+        served for this query but not cached. Only the driver site
+        decodes through it (``_decoder``); executor tasks decode
         uncached."""
         avgdl = self.meta.avgdl
         full_idx = blocks.groupby(["shard", "term"], sort=False).indices
@@ -1773,13 +1802,13 @@ class CompressedIndex:
 
     def _constant_score_docs(
         self, k: int, est: int | None, offset: int = 0, *,
-        terms=(), pfx: str | None = None,
-    ) -> DataFrame:
+        terms=(), pfx: str | None = None, local: bool = False,
+    ):
         """Distinct doc_ids of the posting blocks of ``terms`` (or of the
         [pfx, successor) range), constant score 1.0, deterministic doc_id
         order — the shared tail of the term-expansion queries (prefix,
-        fuzzy, wildcard, regexp). The executor seek of ``_dispatch``
-        reads ``_DOC_COLS``; each shard keeps only its local
+        fuzzy, wildcard, regexp) on either site of ``_dispatch``, whose
+        seek reads ``_DOC_COLS``. Each shard keeps only its local
         top-(k+offset) by doc_id, so the merge sees O(shards ×
         (k+offset)) rows; the page cut (offset → limit) happens after the
         global doc_id sort, the same keyset-free pagination contract the
@@ -1787,8 +1816,11 @@ class CompressedIndex:
         n = k + offset
         partial = self._dispatch(
             [(self, _Seek(terms, pfx))], self._DOC_COLS,
-            lambda bl: _doc_page(bl["docs_enc"], 0, n), est,
+            lambda bl, attrs=None, cache=None: _doc_page(bl["docs_enc"], 0, n),
+            est, local=local,
         )
+        if local:  # one whole-index page, already doc_id ascending
+            return partial.iloc[offset:].reset_index(drop=True)
         ranked = partial.orderBy(F.asc("doc_id"))
         if offset:
             ranked = ranked.offset(offset)
@@ -2102,18 +2134,6 @@ class CompressedIndex:
             score_mode=score_mode,
         )
 
-    def _constant_score_local(
-        self, cands: list[str], k: int, offset: int = 0
-    ) -> pd.DataFrame:
-        """Coordinator twin of ``_constant_score_docs``: term-dictionary
-        seek of the candidate terms' posting blocks (pyarrow row-group
-        pruning, ``_DOC_COLS`` only, no Spark job), then the same
-        distinct-doc page [offset, offset+k)."""
-        if not cands:
-            return _empty()
-        blocks = self._seek_blocks(cands, cols=self._DOC_COLS)
-        return _doc_page(blocks["docs_enc"], offset, offset + k)
-
     def fuzzy_term_search_local(
         self, term: str, k: int = 10, max_edits: int = 1, prefix_len: int = 0,
         max_expansions: int = 50,
@@ -2147,46 +2167,15 @@ class CompressedIndex:
         size: int = 10,
         after: str | None = None,
     ) -> pd.DataFrame:
-        """Coordinator fast path for ``composite_agg`` — identical
-        buckets/counts (equality-tested), no Spark job: the match set
-        decodes from a term-dictionary seek of the query terms' posting
-        blocks (the whole-index run is exact — the facet kernel has no
-        θ pruning, so the shard split cannot change results), and the
-        facet values come from a columnar pyarrow read of the attrs
-        (doc_id, facet_col) pair — the ES doc-values analog, resident on
-        a serving node. Driver bill: O(matches + that one column pair),
-        the same order the facet computation itself costs; use
-        ``composite_agg`` when the corpus-side column no longer fits a
+        """``composite_agg`` run on the coordinator — identical
+        buckets/counts (equality-tested), no Spark job: its per-shard
+        partial runs once whole-index on the driver site
+        (``_match_set_stage``; the facet kernel has no θ pruning, so the
+        shard split cannot change results) and the page is cut in
+        pandas. Driver bill: O(matches + the facet column's matched
+        rows); use ``composite_agg`` when that no longer fits a
         coordinator."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        terms, idfs = self._match_terms(text)
-        self._check_attrs(facet_col)
-        empty = _empty(self._FACET_SCHEMA)
-        if not terms:
-            return empty
-        blocks = self._seek_blocks(terms)
-        if len(blocks) == 0:
-            return empty
-        r = self._match_kernel(terms, idfs)(blocks)
-        if len(r) == 0:
-            return empty
-        tbl = self._attrs_dataset().to_table(columns=["doc_id", facet_col])
-        m = pc.is_in(
-            tbl.column("doc_id"),
-            value_set=pa.array(r["doc_id"].to_numpy(dtype=np.int64)),
-        )
-        # mirror the distributed kernel's conversion EXACTLY: Arrow →
-        # pandas → astype(str), so nulls become counted 'None' (object
-        # columns) / 'nan' (numeric-with-null columns) buckets just like
-        # the executor kernel's m[facet_col].astype(str). A pyarrow
-        # string cast instead would KEEP nulls, which value_counts then
-        # silently drops — breaking the twins' bucket identity on any
-        # nullable facet column.
-        keys = tbl.column(facet_col).filter(m).to_pandas().astype(str)
-        out = _key_counts(keys, after).sort_values("facet_key")
-        return out.iloc[:size].reset_index(drop=True)
+        return self._composite(text, facet_col, size, after, local=True)
 
     def _cap_expansion(self, vocab: DataFrame, max_expansions: int) -> list[str]:
         """ES ``max_expansions`` contract (default 50 there and here):
@@ -2209,28 +2198,25 @@ class CompressedIndex:
     def _expand(self, k: int, max_expansions: int, *, match=None, vocab=None):
         """A term-expansion query on the site its predicate is rendered
         for. ``match`` (a Python predicate over a term) walks the
-        RESIDENT term dictionary on the coordinator, then
-        ``_constant_score_local``; ``vocab`` (a Catalyst-filtered
-        term_stats (term, df) scan) runs distributed, then the seek of
-        the matched terms in executor tasks (``_constant_score_docs``).
-        Both keep the
-        best ``max_expansions`` terms by (-df, term), so the two sites
-        expand term-for-term alike (``_cap_expansion``)."""
+        RESIDENT term dictionary on the coordinator, and the tail
+        (``_constant_score_docs``) runs on the driver site; ``vocab`` (a
+        Catalyst-filtered term_stats (term, df) scan) runs distributed,
+        and the tail on the cluster. Both keep the best
+        ``max_expansions`` terms by (-df, term), so the two sites expand
+        term-for-term alike (``_cap_expansion``)."""
         if max_expansions <= 0:
             raise ValueError("max_expansions must be positive")
         if match is not None:
-            cands = sorted(
+            cands = [t for t, _ in sorted(
                 ((t, d) for t, d in self._resident("coordinator expansion").items()
                  if match(t)),
                 key=lambda td: (-td[1], td[0]),
-            )
-            return self._constant_score_local(
-                [t for t, _ in cands[:max_expansions]], k
-            )
-        cands = self._cap_expansion(vocab, max_expansions)
-        if not cands:
-            return self.spark.createDataFrame([], _RESULT_SCHEMA)
-        return self._constant_score_docs(k, self._df_sum(cands), terms=cands)
+            )[:max_expansions]]
+        else:
+            cands = self._cap_expansion(vocab, max_expansions)
+        return self._constant_score_docs(
+            k, self._df_sum(cands), terms=cands, local=match is not None
+        )
 
     def fuzzy_term_search(
         self, term: str, k: int = 10, max_edits: int = 1, prefix_len: int = 0,
@@ -2702,15 +2688,26 @@ class CompressedIndex:
         ``search_after`` (engine/wand.py search), applied to buckets.
         Exact counts (map-side per-shard combine), key ASC.
         """
+        return self._composite(text, facet_col, size, after, local=False)
+
+    def _composite(self, text, facet_col, size, after, local):
+        """``composite_agg`` on either site: the per-shard partial —
+        the after-key cut and per-key counts (``_key_counts``) of the
+        facet column's text — then the page. The driver site's one
+        whole-index partial already holds each key once."""
         terms, idfs = self._match_terms(text)
         self._check_attrs(facet_col)
         if not terms:
+            if local:
+                return _empty(self._FACET_SCHEMA)
             return self.spark.createDataFrame([], self._FACET_SCHEMA)
         partial = self._match_set_stage(
             terms, idfs, [facet_col],
             lambda m: _key_counts(m[facet_col].astype(str), after),
-            self._FACET_SCHEMA,
+            self._FACET_SCHEMA, local=local,
         )
+        if local:
+            return partial.sort_values("facet_key").iloc[:size].reset_index(drop=True)
         return (
             partial.groupBy("facet_key")
             .agg(F.sum("cnt").alias("cnt"))
@@ -2871,16 +2868,19 @@ class CompressedIndex:
         idfs = self._idfs(terms)
         return [t for t in terms if t in idfs], idfs
 
-    def _match_kernel(self, terms: list[str], idfs: dict[str, float], decoder=None):
-        """The uncut OR kernel: ``fn(blocks)`` scores EVERY doc matching
-        ≥1 of ``terms`` (no top-k cut, so θ never rises and no block is
-        pruned) — the full match set with its BM25 scores. ``decoder``
-        is the coordinator's decoded-postings cache (``_make_decoder``)."""
-        return _shard_topk_fn(
-            terms, idfs, self.meta.avgdl, 1 << 60, filtered=False,
-            must_not_terms=[], require_all=False, decoder=decoder,
-            dense_hint=int(self.meta.n_docs),
-        )
+    def _match_kernel(self, terms: list[str], idfs: dict[str, float]):
+        """The uncut OR kernel: ``fn(blocks, attrs=None, cache=None)``
+        scores EVERY doc matching ≥1 of ``terms`` (``_or_sums``, no
+        top-k cut and no pruning) — the full match set with its rounded
+        BM25 scores."""
+        avgdl = self.meta.avgdl
+
+        def fn(blocks: pd.DataFrame, attrs=None, cache=None) -> pd.DataFrame:
+            return _topk(*_or_sums(
+                blocks, terms, idfs, _decoder(blocks, cache, avgdl)
+            ))
+
+        return fn
 
     def _match_set_stage(
         self,
@@ -2889,25 +2889,29 @@ class CompressedIndex:
         cols: list[str] | None,
         reduce,
         schema: str,
-    ) -> DataFrame:
-        """The full-match-set stage every aggregation shares: the executor
-        seek of the query terms' postings (``_dispatch``), scored per
-        shard by ``_match_kernel`` and joined to that shard's own attrs
-        rows (``cols`` only — the field never leaves its shard; a doc
-        with no attrs row drops out). ``reduce(rows)`` sees one shard's
-        matched (doc_id, score, *cols) rows and returns that shard's
-        map-side partial in ``schema``; a shard with no matched row
-        emits none. The shuffle is O(shards × partial rows) — O(matches)
-        only for a per-match partial (percentiles). ``cols=None`` reads
-        no attrs: ``reduce`` sees the kernel's (doc_id, score) rows."""
+        local: bool = False,
+    ):
+        """The full-match-set stage every aggregation shares: the seek of
+        the query terms' postings (``_dispatch``), scored by
+        ``_match_kernel`` and joined to the attrs rows of the same shard
+        (``cols`` only — the field never leaves its shard; a doc with no
+        attrs row drops out). ``reduce(rows)`` sees one shard's matched
+        (doc_id, score, *cols) rows and returns that shard's map-side
+        partial in ``schema``; a shard with no matched row emits none.
+        The shuffle is O(shards × partial rows) — O(matches) only for a
+        per-match partial (percentiles). ``cols=None`` reads no attrs:
+        ``reduce`` sees the kernel's (doc_id, score) rows. ``local``
+        runs the stage once whole-index on the driver site and returns
+        its pandas partial."""
         fd = self._match_kernel(terms, idfs)
         empty = _empty(schema)
         want = None if cols is None else [
             c for c in dict.fromkeys(cols) if c != "doc_id"
         ]
 
-        def fn(bl: pd.DataFrame, at: pd.DataFrame | None = None) -> pd.DataFrame:
-            m = fd(bl)
+        def fn(bl: pd.DataFrame, at: pd.DataFrame | None = None,
+               cache=None) -> pd.DataFrame:
+            m = fd(bl, cache=cache)
             if at is not None:
                 m = m.merge(at[["doc_id", *want]], on="doc_id")
             return reduce(m) if len(m) else empty
@@ -2915,7 +2919,8 @@ class CompressedIndex:
         est = self._df_sum(terms)
         partial = self._dispatch(
             [(self, _Seek(terms))], self._SEEK_COLS, fn, est,
-            schema=schema, attrs_cols=want,
+            schema=schema, attrs_cols=want, local=local,
         )
-        # one task: Coalesce 1 spares the reduce above an Exchange
-        return partial.coalesce(1) if self._one_task(est) else partial
+        if local or not self._one_task(est):
+            return partial
+        return partial.coalesce(1)  # one task: spares the reduce an Exchange

@@ -1,8 +1,6 @@
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from librecatastro_spark.analyzer import analyze_text, tokenize_expr, tokenize_udf
+from librecatastro_spark.analyzer import analyze_text, tokenize_expr
 
 
 def test_analyze_text_golden():
@@ -32,15 +30,11 @@ def test_expr_udf_python_equivalence(spark):
     rows = df.select(
         "text",
         tokenize_expr("text").alias("by_expr"),
-        tokenize_udf(F.col("text")).alias("by_udf"),
     ).collect()
     for r in rows:
-        expected = analyze_text(r["text"])
         if r["text"] is None:
-            assert r["by_udf"] == []
             continue  # Catalyst split(NULL) yields NULL — engine never feeds NULL text
-        assert r["by_expr"] == expected
-        assert r["by_udf"] == expected
+        assert r["by_expr"] == analyze_text(r["text"])
 
 
 def test_term_freqs_arrow_matches_catalyst(spark, documents):
@@ -59,17 +53,3 @@ def test_term_freqs_arrow_matches_catalyst(spark, documents):
         for r in term_freqs(docs, "doc_id", "text").collect()
     }
     assert a == b and len(a) > 0
-
-
-def test_token_count_udf_matches_size_expr(spark, documents):
-    from librecatastro_spark.analyzer import token_count_udf
-
-    rows = (
-        documents.limit(200)
-        .select(
-            F.size(tokenize_expr("text")).alias("jvm"),
-            token_count_udf(F.col("text")).alias("py"),
-        )
-        .collect()
-    )
-    assert len(rows) and all(r["jvm"] == r["py"] for r in rows)

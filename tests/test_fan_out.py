@@ -201,18 +201,29 @@ def test_phrase_expansion_and_agg_fan_out_identity(pidx, exact, monkeypatch):
         assert one[name], name
 
 
-@pytest.mark.parametrize("name", ["best_fields", "most_fields", "cross_fields"])
+#: multi_match's keyword arguments per case of the fan-out identity
+MULTI_MATCH = {
+    "best_fields": dict(match_type="best_fields"),
+    "most_fields": dict(match_type="most_fields"),
+    "tie_breaker": dict(tie_breaker=0.3),
+}
+
+
+@pytest.mark.parametrize("name", [*MULTI_MATCH, "cross_fields"])
 def test_multi_match_fan_out_identity(mf, exact_fields, monkeypatch, name):
-    """multi_match (best_fields, most_fields) and
-    multi_match_cross_fields — one seek plan across the sub-indexes —
-    give the same page fanned out as in one task, and the same as their
-    DataFrame twins over per-field exact engines."""
+    """multi_match (best_fields, most_fields, best_fields with a
+    tie_breaker) and multi_match_cross_fields — one seek plan across the
+    sub-indexes — give the same page fanned out as in one task, and the
+    same as their DataFrame twins over per-field exact engines. The
+    tie_breaker combines raw per-field sums and rounds once: combining
+    scores rounded first makes decimal ties (2.9259 + 0.3 × 0.0445 =
+    2.93925) that numpy and Spark round apart."""
     text = "def mod4 return"
     if name == "cross_fields":
         call = lambda: mf.multi_match_cross_fields(text, k=15, offset=2)  # noqa: E731
         want = rows(cross_fields_exact(exact_fields, text, k=15, offset=2))
     else:
-        kw = dict(k=15, offset=2, match_type=name)
+        kw = dict(k=15, offset=2, **MULTI_MATCH[name])
         call = lambda: mf.multi_match(text, **kw)  # noqa: E731
         want = rows(multi_match_exact(exact_fields, text, **kw))
     one = rows(call())

@@ -8,6 +8,8 @@ row-group-pruned reads on the driver — the ES query-node analog — so
 
 from __future__ import annotations
 
+import functools
+
 import pytest
 
 from librecatastro_spark.index.builder import build_index
@@ -143,10 +145,12 @@ def test_fastpath_cache_invariant(index, monkeypatch):
     every call reads its chunks from disk), tiny (1 MB: entries that do
     not fit are served uncached, others are evicted across queries, and
     the byte count never exceeds the budget) and default (512 MB: a
-    repeat of each shape reads nothing) all agree on every golden shape.
-    The AND/filtered golden queries additionally exercise the small-slice
-    inline path (requests covering <half a term's postings bypass the
-    decoded-postings cache)."""
+    repeat of each shape reads nothing) all agree on every golden shape
+    and on ``composite_agg_local``, whose match set decodes through the
+    same cache. This fixture holds every (shard, term) in one block, so
+    ``_make_decoder``'s small-slice branch (requests covering < half a
+    term's postings decode uncached) never runs here;
+    ``test_make_decoder_equals_uncached_decode`` covers it."""
     reads = []
     read = wand._read_columns
 
@@ -155,6 +159,13 @@ def test_fastpath_cache_invariant(index, monkeypatch):
         return read(path, wants)
 
     monkeypatch.setattr(wand, "_read_columns", spy)
+
+    def composite():
+        out = index.composite_agg_local("query scan", "source", size=4)
+        return list(zip(out["facet_key"].tolist(), out["cnt"].tolist()))
+
+    shapes = [functools.partial(_local_rows, index, q) for q in GOLDEN]
+    shapes.append(composite)
     results = {}
     for mb in ("0", "1", None):
         if mb is None:
@@ -165,19 +176,20 @@ def test_fastpath_cache_invariant(index, monkeypatch):
         index.refresh()  # drop any previously filled cache
         assert not index._dec_cache and index._dec_cache_bytes == 0
         rows = []
-        for q in GOLDEN:
-            rows.append(_local_rows(index, q))
-            assert index._dec_cache_bytes <= budget, (mb, q)
-        for q, want in zip(GOLDEN, rows):
+        for i, call in enumerate(shapes):
+            rows.append(call())
+            assert index._dec_cache_bytes <= budget, (mb, i)
+        for i, (call, want) in enumerate(zip(shapes, rows)):
             reads.clear()
-            assert _local_rows(index, q) == want, (mb, q)
+            assert call() == want, (mb, i)
             if mb == "0":
-                assert reads, q
+                assert reads, i
             elif mb is None:
-                assert not reads, q
+                assert not reads, i
         if mb == "0":
             assert not index._dec_cache and index._dec_cache_bytes == 0
         results[mb or "512"] = rows
+    assert results["512"][-1]
     assert results["0"] == results["512"]
     assert results["1"] == results["512"]
 
@@ -212,7 +224,9 @@ def test_make_decoder_equals_uncached_decode(spark, documents, tmp_path, monkeyp
         else:
             monkeypatch.setenv("LC_POSTING_CACHE_MB", mb)
         index.refresh()
-        blocks = index._seek_blocks(hot + ["join", "query"])
+        blocks = index._seek_blocks(
+            [(index, wand._Seek(hot + ["join", "query"]))], index._SEEK_COLS
+        )
         groups = blocks.groupby(["shard", "term"]).indices
         big = max(groups, key=lambda g: len(groups[g]))
         key = (int(big[0]), big[1])

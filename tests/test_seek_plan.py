@@ -78,7 +78,7 @@ def brute_force(ix: CompressedIndex, pfx: str) -> set:
 
 
 def sought(ix: CompressedIndex, pfx: str) -> set:
-    b = ix._seek_blocks([], cols=COLS, pfx=pfx)
+    b = ix._seek_blocks([(ix, wand._Seek((), pfx))], COLS)
     return set(zip(b["shard"].tolist(), *(b[c].tolist() for c in COLS)))
 
 
