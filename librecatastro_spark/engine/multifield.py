@@ -58,17 +58,15 @@ from pyspark.sql import functions as F
 from ..analyzer import analyze_text
 from ..bm25 import ROUND_DECIMALS
 from ..index.builder import build_index
+from .positions import _RESULT_SCHEMA, _empty, _topk
 from .score_queries import _combine
 from .wand import (
-    _RESULT_SCHEMA,
     CompressedIndex,
     _decoder,
-    _empty,
     _or_sums,
     _ranked,
     _ranked_local,
     _Seek,
-    _topk,
 )
 
 

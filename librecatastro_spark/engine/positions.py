@@ -29,6 +29,66 @@ import pandas as pd
 from ..bm25 import B, K1, ROUND_DECIMALS
 from ..index.codec import decode_positions, decode_varbyte
 
+_RESULT_SCHEMA = "doc_id long, score double"
+_NP_TYPES = {"long": np.int64, "double": np.float64, "string": object}
+
+
+def _columns(schema: str) -> list[tuple[str, str]]:
+    """(name, type) of each column of a DDL ``schema``."""
+    return [tuple(c.split()) for c in schema.split(",")]
+
+
+def _empty(schema: str = _RESULT_SCHEMA) -> pd.DataFrame:
+    """Zero-row pandas frame typed like the DDL ``schema`` (long, double
+    and string columns) — what a per-shard kernel emits with no rows."""
+    return pd.DataFrame(
+        {n: pd.Series(dtype=_NP_TYPES[t]) for n, t in _columns(schema)}
+    )
+
+
+def _topk(ids: np.ndarray, scores: np.ndarray, k: int | None = None) -> pd.DataFrame:
+    """(doc_id, score) of the top ``k`` (every row when None) by the
+    ROUNDED score DESC, doc_id ASC — the total order the global merge
+    ranks by (wand ``_ranked``); ``ids`` come in ascending."""
+    scores = np.round(scores, ROUND_DECIMALS)
+    if k is not None and len(ids) > k:
+        # lexsort's last key is primary; doc_id breaks ties ascending
+        order = np.lexsort((ids, -scores))[:k]
+        ids, scores = ids[order], scores[order]
+    return pd.DataFrame({
+        "doc_id": ids.astype(np.int64, copy=False),
+        "score": scores.astype(np.float64, copy=False),
+    })
+
+
+def _successor(p: str) -> str | None:
+    """The least string above every string starting with ``p`` under
+    codepoint-lexicographic order (Spark's UTF8String order and Parquet
+    min/max stats on UTF-8): the last incrementable codepoint
+    incremented, any trailing U+10FFFF chars dropped, the surrogate
+    range skipped (it cannot appear in valid UTF-8). None for an
+    all-U+10FFFF ``p``, which has no finite upper bound."""
+    for i in range(len(p) - 1, -1, -1):
+        c = ord(p[i]) + 1
+        if 0xD800 <= c <= 0xDFFF:
+            c = 0xE000
+        if c <= 0x10FFFF:
+            return p[:i] + chr(c)
+    return None
+
+
+def _term_rows(blocks: pd.DataFrame, t: str, prefix: bool = False) -> pd.DataFrame:
+    """The rows of term ``t`` in ``blocks`` — with ``prefix``, of every
+    term in [t, successor(t)), the terms starting with ``t`` — as one
+    contiguous slice: a kernel's blocks arrive sorted by term (wand
+    ``_ordered``), so two binary searches find them, in block order."""
+    term = blocks["term"].to_numpy()
+    lo = np.searchsorted(term, t, "left")
+    if not prefix:
+        return blocks.iloc[lo:np.searchsorted(term, t, "right")]
+    succ = _successor(t)
+    return blocks.iloc[lo:len(term) if succ is None else np.searchsorted(term, succ)]
+
 
 def _decode_term(rows: pd.DataFrame, with_pos: bool):
     """The engine's one varbyte block decoder: block ``rows`` into flat
@@ -53,6 +113,20 @@ def _decode_term(rows: pd.DataFrame, with_pos: bool):
             b"".join(x for x in rows["pos_enc"] if x is not None), tfs
         )
     return ids, tfs, dls, pos
+
+
+def _by_doc(ids, tfs, dls, pos):
+    """One term's decoded (ids, tfs, dls, pos) in doc-id order. A
+    shard's blocks decode in doc order, but a whole-index frame holds
+    every shard's run (wand ``_ordered``), and shard doc-id ranges
+    interleave after an ``append_batch`` that moved the range
+    boundaries; each posting's occurrences move with it."""
+    if (ids[1:] > ids[:-1]).all():
+        return ids, tfs, dls, pos
+    order = np.argsort(ids, kind="stable")
+    t = tfs[order]
+    occ = np.repeat((np.cumsum(tfs) - tfs)[order] - (np.cumsum(t) - t), t)
+    return ids[order], t, dls[order], pos[occ + np.arange(len(occ))]
 
 
 def _impact(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
@@ -95,22 +169,17 @@ def _decode_complete(blocks: pd.DataFrame, distinct: list[str], idfs: dict):
     plus a handful of hot-term blocks, not the hot terms' full posting
     lists. Returns ({term: (ids, tfs, dls, pos)}, candidates), or None
     when a term has no block left (no doc holds every term)."""
-    per_term = {}
-    for t in distinct:
-        sub = blocks[blocks["term"] == t]
-        if len(sub) == 0:
-            return None
-        per_term[t] = sub.sort_values("first_doc_id", kind="stable")
     rare = max(distinct, key=lambda t: idfs[t])
-    decoded = {rare: _decode_term(per_term[rare], True)}
-    cand = decoded[rare][0]  # unique & sorted: one posting row per (doc, term)
-    for t in distinct:
-        if t == rare:
-            continue
-        sub = _overlapping(per_term[t], cand)
-        if len(sub) == 0:
+    decoded, cand = {}, None
+    for t in [rare, *(t for t in distinct if t != rare)]:
+        rows = _term_rows(blocks, t)
+        if cand is not None:
+            rows = _overlapping(rows, cand)
+        if len(rows) == 0:
             return None
-        decoded[t] = _decode_term(sub, True)
+        decoded[t] = _by_doc(*_decode_term(rows, True))
+        if cand is None:  # unique & sorted: one posting row per (doc, term)
+            cand = decoded[t][0]
     return decoded, cand
 
 
@@ -198,12 +267,6 @@ def phrase_verify(
     return common[np.unique(cur // cap)]
 
 
-def _empty_scores() -> pd.DataFrame:
-    return pd.DataFrame(
-        {"doc_id": pd.Series(dtype="int64"), "score": pd.Series(dtype="float64")}
-    )
-
-
 def phrase_topk_fn(
     seq: list[str],
     idfs: dict[str, float],
@@ -225,29 +288,29 @@ def phrase_topk_fn(
     def fn(blocks: pd.DataFrame, attrs=None, cache=None) -> pd.DataFrame:
         got = _decode_complete(blocks, distinct, idfs)
         if got is None:
-            return _empty_scores()
+            return _empty()
         decoded = got[0]
         verified = phrase_verify(
             {t: (decoded[t][0], decoded[t][1], decoded[t][3]) for t in distinct},
             seq,
             slop,
         )
-        if len(verified) == 0:
-            return _empty_scores()
-        return _score_verified(decoded, distinct, idfs, avgdl, verified, k)
+        scores = _score_verified(decoded, distinct, idfs, avgdl, verified)
+        return _topk(verified, scores, k)
 
     return fn
 
 
 def _score_verified(
     decoded: dict, distinct: list[str], idfs: dict, avgdl: float,
-    verified: np.ndarray, k: int,
-) -> pd.DataFrame:
-    """BM25 require_all over ``distinct`` terms for the ``verified`` doc
-    set, term-major accumulation in sorted-term order — the same _impact
-    factoring as every other path, so floats are bit-identical to
-    ExactBM25's phrase scores (rank-identity-tested). Shared by the
-    phrase and phrase-prefix positional kernels."""
+    verified: np.ndarray,
+) -> np.ndarray:
+    """RAW BM25 require_all sums over ``distinct`` terms for the
+    ``verified`` doc set, term-major accumulation in sorted-term order —
+    the same _impact factoring as every other path, so floats are
+    bit-identical to ExactBM25's phrase scores (rank-identity-tested).
+    Shared by the phrase and phrase-prefix positional kernels, which cut
+    them with ``_topk``."""
     acc = np.zeros(len(verified), dtype=np.float64)
     for t in distinct:
         ids, tfs, dls, _ = decoded[t]
@@ -257,16 +320,7 @@ def _score_verified(
             tfs[m].astype(np.float64), dls[m].astype(np.float64), avgdl
         )
         acc += np.bincount(idx, weights=w, minlength=len(verified))
-    scores = np.round(acc, ROUND_DECIMALS)
-    if len(verified) > k:
-        order = np.lexsort((verified, -scores))[:k]
-        verified, scores = verified[order], scores[order]
-    return pd.DataFrame(
-        {
-            "doc_id": verified.astype(np.int64, copy=False),
-            "score": scores.astype(np.float64, copy=False),
-        }
-    )
+    return acc
 
 
 def phrase_prefix_topk_fn(
@@ -294,14 +348,14 @@ def phrase_prefix_topk_fn(
     distinct = sorted(set(seq))
 
     def fn(blocks: pd.DataFrame, attrs=None, cache=None) -> pd.DataFrame:
-        exp_rows = blocks[blocks["term"].str.startswith(pfx)]
+        exp_rows = _term_rows(blocks, pfx, prefix=True)
         got = _decode_complete(blocks, distinct, idfs) if len(exp_rows) else None
         if got is None:
-            return _empty_scores()
+            return _empty()
         decoded, cand = got
         exp_rows = _overlapping(exp_rows, cand)
         if len(exp_rows) == 0:
-            return _empty_scores()
+            return _empty()
         ids, tfs, _, pos = _decode_term(exp_rows, True)
         verified = phrase_verify(
             {t: (decoded[t][0], decoded[t][1], decoded[t][3]) for t in distinct},
@@ -309,8 +363,7 @@ def phrase_prefix_topk_fn(
             0,
             next_term_data=(ids, tfs, pos),
         )
-        if len(verified) == 0:
-            return _empty_scores()
-        return _score_verified(decoded, distinct, idfs, avgdl, verified, k)
+        scores = _score_verified(decoded, distinct, idfs, avgdl, verified)
+        return _topk(verified, scores, k)
 
     return fn

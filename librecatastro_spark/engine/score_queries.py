@@ -30,8 +30,8 @@ import pandas as pd
 
 from ..bm25 import ROUND_DECIMALS
 from .fscore import combine_np, field_factor_np, try_double_np
-from .positions import _decode_term
-from .wand import _decoder, _empty, _or_sums, _topk
+from .positions import _decode_term, _empty, _term_rows, _topk
+from .wand import _decoder, _or_sums
 
 
 def _combine(parts: list, tie_breaker: float):
@@ -128,15 +128,10 @@ def boosting_fn(
         uids, sums = _or_sums(blocks, pos_terms, idfs, _decoder(blocks, cache, avgdl))
         if len(uids) == 0:
             return _empty()
-        neg_ids = []
-        for t in sorted(set(neg_terms)):
-            sub = blocks[blocks["term"] == t]
-            if len(sub):
-                neg_ids.append(
-                    _decode_term(
-                        sub.sort_values("first_doc_id", kind="stable"), False
-                    )[0]
-                )
+        neg_ids = [
+            _decode_term(sub, False)[0]
+            for t in sorted(set(neg_terms)) if len(sub := _term_rows(blocks, t))
+        ]
         if neg_ids:
             demoted = np.isin(uids, np.concatenate(neg_ids))
             sums = np.where(demoted, sums * float(negative_boost), sums)

@@ -25,7 +25,10 @@ Scale design:
     pyarrow scan of the attrs files with the predicates pushed to
     row-group stats (``_Clauses.docs``) — the scorer never sees a
     non-matching attrs row.
-  * Every per-shard kernel is ``fn(blocks, attrs=None, cache=None)``.
+  * Every per-shard kernel is ``fn(blocks, attrs=None, cache=None)``;
+    its ``blocks`` arrive in ONE canonical order with term codes, set
+    once on both sites right after ``_select`` (``_ordered``), so no
+    kernel sorts or maps the term strings again.
     Executor tasks never pass ``cache``; the driver site passes its
     index, through whose decoded-postings cache the BM25 kernels decode
     (``_decoder``). A kernel shipped to executor tasks holds no index.
@@ -87,29 +90,18 @@ from ..index.builder import (
 )
 from ..index.codec import decode_varbyte, delta_decode
 from .positions import (
+    _NP_TYPES,
+    _RESULT_SCHEMA,
+    _columns,
     _decode_impacts,
+    _empty,
     _overlapping,
+    _successor,
+    _term_rows,
+    _topk,
     phrase_prefix_topk_fn,
     phrase_topk_fn,
 )
-
-_RESULT_SCHEMA = "doc_id long, score double"
-
-
-def _successor(p: str) -> str | None:
-    """The least string above every string starting with ``p`` under
-    codepoint-lexicographic order (Spark's UTF8String order and Parquet
-    min/max stats on UTF-8): the last incrementable codepoint
-    incremented, any trailing U+10FFFF chars dropped, the surrogate
-    range skipped (it cannot appear in valid UTF-8). None for an
-    all-U+10FFFF ``p``, which has no finite upper bound."""
-    for i in range(len(p) - 1, -1, -1):
-        c = ord(p[i]) + 1
-        if 0xD800 <= c <= 0xDFFF:
-            c = 0xE000
-        if c <= 0x10FFFF:
-            return p[:i] + chr(c)
-    return None
 
 
 def _prefix_range(col, p: str):
@@ -179,18 +171,33 @@ def _read_columns(path: str, reads) -> list:
         pf.close()
 
 
-def _read_row_groups(path: str, rgs: list, shard: int, cols, seek: _Seek):
-    """One postings file's part of a seek in an executor task
-    (``_shard_task``): row groups ``rgs`` of ``path``, only ``cols``
-    (which include ``term``), read uncached (``_read_columns``) — a task
-    is stateless per query — then ``_select``ed. The coordinator reads
-    the same chunks through its column-chunk cache
-    (``CompressedIndex._seek_blocks``) and applies the same
-    ``_select``."""
-    import pyarrow as pa
+def _ordered(tbl) -> pd.DataFrame:
+    """The kernels' one block order, set on both sites right after
+    ``_select`` (``_seek_blocks``, ``_shard_task``): a stage's blocks as
+    pandas, sorted by those of (``_field``, term, shard, first_doc_id)
+    the seek read, with ``tc``, each term's rank among the frame's
+    distinct terms. Each (field, shard, term) is one run in doc-id
+    order, and a doc's postings come term-major in sorted-term order:
+    the canonical order every score sums in, so the whole-index and
+    per-shard passes agree to the bit. (shard precedes first_doc_id: an
+    ``append_batch`` that moves the range boundaries leaves a shard's
+    doc ids in two ranges.) Kernels never re-sort."""
+    import pyarrow.compute as pc
 
-    tabs = _read_columns(path, [(rg, cols) for rg in rgs])
-    return _select(pa.concat_tables(tabs), shard, seek)
+    keys = [c for c in ("_field", "term", "shard", "first_doc_id")
+            if c in tbl.column_names]
+    tbl = tbl.take(pc.sort_indices(tbl, [(c, "ascending") for c in keys]))
+    tc = pc.subtract(pc.rank(tbl.column("term"), tiebreaker="dense"), 1)
+    return tbl.append_column("tc", tc.cast("int64")).to_pandas()
+
+
+def _runs(blocks: pd.DataFrame):
+    """(shard, tc, start, end) of each run of ``_ordered`` ``blocks``
+    (or of rows taken from them in order) holding one (shard, term)."""
+    sh, tc = blocks["shard"].to_numpy(), blocks["tc"].to_numpy()
+    cut = np.flatnonzero((sh[1:] != sh[:-1]) | (tc[1:] != tc[:-1])) + 1
+    at = [0, *cut.tolist(), len(tc)]
+    return [(int(sh[a]), int(tc[a]), a, b) for a, b in zip(at, at[1:]) if b > a]
 
 
 def _select(tbl, shard: int, seek: _Seek):
@@ -214,7 +221,10 @@ def _shard_task(groups, cols, fn, clauses, attrs_cols, attrs_schema, attrs_root,
                 schema):
     """The executor side of ``_dispatch``: for each ``(shard,
     [(postings file, row groups, _Seek)], attrs files)`` of its
-    partition, the per-file reads (``cols`` only) and the per-shard
+    partition, the per-file reads (``cols`` only, uncached — a task is
+    stateless per query — then ``_select``ed, as the coordinator's
+    cached ``_seek_blocks`` does), the blocks put in ``_ordered`` order
+    and the per-shard
     kernel ``fn`` — the one the driver site runs once whole-index, here
     once per shard, so θ pruning is per shard as in ES — as
     ``fn(blocks, attrs)`` (never a ``cache``) with ``attrs_cols``: ONE
@@ -229,11 +239,13 @@ def _shard_task(groups, cols, fn, clauses, attrs_cols, attrs_schema, attrs_root,
     for shard, files, attrs_files in groups:
         tabs = [
             t for path, rgs, seek in files
-            if (t := _read_row_groups(path, rgs, shard, cols, seek)) is not None
+            if (t := _select(pa.concat_tables(
+                _read_columns(path, [(rg, cols) for rg in rgs])
+            ), shard, seek)) is not None
         ]
         if not tabs:
             continue
-        blocks = pa.concat_tables(tabs).to_pandas()
+        blocks = _ordered(pa.concat_tables(tabs))
         if attrs_cols is not None:
             ds = pads.dataset(
                 attrs_files, schema=attrs_schema, partitioning="hive",
@@ -245,9 +257,6 @@ def _shard_task(groups, cols, fn, clauses, attrs_cols, attrs_schema, attrs_root,
         yield from zip(*(_values(out[n], t) for n, t in _columns(schema)))
 
 
-_NP_TYPES = {"long": np.int64, "double": np.float64, "string": object}
-
-
 def _values(s: pd.Series, t: str) -> list:
     """One kernel column as Python values of the DDL type ``t``, NaN /
     None / NA as None (a Spark null, as an Arrow hand-off masks them),
@@ -255,19 +264,6 @@ def _values(s: pd.Series, t: str) -> list:
     na = s.isna().to_numpy()
     vals = iter(s[~na].to_numpy(dtype=_NP_TYPES[t]).tolist())
     return [None if m else next(vals) for m in na]
-
-
-def _columns(schema: str) -> list[tuple[str, str]]:
-    """(name, type) of each column of a DDL ``schema``."""
-    return [tuple(c.split()) for c in schema.split(",")]
-
-
-def _empty(schema: str = _RESULT_SCHEMA) -> pd.DataFrame:
-    """Zero-row pandas frame typed like the DDL ``schema`` (long, double
-    and string columns) — what a per-shard kernel emits with no rows."""
-    return pd.DataFrame(
-        {n: pd.Series(dtype=_NP_TYPES[t]) for n, t in _columns(schema)}
-    )
 
 
 @dataclass(frozen=True)
@@ -485,6 +481,17 @@ def _doc_page(docs_enc, lo: int, hi: int) -> pd.DataFrame:
     return pd.DataFrame({"doc_id": ids, "score": np.full(len(ids), 1.0)})
 
 
+def _key_text(s: pd.Series, as_int: bool, null: str | None = None) -> pd.Series:
+    """Attr values as the text Spark's ``cast(string)`` gives them, a
+    null as ``null``: an integer attr (``as_int``, from the attrs file
+    schema: ``CompressedIndex._as_int``) reads '3' on every shard and
+    site, whether pandas read its column as int64 or, holding a null,
+    as float64 — the one key rendering of every keyed reduce."""
+    if as_int:
+        s = s.astype("Int64")
+    return s.astype(str).where(s.notna(), null)
+
+
 def _key_counts(keys: pd.Series, after: str | None = None) -> pd.DataFrame:
     """(facet_key, cnt) per distinct value of ``keys`` — the terms-agg
     combine; with ``after``, only keys strictly above the composite
@@ -553,40 +560,21 @@ def _or_sums(blocks: pd.DataFrame, terms, idfs: dict[str, float], decode):
     """(uids, RAW BM25 sums) of the uncut OR match over ``terms`` in
     ``blocks``, decoded through ``decode`` (``_decoder``). Accumulation
     is term-major over sorted distinct terms — the canonical order
-    every scoring path uses (see ``_shard_topk_fn``), so the sums equal
-    its floats; the caller transforms and rounds once (``_topk``)."""
-    uids = None
-    per_term = []
+    every scoring path uses (``_ordered``), so the sums equal
+    ``_shard_topk_fn``'s floats; the caller transforms and rounds once
+    (``_topk``)."""
+    ids, ws = [], []
     for t in sorted(set(terms)):
-        sub = blocks[blocks["term"] == t]
-        if len(sub) == 0:
-            continue
-        ids, impact = decode(sub.sort_values("first_doc_id", kind="stable"))
-        per_term.append((ids, idfs[t] * impact))
-        uids = ids if uids is None else np.union1d(uids, ids)
-    if uids is None:
+        sub = _term_rows(blocks, t)
+        if len(sub):
+            i, impact = decode(sub)
+            ids.append(i)
+            ws.append(idfs[t] * impact)
+    if not ids:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    acc = np.zeros(len(uids), dtype=np.float64)
-    for ids, w in per_term:
-        acc += np.bincount(
-            np.searchsorted(uids, ids), weights=w, minlength=len(uids)
-        )
-    return uids, acc
-
-
-def _topk(ids: np.ndarray, scores: np.ndarray, k: int | None = None) -> pd.DataFrame:
-    """(doc_id, score) of the top ``k`` (every row when None) by the
-    ROUNDED score DESC, doc_id ASC — the total order the global merge
-    ranks by (``_ranked``); ``ids`` come in ascending."""
-    scores = np.round(scores, ROUND_DECIMALS)
-    if k is not None and len(ids) > k:
-        # lexsort's last key is primary; doc_id breaks ties ascending
-        order = np.lexsort((ids, -scores))[:k]
-        ids, scores = ids[order], scores[order]
-    return pd.DataFrame({
-        "doc_id": ids.astype(np.int64, copy=False),
-        "score": scores.astype(np.float64, copy=False),
-    })
+    # bincount adds in input order: each doc's sum runs term-major
+    uids, inv = np.unique(np.concatenate(ids), return_inverse=True)
+    return uids, np.bincount(inv, weights=np.concatenate(ws), minlength=len(uids))
 
 
 def _shard_topk_fn(
@@ -650,15 +638,26 @@ def _shard_topk_fn(
             if attrs is None or len(attrs) == 0:
                 return _empty()
             allowed = np.sort(attrs["doc_id"].to_numpy(dtype=np.int64))
+        # per term code (``_ordered``): its term, idf and whether it is
+        # one of ``ts`` — one lookup per distinct term, indexed by tc
+        tc = blocks["tc"].to_numpy()
+        vocab = np.empty(int(tc.max()) + 1, dtype=object)
+        vocab[tc] = blocks["term"].to_numpy()
+        idf = np.array([idfs.get(t, 0.0) for t in vocab], dtype=np.float64)
+
+        def among(ts) -> np.ndarray:
+            ts = set(ts)
+            return np.array([t in ts for t in vocab], dtype=bool)
+
         excluded = None
         if must_not_terms:
-            nb = blocks[blocks["term"].isin(must_not_terms)]
+            nb = blocks[among(must_not_terms)[tc]]
             if len(nb):
                 excluded = np.unique(decode(nb)[0])
-        score_terms = terms + [t for t in (should_terms or []) if t not in terms]
-        qb = blocks[blocks["term"].isin(score_terms)]
+        qb = blocks[among([*terms, *(should_terms or [])])[tc]]
         if len(qb) == 0:
             return _empty()
+        q_tc = qb["tc"].to_numpy()
 
         def ok_mask(ids: np.ndarray) -> np.ndarray:
             m = np.ones(len(ids), dtype=bool)
@@ -668,25 +667,19 @@ def _shard_topk_fn(
                 m &= ~np.isin(ids, excluded)
             return m
 
-        def score_block_rows(rows: pd.DataFrame, with_th: bool = False):
+        def score_block_rows(rows: pd.DataFrame):
             """Decode + BM25-weight every posting of the given block rows
-            in BULK (one ``decode`` call): (ids, idf * impact[, term
-            hash])."""
-            counts = rows["n_docs"].to_numpy(dtype=np.int64)
+            in BULK (one ``decode`` call): (ids, idf * impact, term
+            code)."""
             ids, fb = decode(rows)
-            idf_b = rows["term"].map(idfs).to_numpy(dtype=np.float64)
-            w = np.repeat(idf_b, counts) * fb
-            if not with_th:
-                return ids, w, None
-            th_b = np.fromiter(
-                (hash(t) for t in rows["term"]), dtype=np.int64, count=len(rows)
+            codes = np.repeat(
+                rows["tc"].to_numpy(), rows["n_docs"].to_numpy(dtype=np.int64)
             )
-            return ids, w, np.repeat(th_b, counts)
+            return ids, idf[codes] * fb, codes
 
         # rescale stored bounds to current idf (appends grow N; builder.py)
-        qb = qb.assign(
-            bound=qb["block_max_w"].to_numpy()
-            * qb["term"].map(idfs).to_numpy()
+        bound = (
+            qb["block_max_w"].to_numpy() * idf[q_tc]
             / np.maximum(qb["idf_build"].to_numpy(), 1e-12)
         )
         if require_all or should_terms or (min_match and min_match > 1):
@@ -701,28 +694,19 @@ def _shard_topk_fn(
             # a doc absent from the seed postings can never satisfy
             # n_matched == len(terms) (AND) / n_matched >= 1 (should), and
             # a candidate's postings all live in range-intersecting blocks.
-            if require_all and len(qb):
-                rare = max(terms, key=lambda t: idfs[t])
-                seed_mask = qb["term"] == rare
+            if require_all:
+                seed = among([max(terms, key=lambda t: idfs[t])])[q_tc]
             else:
-                seed_mask = qb["term"].isin(terms)
-            s_ids, s_w, s_th = score_block_rows(qb[seed_mask], with_th=True)
+                seed = among(terms)[q_tc]
+            s_ids, s_w, s_c = score_block_rows(qb[seed])
             cand = np.unique(s_ids)
-            o_ids, o_w, o_th = score_block_rows(
-                _overlapping(qb[~seed_mask], cand), with_th=True
-            )
+            o_ids, o_w, o_c = score_block_rows(_overlapping(qb[~seed], cand))
             sel = np.isin(o_ids, cand)
             ids = np.concatenate([s_ids, o_ids[sel]])
             w = np.concatenate([s_w, o_w[sel]])
-            th = np.concatenate([s_th, o_th[sel]])
-            must_hashes = np.fromiter(
-                (hash(t) for t in set(terms)), dtype=np.int64
-            )
-            # numpy aggregation instead of a pandas groupby: same sums, no
-            # factorize/lexsort machinery. One posting row per (doc, term)
-            # ⇒ the must-indicator sum == number of distinct must terms
-            # matched.
-            is_must = np.isin(th, must_hashes)
+            # one posting row per (doc, term) ⇒ the must-indicator sum ==
+            # number of distinct must terms matched
+            is_must = among(terms)[np.concatenate([s_c, o_c[sel]])]
             uids, score, n = agg_sums(ids, w, is_must.astype(np.float64))
             # require_all ⇒ need every distinct must term; min_match ⇒ ES
             # minimum_should_match (n can never exceed the distinct-term
@@ -734,10 +718,15 @@ def _shard_topk_fn(
             out_ids, out_scores = cand_ids[keep], score[good][keep]
         else:
             # ---- pass 1: θ from the rarest term, then block prune --------
-            u_per_term = qb.groupby("term")["bound"].max()
+            # each term's rows are one run of qb: its max bound U_t
+            starts = np.flatnonzero(np.diff(q_tc, prepend=-1))
+            u = np.maximum.reduceat(bound, starts)
+            present = q_tc[starts]
             theta = -math.inf
-            rare = u_per_term.index[np.argmax([idfs[t] for t in u_per_term.index])]
-            r_ids, r_w, _ = score_block_rows(qb[qb["term"] == rare])
+            r = int(np.argmax(idf[present]))
+            r_ids, r_w, _ = score_block_rows(
+                qb.iloc[starts[r]:(starts[r + 1] if r + 1 < len(starts) else None)]
+            )
             if len(r_ids) and cursor is None:
                 # a search_after cursor excludes the head of the ranking,
                 # so the k-th best single-term weight is NOT a lower bound
@@ -750,8 +739,9 @@ def _shard_topk_fn(
                 r_w = r_w[km]
                 if len(r_w) >= k:
                     theta = float(np.partition(r_w, -k)[-k])
-            sum_u = float(u_per_term.sum())
-            others = sum_u - qb["term"].map(u_per_term).to_numpy()
+            u_of = np.zeros(len(vocab))
+            u_of[present] = u
+            others = float(u.sum()) - u_of[q_tc]
             # prune with one rounding quantum of slack: a doc whose raw
             # upper bound is below θ − 10^-R has ROUNDED score strictly
             # below the rounded k-th result, so pruning is exact under the
@@ -759,58 +749,33 @@ def _shard_topk_fn(
             # whole-index passes (whose θ differ) then agree even when a
             # raw score straddles θ within rounding distance.
             margin = 10.0 ** (-ROUND_DECIMALS)
-            survive = (qb["bound"].to_numpy() + others) >= theta - margin
+            survive = (bound + others) >= theta - margin
             kept, pruned = qb[survive], qb[~survive]
-            # canonical per-doc accumulation order: a doc has at most ONE
-            # posting per term (salt sub-ranges are disjoint), so decoding
-            # block rows in lexicographic term order makes every doc's
-            # float sum associate over its terms identically on EVERY
-            # path. The per-shard and whole-index passes prune with
-            # different θ — without a canonical order, a doc whose
-            # kept/pruned split differs between the two would sum in a
-            # different order, drift by an ulp, and could flip a
-            # ROUND_DECIMALS rounding boundary that the rank-identity
-            # asserts (bench.py, tests/test_fastpath.py) compare at.
-            kept = kept.sort_values(["term", "first_doc_id"], kind="stable")
-            ids, w, _ = score_block_rows(kept)
+            ids, w, codes = score_block_rows(kept)
             m = ok_mask(ids)
-            # numpy aggregation (see the AND branch) — unique ids come
-            # back sorted, so the pruned-block patch below can merge by
-            # searchsorted instead of a pandas aligned add
+            # unique ids come back sorted, so the pruned-block patch
+            # below can merge by searchsorted
             uids, sums = agg_sums(ids[m], w[m])
             # a pruned block matters only if its id range holds a candidate
             p_rows = _overlapping(pruned, uids)
             if len(p_rows):
-                p_rows = p_rows.sort_values(["term", "first_doc_id"], kind="stable")
-                p_ids, p_w, _ = score_block_rows(p_rows)
+                p_ids, p_w, p_c = score_block_rows(p_rows)
                 sel = np.isin(p_ids, uids)
                 if sel.any():
                     # recompute each patched doc's sum FROM SCRATCH in
-                    # the same canonical term order the kept-only sums
-                    # used — adding the patch on top of the kept
+                    # the canonical term order (term codes) the kept-only
+                    # sums used — adding the patch on top of the kept
                     # partial (`sums += adds`) would associate the
                     # floats by the θ-dependent kept/pruned split,
-                    # which differs between passes (see above). A
-                    # patched doc's full posting set is always
-                    # kept ∪ this patch: any pruned block holding a
-                    # candidate is kept by ``_overlapping``.
+                    # which differs between the per-shard and
+                    # whole-index passes. A patched doc's full posting
+                    # set is always kept ∪ this patch: any pruned block
+                    # holding a candidate is kept by ``_overlapping``.
                     patched = np.unique(p_ids[sel])
-                    tcode = {
-                        t: i
-                        for i, t in enumerate(sorted(set(score_terms)))
-                    }
-                    k_tk = np.repeat(
-                        kept["term"].map(tcode).to_numpy(dtype=np.int64),
-                        kept["n_docs"].to_numpy(dtype=np.int64),
-                    )
-                    p_tk = np.repeat(
-                        p_rows["term"].map(tcode).to_numpy(dtype=np.int64),
-                        p_rows["n_docs"].to_numpy(dtype=np.int64),
-                    )
                     mk = np.isin(ids, patched)
                     cat_ids = np.concatenate([ids[mk], p_ids[sel]])
                     cat_w = np.concatenate([w[mk], p_w[sel]])
-                    cat_tk = np.concatenate([k_tk[mk], p_tk[sel]])
+                    cat_tk = np.concatenate([codes[mk], p_c[sel]])
                     order = np.lexsort((cat_tk, cat_ids))
                     r_uids, r_sums = agg_sums(cat_ids[order], cat_w[order])
                     # every r_uid is in uids by the sel mask above
@@ -1092,7 +1057,7 @@ class CompressedIndex:
         The whole-index driver pass is bit-identical to the per-shard
         split: shards partition the doc-id space, so a doc's postings
         all live in one shard, and the scorer accumulates every doc's sum
-        in canonical term order (see ``_shard_topk_fn``) even though the
+        in canonical term order (``_ordered``) even though the
         GLOBAL θ prunes a different kept/pruned split than any per-shard
         θ; the phrase kernels have no θ. Rank-identity between the sites
         is asserted in bench.py and the tests. A positional query whose
@@ -1180,6 +1145,13 @@ class CompressedIndex:
     def _check_attrs(self, *cols) -> None:
         """Refuse, on the driver, a column the attrs files lack."""
         _Clauses().check(self._attrs_dataset().schema.names, cols)
+
+    def _as_int(self, col: str) -> bool:
+        """Whether the attrs files type ``col`` as an integer (its keys
+        render through ``_key_text``)."""
+        import pyarrow as pa
+
+        return pa.types.is_integer(self._attrs_dataset().schema.field(col).type)
 
     def _needs_positions(self, method: str) -> None:
         """Phrase queries are answered from positional postings only —
@@ -1498,7 +1470,8 @@ class CompressedIndex:
         each (index, ``_Seek``) pair of ``seeks``, that index's
         ``_seek_plan`` row groups, only ``cols`` (which must include
         ``term``), as one pandas frame of the blocks ``_select`` keeps,
-        tagged with their ``shard`` (and ``_field``). Each planned column
+        tagged with their ``shard`` (and ``_field``), in ``_ordered``
+        order with term codes. Each planned column
         chunk — (postings file, row group, column), decompressed — comes
         from the index's own cache; only the misses are read, one
         ``_read_columns`` per file on the thread pool (arrow IO and
@@ -1508,7 +1481,7 @@ class CompressedIndex:
         cache), so a chunk is read from disk at most once per generation
         while it stays cached; the query holds its own references, so an
         eviction never touches it. Executor tasks read uncached
-        (``_read_row_groups``)."""
+        (``_shard_task``)."""
         import pyarrow as pa
 
         tabs = []
@@ -1528,7 +1501,7 @@ class CompressedIndex:
             ]
         if not tabs:
             return pd.DataFrame(columns=["shard", *cols])
-        return pa.concat_tables(tabs).to_pandas()
+        return _ordered(pa.concat_tables(tabs))
 
     def _column_chunks(self, files, cols) -> dict:
         """(path, row group, column) → the decompressed column chunk, for
@@ -1610,33 +1583,22 @@ class CompressedIndex:
         small requests decode uncached (``_decode_impacts``) and cache
         nothing; a fill decodes through it too. Blocks are
         located by first_doc_id (unique per (shard, term): salt
-        sub-ranges are disjoint and block doc ranges are sorted). The
-        entries share one LRU by bytes and one LC_POSTING_CACHE_MB budget
-        (default 512; 0 caches nothing) with the seek's column chunks
+        sub-ranges are disjoint and block doc ranges are sorted), and a
+        query's (shard, term) groups are contiguous runs of its
+        ``_ordered`` blocks (``_runs``). The entries share one LRU by
+        bytes and one LC_POSTING_CACHE_MB budget (default 512; 0 caches
+        nothing) with the seek's column chunks
         (``_cache_put``); entries touched by the current query are pinned
         against its own eviction, and an entry that does not fit is
         served for this query but not cached. Only the driver site
         decodes through it (``_decoder``); executor tasks decode
         uncached."""
         avgdl = self.meta.avgdl
-        full_idx = blocks.groupby(["shard", "term"], sort=False).indices
-        all_counts = blocks["n_docs"].to_numpy(dtype=np.int64)
+        terms = blocks["term"].to_numpy()
+        counts = blocks["n_docs"].to_numpy(dtype=np.int64)
+        fdi_all = blocks["first_doc_id"].to_numpy(dtype=np.int64)
+        full = {(sh, c): (a, b) for sh, c, a, b in _runs(blocks)}
         pinned: set = set()
-
-        def fill(key, gkey) -> tuple | None:
-            """Decode the FULL (shard, term) block set into a cache entry,
-            returned for this query's use whether or not it is cached."""
-            sub = blocks.iloc[full_idx[gkey]]
-            ids, fb = _decode_impacts(sub, avgdl)
-            counts = sub["n_docs"].to_numpy(dtype=np.int64)
-            starts = np.cumsum(counts) - counts
-            firsts = sub["first_doc_id"].to_numpy(dtype=np.int64)
-            order = np.argsort(firsts, kind="stable")
-            ent = (firsts[order], starts[order], ids, fb)
-            self._cache_put(
-                key, ent, ids.nbytes + fb.nbytes + 2 * firsts.nbytes, pinned
-            )
-            return ent
 
         def decoder(rows: pd.DataFrame):
             fdi = rows["first_doc_id"].to_numpy(dtype=np.int64)
@@ -1645,37 +1607,40 @@ class CompressedIndex:
             out_ids = np.empty(total, dtype=np.int64)
             out_fb = np.empty(total, dtype=np.float64)
             ro = np.cumsum(bcount) - bcount
-            for gkey, m in rows.groupby(
-                ["shard", "term"], sort=False
-            ).indices.items():
-                key = (int(gkey[0]), gkey[1])
-                cn = bcount[m]
+            for sh, c, a, b in _runs(rows):
+                ga, gb = full[sh, c]
+                key = (sh, terms[ga])
+                cn = bcount[a:b]
                 tot = int(cn.sum())
-                within = np.arange(tot, dtype=np.int64) - np.repeat(
-                    np.cumsum(cn) - cn, cn
-                )
-                oidx = np.repeat(ro[m], cn) + within
+                o = slice(ro[a], ro[a] + tot)
                 hit = self._dec_cache.get(key)
                 if hit is not None:
                     self._dec_cache.move_to_end(key)
                     ent = hit[0]
+                elif 2 * tot < int(counts[ga:gb].sum()):
+                    # small slice of a big term (intersection-pruned
+                    # AND, must_not probe): decode uncached, keep the
+                    # pruning win, don't fault the whole term in
+                    out_ids[o], out_fb[o] = _decode_impacts(rows.iloc[a:b], avgdl)
+                    continue
                 else:
-                    term_total = int(all_counts[full_idx[gkey]].sum())
-                    if 2 * tot < term_total:
-                        # small slice of a big term (intersection-pruned
-                        # AND, must_not probe): decode uncached, keep the
-                        # pruning win, don't fault the whole term in
-                        out_ids[oidx], out_fb[oidx] = _decode_impacts(
-                            rows.iloc[m], avgdl
-                        )
-                        continue
-                    ent = fill(key, gkey)
+                    # decode the FULL (shard, term) run into a cache
+                    # entry, used by this query whether or not it fits
+                    ids, fb = _decode_impacts(blocks.iloc[ga:gb], avgdl)
+                    firsts = fdi_all[ga:gb].copy()
+                    starts = np.cumsum(counts[ga:gb]) - counts[ga:gb]
+                    ent = (firsts, starts, ids, fb)
+                    self._cache_put(
+                        key, ent, ids.nbytes + fb.nbytes + 2 * firsts.nbytes, pinned
+                    )
                 pinned.add(key)
                 firsts, starts, ids, fb = ent
-                pos = np.searchsorted(firsts, fdi[m])
-                gidx = np.repeat(starts[pos], cn) + within
-                out_ids[oidx] = ids[gidx]
-                out_fb[oidx] = fb[gidx]
+                within = np.arange(tot, dtype=np.int64) - np.repeat(
+                    np.cumsum(cn) - cn, cn
+                )
+                gidx = np.repeat(starts[np.searchsorted(firsts, fdi[a:b])], cn) + within
+                out_ids[o] = ids[gidx]
+                out_fb[o] = fb[gidx]
             return out_ids, out_fb
 
         return decoder
@@ -1853,27 +1818,20 @@ class CompressedIndex:
         (``_match_set_stage``). The key is the column's text as Spark's
         ``cast(string)`` gives it: an integer column's key reads '3' even
         when the column holds nulls (pandas reads it as float64), and a
-        null key stays null.
+        null key stays null (``_key_text``).
         """
-        import pyarrow as pa
-
         terms, idfs = self._match_terms(text)
         self._check_attrs(collapse_col)
         if not terms:
             return self.spark.createDataFrame([], self._COLLAPSE_SCHEMA)
-        as_int = pa.types.is_integer(
-            self._attrs_dataset().schema.field(collapse_col).type
-        )
+        as_int = self._as_int(collapse_col)
 
         def best(m: pd.DataFrame) -> pd.DataFrame:
             m = m.rename(columns={collapse_col: "collapse_key"}).sort_values(
                 ["score", "doc_id"], ascending=[False, True], kind="mergesort"
             )
             best = m.drop_duplicates("collapse_key", keep="first").head(k)
-            if as_int:
-                best = best.assign(
-                    collapse_key=best["collapse_key"].astype("Int64").astype("string")
-                )
+            best = best.assign(collapse_key=_key_text(best["collapse_key"], as_int))
             return best[["doc_id", "score", "collapse_key"]]
 
         partial = self._match_set_stage(
@@ -2049,8 +2007,10 @@ class CompressedIndex:
         self._check_attrs(facet_col)
         if not terms:
             return self.spark.createDataFrame([], self._FACET_SCHEMA)
+        as_int = self._as_int(facet_col)
         partial = self._match_set_stage(
-            terms, idfs, [facet_col], lambda m: _key_counts(m[facet_col]),
+            terms, idfs, [facet_col],
+            lambda m: _key_counts(_key_text(m[facet_col], as_int)),
             self._FACET_SCHEMA,
         )
         return (
@@ -2409,11 +2369,13 @@ class CompressedIndex:
         drop-in HLL twin (documented scale path; not gated because its
         estimate is not oracle-reproducible)."""
         terms, idfs = self._match_terms(text)
+        self._check_attrs(col)
         if not terms:
             return self.spark.createDataFrame([], "cardinality long")
+        as_int = self._as_int(col)
         partial = self._match_set_stage(
             terms, idfs, [col],
-            lambda m: pd.DataFrame({"val": m[col].astype(str).unique()}),
+            lambda m: pd.DataFrame({"val": _key_text(m[col], as_int, "None").unique()}),
             "val string",
         )
         return partial.agg(
@@ -2589,13 +2551,16 @@ class CompressedIndex:
             "facet_key string, cnt long, sum_val double, "
             "min_val double, max_val double"
         )
+        as_int = self._as_int(facet_col)
 
         def metrics(m: pd.DataFrame) -> pd.DataFrame:
             # cnt counts the bucket's documents (ES doc_count, SQL
             # count(*)), null values included; sum, min and max skip
             # nulls and stay null for an all-null bucket, so its avg is
             # null, as sum / count(*) is
-            g = m[num_col].astype("float64").groupby(m[facet_col].astype(str))
+            g = m[num_col].astype("float64").groupby(
+                _key_text(m[facet_col], as_int, "None")
+            )
             size = g.size()
             return pd.DataFrame(
                 {"facet_key": size.index.to_numpy(dtype=object),
@@ -2693,7 +2658,8 @@ class CompressedIndex:
     def _composite(self, text, facet_col, size, after, local):
         """``composite_agg`` on either site: the per-shard partial —
         the after-key cut and per-key counts (``_key_counts``) of the
-        facet column's text — then the page. The driver site's one
+        facet column's text (``_key_text``, a null as 'None') — then the
+        page. The driver site's one
         whole-index partial already holds each key once."""
         terms, idfs = self._match_terms(text)
         self._check_attrs(facet_col)
@@ -2701,9 +2667,10 @@ class CompressedIndex:
             if local:
                 return _empty(self._FACET_SCHEMA)
             return self.spark.createDataFrame([], self._FACET_SCHEMA)
+        as_int = self._as_int(facet_col)
         partial = self._match_set_stage(
             terms, idfs, [facet_col],
-            lambda m: _key_counts(m[facet_col].astype(str), after),
+            lambda m: _key_counts(_key_text(m[facet_col], as_int, "None"), after),
             self._FACET_SCHEMA, local=local,
         )
         if local:
@@ -2730,12 +2697,12 @@ class CompressedIndex:
         its shard while the key still ranks top-n on a best hit living
         elsewhere), so the cap here is the key cardinality, exactly
         facet_counts' bound: shuffle O(shards × distinct keys × j),
-        never O(matches). The global pass re-ranks with one key-
-        partitioned Window (per-key top-j), then picks the winning keys
-        with a map-side-combined groupBy + orderBy().limit(n_groups)
-        (TakeOrderedAndProject) — never a partition-less Window, whose
-        single task would sort O(distinct keys in the match set) rows
-        (millions for a hot query grouped by repo at 100×)."""
+        never O(matches). The global pass reads that stage ONCE: one
+        groupBy(key) keeps each key's best score and its top-j hits
+        (a sorted, sliced collect_list of at most shards × j rows), and
+        orderBy().limit(n_groups) (TakeOrderedAndProject) picks the
+        winning keys — no Window, no self-join and never a sort of all
+        O(distinct keys in the match set) rows on a single task."""
         if group_col == "doc_id":
             raise ValueError("doc_id is not a group column")
         self._check_attrs(group_col)
@@ -2744,39 +2711,36 @@ class CompressedIndex:
         if not terms:
             return self.spark.createDataFrame([], schema)
 
+        as_int = self._as_int(group_col)
+
         def top(m: pd.DataFrame) -> pd.DataFrame:
-            m = m.rename(columns={group_col: "group_key"}).sort_values(
+            m = m.assign(group_key=_key_text(m[group_col], as_int)).sort_values(
                 ["score", "doc_id"], ascending=[False, True], kind="mergesort"
             )
             top = m.groupby("group_key", sort=False).head(k_per_group)
             return top[["doc_id", "score", "group_key"]]
 
         partial = self._match_set_stage(terms, idfs, [group_col], top, schema)
-        from pyspark.sql import Window
-
-        in_key = Window.partitionBy("group_key").orderBy(
-            F.desc("score"), F.asc("doc_id")
-        )
-        ranked = (
-            partial.withColumn("_rn", F.row_number().over(in_key))
-            .where(F.col("_rn") <= k_per_group)
-        )
-        # winning keys = top n_groups by best score: a map-side-combined
-        # groupBy + orderBy().limit() = TakeOrderedAndProject; each task
-        # keeps only n_groups candidates. (group_key is unique per row
-        # after the agg, so this is exactly the old dense_rank cut —
-        # minus the partition-less Window that sorted ALL distinct keys
-        # in the match set on a single task.)
-        keys = (
-            ranked.groupBy("group_key")
-            .agg(F.max("score").alias("_best"))
+        # one pass over the stage: per key, its best score and its top-j
+        # hits (struct order = -score ASC, doc_id ASC); the winning keys
+        # are an orderBy().limit() (TakeOrderedAndProject), whose hits
+        # explode back into rows
+        hit = F.struct((-F.col("score")).alias("neg"), F.col("doc_id"))
+        return (
+            partial.groupBy("group_key")
+            .agg(
+                F.max("score").alias("_best"),
+                F.slice(F.sort_array(F.collect_list(hit)), 1, k_per_group)
+                .alias("_hits"),
+            )
             .orderBy(F.desc("_best"), F.asc("group_key"))
             .limit(n_groups)
-            .select("group_key")
-        )
-        return (
-            ranked.join(F.broadcast(keys), "group_key", "left_semi")
-            .select("doc_id", "score", "group_key")
+            .select("group_key", F.explode("_hits").alias("_h"))
+            .select(
+                F.col("_h.doc_id").alias("doc_id"),
+                (-F.col("_h.neg")).alias("score"),
+                "group_key",
+            )
             .orderBy(F.desc("score"), F.asc("doc_id"))
         )
 
@@ -2868,20 +2832,6 @@ class CompressedIndex:
         idfs = self._idfs(terms)
         return [t for t in terms if t in idfs], idfs
 
-    def _match_kernel(self, terms: list[str], idfs: dict[str, float]):
-        """The uncut OR kernel: ``fn(blocks, attrs=None, cache=None)``
-        scores EVERY doc matching ≥1 of ``terms`` (``_or_sums``, no
-        top-k cut and no pruning) — the full match set with its rounded
-        BM25 scores."""
-        avgdl = self.meta.avgdl
-
-        def fn(blocks: pd.DataFrame, attrs=None, cache=None) -> pd.DataFrame:
-            return _topk(*_or_sums(
-                blocks, terms, idfs, _decoder(blocks, cache, avgdl)
-            ))
-
-        return fn
-
     def _match_set_stage(
         self,
         terms: list[str],
@@ -2892,8 +2842,10 @@ class CompressedIndex:
         local: bool = False,
     ):
         """The full-match-set stage every aggregation shares: the seek of
-        the query terms' postings (``_dispatch``), scored by
-        ``_match_kernel`` and joined to the attrs rows of the same shard
+        the query terms' postings (``_dispatch``), scored by the uncut
+        OR sum (``_or_sums``: EVERY doc matching ≥1 of ``terms``, its
+        rounded BM25 score, no top-k cut and no pruning) and joined to
+        the attrs rows of the same shard
         (``cols`` only — the field never leaves its shard; a doc with no
         attrs row drops out). ``reduce(rows)`` sees one shard's matched
         (doc_id, score, *cols) rows and returns that shard's map-side
@@ -2903,7 +2855,7 @@ class CompressedIndex:
         ``reduce`` sees the kernel's (doc_id, score) rows. ``local``
         runs the stage once whole-index on the driver site and returns
         its pandas partial."""
-        fd = self._match_kernel(terms, idfs)
+        avgdl = self.meta.avgdl
         empty = _empty(schema)
         want = None if cols is None else [
             c for c in dict.fromkeys(cols) if c != "doc_id"
@@ -2911,7 +2863,7 @@ class CompressedIndex:
 
         def fn(bl: pd.DataFrame, at: pd.DataFrame | None = None,
                cache=None) -> pd.DataFrame:
-            m = fd(bl, cache=cache)
+            m = _topk(*_or_sums(bl, terms, idfs, _decoder(bl, cache, avgdl)))
             if at is not None:
                 m = m.merge(at[["doc_id", *want]], on="doc_id")
             return reduce(m) if len(m) else empty

@@ -517,3 +517,13 @@ def test_aggregations_on_empty_match_set(wand, call, schema, want):
     )
     assert got_schema == schema
     assert [tuple(r) for r in df.collect()] == want
+
+
+def test_top_hits_reads_its_stage_once(wand):
+    """top_hits_agg's executed plan scans the per-shard stage's RDD once:
+    the winning keys and their hits come out of one groupBy, not a
+    second read of the postings for a semi-join."""
+    df = wand.top_hits_agg("def return", "lang", k_per_group=2, n_groups=3)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan ExistingRDD") == 1, plan
+    assert df.count() > 0

@@ -302,3 +302,48 @@ def test_nullable_attr_aggregations_skip_nulls(nullable, monkeypatch):
     monkeypatch.setattr(CompressedIndex, "_ONE_TASK_MAX_POSTINGS", 0)
     for name, c in calls.items():
         assert [tuple(r) for r in c()] == one[name] and one[name], name
+
+
+def test_integer_attr_keys_read_alike_on_every_shard(spark, tmp_path, monkeypatch):
+    """An integer attr keys as its text ('3') whatever dtype pandas reads
+    a shard's rows as: on 8 docs in 2 shards, a long ``num`` null in
+    docs 1 and 3 reads as float64 in shard 0 and as int64 in shard 1,
+    yet each value is ONE bucket in the terms, composite, metric and
+    cardinality aggregations — one task, fanned out and (composite) on
+    the coordinator — and one top_hits key, and a rendered null reads
+    'None', as a string column's does."""
+    docs = spark.createDataFrame(
+        [(i, "query scan doc", None if i in (1, 3) else i % 3) for i in range(8)],
+        "doc_id long, text string, num long",
+    )
+    out = str(tmp_path / "idx")
+    build_index(
+        spark, docs, out, id_col="doc_id", text_col="text", attr_cols=("num",),
+        n_shards=2, shards_per_job=2, resume=False,
+    )
+    ix = CompressedIndex(spark, out)
+    text = "query scan"
+    calls = {
+        "facet": lambda: ix.facet_counts(text, "num").collect(),
+        "composite": lambda: ix.composite_agg(text, "num").collect(),
+        "metric": lambda: ix.facet_metric_agg(text, "num", "num").collect(),
+        "cardinality": lambda: ix.cardinality_agg(text, "num").collect(),
+    }
+    want = {
+        "facet": [("0", 2), ("1", 2), ("2", 2)],
+        "composite": [("0", 2), ("1", 2), ("2", 2), ("None", 2)],
+        "metric": [("0", 2, 0.0, 0.0, 0.0), ("1", 2, 1.0, 1.0, 1.0),
+                   ("2", 2, 2.0, 2.0, 2.0), ("None", 2, None, None, None)],
+        "cardinality": [(4,)],
+    }
+    for fan_out in (False, True):
+        if fan_out:
+            monkeypatch.setattr(CompressedIndex, "_ONE_TASK_MAX_POSTINGS", 0)
+        for name, call in calls.items():
+            assert [tuple(r) for r in call()] == want[name], (name, fan_out)
+    local = ix.composite_agg_local(text, "num")
+    assert list(zip(local["facet_key"], local["cnt"])) == want["composite"]
+    hits = ix.top_hits_agg(text, "num", k_per_group=2, n_groups=4).collect()
+    assert sorted((r["group_key"], r["doc_id"]) for r in hits) == [
+        ("0", 0), ("0", 6), ("1", 4), ("1", 7), ("2", 2), ("2", 5)
+    ]

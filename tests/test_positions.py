@@ -229,6 +229,30 @@ def test_append_preserves_positions(spark, corpus, tmp_path_factory):
         assert a == b and a
 
 
+def test_coordinator_phrase_after_append_moves_shard_ranges(
+    spark, corpus, exact, tmp_path_factory
+):
+    """A 100-doc, 4-shard positional index grown to 400 docs by
+    ``append_batch`` moves the range boundaries, so the shards' doc-id
+    ranges interleave (shard 2 holds docs 50-74 and 100-...). The
+    coordinator phrase kernels, which see every shard's blocks at once,
+    still equal the exact engine, as the distributed ones do."""
+    from librecatastro_spark.streaming.incremental import append_batch
+
+    out = str(tmp_path_factory.mktemp("interleaved"))
+    build_index(spark, corpus.where(F.col("doc_id") < 100), out,
+                n_shards=4, block_size=16, index_options="positions")
+    append_batch(spark, out, corpus.where(F.col("doc_id") >= 100))
+    idx = CompressedIndex(spark, out)
+    for phrase in ("def return", "if return", "class return"):
+        want = rows(exact.match_phrase(phrase, k=10_000))
+        assert rows(idx.match_phrase(phrase, k=10_000)) == want and want
+        assert lrows(idx.match_phrase_local(phrase, k=10_000)) == want, phrase
+    for q in ("def re", "import d"):
+        want = rows(exact.match_phrase_prefix(q, k=10_000))
+        assert lrows(idx.match_phrase_prefix_local(q, k=10_000)) == want and want
+
+
 # ------------------------------------------- match_phrase_prefix (r4) ----
 
 PREFIX_QUERIES = [

@@ -257,3 +257,54 @@ def test_unknown_attr_column_refused_before_any_job(spark, small_rg_index, monke
             call(ix)
 
     assert jobs_run(spark, run) == 0
+
+
+def test_blocks_arrive_in_one_order_on_both_sites(spark, tmp_path):
+    """Both sites hand a kernel its blocks in ``wand._ordered`` order:
+    over an appended index whose shards hold several posting files, the
+    coordinator seek (``_seek_blocks``) and an executor task
+    (``_shard_task``, run in-process with a spy kernel) give the same
+    rows per shard, sorted by (term, first_doc_id) within a shard, by
+    (term, shard, first_doc_id) whole-index, with ``tc`` the term's rank
+    among the frame's distinct terms."""
+    from librecatastro_spark.streaming.incremental import append_batch
+
+    docs = assign_doc_ids(generate_corpus(
+        spark, 300, min_tokens=20, max_tokens=80, partitions=2
+    ))
+    out = str(tmp_path / "idx")
+    build_index(spark, docs.where(F.col("doc_id") < 200), out,
+                n_shards=2, block_size=16)
+    append_batch(spark, out, docs.where(F.col("doc_id") >= 200))
+    ix = CompressedIndex(spark, out)
+    files = [s for s, _ in wand._shard_files(os.path.join(out, "postings"))]
+    assert max(files.count(s) for s in set(files)) >= 2
+    seek = wand._Seek(("def", "return", "import", "class", "value"))
+    cols = ix._SEEK_COLS
+
+    def check(b, keys):
+        assert list(b.sort_values(keys, kind="stable").index) == list(b.index)
+        ranks = {t: i for i, t in enumerate(sorted(set(b["term"])))}
+        assert b["tc"].tolist() == [ranks[t] for t in b["term"]]
+
+    driver = ix._seek_blocks([(ix, seek)], cols)
+    check(driver, ["term", "shard", "first_doc_id"])
+    seen = []
+
+    def spy(blocks, attrs=None, cache=None):
+        seen.append(blocks)
+        return wand._empty()
+
+    groups = [
+        (shard, [(p, rgs, seek) for p, rgs in fl], [])
+        for shard, fl in ix._seek_plan(seek.terms).items()
+    ]
+    list(wand._shard_task(groups, cols, spy, wand._Clauses(), None, None, None,
+                          wand._RESULT_SCHEMA))
+    assert len(seen) == 2
+    for b in seen:
+        check(b, ["term", "first_doc_id"])
+        mine = driver[driver["shard"] == b["shard"].iloc[0]]
+        assert mine.drop(columns="tc").reset_index(drop=True).equals(
+            b.drop(columns="tc").reset_index(drop=True)
+        )

@@ -146,14 +146,23 @@ def seek_audit(index, make, pos_enc: bool = False):
     return df, lines, problems
 
 
+#: one RDD scan in a formatted plan's operator tree
+_RDD_SCAN = re.compile(r"Scan ExistingRDD \(\d+\)")
+
+
 def audit(
-    name: str, df, expect: dict[str, bool], notes: str, seek=None
+    name: str, df, expect: dict[str, bool], notes: str, seek=None,
+    scans: int | None = None,
 ) -> tuple[str, list[str]]:
     """One PLANS.md section: ``df``'s formatted plan grepped for
     ``expect``; ``seek`` is ``seek_audit``'s (lines, problems) for a
-    query the executor tasks answer."""
+    query the executor tasks answer; ``scans`` is the number of
+    ``Scan ExistingRDD`` operators (reads of an executor stage) the plan
+    must hold."""
     plan = formatted_plan(df)
     problems = []
+    if scans is not None and len(_RDD_SCAN.findall(plan)) != scans:
+        problems.append(f"{name}: expected {scans} `Scan ExistingRDD`")
     for key, want in expect.items():
         have = CHECKS[key] in plan
         if have != want:
@@ -167,6 +176,12 @@ def audit(
         lines.append(
             f"- {mark}`{CHECKS[key]}` {'present' if have else 'absent'}"
             f" (expected {'present' if want else 'absent'})"
+        )
+    if scans is not None:
+        have = len(_RDD_SCAN.findall(plan))
+        lines.append(
+            f"- {'OK ' if have == scans else '!! '}`Scan ExistingRDD` x{have}"
+            f" (expected x{scans})"
         )
     if seek is not None:
         lines += seek[0]
@@ -434,18 +449,19 @@ def main() -> int:
         "the scan", "lang", k_per_group=2, n_groups=3
     ))
     s, p = audit(
-        "top_hits terms-bucket plan (r4 de-serialized key rank)",
-        df, {**EXECUTOR_PLAN, "window": True, "single_partition": False,
-             "exchange": True, "broadcast": True, "cartesian": False},
-        "Per-key top-j is a key-PARTITIONED Window over the executor "
-        "tasks' per-shard top-j rows; the winning keys are a "
-        "map-side-combined groupBy + orderBy().limit(n_groups) "
-        "(TakeOrderedAndProject) semi-joined back through a broadcast "
-        "(the plan's only Exchange is that BroadcastExchange) — NO "
-        "partition-less Window (Exchange SinglePartition absent), so no "
-        "single task ever sorts the O(distinct group keys) frame of a "
-        "hot query.",
-        seek=seek,
+        "top_hits terms-bucket plan (one read of the per-shard stage)",
+        df, {"take_ordered": True, "grouped_map": False, "window": False,
+             "single_partition": False, "broadcast": False,
+             "explode": True, "cartesian": False},
+        "The executor tasks' per-shard top-j rows are read ONCE: one "
+        "groupBy(key) keeps each key's best score and its sorted, "
+        "sliced top-j hits (collect_list), orderBy().limit(n_groups) "
+        "(TakeOrderedAndProject) picks the winning keys and their hits "
+        "explode back into rows — no Window, no self-join (one `Scan "
+        "ExistingRDD`) and no partition-less sort of the O(distinct "
+        "group keys) frame of a hot query (Exchange SinglePartition "
+        "absent).",
+        seek=seek, scans=1,
     )
     sections.append(s); problems += p
 

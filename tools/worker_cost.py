@@ -31,6 +31,7 @@ divided by its size; the tool prints the median per query over the
 rounds, with n.
 
 Usage: python tools/worker_cost.py [--stock] [--rounds 8] [--per-round 10]
+                                   [--profile]
 
 (``local`` runs ten times ``--per-round`` queries a round: one call costs
 a few ms, under one tick.)
@@ -38,6 +39,13 @@ a few ms, under one tick.)
 ``--stock`` passes ``extra_conf={"spark.python.daemon.module":
 "pyspark.daemon"}``, the stock daemon, to compare with the daemon
 ``get_spark`` picks by default.
+
+``--profile`` then runs the warm ``local`` query ``--rounds`` x ten
+times ``--per-round`` more times under cProfile and prints the share of
+the profiled time spent inside (cumulative) the BM25 kernel
+(``_shard_topk_fn``), the coordinator seek (``_seek_blocks``), its row
+selection (``_select``), the block order (``_ordered``) and the
+pyarrow→pandas conversions (``table_to_dataframe``).
 """
 
 from __future__ import annotations
@@ -128,6 +136,39 @@ def measure_threads(run, pool_tids, rounds: int, per_round: int) -> dict[str, li
     return samples
 
 
+def profile(run, n: int) -> None:
+    """Cumulative cProfile shares of the layers of ``n`` warm ``run``
+    calls (a layer absent from the engine reads 0)."""
+    import cProfile
+    import pstats
+    import types
+
+    from librecatastro_spark.engine import wand
+
+    kernel = next(
+        c for c in wand._shard_topk_fn.__code__.co_consts
+        if isinstance(c, types.CodeType) and c.co_name == "fn"
+    )
+    layers = {
+        "bm25 kernel": lambda f, ln, name: (f, ln) == (
+            kernel.co_filename, kernel.co_firstlineno),
+        **{fn: lambda f, ln, name, fn=fn: f == wand.__file__ and name == fn
+           for fn in ("_seek_blocks", "_select", "_ordered")},
+        "to_pandas": lambda f, ln, name: name == "table_to_dataframe",
+    }
+    pr = cProfile.Profile()
+    pr.enable()
+    for _ in range(n):
+        run()
+    pr.disable()
+    st = pstats.Stats(pr)
+    print(f"profile: {n} warm calls, {1e3 * st.total_tt / n:.2f} ms each "
+          "under the profiler; cumulative share of that time")
+    for label, match in layers.items():
+        cum = sum(v[3] for key, v in st.stats.items() if match(*key))
+        print(f"  {label:14s} {100 * cum / st.total_tt:5.1f} %")
+
+
 def report(name: str, s: dict[str, list[float]], groups, rounds: int) -> None:
     med = {g: statistics.median(s[g]) for g in groups}
     total = statistics.median([sum(s[g][i] for g in groups) for i in range(rounds)])
@@ -141,6 +182,8 @@ def main() -> int:
                     help="run the stock pyspark.daemon")
     ap.add_argument("--rounds", type=int, default=8)
     ap.add_argument("--per-round", type=int, default=10)
+    ap.add_argument("--profile", action="store_true",
+                    help="profile the warm local query's layers")
     args = ap.parse_args()
 
     from pyspark import SparkContext
@@ -203,6 +246,8 @@ def main() -> int:
                 report(name, measure_threads(
                     local, pool_tids, args.rounds, 10 * args.per_round
                 ), THREADS, args.rounds)
+            if args.profile:
+                profile(local, args.rounds * 10 * args.per_round)
     finally:
         spark.stop()
     return 0
