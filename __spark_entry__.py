@@ -475,13 +475,16 @@ def _q_wand_match_phrase(spark, sf):
 
 
 def _q_wand_match_phrase_pos(spark, sf):
-    # the same query through the match_phrase_positional alias
-    return _pos_index(spark, sf).match_phrase_positional("scan merge", k=10)
+    # a phrase spanning a stopword, through the match_phrase_positional
+    # alias, on the stop-list positions index: adjacency after removal
+    return _stop_index(spark, sf, "positions").match_phrase_positional(
+        "scan the merge", k=10
+    )
 
 
 def _q_wand_match_phrase_pos_slop(spark, sf):
-    return _pos_index(spark, sf).match_phrase_positional(
-        "scan merge", k=10, slop=2
+    return _stop_index(spark, sf, "positions").match_phrase_positional(
+        "scan the merge", k=10, slop=2
     )
 
 
@@ -1327,24 +1330,69 @@ def _syn_index(spark, sf_dir: str):
     return CompressedIndex(spark, out)
 
 
-def _stop_index(spark, sf_dir: str):
+def _stop_index(spark, sf_dir: str, index_options: str = "freqs"):
     """documents indexed with the ES stop token filter (r5): stopwords
-    dropped after segmentation and before dl/tf assignment, recorded in
-    meta.stopwords so query analysis drops them too. Built once per
-    sf_dir (resume=True + mtime-keyed cache dir, like _geo_index)."""
+    dropped after segmentation and before dl/tf/position assignment,
+    recorded in meta.stopwords so query analysis drops them too. Built
+    once per (sf_dir, ``index_options``) (resume=True + mtime-keyed
+    cache dir, like _geo_index)."""
     import hashlib
 
     src = f"{sf_dir}/documents.parquet"
     mtime = int(os.path.getmtime(src)) if os.path.exists(src) else 0
-    key = hashlib.sha256(f"{sf_dir}:{mtime}:stop-v1".encode()).hexdigest()[:16]
+    tag = f"{sf_dir}:{mtime}:stop-v1:{index_options}"
+    key = hashlib.sha256(tag.encode()).hexdigest()[:16]
     out = os.path.join("/tmp", f"lc_stopindex_{key}")
     build_index(
         spark, _docs(spark, sf_dir), out, id_col="doc_id", text_col="text",
         attr_cols=("lang", "source"), n_shards=4,
         block_size=128, salt_threshold=5_000, n_salts=8, resume=True,
-        stopwords=frozenset(_STOP_LIST),
+        stopwords=frozenset(_STOP_LIST), index_options=index_options,
     )
     return CompressedIndex(spark, out)
+
+
+#: the token CTE of the stop-list entries: the stop filter as a NOT IN
+#: before tf/dl/df/avgdl, exactly like the engine's build-time filtering
+_STOP_SQL = ", ".join(f"'{s}'" for s in _STOP_LIST)
+_STOP_TOKS_CTE = f"""
+toks AS (
+  SELECT doc_id, term FROM (
+    SELECT doc_id, unnest({duckdb_tokens_sql('text')}) AS term FROM documents
+  ) WHERE term NOT IN ({_STOP_SQL})
+),
+tf AS (SELECT doc_id, term, count(*)::DOUBLE AS tf FROM toks GROUP BY 1, 2),
+dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
+g  AS (SELECT count(*)::DOUBLE AS n, avg(dl)::DOUBLE AS avgdl FROM dl)"""
+
+
+def _stop_phrase_oracle(text: str, slop: int = 0, k: int = 10) -> str:
+    """DuckDB twin of a phrase on the stop-list positions index: BM25
+    require_all over the analyzed terms with the stopwords dropped, and
+    the phrase matched (``duckdb_phrase_sql``) over the stop-filtered
+    token stream, the sequence the positions index."""
+    seq = [t for t in analyze_text(text) if t not in _STOP_LIST]
+    terms = ", ".join(f"'{t}'" for t in sorted(set(seq)))
+    stream = (
+        f"array_to_string(list_filter({duckdb_tokens_sql('text')}, "
+        f"x -> x NOT IN ({_STOP_SQL})), ' ')"
+    )
+    return f"""
+WITH {_STOP_TOKS_CTE},
+dfq AS (SELECT term, count(*)::DOUBLE AS df FROM tf WHERE term IN ({terms}) GROUP BY 1),
+scored AS (
+  SELECT tf.doc_id, sum({bm25_sql("tf.tf", "dfq.df", "dl.dl", "g.n", "g.avgdl")}) AS raw,
+         count(*) AS n_matched
+  FROM tf JOIN dfq USING (term) JOIN dl USING (doc_id) CROSS JOIN g
+  WHERE tf.term IN ({terms})
+  GROUP BY tf.doc_id
+)
+SELECT doc_id, round(raw, {ROUND_DECIMALS}) AS score FROM scored
+WHERE n_matched = {len(set(seq))} AND doc_id IN (
+  SELECT doc_id FROM documents WHERE {duckdb_phrase_sql(stream, seq, slop)})
+ORDER BY round(raw, {ROUND_DECIMALS}) DESC, doc_id ASC
+LIMIT {k}
+"""
 
 
 _GEO_RINGS = [(None, 3000000.0), (3000000.0, 8000000.0), (8000000.0, None)]
@@ -1804,11 +1852,10 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         .match_phrase("scan merge", k=10, slop=2),
         "bm25_match_phrase_slop": lambda spark, sf: _engine(spark, sf)
         .match_phrase("scan merge", k=10, slop=2),
-        # positional-postings phrase path (index_options="positions"):
-        # answered ENTIRELY from the index — position-chain intersection,
-        # no source-table scan (engine/positions.py). Same regex oracle
-        # as wand_match_phrase: position adjacency over the analyzed
-        # token stream IS the anchored-regex predicate by construction.
+        # positional-postings phrase path (index_options="positions") on
+        # the stop-list index: a phrase spanning a stopword is adjacent
+        # in the stop-filtered stream the positions index; the oracle
+        # matches the phrase over that filtered token stream.
         "wand_match_phrase_pos": _q_wand_match_phrase_pos,
         "wand_match_phrase_pos_slop": _q_wand_match_phrase_pos_slop,
         # type-ahead phrase, index-only (r4): complete-term position
@@ -2172,12 +2219,8 @@ LIMIT 10""",
         "bm25_match_phrase_slop": _bm25_oracle(
             "scan merge", k=10, require_all=True, phrase=True, phrase_slop=2
         ),
-        "wand_match_phrase_pos": _bm25_oracle(
-            "scan merge", k=10, require_all=True, phrase=True
-        ),
-        "wand_match_phrase_pos_slop": _bm25_oracle(
-            "scan merge", k=10, require_all=True, phrase=True, phrase_slop=2
-        ),
+        "wand_match_phrase_pos": _stop_phrase_oracle("scan the merge"),
+        "wand_match_phrase_pos_slop": _stop_phrase_oracle("scan the merge", slop=2),
         "function_score_field": _function_score_oracle(
             "table query", "n_chars", "log1p", 0.01, "multiply", k=10
         ),
@@ -2656,14 +2699,7 @@ ORDER BY score DESC, parent ASC LIMIT 10
         # in the token CTE — tf/dl/df/avgdl all derive from the filtered
         # stream, exactly like the engine's build-time filtering
         "match_stopword_analyzer": f"""
-WITH toks AS (
-  SELECT doc_id, term FROM (
-    SELECT doc_id, unnest({duckdb_tokens_sql('text')}) AS term FROM documents
-  ) WHERE term NOT IN ({", ".join(f"'{s}'" for s in _STOP_LIST)})
-),
-tf AS (SELECT doc_id, term, count(*)::DOUBLE AS tf FROM toks GROUP BY 1, 2),
-dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY 1),
-g  AS (SELECT count(*)::DOUBLE AS n, avg(dl)::DOUBLE AS avgdl FROM dl),
+WITH {_STOP_TOKS_CTE},
 dfq AS (SELECT term, count(*)::DOUBLE AS df FROM tf
         WHERE term IN ('query', 'table') GROUP BY 1)
 SELECT tf.doc_id,

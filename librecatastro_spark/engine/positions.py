@@ -90,21 +90,28 @@ def _term_rows(blocks: pd.DataFrame, t: str, prefix: bool = False) -> pd.DataFra
     return blocks.iloc[lo:len(term) if succ is None else np.searchsorted(term, succ)]
 
 
-def _decode_term(rows: pd.DataFrame, with_pos: bool):
-    """The engine's one varbyte block decoder: block ``rows`` into flat
-    (ids, tfs, dls, pos) in posting order (row order, doc order within
-    a block). Varbyte is self-delimiting, so every row's buffers decode
-    in ONE numpy pass per column; each block's first delta is absolute,
-    so its ids are the cumsum of deltas minus the running total just
-    before the block. ``pos`` is the per-occurrence position stream
-    aligned with ``repeat(ids, tfs)``; None when with_pos=False. Every
-    kernel decodes through here, so the codec calls go through this
-    module's ``decode_varbyte`` / ``decode_positions``."""
+def _decode_ids(rows: pd.DataFrame) -> np.ndarray:
+    """The doc ids of block ``rows`` in posting order (row order, doc
+    order within a block) — the doc-id half of ``_decode_term``, all a
+    constant-score tail or a negative clause reads. Varbyte is
+    self-delimiting, so every row's ``docs_enc`` decodes in ONE numpy
+    pass; each block's first delta is absolute, so its ids are the
+    cumsum of deltas minus the running total just before the block."""
     counts = rows["n_docs"].to_numpy(dtype=np.int64)
     d = decode_varbyte(b"".join(rows["docs_enc"])).astype(np.int64)
     c = np.cumsum(d)
     starts = np.cumsum(counts) - counts
-    ids = c - np.repeat(c[starts] - d[starts], counts)
+    return c - np.repeat(c[starts] - d[starts], counts)
+
+
+def _decode_term(rows: pd.DataFrame, with_pos: bool):
+    """The engine's one varbyte block decoder: block ``rows`` into flat
+    (ids, tfs, dls, pos) in posting order (``_decode_ids``, one numpy
+    pass per column). ``pos`` is the per-occurrence position stream
+    aligned with ``repeat(ids, tfs)``; None when with_pos=False. Every
+    kernel decodes through here, so the codec calls go through this
+    module's ``decode_varbyte`` / ``decode_positions``."""
+    ids = _decode_ids(rows)
     tfs = decode_varbyte(b"".join(rows["tfs_enc"])).astype(np.int64)
     dls = decode_varbyte(b"".join(rows["dls_enc"])).astype(np.int64)
     pos = None

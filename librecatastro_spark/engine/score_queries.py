@@ -30,7 +30,7 @@ import pandas as pd
 
 from ..bm25 import ROUND_DECIMALS
 from .fscore import combine_np, field_factor_np, try_double_np
-from .positions import _decode_term, _empty, _term_rows, _topk
+from .positions import _decode_ids, _empty, _term_rows, _topk
 from .wand import _decoder, _or_sums
 
 
@@ -129,7 +129,7 @@ def boosting_fn(
         if len(uids) == 0:
             return _empty()
         neg_ids = [
-            _decode_term(sub, False)[0]
+            _decode_ids(sub)
             for t in sorted(set(neg_terms)) if len(sub := _term_rows(blocks, t))
         ]
         if neg_ids:

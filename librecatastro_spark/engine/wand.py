@@ -67,15 +67,21 @@ summed) disables pruning and filters on matched-term count.
 
 from __future__ import annotations
 
+import bisect
 import functools
 import math
 import os
 import re
+from collections import OrderedDict
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -87,12 +93,14 @@ from ..index.builder import (
     load_postings,
     load_term_stats,
     read_meta,
+    term_stats_sources,
 )
-from ..index.codec import decode_varbyte, delta_decode
+from ..index.codec import decode_varbyte  # noqa: F401 (perfbench's tracer swaps it)
 from .positions import (
     _NP_TYPES,
     _RESULT_SCHEMA,
     _columns,
+    _decode_ids,
     _decode_impacts,
     _empty,
     _overlapping,
@@ -140,9 +148,6 @@ class _Seek:
         object.__setattr__(self, "terms", tuple(sorted(set(self.terms))))
 
     def mask(self, tbl):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         term = tbl.column("term")
         keep = pc.is_in(term, value_set=pa.array(self.terms, pa.string()))
         if self.pfx is not None:
@@ -182,8 +187,6 @@ def _ordered(tbl) -> pd.DataFrame:
     per-shard passes agree to the bit. (shard precedes first_doc_id: an
     ``append_batch`` that moves the range boundaries leaves a shard's
     doc ids in two ranges.) Kernels never re-sort."""
-    import pyarrow.compute as pc
-
     keys = [c for c in ("_field", "term", "shard", "first_doc_id")
             if c in tbl.column_names]
     tbl = tbl.take(pc.sort_indices(tbl, [(c, "ascending") for c in keys]))
@@ -204,8 +207,6 @@ def _select(tbl, shard: int, seek: _Seek):
     """The one selection rule of both seek sites: the rows of one
     postings file's table ``tbl`` that ``seek`` keeps, tagged with
     their ``shard`` (and ``seek.field``); None when no row is kept."""
-    import pyarrow as pa
-
     tbl = tbl.filter(seek.mask(tbl))
     if not tbl.num_rows:
         return None
@@ -233,9 +234,6 @@ def _shard_task(groups, cols, fn, clauses, attrs_cols, attrs_schema, attrs_root,
     the kernel's rows as the DDL ``schema`` types them (``_values``).
     The arguments are picklable; nothing here reaches the index
     object."""
-    import pyarrow as pa
-    import pyarrow.dataset as pads
-
     for shard, files, attrs_files in groups:
         tabs = [
             t for path, rgs, seek in files
@@ -347,9 +345,6 @@ class _Clauses:
         The predicates push into the scan (row-group stats + dictionary
         filtering) and only ``extra`` and the columns the re-checks need
         are materialized, so memory is O(matching docs)."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         es = []
         for col, val in (self.filters or {}).items():
             if isinstance(val, (list, tuple, set)):
@@ -471,13 +466,11 @@ class _Scored:
     pfx: str | None = None
 
 
-def _doc_page(docs_enc, lo: int, hi: int) -> pd.DataFrame:
-    """Distinct doc ids of the posting blocks' ``docs_enc`` buffers,
-    ascending, rows [lo, hi), each at constant score 1.0 — the decode
-    both constant-score tails share."""
-    parts = [delta_decode(decode_varbyte(e)) for e in docs_enc]
-    ids = np.unique(np.concatenate(parts)) if parts else np.empty(0, np.int64)
-    ids = ids[lo:hi].astype(np.int64)
+def _doc_page(blocks: pd.DataFrame, n: int) -> pd.DataFrame:
+    """The first ``n`` distinct doc ids of the posting ``blocks``,
+    ascending, each at constant score 1.0 — the decode both
+    constant-score tails share."""
+    ids = np.unique(_decode_ids(blocks))[:n]
     return pd.DataFrame({"doc_id": ids, "score": np.full(len(ids), 1.0)})
 
 
@@ -505,42 +498,97 @@ def _key_counts(keys: pd.Series, after: str | None = None) -> pd.DataFrame:
 def _wildcard_regex(pattern: str) -> str:
     """ES wildcard pattern → anchored regex: ``*`` = any sequence, ``?``
     = one character, everything else escaped — lowercased like the
-    analyzer, and evaluated identically by Java regex (rlike) and
-    CPython sre."""
+    analyzer, and evaluated identically by Java regex (rlike) and RE2."""
     return "^" + "".join(
         ".*" if c == "*" else "." if c == "?" else re.escape(c)
         for c in pattern.lower()
     ) + "$"
 
 
-def _lev_within(a: str, b: str, max_edits: int) -> bool:
-    """Classic Levenshtein distance(a, b) <= max_edits — full DP with a
-    per-row early exit (once every cell of a row exceeds the bound no
-    path can come back under it). Same metric as F.levenshtein/DuckDB
-    levenshtein, so the coordinator fuzzy expansion matches the
-    distributed one term-for-term. Tokens are short (analyzer-bounded),
-    so the O(len a × len b) row loop is ns-scale per candidate."""
-    la, lb = len(a), len(b)
-    if abs(la - lb) > max_edits:
-        return False
-    prev = list(range(lb + 1))
-    for i in range(1, la + 1):
-        ca = a[i - 1]
-        cur = [i] + [0] * lb
-        best = i
-        for j in range(1, lb + 1):
-            v = min(
-                prev[j] + 1,
-                cur[j - 1] + 1,
-                prev[j - 1] + (ca != b[j - 1]),
-            )
-            cur[j] = v
-            if v < best:
-                best = v
-        if best > max_edits:
-            return False
-        prev = cur
-    return prev[lb] <= max_edits
+def _within_edits(terms: np.ndarray, q: str, max_edits: int) -> np.ndarray:
+    """Mask of ``terms`` (str) within ``max_edits`` classic Levenshtein
+    edits of ``q`` over codepoints — the metric of F.levenshtein and
+    DuckDB's levenshtein. One DP row per term character, computed for
+    every candidate at once (a row's insert chain is one running
+    minimum); a candidate leaves the batch at its last character, or
+    once its whole row exceeds ``max_edits`` (no path comes back)."""
+    if not len(terms):
+        return np.zeros(0, bool)
+    u = terms.astype(str)
+    codes, lens = u.view(np.uint32).reshape(len(u), -1), np.char.str_len(u)
+    qc, j = np.array([q]).view(np.uint32), np.arange(len(q) + 1)
+    dist = np.full(len(u), max_edits + 1)
+    live, row = np.arange(len(u)), np.tile(j, (len(u), 1))
+    for i in range(1, codes.shape[1] + 1):
+        sub = row[:, :-1] + (codes[live, i - 1][:, None] != qc)
+        row[:, 1:] = np.minimum(row[:, 1:] + 1, sub)
+        row[:, 0] = i
+        row = np.minimum.accumulate(row - j, axis=1) + j
+        end = lens[live] == i
+        dist[live[end]] = row[end, -1]
+        keep = ~end & (row.min(axis=1) <= max_edits)
+        live, row = live[keep], row[keep]
+    return dist <= max_edits
+
+
+@dataclass(frozen=True)
+class _Dictionary:
+    """The resident term dictionary (``CompressedIndex.refresh``): every
+    indexed term once, in codepoint order — the postings files' order —
+    with its df and cf, as arrays (``text``: the same terms as one Arrow
+    string array, for the RE2 and length kernels). Every driver-side
+    dictionary read is a binary search (``find``), a [p, successor(p))
+    range (``range``) or one vectorized filter over a range
+    (``matching``); none walks the terms in Python."""
+
+    term: np.ndarray
+    text: pa.Array
+    df: np.ndarray
+    cf: np.ndarray
+
+    @classmethod
+    def of(cls, tbl: pa.Table) -> _Dictionary:
+        tbl = tbl.sort_by("term")
+        text = tbl.column("term").combine_chunks()
+        return cls(
+            text.to_numpy(zero_copy_only=False), text,
+            tbl.column("df").to_numpy().astype(np.int64),
+            tbl.column("cf").to_numpy().astype(np.int64),
+        )
+
+    def find(self, terms) -> np.ndarray:
+        """The row of each of ``terms``; -1 for a term not indexed."""
+        keys = np.array(terms, dtype=object)
+        if not len(self.term):
+            return np.full(len(keys), -1)
+        i = np.minimum(np.searchsorted(self.term, keys), len(self.term) - 1)
+        return np.where(self.term[i] == keys, i, -1)
+
+    def range(self, p: str) -> tuple[int, int]:
+        """The rows of the terms starting with ``p``: [p, successor(p))."""
+        succ = _successor(p)
+        hi = len(self.term) if succ is None else np.searchsorted(self.term, succ)
+        return int(np.searchsorted(self.term, p)), int(hi)
+
+    def matching(self, pfx: str = "", fuzzy=None, rx=None) -> np.ndarray:
+        """Rows of the terms an expansion keeps: the ``pfx`` range, then
+        with ``fuzzy`` = (term, max_edits) its length band and the
+        batched DP (``_within_edits``), with ``rx`` an RE2 match of the
+        anchored pattern."""
+        lo, hi = self.range(pfx)
+        rows, text = np.arange(lo, hi), self.text[lo:hi]
+        if fuzzy is not None:
+            q, e = fuzzy
+            rows = rows[np.abs(pc.utf8_length(text).to_numpy() - len(q)) <= e]
+            rows = rows[_within_edits(self.term[rows], q, e)]
+        if rx is not None:
+            rows = rows[pc.match_substring_regex(text, rx).to_numpy(False)]
+        return rows
+
+    def top(self, rows: np.ndarray, n: int) -> list[str]:
+        """The ``n`` best terms of ``rows`` by (-df, term) — ES
+        ``max_expansions``; rows are term-ordered, so a row breaks ties."""
+        return self.term[rows[np.lexsort((rows, -self.df[rows]))[:n]]].tolist()
 
 
 def _decoder(blocks: pd.DataFrame, cache, avgdl: float):
@@ -839,13 +887,15 @@ class CompressedIndex:
         dictionary is resident); after ``append_batch`` rewrites
         term_stats/meta/postings, call ``refresh()`` (or reopen) so
         queries see the new N/avgdl/df and the appended posting files.
+        A term_stats no larger than ``_LOCAL_TERMSTATS_BYTES`` becomes
+        the resident dictionary, one term-sorted (term, df, cf) table
+        (``_Dictionary``) that every driver-side dictionary read and
+        expansion uses; a larger one stays a cached Spark scan.
         It also drops the coordinator cache, whole: the decompressed
         posting column chunks (``_seek_blocks``) and the decoded
         postings (``_make_decoder``), one LRU under one
         ``LC_POSTING_CACHE_MB`` budget. Nothing is cached at open; the
         cache fills as queries read."""
-        from collections import OrderedDict
-
         spark, out_dir = self.spark, self.out_dir
         self.meta = read_meta(out_dir)
         # query analysis uses the INDEX's analyzer (meta.analyzer_re, the
@@ -865,11 +915,8 @@ class CompressedIndex:
         self._attrs_files = None
         self._dec_cache: OrderedDict = OrderedDict()
         self._dec_cache_bytes = 0
-        self._df_local: dict[str, int] | None = None
-        self._cf_local: dict[str, int] | None = None
+        self._dict: _Dictionary | None = None
         try:
-            from ..index.builder import term_stats_sources
-
             srcs, merge = term_stats_sources(out_dir)
             files = [
                 os.path.join(s, f)
@@ -880,32 +927,24 @@ class CompressedIndex:
             ] + [s for s in srcs if not os.path.isdir(s)]
             size = sum(os.path.getsize(f) for f in files)
             if size <= self._LOCAL_TERMSTATS_BYTES and files:
-                import pyarrow.dataset as pads
-
-                tbl = pads.dataset(files).to_table(
-                    columns=["term", "df", "cf"]
-                )
+                tbl = pads.dataset(files).to_table(columns=["term", "df", "cf"])
                 if merge:  # stats deltas present (post-append)
                     tbl = tbl.group_by("term").aggregate(
                         [("df", "sum"), ("cf", "sum")]
-                    )
-                    tbl = tbl.rename_columns(["term", "df", "cf"])
-                terms_l = tbl.column("term").to_pylist()
-                self._df_local = dict(zip(terms_l, tbl.column("df").to_pylist()))
-                # cf (total occurrences) powers the phrase twins' decode-
-                # volume routing — same snapshot, one extra column
-                self._cf_local = dict(zip(terms_l, tbl.column("cf").to_pylist()))
+                    ).rename_columns(["term", "df", "cf"])
+                self._dict = _Dictionary.of(tbl)
         except OSError:
             pass
-        if self._df_local is None:
+        if self._dict is None:
             self.term_stats = self.term_stats.cache()
 
     def _dfs(self, terms: list[str]) -> dict[str, int]:
         """Document frequency of each indexed term among ``terms``, from
         the resident dictionary when the index holds one, else one
         vocab-bounded term_stats collect."""
-        if self._df_local is not None:
-            return {t: self._df_local[t] for t in terms if t in self._df_local}
+        if self._dict is not None:
+            rows = self._dict.find(terms)
+            return {t: int(self._dict.df[r]) for t, r in zip(terms, rows) if r >= 0}
         rows = self.term_stats.where(F.col("term").isin(terms)).collect()
         return {r["term"]: r["df"] for r in rows}
 
@@ -927,20 +966,13 @@ class CompressedIndex:
 
     def _df_sum(self, terms) -> int | None:
         """Σ df over ``terms`` from the resident dictionary — the postings
-        a stage over them decodes, its ``_dispatch`` estimate — counted
-        only until it passes ``_ONE_TASK_MAX_POSTINGS`` (past it, the
-        exact sum does not change the plan, so a lazy ``terms`` is
-        walked no further). None when the dictionary is not resident:
-        no Spark job is spent on an estimate, and the stage runs one
-        task per shard."""
-        if self._df_local is None:
+        a stage over them decodes, its ``_dispatch`` estimate. None when
+        the dictionary is not resident: no Spark job is spent on an
+        estimate, and the stage runs one task per shard."""
+        if self._dict is None:
             return None
-        total, cap = 0, self._ONE_TASK_MAX_POSTINGS
-        for t in terms:
-            total += self._df_local.get(t, 0)
-            if total > cap:
-                break
-        return total
+        rows = self._dict.find(terms)
+        return int(self._dict.df[rows[rows >= 0]].sum())
 
     def search(
         self,
@@ -1149,8 +1181,6 @@ class CompressedIndex:
     def _as_int(self, col: str) -> bool:
         """Whether the attrs files type ``col`` as an integer (its keys
         render through ``_key_text``)."""
-        import pyarrow as pa
-
         return pa.types.is_integer(self._attrs_dataset().schema.field(col).type)
 
     def _needs_positions(self, method: str) -> None:
@@ -1299,13 +1329,13 @@ class CompressedIndex:
         without one, where the estimate would itself cost a Spark job
         (the distributed phrases then run one task per shard, and the
         coordinator twins run on the cluster)."""
-        if self._df_local is None:
+        if self._dict is None:
             return None
-        dfs = [self._df_local.get(t, 0) for t in terms]
-        if not dfs or min(dfs) == 0:
+        rows = self._dict.find(terms)
+        if not len(rows) or (rows < 0).any() or not self._dict.df[rows].min():
             return 0
         n = max(int(self.meta.n_docs), 1)
-        return int(min(dfs) / n * sum(self._cf_local.get(t, 0) for t in terms))
+        return int(self._dict.df[rows].min() / n * self._dict.cf[rows].sum())
 
     def match_phrase_local(
         self,
@@ -1334,26 +1364,18 @@ class CompressedIndex:
         (``_execute``): the seek reads the complete terms' and the [pfx,
         successor) range's blocks; a single-token query takes the
         constant-score tail of ``term_prefix_search`` on the driver
-        site. Routes by decode estimate like ``match_phrase_local``;
-        without a resident dictionary it answers on the cluster."""
+        site, which reads only footer stats. Routes by decode estimate
+        like ``match_phrase_local``; without a resident dictionary a
+        multi-token query answers on the cluster."""
         spec = self._phrase_spec(
             "match_phrase_prefix_local", text, k, offset, prefix=True
         )
         if spec.terms:
             return self._execute(spec, local=True)
-        if self._df_local is None:
-            return self.term_prefix_search(spec.pfx, k=k, offset=offset).toPandas()
         return self._constant_score_docs(k, None, offset, pfx=spec.pfx, local=True)
 
-    def _resident(self, method: str) -> dict[str, int]:
-        """The resident term dictionary (term → df); a coordinator
-        expansion cannot run without it."""
-        if self._df_local is None:
-            raise ValueError(
-                f"{method} needs the resident term dictionary (term_stats "
-                "exceeds the local cap); use the distributed path"
-            )
-        return self._df_local
+    #: size of the coordinator seek's thread pool (``_executor``)
+    _FASTPATH_THREADS = 8
 
     def _executor(self):
         """Persistent coordinator thread pool for the seek's per-file
@@ -1361,20 +1383,11 @@ class CompressedIndex:
         cost ~35 ms (the round-2 host memory-wall), so a per-query
         ThreadPoolExecutor added ~0.2 s of pure thread creation to every
         fast-path call; one long-lived pool per open index amortizes it
-        to zero. Pool size is read from LC_FASTPATH_THREADS at first use;
-        the pool never affects results (test_fastpath_threading_invariant),
-        only concurrency."""
-        want = int(os.environ.get("LC_FASTPATH_THREADS", "8"))
-        ex = getattr(self, "_pool", None)
-        if ex is None or self._pool_size != want:
-            if ex is not None:
-                ex.shutdown(wait=False)
-            from concurrent.futures import ThreadPoolExecutor
-
-            ex = ThreadPoolExecutor(max_workers=want)
-            self._pool = ex
-            self._pool_size = want
-        return ex
+        to zero. The pool never affects results
+        (test_fastpath_threading_invariant), only concurrency."""
+        if getattr(self, "_pool", None) is None:
+            self._pool = ThreadPoolExecutor(max_workers=self._FASTPATH_THREADS)
+        return self._pool
 
     def _files(self) -> tuple[list, dict[int, list[str]]]:
         """The index's file listing, built once per ``refresh()``: each
@@ -1439,8 +1452,6 @@ class CompressedIndex:
         a file without usable stats is read whole — never a missed
         posting. Files keep the listing's order, so both sites read blocks
         in the same order."""
-        import bisect
-
         terms = sorted(set(wanted))
         succ = None if pfx is None else _successor(pfx)
         plan: dict[int, list[tuple[str, list[int]]]] = {}
@@ -1482,8 +1493,6 @@ class CompressedIndex:
         while it stays cached; the query holds its own references, so an
         eviction never touches it. Executor tasks read uncached
         (``_shard_task``)."""
-        import pyarrow as pa
-
         tabs = []
         for ix, sk in seeks:
             files = [
@@ -1559,8 +1568,6 @@ class CompressedIndex:
         """The attrs pyarrow dataset for coordinator reads — discovery
         (file listing + schema) runs once per index open."""
         if self._pads_attrs is None:
-            import pyarrow.dataset as pads
-
             self._pads_attrs = pads.dataset(
                 os.path.join(self.out_dir, "attrs"), partitioning="hive"
             )
@@ -1762,8 +1769,8 @@ class CompressedIndex:
         return hits.join(hl, "doc_id", "left").select("doc_id", "score", "snippet")
 
     #: the posting columns the constant-score tails read: ``_doc_page``
-    #: decodes only ``docs_enc``
-    _DOC_COLS = ("term", "docs_enc")
+    #: decodes only the doc ids
+    _DOC_COLS = ("term", "n_docs", "docs_enc")
 
     def _constant_score_docs(
         self, k: int, est: int | None, offset: int = 0, *,
@@ -1781,7 +1788,7 @@ class CompressedIndex:
         n = k + offset
         partial = self._dispatch(
             [(self, _Seek(terms, pfx))], self._DOC_COLS,
-            lambda bl, attrs=None, cache=None: _doc_page(bl["docs_enc"], 0, n),
+            lambda bl, attrs=None, cache=None: _doc_page(bl, n),
             est, local=local,
         )
         if local:  # one whole-index page, already doc_id ascending
@@ -2030,13 +2037,11 @@ class CompressedIndex:
         executor tasks (``_constant_score_docs``). Constant-score 1.0,
         deterministic doc_id order;
         ``offset`` pages within it (the single-token type-ahead routes
-        thread theirs through here)."""
-        # the resident dictionary is a hash map: the estimate walks it,
-        # lazily, and stops once the Σ df passes the one-task limit
-        # (a full walk of the 52k-term bench vocabulary is ~2 ms)
-        est = self._df_sum(
-            t for t in self._df_local or () if t.startswith(prefix)
-        )
+        thread theirs through here). The decode estimate is the range's
+        Σ df in the resident dictionary."""
+        est = None
+        if self._dict is not None:
+            est = int(self._dict.df[slice(*self._dict.range(prefix))].sum())
         return self._constant_score_docs(k, est, offset, pfx=prefix)
 
     def pinned(self, ids: list[int], text: str, k: int = 10) -> DataFrame:
@@ -2098,26 +2103,24 @@ class CompressedIndex:
         self, term: str, k: int = 10, max_edits: int = 1, prefix_len: int = 0,
         max_expansions: int = 50,
     ) -> pd.DataFrame:
-        """``fuzzy_term_search`` on the coordinator: the expansion walks
-        the RESIDENT term dictionary (length band + early-exit bounded
-        Levenshtein, ``_lev_within``), then the seek; no Spark job."""
+        """``fuzzy_term_search`` with its constant-score tail on the
+        coordinator: the expansion runs where the dictionary lives
+        (``_expand``), then the seek; no Spark job on a resident
+        dictionary."""
         return self._fuzzy(term, k, max_edits, prefix_len, max_expansions, True)
 
     def wildcard_term_search_local(
         self, pattern: str, k: int = 10, max_expansions: int = 50
     ) -> pd.DataFrame:
-        """``wildcard_term_search`` on the coordinator: CPython sre
-        evaluates the same anchored regex (``.*``/``.``/escaped
-        literals read alike in Java regex) over the resident
-        dictionary; no Spark job."""
+        """``wildcard_term_search`` with its tail on the coordinator (see
+        ``fuzzy_term_search_local``)."""
         return self._wildcard(pattern, k, max_expansions, True)
 
     def regexp_term_search_local(
         self, regex: str, k: int = 10, max_expansions: int = 50
     ) -> pd.DataFrame:
-        """``regexp_term_search`` on the coordinator: CPython sre reads
-        the engine's Java∩RE2 pattern subset alike, over the resident
-        dictionary; no Spark job."""
+        """``regexp_term_search`` with its tail on the coordinator (see
+        ``fuzzy_term_search_local``)."""
         return self._regexp(regex, k, max_expansions, True)
 
     def composite_agg_local(
@@ -2138,10 +2141,11 @@ class CompressedIndex:
         return self._composite(text, facet_col, size, after, local=True)
 
     def _cap_expansion(self, vocab: DataFrame, max_expansions: int) -> list[str]:
-        """ES ``max_expansions`` contract (default 50 there and here):
-        keep the best ``max_expansions`` matched dictionary terms by df
-        (desc; term asc tiebreak — deterministic), silently dropping the
-        tail like ES. The cut is an ``orderBy().limit()`` —
+        """ES ``max_expansions`` contract (default 50 there and here) on
+        a non-resident dictionary: keep the best ``max_expansions``
+        matched terms of the Catalyst-filtered term_stats scan ``vocab``
+        by df (desc; term asc tiebreak — deterministic), silently
+        dropping the tail like ES. The cut is an ``orderBy().limit()`` —
         TakeOrderedAndProject, each task keeps only ``max_expansions``
         candidates — so the driver NEVER materializes O(vocab) terms:
         a leading wildcard or hot fuzzy stem over a billion-term code
@@ -2155,27 +2159,32 @@ class CompressedIndex:
         )
         return [r["term"] for r in rows]
 
-    def _expand(self, k: int, max_expansions: int, *, match=None, vocab=None):
-        """A term-expansion query on the site its predicate is rendered
-        for. ``match`` (a Python predicate over a term) walks the
-        RESIDENT term dictionary on the coordinator, and the tail
-        (``_constant_score_docs``) runs on the driver site; ``vocab`` (a
-        Catalyst-filtered term_stats (term, df) scan) runs distributed,
-        and the tail on the cluster. Both keep the best
-        ``max_expansions`` terms by (-df, term), so the two sites expand
-        term-for-term alike (``_cap_expansion``)."""
+    def _expand(self, k, max_expansions, local, pfx="", fuzzy=None, rx=None):
+        """A term-expansion query (prefix ``pfx``, then ``fuzzy`` = (term,
+        max_edits) or an anchored regex ``rx``, as ``_Dictionary.matching``
+        reads them). The expansion runs where the dictionary lives: on
+        the driver over the resident table (``matching``, then the
+        (-df, term) cut ``top``), else as a Catalyst term_stats scan cut
+        by ``_cap_expansion`` — both keep the same terms. ``local`` picks
+        only where the constant-score tail (``_constant_score_docs``)
+        runs."""
         if max_expansions <= 0:
             raise ValueError("max_expansions must be positive")
-        if match is not None:
-            cands = [t for t, _ in sorted(
-                ((t, d) for t, d in self._resident("coordinator expansion").items()
-                 if match(t)),
-                key=lambda td: (-td[1], td[0]),
-            )[:max_expansions]]
+        if self._dict is not None:
+            cands = self._dict.top(self._dict.matching(pfx, fuzzy, rx), max_expansions)
         else:
+            col, vocab = F.col("term"), self.term_stats.select("term", "df")
+            if pfx:
+                vocab = vocab.where(_prefix_range(col, pfx))
+            if fuzzy is not None:
+                q, e = fuzzy
+                vocab = vocab.where(F.length(col).between(len(q) - e, len(q) + e))
+                vocab = vocab.where(F.levenshtein(col, F.lit(q)) <= e)
+            if rx is not None:
+                vocab = vocab.where(col.rlike(rx))
             cands = self._cap_expansion(vocab, max_expansions)
         return self._constant_score_docs(
-            k, self._df_sum(cands), terms=cands, local=match is not None
+            k, self._df_sum(cands), terms=cands, local=local
         )
 
     def fuzzy_term_search(
@@ -2186,15 +2195,15 @@ class CompressedIndex:
         indexed term within ``max_edits`` Levenshtein edits of ``term``.
 
         Candidate expansion runs over the TERM DICTIONARY, not the
-        postings: Lucene walks an edit-distance automaton over its FST;
-        the Spark-first analog is a column-pruned scan of term_stats with
-        a codegen'd length band + F.levenshtein filter — O(vocab), which
-        is orders of magnitude below O(corpus), embarrassingly parallel,
-        and (like ES's ``prefix_length``) an optional common-prefix
-        constraint pushes StringStartsWith into the vocab scan. The
-        matched terms — capped at ``max_expansions`` best-by-df via a
-        distributed TakeOrderedAndProject (see ``_cap_expansion``) —
-        then seek their row groups in executor tasks.
+        postings (``_expand``): Lucene walks an edit-distance automaton
+        over its FST; here the resident term-sorted table is filtered
+        on the driver — the ``prefix_len`` common-prefix range (like
+        ES's ``prefix_length``), the length band, then one batched
+        Levenshtein DP over the band — and a dictionary too large to
+        hold is a Catalyst term_stats scan with the same prefix range,
+        band and F.levenshtein. The matched terms — capped at
+        ``max_expansions`` best-by-df — then seek their row groups in
+        executor tasks: one Spark job on a resident dictionary.
 
         Constant score 1.0 with deterministic doc_id order — the same
         contract as ``term_prefix_search`` (ES scores fuzzy matches with
@@ -2207,25 +2216,13 @@ class CompressedIndex:
 
     def _fuzzy(self, term, k, max_edits, prefix_len, max_expansions, local):
         """``fuzzy_term_search`` and its coordinator twin: one analysis,
-        the expansion rendered for the chosen site (``_expand``)."""
+        then ``_expand``."""
         q = self._analyze(term)
         if len(q) != 1:
             raise ValueError("fuzzy_term_search takes exactly one analyzed term")
-        qt = q[0]
-        pfx = qt[:prefix_len]
-        if local:
-            return self._expand(k, max_expansions, match=lambda t: (
-                (not prefix_len or t.startswith(pfx))
-                and abs(len(t) - len(qt)) <= max_edits
-                and _lev_within(t, qt, max_edits)
-            ))
-        vocab = self.term_stats.select("term", "df")
-        if prefix_len > 0:
-            vocab = vocab.where(F.col("term").startswith(pfx))
-        vocab = vocab.where(
-            F.length("term").between(len(qt) - max_edits, len(qt) + max_edits)
-        ).where(F.levenshtein(F.col("term"), F.lit(qt)) <= max_edits)
-        return self._expand(k, max_expansions, vocab=vocab)
+        return self._expand(
+            k, max_expansions, local, q[0][:prefix_len], fuzzy=(q[0], max_edits)
+        )
 
     def wildcard_term_search(
         self, pattern: str, k: int = 10, max_expansions: int = 50
@@ -2236,33 +2233,28 @@ class CompressedIndex:
 
         Same architecture as ``fuzzy_term_search``: expansion runs over
         the TERM DICTIONARY (O(vocab), never O(corpus)) — the literal
-        prefix before the first wildcard pushes a [prefix, successor)
-        range into the vocab Parquet scan (so ``sp*k`` prunes row groups
-        like a prefix query; a leading wildcard degrades to a full vocab
-        scan, exactly ES's documented wildcard hazard — the scan stays
-        distributed and the driver holds at most ``max_expansions``
-        survivors via ``_cap_expansion``), the survivors are matched
-        with one codegen'd ``rlike`` on an anchored regex, and the
-        matched terms' row groups are sought in executor tasks.
-        Constant score 1.0, deterministic doc_id order (same contract and
-        oracle shape as prefix/fuzzy; ES wildcard is constant-score too).
+        prefix before the first wildcard is a [prefix, successor) range
+        of the resident table (or pushed into the term_stats Parquet
+        scan), so ``sp*k`` reads only that range like a prefix query; a
+        leading wildcard reads the whole dictionary, exactly ES's
+        documented wildcard hazard, and the driver keeps at most
+        ``max_expansions`` survivors. The range is matched against the
+        anchored regex (RE2 on the resident table, ``rlike`` on the
+        scan) and the matched terms' row groups are sought in executor
+        tasks. Constant score 1.0, deterministic doc_id order (same
+        contract and oracle shape as prefix/fuzzy; ES wildcard is
+        constant-score too).
         """
         return self._wildcard(pattern, k, max_expansions, False)
 
     def _wildcard(self, pattern, k, max_expansions, local):
         """``wildcard_term_search`` and its coordinator twin: one
-        validation and regex translation, rendered per site."""
+        validation and regex translation, then ``_expand``."""
         if not pattern:
             raise ValueError("wildcard_term_search needs a non-empty pattern")
-        rx = _wildcard_regex(pattern)
-        if local:
-            return self._expand(k, max_expansions, match=re.compile(rx).match)
         lit_prefix = re.match(r"[^*?]*", pattern).group().lower()
-        vocab = self.term_stats.select("term", "df")
-        if lit_prefix:
-            vocab = vocab.where(_prefix_range(F.col("term"), lit_prefix))
         return self._expand(
-            k, max_expansions, vocab=vocab.where(F.col("term").rlike(rx))
+            k, max_expansions, local, lit_prefix, rx=_wildcard_regex(pattern)
         )
 
     def regexp_term_search(
@@ -2270,27 +2262,23 @@ class CompressedIndex:
     ) -> DataFrame:
         """ES ``regexp`` query: docs containing ≥1 indexed term whose
         ENTIRE text matches ``regex`` (ES anchors implicitly; so does
-        this). Dictionary-expansion architecture as above — one rlike
-        over the vocab scan, ``max_expansions``-capped best-by-df
-        (``_cap_expansion``), then the seek of those terms. Patterns
-        must stay in the Java-regex ∩ RE2 common subset (char classes,
-        alternation, quantifiers — no backrefs) so the DuckDB twin
-        (regexp_full_match) is exact; documented engine contract, same
+        this). Dictionary-expansion architecture as above — the anchored
+        pattern over the whole dictionary (RE2 on the resident table,
+        ``rlike`` on the term_stats scan), ``max_expansions``-capped
+        best-by-df, then the seek of those terms. Patterns must stay in
+        the Java-regex ∩ RE2 common subset (char classes, alternation,
+        quantifiers — no backrefs) so both renderings and the DuckDB
+        twin (regexp_full_match) agree; documented engine contract, same
         restriction ES's RE2-like Lucene syntax imposes in practice.
         Constant score 1.0, deterministic doc_id order."""
         return self._regexp(regex, k, max_expansions, False)
 
     def _regexp(self, regex, k, max_expansions, local):
         """``regexp_term_search`` and its coordinator twin: one
-        validation and anchoring, rendered per site."""
+        validation and anchoring, then ``_expand``."""
         if not regex:
             raise ValueError("regexp_term_search needs a non-empty regex")
-        rx = f"^(?:{regex})$"
-        if local:
-            return self._expand(k, max_expansions, match=re.compile(rx).match)
-        return self._expand(k, max_expansions, vocab=self.term_stats.select(
-            "term", "df"
-        ).where(F.col("term").rlike(rx)))
+        return self._expand(k, max_expansions, local, rx=f"^(?:{regex})$")
 
     _STATS_SCHEMA = (
         "cnt long, min_val double, max_val double, sum_val double, avg_val double"

@@ -156,8 +156,12 @@ def _small_arrow_batches(spark: SparkSession, rows: int = 512):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
 
 
+#: scan-split size for reads of the staged postings (``_staged_read_splits``)
+_STAGED_SPLIT_BYTES = 8 << 20
+
+
 @contextmanager
-def _staged_read_splits(spark: SparkSession, split_bytes: int | None = None):
+def _staged_read_splits(spark: SparkSession):
     """Bound scan-split size for reads of the staged postings.
 
     Staged posting rows decompress ~5-8× from snappy parquet to unsafe
@@ -168,17 +172,15 @@ def _staged_read_splits(spark: SparkSession, split_bytes: int | None = None):
     ragged wave). Small splits bound per-task decompressed volume
     REGARDLESS of corpus size — the bound scales with data, not with the
     cluster, and the extra task-launch overhead is amortized by worker
-    reuse. The shipped default is 8 MB (LC_STAGED_SPLIT_MB below; ~50 MB
+    reuse. The split is 8 MB (``_STAGED_SPLIT_BYTES``; ~50 MB
     decompressed per task — the setting the 1.6M-doc zero-spill result
     was measured at). Scan splits are decided at job-execution time from
     the live session conf, so the scope must cover the ACTIONS, not just
     the read() call.
     """
-    if split_bytes is None:
-        split_bytes = int(os.environ.get("LC_STAGED_SPLIT_MB", "8")) << 20
     key = "spark.sql.files.maxPartitionBytes"
     prev = spark.conf.get(key, str(128 << 20))
-    spark.conf.set(key, str(split_bytes))
+    spark.conf.set(key, str(_STAGED_SPLIT_BYTES))
     try:
         yield
     finally:

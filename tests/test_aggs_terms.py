@@ -77,11 +77,13 @@ def test_regexp_matches_reference(corpus, wand):
 
 def test_expansion_cap_bounds_driver_and_keeps_best_df(corpus, wand):
     """ES max_expansions on a leading-* pattern matching the WHOLE
-    vocabulary: the driver materializes at most max_expansions terms
-    (best-N by df desc, term asc — a distributed TakeOrderedAndProject),
-    never O(vocab); the result is exactly the docs containing ≥1 of that
-    capped set. A 10^12-file code corpus has a vocab in the billions
-    (the uid tail), so an uncapped collect here is a driver OOM."""
+    vocabulary: the expansion keeps the best max_expansions terms by
+    (df desc, term asc). ``_cap_expansion``, the cut of a dictionary too
+    large to hold (a distributed TakeOrderedAndProject — a 10^12-file
+    code corpus has a vocab in the billions, the uid tail, so an
+    uncapped collect is a driver OOM), collects exactly that set; this
+    resident index cuts the same set on the driver, and the result is
+    exactly the docs containing ≥1 of it."""
     n = 5
     exp = [
         r["term"] for r in wand.term_stats

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import functools
 
+import numpy as np
 import pytest
 
 from librecatastro_spark.index.builder import build_index
@@ -64,10 +65,12 @@ def test_fastpath_rank_identical(index, qi):
 
 
 def test_fuzzy_local_rank_identical(index):
-    """Coordinator fuzzy twin (r4): resident-dictionary expansion +
-    term-dictionary-seek postings read must equal the distributed
-    vocab-scan path exactly — including the max_expansions best-by-df
-    cap order, and under prefix_len pinning."""
+    """Coordinator fuzzy twin (r4): on a resident dictionary both sites
+    expand on the driver, so this compares the two constant-score tails
+    (the coordinator seek against the executor tasks) over one
+    expansion — including the max_expansions best-by-df cap, and under
+    prefix_len pinning. The expansion itself is checked against the scan
+    oracle and the Catalyst rendering in test_dictionary.py."""
     for kw in (
         dict(max_edits=1),
         dict(max_edits=2),
@@ -86,10 +89,10 @@ def test_fuzzy_local_rank_identical(index):
 
 
 def test_wildcard_regexp_local_rank_identical(index):
-    """Coordinator twins for the other two expansion queries (r4):
-    resident-dictionary walk + term seek equals the distributed
-    vocab-scan paths exactly, incl. the max_expansions cap, a leading
-    wildcard, and the '*' full-vocab shape."""
+    """Coordinator twins for the other two expansion queries (r4): the
+    two tails over one driver-side expansion (see
+    test_fuzzy_local_rank_identical), incl. the max_expansions cap, a
+    leading wildcard, and the '*' full-vocab shape."""
     for pat, kw in (("quer?", {}), ("*ery", {}), ("qu*", {}),
                     ("*", dict(max_expansions=5))):
         d = [(r["doc_id"], r["score"]) for r in
@@ -129,13 +132,18 @@ def test_fastpath_nonempty(index):
 
 
 def test_fastpath_threading_invariant(index, monkeypatch):
-    """Shard scoring runs on a thread pool (r3); the pool size must never
-    change results — 1 worker ≡ 8 workers on every golden shape."""
+    """The coordinator seek reads on a thread pool (r3); the pool size
+    must never change results — 1 worker ≡ 8 workers on every golden
+    shape."""
     results = {}
-    for n in ("1", "8"):
-        monkeypatch.setenv("LC_FASTPATH_THREADS", n)
+    for n in (1, 8):
+        monkeypatch.setattr(CompressedIndex, "_FASTPATH_THREADS", n)
+        monkeypatch.setattr(index, "_pool", None, raising=False)
+        index.refresh()  # a cold cache: the reads run on the pool
         results[n] = [_local_rows(index, q) for q in GOLDEN]
-    assert results["1"] == results["8"]
+        assert index._pool._max_workers == n
+        index._pool.shutdown()
+    assert results[1] == results[8]
 
 
 def test_fastpath_cache_invariant(index, monkeypatch):
@@ -217,7 +225,8 @@ def test_make_decoder_equals_uncached_decode(spark, documents, tmp_path, monkeyp
             (a.dtype, a.tobytes()) for a in want
         ]
 
-    hot = sorted(index._df_local, key=index._df_local.get)[-3:]
+    d = index._dict
+    hot = d.term[np.argsort(d.df, kind="stable")][-3:].tolist()
     for mb in ("0", None):
         if mb is None:
             monkeypatch.delenv("LC_POSTING_CACHE_MB", raising=False)

@@ -388,14 +388,13 @@ def test_phrase_local_volume_routing(pidx, monkeypatch):
 def test_non_resident_dictionary_same_rows(spark, pidx, monkeypatch):
     """An index whose term dictionary is not resident (term_stats above
     ``_LOCAL_TERMSTATS_BYTES``) answers every scored shape, both phrase
-    prefix twins and the match-set stages (no estimate: one task per
-    shard) with the resident instance's rows — idfs, estimates and
-    expansions then come from Spark scans of term_stats — and the
-    coordinator fuzzy expansion, which needs the resident dictionary,
-    refuses."""
+    prefix twins, the match-set stages (no estimate: one task per
+    shard) and every expansion query on both sites with the resident
+    instance's rows — idfs, estimates and expansions then come from
+    Spark scans of term_stats."""
     monkeypatch.setattr(CompressedIndex, "_LOCAL_TERMSTATS_BYTES", 0)
     cold = CompressedIndex(spark, pidx.out_dir)
-    assert cold._df_local is None and pidx._df_local is not None
+    assert cold._dict is None and pidx._dict is not None
     try:
         for ix_rows, call, some in (
             (rows, lambda ix: ix.search("def return", k=15), True),
@@ -409,13 +408,14 @@ def test_non_resident_dictionary_same_rows(spark, pidx, monkeypatch):
             (lrows, lambda ix: ix.match_phrase_prefix_local("def re", k=15), True),
             (lrows, lambda ix: ix.match_phrase_prefix_local("re", k=15, offset=2), True),
             (rows, lambda ix: ix.fuzzy_term_search("retrn", k=50), True),
+            (lrows, lambda ix: ix.fuzzy_term_search_local("retrn", k=5), True),
+            (lrows, lambda ix: ix.wildcard_term_search_local("re*", k=20), True),
+            (lrows, lambda ix: ix.regexp_term_search_local("(def|ret)[a-z]*", k=20), True),
             (tuples, lambda ix: ix.facet_counts("def return", "lang"), True),
             (rows, lambda ix: ix.function_score("def return", "doc_id", k=15), True),
         ):
             want = ix_rows(call(pidx))
             assert bool(want) == some
             assert ix_rows(call(cold)) == want
-        with pytest.raises(ValueError, match="resident term dictionary"):
-            cold.fuzzy_term_search_local("retrn", k=5)
     finally:
         cold.term_stats.unpersist()

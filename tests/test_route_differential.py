@@ -38,7 +38,7 @@ def draw(rng: random.Random, ix: CompressedIndex, live: list) -> dict:
     """One seeded query per shape: terms from the resident vocabulary
     (df >= 2, so most queries match), phrases cut from a live document's
     analyzed token sequence, filter values from the live attrs."""
-    vocab = sorted(t for t, df in ix._df_local.items() if df >= 2)
+    vocab = ix._dict.term[ix._dict.df >= 2].tolist()
     doc = rng.choice([r for r in live if len(ix._analyze(r["content"])) >= 4])
     toks = ix._analyze(doc["content"])
     i = rng.randrange(len(toks) - 3)

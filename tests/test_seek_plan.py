@@ -98,7 +98,7 @@ def test_exact_term_plan_equals_footprint(small_rg_index):
     ix = small_rg_index
     fp = Footprint(ix.out_dir)
     assert fp.n_row_groups > 4 * len(ix._files()[0])  # many groups per file
-    vocab = sorted(ix._df_local)
+    vocab = ix._dict.term.tolist()
     for terms in (["def", "return"], ["import"], vocab[::97], ["zzznotindexed"],
                   vocab[:3] + vocab[-3:]):
         plan = ix._seek_plan(terms)
@@ -117,7 +117,7 @@ def test_prefix_plan_loses_no_posting(spark, small_rg_index, monkeypatch, cold):
     if cold:
         monkeypatch.setattr(CompressedIndex, "_LOCAL_TERMSTATS_BYTES", 0)
         ix = CompressedIndex(spark, small_rg_index.out_dir)
-        assert ix._df_local is None
+        assert ix._dict is None
     pfx, path, i = boundary_prefix(ix)
     plan = ix._seek_plan([], pfx)
     rgs = dict(itertools.chain.from_iterable(plan.values()))[path]
@@ -150,7 +150,8 @@ def test_boundary_prefix_rows_same_on_every_route(small_rg_index, corpus):
 
 def test_constant_score_local_reads_doc_columns_only(small_rg_index, monkeypatch):
     """The coordinator expansion tail and the single-token phrase prefix
-    seek ("term", "docs_enc") only — the columns ``_doc_page`` decodes —
+    seek ("term", "n_docs", "docs_enc") only — the columns ``_doc_page``
+    decodes —
     and answer as the distributed twins do; a repeat reads nothing (the
     column-chunk cache holds the chunks)."""
     ix = small_rg_index
@@ -173,7 +174,7 @@ def test_constant_score_local_reads_doc_columns_only(small_rg_index, monkeypatch
         ix.refresh()  # a cold cache: the read shows its columns
         seen.clear()
         got = call()
-        assert seen and set(seen) == {("term", "docs_enc")}, name
+        assert seen and set(seen) == {("term", "n_docs", "docs_enc")}, name
         assert list(zip(got["doc_id"], got["score"])) == want[name] and want[name]
         seen.clear()
         again = call()
@@ -184,7 +185,7 @@ def test_constant_score_local_reads_doc_columns_only(small_rg_index, monkeypatch
 def test_distributed_sites_read_only_kernel_columns(small_rg_index, monkeypatch):
     """The executor seek reads the kernel's columns: no ``pos_enc`` for a
     search on a positions index, the position columns for a phrase and
-    ``docs_enc`` alone for an expansion tail."""
+    the doc-id columns (``n_docs``, ``docs_enc``) for an expansion tail."""
     ix = small_rg_index
     cols = []
     dispatch = ix._dispatch
@@ -197,7 +198,7 @@ def test_distributed_sites_read_only_kernel_columns(small_rg_index, monkeypatch)
     ix.search("def return", k=5).collect()
     ix.match_phrase("def return", k=5).collect()
     ix.term_prefix_search("re", k=5).collect()
-    assert cols == [ix._SEEK_COLS, ix._POS_COLS, ("term", "docs_enc")]
+    assert cols == [ix._SEEK_COLS, ix._POS_COLS, ("term", "n_docs", "docs_enc")]
     assert "pos_enc" not in cols[0] and "pos_enc" in cols[1]
 
 

@@ -393,11 +393,13 @@ def main() -> int:
     s, p = audit(
         "fuzzy_term_search expansion plan (r3)",
         df, {**EXECUTOR_PLAN, "cartesian": False},
-        "Dictionary expansion (vocab scan + codegen Levenshtein) runs "
-        "eagerly and is vocab-bounded; the matched terms then go to the "
-        "executor seek, which reads only their row groups (term-sorted "
-        "files, footer-stat pruning) and only term + docs_enc, exactly "
-        "like an exact term query. Merge: doc_id ASC TakeOrderedAndProject.",
+        "The expansion runs where the dictionary lives: on the driver, "
+        "over the resident term-sorted table (prefix range, length band, "
+        "one batched Levenshtein DP), with no Spark job; the matched terms "
+        "then go to the executor seek, which reads only their row groups "
+        "(term-sorted files, footer-stat pruning) and only the doc-id "
+        "columns (term, n_docs, docs_enc), exactly like an exact term "
+        "query. Merge: doc_id ASC TakeOrderedAndProject.",
         seek=seek,
     )
     sections.append(s); problems += p
