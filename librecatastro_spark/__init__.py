@@ -6,8 +6,8 @@ The reference delegates all indexing/querying to Elasticsearch 6.3.2
 (reference: src/utils/elasticsearch_utils.py:20-83). This package rebuilds
 that capability natively on Spark:
 
-- ``analyzer``      — ES-standard-analyzer-like tokenization (Catalyst
-                      expressions; Arrow pandas_udf variant for custom chains)
+- ``analyzer``      — ES-standard-analyzer-like tokenization: one
+                      ``Analyzer``, rendered in Python, Catalyst and Arrow
 - ``corpus``        — deterministic synthetic source-code corpus
                       (input_hint schema) + parallelism-independent doc_id
 - ``stats``         — doc/term statistics (N, avgdl, dl, df, cf) in one

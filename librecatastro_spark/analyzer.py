@@ -10,33 +10,28 @@ uses exactly this definition, so results are rank-identical across paths.
 Spec (applies to code-like ASCII corpora per BASELINE.json input_hint):
     lowercase → split on ``[^a-z0-9_]+`` → drop empty tokens
 
-Two equivalent implementations of the default chain, equality-tested in
-tests/test_analyzer.py (the build's Arrow pass, ``stats.term_freqs_arrow``,
-and the DuckDB oracle's ``duckdb_tokens_sql`` render it too):
-  * ``tokenize_expr``  — pure Catalyst (JVM, whole-stage codegen): the
-    default hot path. Tokenization stays out of Python entirely.
-  * ``analyze_text``   — driver-side Python for query strings (tiny input).
+``Analyzer`` is the one definition of the chain, and each engine's
+rendering is one of its methods (property-tested to agree in
+tests/test_analyzer_property.py). Module ``tokenize_expr`` /
+``analyze_text`` are the default analyzer's; ``duckdb_tokens_sql`` is
+the DuckDB oracle's rendering of the default chain.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterable
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # The single source of truth for token boundaries.
 TOKEN_SPLIT_RE = "[^a-z0-9_]+"
-_PY_SPLIT = re.compile(TOKEN_SPLIT_RE)
 # complement form: a token IS a run of these chars (the phrase regexes
 # match token runs with it)
 TOKEN_RE = "[a-z0-9_]+"
-
-
-def tokenize_expr(col: Column | str) -> Column:
-    """Catalyst tokenizer: array<string> of analyzed terms (JVM-side)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), TOKEN_SPLIT_RE), lambda x: x != F.lit(""))
 
 
 def check_synonyms(synonyms: dict[str, str] | None) -> None:
@@ -55,73 +50,98 @@ def check_synonyms(synonyms: dict[str, str] | None) -> None:
             )
 
 
+def _re2_pattern(pattern: str) -> str:
+    r"""``pattern`` for RE2 with its Python (``re.ASCII``) and Java
+    meaning: RE2's ``\s`` alone lacks ``\x0b``, so ``\s`` becomes
+    ``[\s\x0b]`` (``\s\x0b`` in a class) and ``\S`` ``[^\s\x0b]``; ``\S``
+    in a class has no such spelling (ValueError). Anything else is
+    copied, so the default pattern is unchanged."""
+    in_class = False
+
+    def sub(m: re.Match) -> str:
+        nonlocal in_class
+        tok = m.group()
+        if tok == r"\s":
+            return r"\s\x0b" if in_class else r"[\s\x0b]"
+        if tok == r"\S":
+            if in_class:
+                raise ValueError(f"split pattern {pattern!r}: \\S in a class")
+            return r"[^\s\x0b]"
+        if tok[0] != "\\":  # "[", "[^", "[]" or "[^]" opens; "]" closes
+            in_class = tok[0] == "[" and (not in_class or tok[-1] != "]")
+        return tok
+
+    return re.sub(r"\\.|\[\^?\]?|\]", sub, pattern)
+
+
 class Analyzer:
-    """A parameterized tokenization spec — the per-field analyzer hook ES
-    mappings give (``analyzer: …`` per field). Shape is FROZEN to the
-    engine's one chain (lowercase → regex split → drop empties) so every
-    path can evaluate it identically (Python re, Catalyst split, Arrow
-    split_pattern_regex all take the same RE2-compatible pattern); only
-    the boundary pattern varies. ``Analyzer()`` IS the default code
-    analyzer — ``analyze("x") == analyze_text("x")`` by construction.
+    r"""The analysis chain, lowercase → regex split → drop empties →
+    synonyms → stopwords — the ES per-field analyzer hook, and the one
+    definition every index path takes. Its renderings: ``analyze``
+    (Python ``re``, query analysis), ``tokenize_expr`` (Catalyst) and
+    ``tokenize_arrow`` (pyarrow RE2: the index build and simhash).
 
-    An index records its pattern in meta.json (``analyzer_re``), and the
-    query side analyzes with the INDEX's analyzer (ES match semantics) —
-    so a per-field custom analyzer can never silently mismatch its own
-    postings. Custom split patterns are out of oracle scope (the DuckDB
-    twins pin the default chain); MultiFieldIndex threads one per field.
+    ``split_re`` is kept verbatim (meta.json records it; None is
+    ``TOKEN_SPLIT_RE``) and compiled once per engine, to mean the same
+    on ASCII text: Python with ``re.ASCII`` (Unicode ``\s`` also splits
+    ``\x1c``-``\x1f``), Java as is, RE2 as ``_re2_pattern``. Outside
+    ASCII they may differ (Arrow lowercases with simple case mapping).
+    An index records its analyzer in meta.json and queries analyze with
+    it (``IndexMeta.analyzer``, ES match semantics), so a custom
+    analyzer never mismatches its own postings. Custom patterns are out
+    of oracle scope (the DuckDB twins pin the default chain).
 
-    ``stopwords`` is the ES stop token filter: matching tokens are
-    dropped AFTER segmentation (recorded in meta like ``analyzer_re``
-    and honored by build, append and query analysis; positions index the
-    FILTERED sequence, so phrase adjacency means "adjacent after
-    stopword removal" — the frozen, oracle-expressible contract: the
-    DuckDB twin is a NOT IN filter in the token CTE).
-
-    ``synonyms`` is the ES synonym token filter in its replace form
-    (``src => dst``, one token to one token): each source token maps to
-    its canonical target. Frozen chain order: lowercase → split → drop
-    empties → **synonyms** → **stopwords** (so a synonym mapping ONTO a
-    stopword is removed, and the stop list is checked against canonical
-    forms). The 1:1 mapping preserves token count and position, so dl,
-    positions and phrase adjacency are unaffected by which surface form
-    a document used — the DuckDB twin is a CASE WHEN in the token CTE."""
+    ``stopwords`` is the ES stop token filter, ``synonyms`` the ES
+    synonym filter in replace form (``src => dst``, one token to one,
+    applied BEFORE the stop filter, so a synonym onto a stopword is
+    dropped; chains and cycles are refused by ``check_synonyms``).
+    Positions index the FILTERED sequence (phrase adjacency is "adjacent
+    after stopword removal"), and the 1:1 map keeps token count and
+    position. The DuckDB twins: a NOT IN filter and a CASE WHEN in the
+    token CTE."""
 
     def __init__(
         self,
         split_re: str | None = None,
-        stopwords: frozenset[str] | None = None,
+        stopwords: Iterable[str] | None = None,
         synonyms: dict[str, str] | None = None,
     ):
-        self.split_re = split_re or TOKEN_SPLIT_RE
-        self._rx = re.compile(self.split_re)
-        self.stopwords = frozenset(stopwords) if stopwords else frozenset()
         check_synonyms(synonyms)
+        self.split_re = split_re
+        self.stopwords = frozenset(stopwords) if stopwords else frozenset()
         self.synonyms = dict(synonyms) if synonyms else {}
+        # the pattern once per engine: Java (Catalyst), Python, RE2 (Arrow)
+        self._java = split_re or TOKEN_SPLIT_RE
+        self._rx = re.compile(self._java, re.ASCII)
+        self._re2 = _re2_pattern(self._java)
+        self._syn_pairs = sorted(self.synonyms.items())
+        self._sw_arr = pa.array(sorted(self.stopwords), type=pa.string())
 
-    def analyze(self, text: str) -> list[str]:
+    def analyze(self, text: str | None) -> list[str]:
+        """Python rendering: one string's tokens (query text, analyzed
+        like the field — ES `match` semantics, reference:
+        src/librecatastro/domain/cadaster_entry/cadaster_entry.py:66)."""
         if text is None:
             return []
-        syn = self.synonyms
-        out = []
-        for t in self._rx.split(text.lower()):
-            if not t:
-                continue
-            t = syn.get(t, t)
-            if t not in self.stopwords:
-                out.append(t)
-        return out
+        toks = [t for t in self._rx.split(text.lower()) if t]
+        if self.synonyms:
+            toks = [self.synonyms.get(t, t) for t in toks]
+        if self.stopwords:
+            toks = [t for t in toks if t not in self.stopwords]
+        return toks
 
     def tokenize_expr(self, col: Column | str) -> Column:
+        """Catalyst rendering: array<string> of analyzed terms (JVM-side,
+        whole-stage codegen)."""
         c = F.col(col) if isinstance(col, str) else col
         toks = F.filter(
-            F.split(F.lower(c), self.split_re), lambda x: x != F.lit("")
+            F.split(F.lower(c), self._java), lambda x: x != F.lit("")
         )
         if self.synonyms:
             # element_at on a map literal is NULL for non-keys; coalesce
             # keeps unmapped tokens as themselves
             m = F.create_map(
-                *[F.lit(x) for k in sorted(self.synonyms)
-                  for x in (k, self.synonyms[k])]
+                *[F.lit(x) for pair in self._syn_pairs for x in pair]
             )
             toks = F.transform(
                 toks, lambda x: F.coalesce(F.element_at(m, x), x)
@@ -131,15 +151,39 @@ class Analyzer:
             toks = F.filter(toks, lambda x: ~F.array_contains(sw, x))
         return toks
 
+    def tokenize_arrow(self, text: pa.Array) -> tuple[pa.Array, pa.Array]:
+        """Arrow rendering: (tokens, parent) of a string array — every
+        row's tokens flattened in row order, and each token's row; a
+        null row analyzes like "". One pyarrow call per step, and a step
+        that matches nothing copies nothing: the build's workers are
+        bound by allocation (stats.term_freqs_arrow)."""
+        if text.null_count:
+            text = pc.coalesce(text, pa.scalar("", pa.string()))
+        toks = pc.split_pattern_regex(pc.utf8_lower(text), self._re2)
+        parent = pc.list_parent_indices(toks)
+        flat = pc.list_flatten(toks)
+        mask = pc.not_equal(flat, "")
+        if mask.false_count:  # empties only at non-token row edges
+            flat = flat.filter(mask)
+            parent = parent.filter(mask)
+        # pair by pair: right only because check_synonyms refuses chains
+        for src, dst in self._syn_pairs:
+            hit = pc.equal(flat, src)
+            if hit.true_count:
+                flat = pc.if_else(hit, pa.scalar(dst, pa.string()), flat)
+        if self.stopwords:
+            keep = pc.invert(pc.is_in(flat, value_set=self._sw_arr))
+            if keep.false_count:
+                flat = flat.filter(keep)
+                parent = parent.filter(keep)
+        return flat, parent
 
-def analyze_text(text: str) -> list[str]:
-    """Driver-side analysis for query strings (reference analyzes the query
-    text with the same analyzer as the field — ES `match` semantics,
-    reference: src/librecatastro/domain/cadaster_entry/cadaster_entry.py:66).
-    """
-    if text is None:
-        return []
-    return [t for t in _PY_SPLIT.split(text.lower()) if t]
+
+_DEFAULT = Analyzer()
+# the default chain's Catalyst and Python renderings (ops/, exact.py,
+# the oracle twins and tools import these names)
+tokenize_expr = _DEFAULT.tokenize_expr
+analyze_text = _DEFAULT.analyze
 
 
 def duckdb_tokens_sql(col: str) -> str:

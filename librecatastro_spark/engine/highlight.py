@@ -46,22 +46,20 @@ def highlight_snippets(
     frag_tokens: int = 5,
     pre: str = "<em>",
     post: str = "</em>",
-    split_re: str | None = None,
-    stopwords: frozenset[str] | None = None,
-    synonyms: dict[str, str] | None = None,
+    analyzer: Analyzer | None = None,
 ) -> DataFrame:
     """(doc_id, snippet) for every doc containing ≥1 of ``terms``.
 
     terms must already be analyzed (lowercase analyzer tokens);
-    ``split_re``/``stopwords`` select the index's analyzer
-    (meta.analyzer_re / meta.stopwords) so the fragment tokenization
-    matches the index's own — ES highlights on the analyzed field with
-    the field's analyzer (stopwords absent from fragments, like an
-    ES-analyzed stopworded field).
+    ``analyzer`` is the index's (``IndexMeta.analyzer``; default
+    ``Analyzer()``), so the fragment tokenization matches the index's
+    own — ES highlights on the analyzed field with the field's analyzer
+    (stopwords absent from fragments, like an ES-analyzed stopworded
+    field).
 
-    ``synonyms`` (meta.synonyms) maps each fragment token to its
-    CANONICAL form before matching, and the snippet is built from those
-    analyzed tokens — so a document that wrote a surface form shows the
+    A synonym analyzer maps each fragment token to its CANONICAL form
+    before matching, and the snippet is built from those analyzed
+    tokens — so a document that wrote a surface form shows the
     canonical term in its snippet, where ES highlights the surface form
     the document used (documented divergence).
     """
@@ -73,10 +71,7 @@ def highlight_snippets(
     toks = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(
-            F.array(
-                Analyzer(split_re, stopwords, synonyms)
-                .tokenize_expr(text_col)
-            )
+            F.array((analyzer or Analyzer()).tokenize_expr(text_col))
         ).alias("_toks"),
     )
     # 2) first matched position (0-based): filter the index sequence, not

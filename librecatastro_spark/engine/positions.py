@@ -26,7 +26,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from ..bm25 import B, K1, ROUND_DECIMALS
+from ..bm25 import ROUND_DECIMALS, tf_weight_np
 from ..index.codec import decode_positions, decode_varbyte
 
 _RESULT_SCHEMA = "doc_id long, score double"
@@ -136,21 +136,16 @@ def _by_doc(ids, tfs, dls, pos):
     return ids[order], t, dls[order], pos[occ + np.arange(len(occ))]
 
 
-def _impact(tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
-    """Idf-independent BM25 factor per posting: score = idf * impact.
-    Factored out so the decoded-postings cache can precompute it once per
-    index generation and every scoring path multiplies by the SAME float
-    values — cached and uncached results stay bit-identical."""
-    return tfs * (K1 + 1.0) / (tfs + K1 * (1.0 - B + B * dls / avgdl))
-
-
 def _decode_impacts(rows: pd.DataFrame, avgdl: float):
     """(ids, impact) of block ``rows`` in posting order — the uncached
-    decode of the BM25 kernels (``_decode_term`` + ``_impact``). The
+    decode of the BM25 kernels (``_decode_term`` + the idf-independent
+    factor ``bm25.tf_weight_np``: score = idf * impact). The
     coordinator's decoded-postings cache (wand ``_make_decoder``) fills
     from it, so both return the same floats."""
     ids, tfs, dls, _ = _decode_term(rows, False)
-    return ids, _impact(tfs.astype(np.float64), dls.astype(np.float64), avgdl)
+    return ids, tf_weight_np(
+        tfs.astype(np.float64), dls.astype(np.float64), avgdl
+    )
 
 
 def _overlapping(rows: pd.DataFrame, cand: np.ndarray) -> pd.DataFrame:
@@ -288,7 +283,7 @@ def phrase_topk_fn(
     The complete terms decode intersection-aware (``_decode_complete``),
     then ``phrase_verify`` chains their positions. Scoring is BM25
     require_all over the distinct terms, accumulated in sorted-term order
-    with the same _impact factoring as every other path — bit-identical
+    with the same tf_weight_np factoring as every other path — bit-identical
     floats to ExactBM25.match_phrase (rank-identity-tested)."""
     distinct = sorted(set(seq))
 
@@ -314,7 +309,7 @@ def _score_verified(
 ) -> np.ndarray:
     """RAW BM25 require_all sums over ``distinct`` terms for the
     ``verified`` doc set, term-major accumulation in sorted-term order —
-    the same _impact factoring as every other path, so floats are
+    the same tf_weight_np factoring as every other path, so floats are
     bit-identical to ExactBM25's phrase scores (rank-identity-tested).
     Shared by the phrase and phrase-prefix positional kernels, which cut
     them with ``_topk``."""
@@ -323,7 +318,7 @@ def _score_verified(
         ids, tfs, dls, _ = decoded[t]
         m = np.isin(ids, verified)
         idx = np.searchsorted(verified, ids[m])
-        w = idfs[t] * _impact(
+        w = idfs[t] * tf_weight_np(
             tfs[m].astype(np.float64), dls[m].astype(np.float64), avgdl
         )
         acc += np.bincount(idx, weights=w, minlength=len(verified))

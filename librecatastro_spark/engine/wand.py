@@ -86,7 +86,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..analyzer import Analyzer, tokenize_expr
 from ..bm25 import ROUND_DECIMALS
 from ..index.builder import (
     load_attrs,
@@ -594,7 +593,7 @@ class _Dictionary:
 def _decoder(blocks: pd.DataFrame, cache, avgdl: float):
     """``decode(rows) -> (ids, impact)`` for a BM25 kernel over
     ``blocks``: the doc ids and the idf-independent BM25 impacts
-    (positions ``_impact``) in posting order. ``cache`` is the index the
+    (``bm25.tf_weight_np``) in posting order. ``cache`` is the index the
     driver site passes: its decoded-postings cache
     (``CompressedIndex._make_decoder``). Executor tasks pass none and
     decode uncached through positions ``_decode_impacts``, which the
@@ -853,6 +852,9 @@ class CompressedIndex:
     # — the ES analog: every shard keeps its Lucene term dictionary resident.
     # Above it, lookups fall back to a cached Spark scan.
     _LOCAL_TERMSTATS_BYTES = 256 * 1024 * 1024
+    #: byte budget of the coordinator cache (``_cache_put``); 0 caches
+    #: nothing
+    _POSTING_CACHE_BYTES = 512 << 20
 
     #: posting columns the per-shard kernels read: the BM25 scorer
     #: (``_shard_topk_fn``, also the score_queries and multi-field
@@ -866,19 +868,17 @@ class CompressedIndex:
         "first_doc_id", "last_doc_id", "pos_enc",
     )
 
-    def __init__(self, spark: SparkSession, out_dir: str, tune_for_queries: bool = True):
+    def __init__(self, spark: SparkSession, out_dir: str):
         self.spark = spark
         self.out_dir = out_dir
-        if tune_for_queries:
-            # AQE's per-shuffle re-optimization rounds cost ~2× scheduling
-            # latency on small interactive query jobs (measured ~950→520 ms
-            # at 30k docs) and buys nothing there — the query shuffle is a
-            # fixed n_shards-way partial top-k. The override can't be scoped
-            # per-query (execution of the returned DataFrame is lazy), so it
-            # is session-wide; build_index/append_batch protect themselves
-            # by forcing AQE on for their own duration, and
-            # tune_for_queries=False leaves the session untouched.
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        # AQE's per-shuffle re-optimization rounds cost ~2× scheduling
+        # latency on small interactive query jobs (measured ~950→520 ms
+        # at 30k docs) and buys nothing there — the query shuffle is a
+        # fixed n_shards-way partial top-k. The override can't be scoped
+        # per-query (execution of the returned DataFrame is lazy), so it
+        # is session-wide; build_index/append_batch protect themselves
+        # by forcing AQE on for their own duration.
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
         self.refresh()
 
     def refresh(self) -> None:
@@ -894,19 +894,17 @@ class CompressedIndex:
         It also drops the coordinator cache, whole: the decompressed
         posting column chunks (``_seek_blocks``) and the decoded
         postings (``_make_decoder``), one LRU under one
-        ``LC_POSTING_CACHE_MB`` budget. Nothing is cached at open; the
+        ``_POSTING_CACHE_BYTES`` budget. Nothing is cached at open; the
         cache fills as queries read."""
         spark, out_dir = self.spark, self.out_dir
         self.meta = read_meta(out_dir)
-        # query analysis uses the INDEX's analyzer (meta.analyzer_re, the
-        # ES per-field analyzer hook) — ES match semantics: the query text
-        # is analyzed with the field's analyzer, so a custom-analyzer
-        # index can never silently mismatch its own postings.
-        self._analyze = Analyzer(
-            getattr(self.meta, "analyzer_re", None),
-            stopwords=frozenset(getattr(self.meta, "stopwords", None) or ()),
-            synonyms=getattr(self.meta, "synonyms", None),
-        ).analyze
+        # query analysis, highlight and significant_terms use the INDEX's
+        # analyzer (the ES per-field analyzer hook) — ES match semantics:
+        # the query text is analyzed with the field's analyzer, so a
+        # custom-analyzer index can never silently mismatch its own
+        # postings. perfbench's tracer swaps ``_analyze``.
+        self._analyzer = self.meta.analyzer()
+        self._analyze = self._analyzer.analyze
         self.postings = load_postings(spark, out_dir)
         self.attrs = load_attrs(spark, out_dir)
         self.term_stats = load_term_stats(spark, out_dir)
@@ -1547,12 +1545,12 @@ class CompressedIndex:
     def _cache_put(self, key, value, nbytes: int, pinned=frozenset()) -> None:
         """Insert into the coordinator cache — one LRU by bytes holding
         both column chunks and decoded postings, ``_dec_cache_bytes``
-        against the ``LC_POSTING_CACHE_MB`` budget (default 512; 0 caches
-        nothing) — evicting least-recently-used entries not in
+        against the ``_POSTING_CACHE_BYTES`` budget (0 caches nothing) —
+        evicting least-recently-used entries not in
         ``pinned``. An entry that does not fit the budget even after
         every unpinned eviction is not cached (its caller still serves
         it), so the byte count never exceeds the budget."""
-        budget = int(os.environ.get("LC_POSTING_CACHE_MB", "512")) * (1 << 20)
+        budget = self._POSTING_CACHE_BYTES
         if not budget or nbytes > budget:
             return
         cache = self._dec_cache
@@ -1593,9 +1591,8 @@ class CompressedIndex:
         sub-ranges are disjoint and block doc ranges are sorted), and a
         query's (shard, term) groups are contiguous runs of its
         ``_ordered`` blocks (``_runs``). The entries share one LRU by
-        bytes and one LC_POSTING_CACHE_MB budget (default 512; 0 caches
-        nothing) with the seek's column chunks
-        (``_cache_put``); entries touched by the current query are pinned
+        bytes and one ``_POSTING_CACHE_BYTES`` budget with the seek's
+        column chunks (``_cache_put``); entries touched by the current query are pinned
         against its own eviction, and an entry that does not fit is
         served for this query but not cached. Only the driver site
         decodes through it (``_decoder``); executor tasks decode
@@ -1760,11 +1757,7 @@ class CompressedIndex:
         )
         hl = highlight_snippets(
             cand, spec.terms, id_col=source_id_col, text_col=source_text_col,
-            frag_tokens=frag_tokens,
-            split_re=getattr(self.meta, "analyzer_re", None),
-            stopwords=frozenset(getattr(self.meta, "stopwords", None) or ())
-            or None,
-            synonyms=getattr(self.meta, "synonyms", None),
+            frag_tokens=frag_tokens, analyzer=self._analyzer,
         )
         return hits.join(hl, "doc_id", "left").select("doc_id", "score", "snippet")
 
@@ -2755,9 +2748,10 @@ class CompressedIndex:
         """ES ``significant_terms`` aggregation: the terms most
         over-represented in the query's match set (foreground) relative
         to the whole index (background). Like ES, the stored source text
-        of the matching docs supplies the foreground counts (``source``
-        is the corpus table, the engine's _source analog — the same
-        contract as ``search_highlighted``); the background df comes
+        of the matching docs, analyzed with the index's analyzer,
+        supplies the foreground counts (``source`` is the corpus table,
+        the engine's _source analog — the same contract as
+        ``search_highlighted``); the background df comes
         from the index's term dictionary, never a corpus rescan.
 
         Score is the JLH heuristic ES defaults to, on exact counts:
@@ -2782,7 +2776,9 @@ class CompressedIndex:
             )
             .select(
                 F.explode(
-                    F.array_distinct(tokenize_expr(source_text_col))
+                    F.array_distinct(
+                        self._analyzer.tokenize_expr(source_text_col)
+                    )
                 ).alias("term")
             )
             .groupBy("term")

@@ -52,8 +52,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..analyzer import TOKEN_SPLIT_RE, check_synonyms
-from ..bm25 import B, K1
+from ..analyzer import Analyzer
+from ..bm25 import B, K1, idf_np
 from .codec import encode_blocks_bulk
 
 BLOCK_SCHEMA = (
@@ -78,8 +78,8 @@ class IndexMeta:
     # stores per-occurrence token positions (ES index_options analog)
     index_options: str = "freqs"
     # the field's analyzer boundary pattern (ES per-field analyzer hook);
-    # queries against this index analyze with THIS pattern, never the
-    # global default (engine.wand refresh -> Analyzer(meta.analyzer_re))
+    # None = the default. Build, append and query all analyze with
+    # ``analyzer()``, never the global default
     analyzer_re: str | None = None
     # ES stop token filter: tokens dropped after segmentation, recorded
     # so build/append/query all honor the same list (sorted for
@@ -89,6 +89,10 @@ class IndexMeta:
     # BEFORE the stop filter (frozen chain order — analyzer.Analyzer);
     # recorded sorted-by-key for deterministic meta.json bytes
     synonyms: dict[str, str] | None = None
+
+    def analyzer(self) -> Analyzer:
+        """The index's analyzer, built from the three fields above."""
+        return Analyzer(self.analyzer_re, self.stopwords, self.synonyms)
 
 
 # ------------------------------------------------------------- manifest --
@@ -309,9 +313,11 @@ def _bucket_builder(
         change[1:] = (tids[1:] != tids[:-1]) | (salts[1:] != salts[:-1])
         starts = np.flatnonzero(change)
         # all BM25 weights in one vectorized pass (idf varies per run)
-        idfs = np.log1p((n_docs - dfs_all + 0.5) / (dfs_all + 0.5))
+        idfs = idf_np(dfs_all, n_docs)
         dls_f = dls_all.astype(np.float64)
         tfs_f = tfs_all.astype(np.float64)
+        # not idfs * tf_weight_np(...): that associates the floats
+        # differently and would change the block_max_w bytes
         w_all = idfs * tfs_f * (K1 + 1.0) / (
             tfs_f + K1 * (1.0 - B + B * dls_f / avgdl)
         )
@@ -398,9 +404,11 @@ def build_index(
     build is byte-identical to before the option existed apart from an
     all-null pos_enc column, and refuses phrase queries.
 
-    A ``synonyms`` map with a chained or cyclic pair is rejected
-    (ValueError, analyzer.check_synonyms) before anything is written."""
-    check_synonyms(synonyms)
+    ``analyzer_re`` / ``stopwords`` / ``synonyms`` make the index's
+    ``Analyzer``, built before anything else: a ``synonyms`` map with a
+    chained or cyclic pair is rejected (ValueError,
+    analyzer.check_synonyms) before anything is written."""
+    analyzer = Analyzer(analyzer_re, stopwords, synonyms)
     # the build wants AQE (coalesced shuffles) regardless of what an open
     # CompressedIndex turned off for query latency in this session — set it
     # for the build's duration and restore the caller's value after
@@ -410,7 +418,7 @@ def build_index(
         return _build_index(
             spark, docs, out_dir, id_col, text_col, attr_cols, n_shards,
             block_size, salt_threshold, n_salts, shards_per_job, n_buckets,
-            resume, index_options, analyzer_re, stopwords, synonyms,
+            resume, index_options, analyzer,
         )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
@@ -431,9 +439,7 @@ def _build_index(
     n_buckets: int,
     resume: bool,
     index_options: str,
-    analyzer_re: str | None = None,
-    stopwords: Iterable[str] | None = None,
-    synonyms: dict[str, str] | None = None,
+    analyzer: Analyzer,
 ) -> IndexMeta:
     if index_options not in ("freqs", "positions"):
         raise ValueError("index_options must be 'freqs' or 'positions'")
@@ -480,10 +486,7 @@ def _build_index(
         try:
             staged = term_freqs_arrow(
                 docs_tok, id_col, text_col,
-                positions=(index_options == "positions"),
-                split_re=analyzer_re or TOKEN_SPLIT_RE,
-                stopwords=frozenset(stopwords) if stopwords else None,
-                synonyms=synonyms or None,
+                positions=(index_options == "positions"), analyzer=analyzer,
             ).withColumn("shard", shard_expr)
             with _small_arrow_batches(spark):
                 staged.write.mode("overwrite").partitionBy("shard").parquet(
@@ -521,10 +524,9 @@ def _build_index(
             attr_cols=attr_cols,
             n_buckets=n_buckets,
             index_options=index_options,
-            analyzer_re=analyzer_re,
-            stopwords=sorted(stopwords) if stopwords else None,
-            synonyms={k: synonyms[k] for k in sorted(synonyms)}
-            if synonyms else None,
+            analyzer_re=analyzer.split_re,
+            stopwords=sorted(analyzer.stopwords) or None,
+            synonyms=dict(sorted(analyzer.synonyms.items())) or None,
         )
         with open(os.path.join(out_dir, "meta.json"), "w") as fh:
             json.dump(asdict(meta), fh)

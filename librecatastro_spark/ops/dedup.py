@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from ..analyzer import duckdb_tokens_sql, tokenize_expr
+from ..analyzer import Analyzer, duckdb_tokens_sql, tokenize_expr
 from ..bm25 import ROUND_DECIMALS
 from .text import fingerprint_expr, fingerprint_sql
 
@@ -390,32 +390,22 @@ def simhash16_sql(col: str, n_bits: int = 16) -> str:
 
 @F.pandas_udf(LongType())
 def simhash64_udf(texts: pd.Series) -> pd.Series:
-    """Production 64-bit SimHash — fully columnar: tokenize with the same
-    RE2 split + ``dictionary_encode`` kernel as the index builder
-    (stats.py term_freqs_arrow), so token interning happens in Arrow C++,
+    """Production 64-bit SimHash — fully columnar: tokenize with the
+    default analyzer's Arrow rendering (``Analyzer.tokenize_arrow``, the
+    index builder's chain), so token interning happens in Arrow C++,
     md5 runs once per UNIQUE token (vocabulary-sized, typically ~50×
     smaller than the token stream), and the 64 bit-votes accumulate with
     one vectorized scatter-add (``np.add.at``) over (doc, bit). No
     per-row or per-token Python loop remains (the r2 waiver is gone)."""
     import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from ..analyzer import TOKEN_SPLIT_RE
 
     n = len(texts)
     out = np.zeros(n, dtype=np.int64)
     if n == 0:
         return pd.Series(out)
-    text = pa.Array.from_pandas(texts.astype("object"), type=pa.string())
-    if text.null_count:
-        text = pc.coalesce(text, pa.scalar("", pa.string()))
-    toks = pc.split_pattern_regex(pc.utf8_lower(text), TOKEN_SPLIT_RE)
-    parent = pc.list_parent_indices(toks)
-    flat = pc.list_flatten(toks)
-    mask = pc.not_equal(flat, "")
-    if mask.false_count:
-        flat = flat.filter(mask)
-        parent = parent.filter(mask)
+    flat, parent = Analyzer().tokenize_arrow(
+        pa.Array.from_pandas(texts.astype("object"), type=pa.string())
+    )
     if len(flat) == 0:
         return pd.Series(out)
     dv = flat.dictionary_encode()

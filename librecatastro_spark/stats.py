@@ -24,7 +24,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .analyzer import TOKEN_SPLIT_RE, tokenize_expr
+from .analyzer import Analyzer, tokenize_expr
 from .index.codec import encode_positions_bulk
 
 
@@ -67,12 +67,14 @@ def term_freqs_arrow(
     id_col: str = "doc_id",
     text_col: str = "content",
     positions: bool = False,
-    split_re: str = TOKEN_SPLIT_RE,
-    stopwords: frozenset[str] | None = None,
-    synonyms: dict[str, str] | None = None,
+    analyzer: Analyzer | None = None,
 ) -> DataFrame:
     """(doc_id, term, tf, dl) via ONE fused Arrow pass — the builder's hot
-    path. Semantically identical to term_freqs (equality-tested), but:
+    path. ``analyzer`` is the index's (default ``Analyzer()``); its Arrow
+    rendering ``tokenize_arrow`` tokenizes, so stopwords are gone BEFORE
+    dl/tf/position assignment (dl counts indexed tokens only; positions
+    index the FILTERED sequence) and synonyms change term identity only.
+    Semantically identical to term_freqs (equality-tested), but:
 
       * the whole tokenize→count kernel is pyarrow compute + numpy batch
         math (``mapInArrow``, zero pandas conversion): RE2 split,
@@ -109,50 +111,14 @@ def term_freqs_arrow(
     cols = docs.select(
         F.col(id_col).cast("long").alias("doc_id"), F.col(text_col).alias("_text")
     )
-    # ES stop token filter: stopwords are removed BEFORE dl/tf/position
-    # assignment, so dl counts indexed tokens only and positions index
-    # the FILTERED sequence (the frozen positional contract — phrase
-    # adjacency means "adjacent after stopword removal"; the DuckDB
-    # twins express the same NOT IN filter in their token CTE)
-    sw_arr = (
-        pa.array(sorted(stopwords), type=pa.string()) if stopwords else None
-    )
-    # ES synonym filter (replace form): applied BEFORE the stop filter
-    # (frozen chain order — analyzer.Analyzer docstring); the 1:1 token
-    # map preserves count and position, so only term identity changes
-    syn_pairs = sorted(synonyms.items()) if synonyms else None
+    analyzer = analyzer or Analyzer()
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for rb in batches:
             n = rb.num_rows
             if n == 0:
                 continue
-            text = rb.column(1)
-            # every skipped copy matters: the host saturates on aggregate
-            # allocation traffic before it runs out of CPU, so bytes
-            # allocated per input byte IS the scaling ceiling
-            if text.null_count:
-                text = pc.coalesce(text, pa.scalar("", pa.string()))
-            low = pc.utf8_lower(text)
-            toks = pc.split_pattern_regex(low, split_re)
-            parent = pc.list_parent_indices(toks)
-            flat = pc.list_flatten(toks)
-            mask = pc.not_equal(flat, "")
-            if mask.false_count:  # empties only at non-token doc edges
-                flat = flat.filter(mask)
-                parent = parent.filter(mask)
-            if syn_pairs is not None:
-                for src, dst in syn_pairs:
-                    hit = pc.equal(flat, src)
-                    if hit.true_count:
-                        flat = pc.if_else(
-                            hit, pa.scalar(dst, pa.string()), flat
-                        )
-            if sw_arr is not None:
-                swm = pc.invert(pc.is_in(flat, value_set=sw_arr))
-                if swm.false_count:
-                    flat = flat.filter(swm)
-                    parent = parent.filter(swm)
+            flat, parent = analyzer.tokenize_arrow(rb.column(1))
             if len(flat) == 0:
                 continue
             dv = flat.dictionary_encode()

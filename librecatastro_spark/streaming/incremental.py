@@ -61,7 +61,6 @@ from ..index.builder import (
     read_meta,
     stats_delta_dirs,
 )
-from ..analyzer import TOKEN_SPLIT_RE
 from ..stats import term_freqs_arrow
 
 COMPACT_AFTER = 8  # fold stats deltas back into one generation past this
@@ -258,10 +257,8 @@ def _append_batch(
         fresh, "doc_id", text_col,
         positions=(meta.index_options == "positions"),
         # appended docs must tokenize with the INDEX's analyzer (the
-        # per-field hook, incl. its stop filter), never the global default
-        split_re=getattr(meta, "analyzer_re", None) or TOKEN_SPLIT_RE,
-        stopwords=frozenset(getattr(meta, "stopwords", None) or ()) or None,
-        synonyms=getattr(meta, "synonyms", None) or None,
+        # per-field hook, incl. its filters), never the global default
+        analyzer=meta.analyzer(),
     ).withColumn("shard", shard_expr).cache()
     # small Arrow batches scoped to the tokenize pass — the same
     # allocation-churn mitigation as the batch build (builder.py:

@@ -149,7 +149,7 @@ def test_fastpath_threading_invariant(index, monkeypatch):
 def test_fastpath_cache_invariant(index, monkeypatch):
     """The coordinator cache — decompressed posting column chunks and
     decoded postings in one LRU under one budget — must never change
-    results: budget 0 (LC_POSTING_CACHE_MB=0 — nothing is cached, so
+    results: budget 0 (``_POSTING_CACHE_BYTES = 0`` — nothing is cached, so
     every call reads its chunks from disk), tiny (1 MB: entries that do
     not fit are served uncached, others are evicted across queries, and
     the byte count never exceeds the budget) and default (512 MB: a
@@ -176,10 +176,12 @@ def test_fastpath_cache_invariant(index, monkeypatch):
     shapes.append(composite)
     results = {}
     for mb in ("0", "1", None):
-        if mb is None:
-            monkeypatch.delenv("LC_POSTING_CACHE_MB", raising=False)
+        if mb is None:  # the class default
+            monkeypatch.delattr(index, "_POSTING_CACHE_BYTES", raising=False)
         else:
-            monkeypatch.setenv("LC_POSTING_CACHE_MB", mb)
+            monkeypatch.setattr(
+                index, "_POSTING_CACHE_BYTES", int(mb) << 20, raising=False
+            )
         budget = int(mb or 512) << 20
         index.refresh()  # drop any previously filled cache
         assert not index._dec_cache and index._dec_cache_bytes == 0
@@ -207,7 +209,7 @@ def test_make_decoder_equals_uncached_decode(spark, documents, tmp_path, monkeyp
     ``positions._decode_impacts`` decodes, bit for bit: each term's full
     rows (the cache fills), a slice under half a term (decoded uncached,
     nothing cached), the same rows again (cache hits) and with
-    LC_POSTING_CACHE_MB=0 (nothing is ever cached). Small blocks give
+    ``_POSTING_CACHE_BYTES = 0`` (nothing is ever cached). Small blocks give
     the hot terms several blocks per shard."""
     from librecatastro_spark.engine.positions import _decode_impacts
 
@@ -228,10 +230,12 @@ def test_make_decoder_equals_uncached_decode(spark, documents, tmp_path, monkeyp
     d = index._dict
     hot = d.term[np.argsort(d.df, kind="stable")][-3:].tolist()
     for mb in ("0", None):
-        if mb is None:
-            monkeypatch.delenv("LC_POSTING_CACHE_MB", raising=False)
+        if mb is None:  # the class default
+            monkeypatch.delattr(index, "_POSTING_CACHE_BYTES", raising=False)
         else:
-            monkeypatch.setenv("LC_POSTING_CACHE_MB", mb)
+            monkeypatch.setattr(
+                index, "_POSTING_CACHE_BYTES", int(mb) << 20, raising=False
+            )
         index.refresh()
         blocks = index._seek_blocks(
             [(index, wand._Seek(hot + ["join", "query"]))], index._SEEK_COLS

@@ -177,3 +177,21 @@ def test_append_honors_synonyms(spark, tmp_path):
     idx = CompressedIndex(spark, out)
     got = {d for d, _ in rows(idx.search("merge", k=10))}
     assert got == {0, 1, 2}  # the appended surface "join" indexed as merge
+
+
+def test_significant_terms_counts_with_index_analyzer(yidx, tidx, corpus, replaced):
+    """The foreground is tokenized with the index's analyzer: a matched
+    doc that wrote only the surface form "join" counts toward "merge",
+    so the synonym index and its replaced-text twin agree term for
+    term."""
+    from librecatastro_spark.analyzer import analyze_text
+
+    matched = [
+        set(analyze_text(r["content"]))
+        for r in corpus.join(yidx.match_doc_ids("merge"), "doc_id", "left_semi")
+        .select("content").collect()
+    ]
+    assert any("join" in t and "merge" not in t for t in matched)
+    assert any("merge" in t for t in matched)
+    got = yidx.significant_terms("merge", corpus, top_n=20).collect()
+    assert got and got == tidx.significant_terms("merge", replaced, top_n=20).collect()

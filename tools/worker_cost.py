@@ -17,7 +17,7 @@ shapes, each of which runs as one Spark task:
 
 A fourth shape, ``local``, runs the same query through
 ``CompressedIndex.search_local`` — no Spark job — twice: ``cold``, with
-``LC_POSTING_CACHE_MB=0`` so every call reads and decodes its postings,
+``_POSTING_CACHE_BYTES = 0`` so every call reads and decodes its postings,
 and ``warm``, with the default budget after the warm-up calls filled the
 coordinator cache. Its CPU is the driver's alone, split by thread from
 ``/proc/self/task``: the calling thread, the seek pool's threads (the
@@ -235,12 +235,9 @@ def main() -> int:
                   f"{args.rounds} rounds x {10 * args.per_round} queries")
             print(f"{'cache':8s} " + " ".join(f"{g + '_ms':>11s}" for g in THREADS)
                   + f" {'total_ms':>9s}   (median per query, n rounds)")
-            warm = os.environ.get("LC_POSTING_CACHE_MB")  # None: the default
-            for name, mb in (("cold", "0"), ("warm", warm)):
-                if mb is None:
-                    os.environ.pop("LC_POSTING_CACHE_MB")
-                else:
-                    os.environ["LC_POSTING_CACHE_MB"] = mb
+            for name, budget in (("cold", 0),
+                                 ("warm", CompressedIndex._POSTING_CACHE_BYTES)):
+                ix._POSTING_CACHE_BYTES = budget
                 for _ in range(3):
                     local()
                 report(name, measure_threads(
